@@ -176,7 +176,7 @@ def pip_join(spark, pages: DataFrame, layer: list[dict], *,
 
 def pip_join_df(pages: DataFrame, polygons: DataFrame, *,
                 lon_col: str = "lon", lat_col: str = "lat",
-                cover_res: int = 6, broadcast_polygons: bool = False) -> DataFrame:
+                cover_res: int = 6) -> DataFrame:
     """Fully-distributed spatial join against a polygon *DataFrame*.
 
     For layers too large to materialize on the driver (10^5+ polygons): the
@@ -189,8 +189,7 @@ def pip_join_df(pages: DataFrame, polygons: DataFrame, *,
     packed-layer upload (polycheck.py:1341-1366).
 
     Scale shape: shuffle equi-join on cell_id (AQE skew-split enabled);
-    polygon vertices ride the build side. Set ``broadcast_polygons`` when the
-    layer fits in memory to skip the shuffle entirely.
+    polygon vertices ride the build side.
     """
     polys = polygons.select(
         "polygon_id", "xs", "ys",
@@ -206,8 +205,7 @@ def pip_join_df(pages: DataFrame, polygons: DataFrame, *,
              .withColumn("cell_id", C.encode_col(F.col("cix"), F.col("ciy"), cover_res))
              .drop("cix", "ciy"))
     probe = C.with_cell_id(pages, F.col(lon_col), F.col(lat_col), cover_res)
-    build = F.broadcast(cover) if broadcast_polygons else cover
-    cand = probe.join(build, "cell_id")
+    cand = probe.join(cover, "cell_id")
     cand = _bbox_refine(cand, lon_col, lat_col)
 
     @F.pandas_udf(T.BooleanType())

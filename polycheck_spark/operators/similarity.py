@@ -182,8 +182,7 @@ def _vec_matrix(series):
 
 
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
-    """Driver-side (qids, qmat) — queries are the small side by contract
-    (same collect the Arrow twins have always done)."""
+    """Driver-side (qids, qmat) — queries are the small side by contract."""
     import numpy as np
     rows = queries.select(F.col(id_col),
                           F.col(vec_col).cast("array<double>")).collect()
@@ -308,10 +307,9 @@ def _rank_partials(partial: DataFrame, k: int) -> DataFrame:
 
 def _empty_ranked(df: DataFrame) -> DataFrame:
     """Empty (query_id, target_id, rank) frame — what every top-k path
-    returns for an empty query set.  The Column paths get this for free
-    (broadcast join against zero rows); the Arrow paths collect the queries
-    driver-side first and must synthesize it so the fast twin stays a
-    drop-in replacement on the empty-filter edge case."""
+    returns for an empty query set.  The paths collect the queries
+    driver-side first, so they must synthesize it rather than raise on the
+    empty-filter edge case."""
     from pyspark.sql import types as T
     schema = T.StructType([
         T.StructField("query_id", T.LongType()),
@@ -405,12 +403,11 @@ def ivf_train_kmeans(embeddings: DataFrame, *,
     default; trained centroids are approximate-by-nature, covered by the
     recall pytest rather than a SQL twin).
 
-    Returns a (cid, cvec) DataFrame accepted by :func:`ivf_topk` /
-    :func:`ivf_topk_arrow` via their ``centroids`` parameter.  At 10^12
-    vectors each round is one scan + one C x dim reduce — the textbook
-    distributed k-means shape; sample the training input
-    (e.g. :func:`polycheck_spark.operators.sampling.sample_hash`) to train
-    on a subset when even one scan per round is too much.
+    Returns a (cid, cvec) DataFrame accepted by :func:`ivf_topk` via its
+    ``centroids`` parameter.  At 10^12 vectors each round is one scan + one
+    C x dim reduce — the textbook distributed k-means shape; sample the
+    training input (e.g. :func:`polycheck_spark.operators.sampling.sample_hash`)
+    to train on a subset when even one scan per round is too much.
     """
     import numpy as np
     import pandas as pd
@@ -721,7 +718,6 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    mode: str = "lsh", dim: int | None = None,
                    max_bucket_freq: int | None = None,
-                   impl: str = "column",
                    n_planes: int = N_PLANES) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b) with a < b and
     cosine(a, b) >= num/den.
@@ -761,9 +757,7 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
     vectors ride the shuffle (n_planes + 2) times total, independent of the
     candidate count, and only passing (a, b) pairs are emitted.  The
     accepted set is bit-identical: same buckets, same probe keys, same
-    fold cosine, same rational-threshold comparison.  ``impl`` is kept for
-    API compatibility — 'column' and 'arrow' now run this same pipeline
-    (their former outputs were pinned equal by pytest).
+    fold cosine, same rational-threshold comparison.
     """
     import numpy as np
     import pandas as pd
@@ -1100,71 +1094,3 @@ ranked AS (
 )
 SELECT query_id, target_id, CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= {k}
 """
-
-
-# --- Arrow-vectorized exact top-k --------------------------------------------
-
-def cosine_topk_arrow(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                      id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k, Arrow/NumPy path — the high-throughput twin of
-    :func:`cosine_topk`.
-
-    The HOF dot product is bit-exact against DuckDB's sequential fold but
-    runs INTERPRETED (Spark never codegens lambdas) — ~10-50x off
-    vectorized speed.  Here queries are collected to a driver matrix
-    (queries are the small side by contract), each Arrow batch of targets
-    computes the full batch x query cosine matrix with BLAS, keeps the
-    per-batch top-k per query (lexsort: cosine desc, id asc — stable
-    ties), and a final window ranks the k-per-query-per-batch survivors —
-    the classic distributed brute-force kNN shape, shuffling only
-    O(k * n_batches) rows per query.
-
-    r8: the partial-scoring pass now uses the dim-ordered fold (bit-exact
-    against the HOF/DuckDB sequential fold at the same vectorized speed —
-    the former BLAS matmul differed by ulps, which was only
-    tie-probabilistically safe), so this twin is exactly
-    :func:`cosine_topk` and shares its implementation."""
-    return cosine_topk(embeddings, queries, k, id_col=id_col, vec_col=vec_col)
-
-
-def lsh_bucket_topk_arrow(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          dim: int | None = None) -> DataFrame:
-    """Arrow twin of :func:`lsh_bucket_topk` (multiprobe on).
-
-    r8: the Column path now IS the single-pass fold-exact Arrow pipeline
-    (its former BLAS bucketer + ids-only join + interpreted-HOF rescore
-    paid two extra vector rejoins and an uncompiled rescore), so this twin
-    delegates — same buckets, same cosines, same oracle."""
-    return lsh_bucket_topk(embeddings, queries, k, id_col=id_col,
-                           vec_col=vec_col, dim=dim)
-
-
-def quantized_topk_arrow(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                         m: int = QUANT_TOPM,
-                         id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Arrow twin of :func:`quantized_topk`.
-
-    r8: the Column path now IS the fused one-pass int8 + fold-exact
-    pipeline (the former twin still rejoined float vectors by id for the
-    stage-2 HOF rescore), so this twin delegates — same integer stage-1
-    scores, same exact rescore, same oracle."""
-    return quantized_topk(embeddings, queries, k, m=m,
-                          id_col=id_col, vec_col=vec_col)
-
-
-def ivf_topk_arrow(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   n_probe: int = IVF_NPROBE,
-                   n_centroids: int = IVF_CENTROID_BUDGET,
-                   n_vectors: int | None = None,
-                   centroids: DataFrame | None = None) -> DataFrame:
-    """Arrow twin of :func:`ivf_topk`.
-
-    r8: the Column path now IS the single-pass fold-exact Arrow pipeline
-    (its former shape paid two assignment mapInPandas passes, a list join
-    and an interpreted-HOF rescore with two vector rejoins), so this twin
-    delegates — same centroids, same assignment, same oracle."""
-    return ivf_topk(embeddings, queries, k, id_col=id_col, vec_col=vec_col,
-                    n_probe=n_probe, n_centroids=n_centroids,
-                    n_vectors=n_vectors, centroids=centroids)

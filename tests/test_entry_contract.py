@@ -19,6 +19,21 @@ def test_queries_oracle_keys_align():
     assert not rows_only, rows_only
 
 
+def test_fast_rows_alias_their_base_rows():
+    """Each X_fast row runs X's builder against X's oracle string; the
+    registry keeps all 107 names, so a row cannot fork or vanish unseen."""
+    qs = E.queries()
+    oracles = E.oracle_sql()
+    assert len(qs) == 107
+    fast = [n for n in qs if n.endswith("_fast")]
+    assert sorted(fast) == ["ann_cosine_fast", "ann_ivf_fast", "ann_lsh_fast",
+                            "ann_quant_fast", "near_dup_fast"]
+    for name in fast:
+        base = name[:-len("_fast")]
+        assert qs[name] is qs[base], name
+        assert oracles[name] == oracles[base], name
+
+
 def test_entry_runs(spark):
     df = E.entry(spark)
     assert df.count() > 0

@@ -1,7 +1,6 @@
 """Distributed-build-side spatial join (pip_join_df) vs the broadcast path."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F, types as T
 
 from polycheck_spark.data import synth
@@ -21,15 +20,13 @@ def _layer_df(spark, layer):
     return spark.createDataFrame(rows, schema)
 
 
-@pytest.mark.parametrize("broadcast", [False, True])
-def test_pip_join_df_equals_broadcast_path(spark, broadcast):
+def test_pip_join_df_equals_broadcast_path(spark):
     pages = synth.geocoded_pages(spark, 3000, partitions=8)
     layer = default_query_layer()
     exp = sorted((r["url"], r["polygon_id"]) for r in
                  PJ.pip_join(spark, pages, layer)
                  .select("url", "polygon_id").collect())
-    got_df = PJ.pip_join_df(pages, _layer_df(spark, layer),
-                            broadcast_polygons=broadcast)
+    got_df = PJ.pip_join_df(pages, _layer_df(spark, layer))
     got = sorted((r["url"], r["polygon_id"])
                  for r in got_df.select("url", "polygon_id").collect())
     assert got == exp and len(got) > 0

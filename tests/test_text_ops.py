@@ -417,14 +417,10 @@ def test_ivf_trained_centroids_raise_recall(spark):
         assert math.isclose(sum(v * v for v in r["cvec"]), 1.0, rel_tol=1e-9)
     trained = {(r["query_id"], r["target_id"])
                for r in S.ivf_topk(emb, q, 5, n_probe=1, centroids=cents).collect()}
-    trained_arrow = {(r["query_id"], r["target_id"])
-                     for r in S.ivf_topk_arrow(emb, q, 5, n_probe=1,
-                                               centroids=cents).collect()}
     r_untrained = len(exact & untrained) / len(exact)
     r_trained = len(exact & trained) / len(exact)
     assert r_trained >= 0.9, (r_trained, r_untrained)
     assert r_trained >= r_untrained + 0.03, (r_trained, r_untrained)
-    assert trained_arrow == trained
 
 
 def test_plane_weights_bitwise_equal(spark):
@@ -716,16 +712,16 @@ def test_ann_outputs_have_no_duplicate_pairs(spark, sf_dir):
     q = emb.filter(F.col("vec_id") % 25 == 0)
     for df, keys in ((S.lsh_bucket_topk(emb, q, 5), ("query_id", "target_id")),
                      (S.ivf_topk(emb, q, 5), ("query_id", "target_id")),
-                     (S.quantized_topk_arrow(emb, q, 5), ("query_id", "target_id")),
+                     (S.quantized_topk(emb, q, 5), ("query_id", "target_id")),
                      (S.near_dup_pairs(emb, (3, 5), mode="lsh"), ("a", "b"))):
         rows = [tuple(r[k] for k in keys) for r in df.select(*keys).collect()]
         assert len(rows) == len(set(rows)), keys
 
 
-def test_cosine_topk_arrow_equals_hof(spark, sf_dir):
-    """The BLAS path must produce the identical (query, target, rank)
-    output as the interpreted-HOF path — ulp-level cosine differences may
-    not flip ranks on real embeddings (and the zero vector scores 0)."""
+def _zero_vector_topk_vs_duckdb(spark, sf_dir, fn, sql):
+    """A zero vector among both targets and queries takes the zero-norm
+    guard (cosine 0.0) in Spark and in DuckDB's _cos_sql alike, so the
+    ranks of ``fn`` equal its SQL twin ``sql`` exactly."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = len(emb.select("embedding").first()[0])
     zero = spark.createDataFrame([(777_000, [0.0] * dim)],
@@ -733,66 +729,38 @@ def test_cosine_topk_arrow_equals_hof(spark, sf_dir):
     both = emb.select("vec_id", F.col("embedding").cast("array<double>")
                       .alias("embedding")).unionByName(zero)
     q = both.filter(F.col("vec_id") % 50 == 0)
-    hof = _sorted_rows(S.cosine_topk(both, q, 5))
-    arrow = _sorted_rows(S.cosine_topk_arrow(both, q, 5))
-    assert arrow == hof
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW emb_zero AS SELECT vec_id, CAST(embedding AS DOUBLE[]) "
+        f"AS embedding FROM read_parquet('{sf_dir}/embeddings.parquet') "
+        f"UNION ALL SELECT 777000, [{', '.join(['0.0'] * dim)}]::DOUBLE[]")
+    got = _sorted_rows(fn(both, q, 5))
+    exp = sorted(con.execute(sql("emb_zero", "vec_id % 50 = 0", 5)).fetchall())
+    assert got == exp
+    assert any(r[0] == 777_000 for r in got)
 
 
-def test_lsh_bucket_topk_arrow_equals_column(spark, sf_dir):
-    """BLAS sign-bit bucketing must reproduce the Column path exactly on
-    the test corpus (a flip needs a projection tying zero within ulps)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") % 25 == 0)
-    col_path = _sorted_rows(S.lsh_bucket_topk(emb, q, 5))
-    arrow_path = _sorted_rows(S.lsh_bucket_topk_arrow(emb, q, 5))
-    assert arrow_path == col_path
+def test_cosine_topk_zero_vector_matches_duckdb(spark, sf_dir):
+    _zero_vector_topk_vs_duckdb(spark, sf_dir, S.cosine_topk, S.cosine_topk_sql)
 
 
-def test_ivf_topk_arrow_equals_column(spark, sf_dir):
-    """BLAS centroid assignment must reproduce the Column path exactly on
-    the test corpus (same tie-break: max cosine, then min centroid id)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") % 25 == 0)
-    col_path = _sorted_rows(S.ivf_topk(emb, q, 5))
-    arrow_path = _sorted_rows(S.ivf_topk_arrow(emb, q, 5))
-    assert arrow_path == col_path
+def test_quantized_topk_zero_vector_matches_duckdb(spark, sf_dir):
+    """Scale 0 in the int8 stage keeps the zero vector's cosine at 0.0."""
+    _zero_vector_topk_vs_duckdb(spark, sf_dir, S.quantized_topk,
+                                S.quantized_topk_sql)
 
 
-def test_near_dup_arrow_equals_column(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    col_path = _sorted_rows(S.near_dup_pairs(emb, (3, 5), mode="lsh"))
-    arrow_path = _sorted_rows(S.near_dup_pairs(emb, (3, 5), mode="lsh",
-                                               impl="arrow"))
-    assert arrow_path == col_path
-
-
-def test_quantized_topk_arrow_equals_column(spark, sf_dir):
-    """The int8 Arrow path must reproduce the Column path EXACTLY — not
-    ulp-robustly: quantized ints and integer dots are bit-identical, so the
-    stage-1 survivor set (ties broken by id) and the stage-2 ranking are
-    the same by construction.  Includes the zero vector (scale 0)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    zero = spark.createDataFrame([(777_000, [0.0] * dim)],
-                                 "vec_id long, embedding array<double>")
-    both = emb.select("vec_id", F.col("embedding").cast("array<double>")
-                      .alias("embedding")).unionByName(zero)
-    q = both.filter(F.col("vec_id") % 50 == 0)
-    col_path = _sorted_rows(S.quantized_topk(both, q, 5))
-    arrow_path = _sorted_rows(S.quantized_topk_arrow(both, q, 5))
-    assert arrow_path == col_path
-
-
-def test_arrow_twins_empty_query_set(spark, sf_dir):
+def test_ann_empty_query_set(spark, sf_dir):
     """A filter matching no queries must yield an empty frame with the
-    (query_id, target_id, rank) schema — matching the Column twins, which
-    get that behavior from the broadcast join — not raise (ADVICE r3)."""
+    (query_id, target_id, rank) schema from every top-k path — not raise
+    (ADVICE r3)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     none = emb.filter(F.col("vec_id") < 0)
-    for fn in (S.cosine_topk_arrow, S.quantized_topk_arrow):
+    for fn in (S.cosine_topk, S.lsh_bucket_topk, S.quantized_topk, S.ivf_topk):
         out = fn(emb, none, 5)
-        assert out.columns == ["query_id", "target_id", "rank"]
-        assert out.count() == 0
+        assert out.columns == ["query_id", "target_id", "rank"], fn.__name__
+        assert out.count() == 0, fn.__name__
+
 
 def test_repetition_signals_planted_cases(spark):
     rows = [

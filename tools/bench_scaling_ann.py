@@ -1,6 +1,6 @@
 """Secondary-workload scaling evidence: the ANN / similarity family at two
 parallelism levels (same protocol as bench_scaling.py and its siblings).
-This family is the engine's Arrow fast path — mapInPandas batches through
+This family is the engine's Arrow path — mapInPandas batches through
 NumPy/BLAS — so unlike the JVM-threaded families its parallel unit is the
 PYTHON WORKER POOL; this run demonstrates that path scales like the rest
 of the engine.
@@ -8,11 +8,12 @@ of the engine.
 Workload per level: synthesize ``VECS`` 64-dim embeddings by Column
 formula (64 codegen'd trig expressions — no HOF lambdas, no Python in the
 synthesis) -> exact brute-force cosine top-10 for a 64-query matrix via
-``cosine_topk_arrow`` (per-batch BLAS B x Q matrix + per-batch top-k,
-final window over O(k * batches) survivors).  Output identity across
-levels is exact by construction: per-batch top-k always contains the
-global top-k restricted to the batch, and ties break on id — asserted via
-(row count, sum of target ids, sum of ranks).
+``cosine_topk`` (per-batch BLAS candidate pick against the collected query
+matrix, exact dim-ordered fold rescore + per-batch top-k, final window over
+O(k * batches) survivors).  Output identity across levels is exact by
+construction: per-batch top-k always contains the global top-k restricted
+to the batch, and ties break on id — asserted via (row count, sum of
+target ids, sum of ranks).
 
 Protocol: identical input, identical partition count, separate JVMs at
 local[N] and local[4N], best-of-REPEATS, plus the half-input marginal.
@@ -67,7 +68,7 @@ def worker(cpus: int) -> None:
         queries = frame(N_QUERIES * 997).filter(
             F.col("vec_id") % 997 == 0)  # 64 spread query ids
         t0 = time.time()
-        top = SIM.cosine_topk_arrow(emb, queries, K)
+        top = SIM.cosine_topk(emb, queries, K)
         row = top.agg(F.count(F.lit(1)).alias("n"),
                       F.sum("target_id").alias("tsum"),
                       F.sum("rank").alias("rsum")).collect()[0]

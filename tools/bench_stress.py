@@ -142,8 +142,8 @@ def main():
         synth.generate_embeddings(spark, n_e, e_dim), e_dim, e_mod, e_off)
     n_einj = ecorpus.count() - n_e
     t0 = time.time()
-    got = SIM.near_dup_pairs(ecorpus, (3, 5), mode="lsh", impl="arrow",
-                             dim=e_dim, n_planes=n_planes)
+    got = SIM.near_dup_pairs(ecorpus, (3, 5), mode="lsh", dim=e_dim,
+                             n_planes=n_planes)
     found_inj = got.filter(F.col("b") == F.col("a") + e_off).count()
     dt = time.time() - t0
     out["near_dup_300k"] = {"vectors": n_e + n_einj, "dim": e_dim,
