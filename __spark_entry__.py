@@ -31,6 +31,7 @@ from polycheck_spark.operators import sampling as SA
 from polycheck_spark.operators.knn import knn_join, knn_sql_oracle
 from polycheck_spark.operators.range_join import range_join, range_join_sql
 from polycheck_spark.operators.visibility import raster_lookup, raster_lookup_sql
+from polycheck_spark.session import local_frame, spread
 
 TILE_RES = 12
 DENSITY_RES = 4
@@ -131,7 +132,7 @@ def q_pip_join_distributed(spark, sf_dir):
         T.StructField("xs", T.ArrayType(T.FloatType())),
         T.StructField("ys", T.ArrayType(T.FloatType())),
     ])
-    polys = spark.createDataFrame(rows, schema)
+    polys = local_frame(spark, rows, schema)
     joined = PJ.pip_join_df(_docs_points(spark, sf_dir), polys)
     return (joined.select(F.col("doc_id").alias("point_id"), "polygon_id")
             .orderBy("point_id", "polygon_id"))
@@ -200,8 +201,8 @@ VERIFIED_THRESHOLD = (1, 2)
 
 def _docs_with_fp(spark, sf_dir):
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    fp = spark.createDataFrame(
-        list(zip(VERIFIED_FP_IDS, VERIFIED_FP_TEXTS)), "doc_id long, text string")
+    fp = local_frame(
+        spark, list(zip(VERIFIED_FP_IDS, VERIFIED_FP_TEXTS)), "doc_id long, text string")
     return docs.unionAll(fp)
 
 
@@ -741,8 +742,8 @@ def q_robots_filter(spark, sf_dir):
     pass — per-doc verdicts."""
     from polycheck_spark.operators import web as W
     pages = _docs(spark, sf_dir).select("doc_id", _synth_url_col().alias("url"))
-    rules = spark.createDataFrame(ROBOTS_RULES,
-                                  "host string, prefix string, allow boolean")
+    rules = local_frame(spark, ROBOTS_RULES,
+                        "host string, prefix string, allow boolean")
     return W.robots_verdicts(pages, rules).orderBy("doc_id")
 
 
@@ -873,7 +874,7 @@ def q_domain_filter(spark, sf_dir):
     """Domain blocklist gate: suffix-matched (any subdomain depth) with the
     string-suffix trap host kept — per-host survivor counts."""
     from polycheck_spark.operators import web as W
-    bl = spark.createDataFrame([(BLOCKED_DOMAIN,)], "domain string")
+    bl = local_frame(spark, [(BLOCKED_DOMAIN,)], "domain string")
     kept = W.domain_block_filter(_blocky_pages(spark, sf_dir), bl)
     host = F.substring_index(W.canonical_url_col(F.col("url")), "/", 1)
     return (kept.groupBy(host.alias("host"))
@@ -1036,7 +1037,7 @@ def q_web_pipeline(spark, sf_dir):
     driver checks individually; this row value-checks their composition."""
     from pyspark.sql import Window
     from polycheck_spark.operators import pii as P, web as W
-    bl = spark.createDataFrame([(BLOCKED_DOMAIN,)], "domain string")
+    bl = local_frame(spark, [(BLOCKED_DOMAIN,)], "domain string")
     gated = W.domain_block_filter(_web_pages(spark, sf_dir), bl)
     # the redacted frame feeds TWO branches (repetition signals + the
     # profile join) — pin it once, same rationale as q_c4_pipeline
@@ -1288,7 +1289,6 @@ def _spread(spark, df):
     payload projection keeps the hex-expression synthesis above the
     exchange too.  Row placement never affects results — every media
     query is per-row deterministic and output-ordered."""
-    from polycheck_spark.session import spread
     return spread(df)
 
 
@@ -1961,7 +1961,7 @@ def q_visibility(spark, sf_dir):
     """Single-source visibility raster (O2): walk a subset of ends with a
     step-count max_range, scatter onto the full 8x8 raster (missing -> 0)."""
     from polycheck_spark.operators.visibility import visibility_df, scatter_to_raster
-    ends = spark.createDataFrame(_O2_ENDS, "ex int, ey int")
+    ends = local_frame(spark, _O2_ENDS, "ex int, ey int")
     vis = visibility_df(spark, _reg8_grid(), _O2_START, ends, max_range=_O2_MAX_RANGE)
     return (scatter_to_raster(spark, vis, 8, 8)
             .select("row", "col", "vis").orderBy("row", "col"))
@@ -1970,8 +1970,8 @@ def q_visibility(spark, sf_dir):
 def q_visibility_region(spark, sf_dir):
     """All-pairs region visibility on the reg8 golden grid (O3)."""
     from polycheck_spark.operators.visibility import visibility_from_region_df
-    starts = spark.createDataFrame(_VIS_STARTS, "sx int, sy int")
-    ends = spark.createDataFrame(_VIS_ENDS, "ex int, ey int")
+    starts = local_frame(spark, _VIS_STARTS, "sx int, sy int")
+    ends = local_frame(spark, _VIS_ENDS, "ex int, ey int")
     return (visibility_from_region_df(spark, _reg8_grid(), starts, ends)
             .select("sx", "sy", "ex", "ey", "vis").orderBy("sx", "sy", "ex", "ey"))
 
@@ -1979,8 +1979,8 @@ def q_visibility_region(spark, sf_dir):
 def q_visibility_real_region(spark, sf_dir):
     """All-pairs real-coordinate (DDA) visibility with a range gate (O4)."""
     from polycheck_spark.operators.visibility import visibility_from_region_df
-    starts = spark.createDataFrame(_O4_STARTS, "sx double, sy double")
-    ends = spark.createDataFrame(_O4_ENDS, "ex double, ey double")
+    starts = local_frame(spark, _O4_STARTS, "sx double, sy double")
+    ends = local_frame(spark, _O4_ENDS, "ex double, ey double")
     return (visibility_from_region_df(spark, _o4_grid(), starts, ends,
                                       max_range=_O4_MAX_RANGE, real=True,
                                       origin=_O4_ORIGIN, resolution=_O4_RES)
@@ -1999,8 +1999,8 @@ def q_sensor_union(spark, sf_dir):
     """Sensor union combine on the union_formula golden grid (O5+O8)."""
     from polycheck_spark.operators.visibility import sensor_visibility_df
     g = _su_grid()
-    sensors = spark.createDataFrame(
-        _SU_SENSORS,
+    sensors = local_frame(
+        spark, _SU_SENSORS,
         "sensor_id int, x double, y double, range double, direction double, fov double")
     _, combined = sensor_visibility_df(spark, g, sensors, "union")
     return combined.select("ex", "ey", "p").orderBy("ey", "ex")
@@ -2010,8 +2010,8 @@ def q_sensor_fov_grid(spark, sf_dir):
     """Grid sensors with REAL field-of-view gating (O5 + O9): quarter/partial
     FOVs and finite ranges, union combine."""
     from polycheck_spark.operators.visibility import sensor_visibility_df
-    sensors = spark.createDataFrame(
-        _SF_SENSORS,
+    sensors = local_frame(
+        spark, _SF_SENSORS,
         "sensor_id int, x double, y double, range double, direction double, fov double")
     _, combined = sensor_visibility_df(spark, _su_grid(), sensors, "union")
     return combined.select("ex", "ey", "p").orderBy("ey", "ex")
@@ -2021,8 +2021,8 @@ def q_sensor_product_real(spark, sf_dir):
     """Real-regime sensor product combine (O6 + O8 product path): DDA sum
     walks from world-coordinate sensors, per-sensor ranges, product fuse."""
     from polycheck_spark.operators.visibility import sensor_visibility_df
-    sensors = spark.createDataFrame(
-        _O6_SENSORS,
+    sensors = local_frame(
+        spark, _O6_SENSORS,
         "sensor_id int, x double, y double, range double, direction double, fov double")
     _, combined = sensor_visibility_df(spark, _o6_grid(), sensors, "product",
                                        real=True, origin=_O6_ORIGIN, resolution=_O6_RES)

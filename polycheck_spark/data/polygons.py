@@ -93,32 +93,6 @@ def default_query_layer() -> list[dict]:
 
 # --- conversions -----------------------------------------------------------
 
-def layer_to_rows(layer: list[dict]) -> list[tuple]:
-    """(polygon_id, name, xs, ys, xmin, ymin, xmax, ymax) rows for a DataFrame."""
-    rows = []
-    for p in layer:
-        xs = [float(np.float32(x)) for x, _ in p["vertices"]]
-        ys = [float(np.float32(y)) for _, y in p["vertices"]]
-        rows.append((p["polygon_id"], p["name"], xs, ys,
-                     min(xs), min(ys), max(xs), max(ys)))
-    return rows
-
-
-def layer_to_dataframe(spark, layer: list[dict]):
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("polygon_id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("xs", T.ArrayType(T.FloatType())),
-        T.StructField("ys", T.ArrayType(T.FloatType())),
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType()),
-    ])
-    return spark.createDataFrame(layer_to_rows(layer), schema)
-
-
 def layer_to_csr(layer: list[dict]):
     """(vertices (sumV,2) float32, offsets (P+1,), polygon_ids (P,)) for broadcast."""
     from polycheck_spark.geo.kernel import pack_polygons_csr

@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from polycheck_spark.session import local_frame
+
 
 def _parquet_row_count(path: str) -> int:
     """Row count from parquet footers — no data scan."""
@@ -182,9 +184,9 @@ class CheckpointedWriter:
     def lineage_df(self, spark: SparkSession) -> DataFrame:
         rows = [(r["bucket"], r["rows"], r["t_start"], r["t_end"],
                  r["latency_sec"], r["status"]) for r in self.lineage()]
-        return spark.createDataFrame(
-            rows, "bucket int, rows long, t_start double, t_end double, "
-                  "latency_sec double, status string")
+        return local_frame(
+            spark, rows, "bucket int, rows long, t_start double, t_end double, "
+                         "latency_sec double, status string")
 
     def read_output(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.out_dir, "bucket=*"))

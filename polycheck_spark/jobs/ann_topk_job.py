@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 from polycheck_spark.data import synth
 from polycheck_spark.io.tables import CheckpointedWriter
 from polycheck_spark.operators import similarity as SIM
+from polycheck_spark.session import local_frame
 
 STAGE = "emb_by_list"
 
@@ -124,8 +125,8 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
                   .filter(F.col("wb") == kb)
                   .select("query_id", "list_id", "qq").collect())
         if not probes:
-            return spark.createDataFrame(
-                [], "query_id long, target_id long, cosine double")
+            return local_frame(
+                spark, [], "query_id long, target_id long, cosine double")
         by_list: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for lid in {r["list_id"] for r in probes}:
             rows = [r for r in probes if r["list_id"] == lid]

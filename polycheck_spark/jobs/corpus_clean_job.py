@@ -49,6 +49,7 @@ from polycheck_spark.operators import web as W
 from polycheck_spark.operators.dedup import (
     BAND_SIZE, N_MINHASH, connected_components, minhash_signatures)
 from polycheck_spark.operators.text import strip_boilerplate, tokens_col
+from polycheck_spark.session import local_frame
 
 STAGE1 = "cleaned_by_digest"
 STAGE2 = "survivors_by_band"
@@ -227,7 +228,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
     if snap2["total_rows"] > 0:
         pairs = phase2.read_output(spark).select("a", "b")
     else:
-        pairs = spark.createDataFrame([], "a long, b long")
+        pairs = local_frame(spark, [], "a long, b long")
     survivors = phase1.read_output(spark)
     endpoints = (pairs.select(F.col("a").alias("id"))
                  .unionAll(pairs.select(F.col("b").alias("id"))).distinct())

@@ -14,6 +14,9 @@ Relational shape (SURVEY.md §2.2): an index nested-loop join —
 
 Scale notes (design target 10^12 pages, 1000 executors):
 * The probe side is never shuffled in broadcast mode: one scan, one filter.
+* The build side is computed on the driver and enters Spark through
+  ``session.local_frame``, the one path for driver constants: a JVM
+  ``LocalTableScan``, so no Python task runs to unpickle it.
 * The equi-join key is the Z-order cell at a cover resolution chosen so each
   polygon expands to <= max_cover_cells cells; candidate fan-out per page is
   bounded by polygons overlapping its cell (bbox refine then drops most).
@@ -34,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from polycheck_spark.geo import cells as C
 from polycheck_spark.geo.kernel import contains_csr
 from polycheck_spark.data.polygons import layer_to_csr
+from polycheck_spark.session import local_frame
 
 DEFAULT_TILE_RES = 12          # ~10 km tiles for tile assignment
 MAX_COVER_CELLS = 64           # per-polygon covering-cell budget
@@ -70,7 +74,8 @@ def polygon_cover_rows(layer: list[dict], res: int) -> list[tuple[int, int]]:
 
 def _build_side_df(spark, layer: list[dict], res: int) -> "DataFrame":
     """One flat build-side table (cell_id, polygon_id, bbox) — denormalized on
-    the driver so the build plan is a single local scan, no join/shuffle."""
+    the driver and held by the JVM as a ``local_frame``, so the build plan
+    is a single ``LocalTableScan``: no join, no shuffle, no Python stage."""
     rows = []
     for p in layer:
         xs = [float(np.float32(x)) for x, _ in p["vertices"]]
@@ -78,9 +83,9 @@ def _build_side_df(spark, layer: list[dict], res: int) -> "DataFrame":
         bbox = (min(xs), min(ys), max(xs), max(ys))
         for cid in C.cells_covering_bbox(*bbox, res):
             rows.append((int(cid), p["polygon_id"], *bbox))
-    return spark.createDataFrame(
-        rows, "cell_id long, polygon_id long, xmin double, ymin double, "
-              "xmax double, ymax double")
+    return local_frame(
+        spark, rows, "cell_id long, polygon_id long, xmin double, ymin double, "
+                     "xmax double, ymax double")
 
 
 def _pip_udf(spark, layer: list[dict]):
@@ -109,15 +114,6 @@ def _bbox_refine(df: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
         (F.col(lon_col) >= F.col("xmin")) & (F.col(lon_col) <= F.col("xmax"))
         & (F.col(lat_col) >= F.col("ymin")) & (F.col(lat_col) <= F.col("ymax"))
     )
-
-
-def _bbox_df(spark, layer: list[dict]) -> DataFrame:
-    rows = []
-    for p in layer:
-        xs = [float(np.float32(x)) for x, _ in p["vertices"]]
-        ys = [float(np.float32(y)) for _, y in p["vertices"]]
-        rows.append((p["polygon_id"], min(xs), min(ys), max(xs), max(ys)))
-    return spark.createDataFrame(rows, "polygon_id long, xmin double, ymin double, xmax double, ymax double")
 
 
 def pip_join(spark, pages: DataFrame, layer: list[dict], *,

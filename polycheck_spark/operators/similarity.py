@@ -21,6 +21,8 @@ from functools import lru_cache as _lru_cache
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from polycheck_spark.session import local_frame, spread
+
 N_PLANES = 8
 
 
@@ -200,7 +202,6 @@ def _spread(df: DataFrame) -> DataFrame:
     splits, so every ANN map stage ran on <= 2 of 32 cores).  Result sets
     are batching-invariant (per-batch top-k is a superset filter), so the
     round-robin placement never changes output."""
-    from polycheck_spark.session import spread
     return spread(df)
 
 
@@ -316,7 +317,7 @@ def _empty_ranked(df: DataFrame) -> DataFrame:
         T.StructField("target_id", T.LongType()),
         T.StructField("rank", T.IntegerType(), False),
     ])
-    return df.sparkSession.createDataFrame([], schema)
+    return local_frame(df.sparkSession, [], schema)
 
 
 def cosine_topk_sql(table: str, queries_filter: str, k: int,
@@ -465,7 +466,7 @@ def ivf_train_kmeans(embeddings: DataFrame, *,
 
     spark = embeddings.sparkSession
     out = [(int(i), [float(x) for x in cmat[i]]) for i in range(c)]
-    return spark.createDataFrame(out, "cid long, cvec array<double>")
+    return local_frame(spark, out, "cid long, cvec array<double>")
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from polycheck_spark.session import local_frame, spread
+
 MOD = 1_000_000_007
 
 STOPWORDS = {
@@ -240,7 +242,6 @@ def _doc_token_tf(docs: DataFrame, id_col: str, text_col: str,
 
     src = docs.select(F.col(id_col).alias("id"),
                       tokens_col(F.col(text_col)).alias("toks"))
-    from polycheck_spark.session import spread
     src = spread(src)
     return (src.mapInPandas(counts, f"id long, token string, {tf_name} long")
             .withColumnRenamed("id", id_col))
@@ -891,8 +892,8 @@ def quality_classify(docs: DataFrame, *, id_col: str = "doc_id",
         raise ValueError("weights must include a '*' fallback row")
     fb = by_lang["*"]
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(
-        [r for r in rows if r[0] != "*"],
+    wdf = local_frame(
+        spark, [r for r in rows if r[0] != "*"],
         "lang string, w_chars long, w_tokens long, w_stop long, bias long")
     feats = quality_scores(docs, id_col=id_col, text_col=text_col,
                            keep_cols=(lang_col,))

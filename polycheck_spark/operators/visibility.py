@@ -96,14 +96,6 @@ def sensor_visibility_local(data, sensors, combine="union", origin=None, resolut
 # Spark pipelines
 # ---------------------------------------------------------------------------
 
-def grid_to_df(spark, data) -> DataFrame:
-    """Dense (H,W) grid -> long-form DataFrame (row, col, occ)."""
-    data = np.asarray(data, dtype=np.float32)
-    h, w = data.shape
-    rows = [(int(r), int(c), float(data[r, c])) for r in range(h) for c in range(w)]
-    return spark.createDataFrame(rows, "row int, col int, occ float")
-
-
 def _grid_bc(spark, data):
     data = np.asarray(data, dtype=np.float32)
     return spark.sparkContext.broadcast(data)

@@ -4,13 +4,17 @@ Tuned for the engine's workload shape: Arrow-batched pandas UDFs, AQE with
 skew-join splitting, and shuffle partition counts sized for local[N] testing
 (on a real cluster, set spark.sql.shuffle.partitions ~ 2-3x total cores and
 spark.sql.files.maxPartitionBytes to 128-256 MiB; see BENCH/BASELINE.md).
+
+``local_frame`` is the one way program code turns driver constants (Python
+rows) into a DataFrame: an Arrow table the JVM holds as a ``LocalRelation``,
+so no pickled Python RDD and no Python-worker stage stand behind it.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 ENGINE_CONFS = {
     "spark.sql.adaptive.enabled": "true",
@@ -63,3 +67,27 @@ def spread(df):
         # is synthesized at full width)
         return df
     return df.repartition(n)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """Driver rows -> DataFrame over a JVM ``LocalRelation``.
+
+    ``rows``: tuples in ``schema`` field order.  ``schema``: a DDL string or
+    a ``StructType``; NOT NULL fields stay NOT NULL.  The rows become a
+    ``pyarrow.Table`` typed by the Spark schema's Arrow mapping, which the
+    JVM reads straight into a local relation: plans show ``LocalTableScan``,
+    not ``Scan ExistingRDD``, and actions run no Python task to unpickle
+    constants.  Values convert as ``createDataFrame`` converts Python rows
+    (a double into a ``float`` field rounds to nearest float32).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -25,6 +25,40 @@ def test_pip_join_probe_is_broadcast_and_key_nonnullable(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_pip_join_build_side_is_local_scan(spark, sf_dir):
+    """The driver-built build side is a JVM LocalTableScan: no pickled
+    Python RDD (and so no Python-worker stage) stands behind the broadcast."""
+    from polycheck_spark.data import synth
+    from polycheck_spark.data.polygons import default_query_layer
+    from polycheck_spark.operators import pip_join as PJ
+    pages = synth.geocoded_pages(spark, 2000, partitions=4)
+    for df in (E.q_pip_join(spark, sf_dir),
+               PJ.pip_join(spark, pages, default_query_layer(), mode="broadcast")):
+        plan = _plan(df)
+        assert "BroadcastHashJoin" in plan, plan
+        assert "LocalTableScan" in plan, plan
+        assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_driver_constants_only_via_local_frame():
+    """``createDataFrame(`` appears in program code only inside
+    ``session.local_frame`` — the one path for driver constants."""
+    import ast
+    import pathlib
+    root = pathlib.Path(E.__file__).resolve().parent
+    hits = []
+    for path in [root / "__spark_entry__.py",
+                 *sorted((root / "polycheck_spark").rglob("*.py"))]:
+        src = path.read_text()
+        funcs = [n for n in ast.walk(ast.parse(src))
+                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for i, line in enumerate(src.splitlines(), 1):
+            if "createDataFrame(" in line:
+                owners = [f.name for f in funcs if f.lineno <= i <= f.end_lineno]
+                hits.append((path.relative_to(root).as_posix(), owners))
+    assert hits == [("polycheck_spark/session.py", ["local_frame"])], hits
+
+
 def _scan_columns(plan: str) -> str:
     # "FileScan parquet [colA#1,colB#2,...]" — ReadSchema gets truncated in
     # toString(), the bracketed output list does not
