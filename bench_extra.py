@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main():
+    from polycheck_spark.session import default_cpus, get_spark
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                                    "/root/testdata/sf0.1"))
@@ -36,11 +37,9 @@ def main():
                     help="dump explain('formatted') per query into this dir")
     ap.add_argument("--suffix", default="",
                     help="filename suffix for --explain-dir dumps")
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     args = ap.parse_args()
 
-    from polycheck_spark.session import get_spark
     spark = get_spark("bench_extra", master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -61,17 +61,6 @@ def choose_cover_res(layer: list[dict], max_cells: int = MAX_COVER_CELLS) -> int
     return res
 
 
-def polygon_cover_rows(layer: list[dict], res: int) -> list[tuple[int, int]]:
-    """(cell_id, polygon_id) build-side rows: cells covering each polygon bbox."""
-    rows = []
-    for p in layer:
-        xs = [x for x, _ in p["vertices"]]
-        ys = [y for _, y in p["vertices"]]
-        for cid in C.cells_covering_bbox(min(xs), min(ys), max(xs), max(ys), res):
-            rows.append((int(cid), p["polygon_id"]))
-    return rows
-
-
 def _build_side_df(spark, layer: list[dict], res: int) -> "DataFrame":
     """One flat build-side table (cell_id, polygon_id, bbox) — denormalized on
     the driver and held by the JVM as a ``local_frame``, so the build plan
@@ -245,11 +234,6 @@ def detect_hot_cells(pages: DataFrame, res: int, *, lon_col: str = "lon",
             .filter(F.col("count") > threshold_frac * F.col("total"))
             .collect())
     return [r["cell_id"] for r in rows]
-
-
-def per_polygon_counts(joined: DataFrame) -> DataFrame:
-    """Per-polygon hit counts (partial aggregation happens map-side)."""
-    return joined.groupBy("polygon_id").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def tile_rollup(points: DataFrame, res_fine: int, res_coarse: int,

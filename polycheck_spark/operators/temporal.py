@@ -99,31 +99,6 @@ def asof_join(left: DataFrame, right: DataFrame, *, on: list[str],
     return out
 
 
-def asof_join_sql(left_cte: str, right_cte: str, *, on: list[str],
-                  left_ts: str = "ts", right_ts: str = "ts",
-                  value_cols: list[str],
-                  left_cols: list[str],
-                  tolerance_sec: int | None = None) -> str:
-    """DuckDB twin via its native ``ASOF LEFT JOIN`` — a genuinely
-    independent implementation (merge-based in DuckDB vs the window
-    carry-forward here), which is exactly what makes the differential
-    meaningful.  ``left_cols`` lists the left columns to emit."""
-    lsel = ", ".join(f"l.{c}" for c in left_cols)
-    vsel = ", ".join(f"r.{c}" for c in value_cols)
-    keys = " AND ".join(f"l.{c} = r.{c}" for c in on)
-    core = (f"SELECT {lsel}, r.{right_ts} AS asof_ts, {vsel} "
-            f"FROM ({left_cte}) l ASOF LEFT JOIN ({right_cte}) r "
-            f"ON {keys} AND l.{left_ts} >= r.{right_ts}")
-    if tolerance_sec is None:
-        return core
-    fresh = (f"epoch_ms({left_ts}) - epoch_ms(asof_ts) "
-             f"<= {tolerance_sec} * 1000")
-    gated = ", ".join(
-        f"CASE WHEN {fresh} THEN {c} END AS {c}"
-        for c in ["asof_ts"] + list(value_cols))
-    return (f"SELECT {', '.join(left_cols)}, {gated} FROM ({core})")
-
-
 # --- interval overlap join ----------------------------------------------------
 
 def interval_join(left: DataFrame, right: DataFrame, *, bucket_ms: int,

@@ -13,6 +13,7 @@ so no pickled Python RDD and no Python-worker stage stand behind it.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -32,12 +33,41 @@ ENGINE_CONFS = {
 }
 
 
+def default_cpus() -> int:
+    """Core count of a master nobody chose: ``SPARK_GRAFT_CPUS`` if set,
+    else the cores this process may run on.  The one place that decides
+    it (the jobs, ``bench_extra.py`` and ``tools/measure.py`` read it)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+
+
+def _launcher_master() -> str | None:
+    """The master a launcher set (``spark-submit --master``, or
+    ``--master`` in ``PYSPARK_SUBMIT_ARGS``), else None.  ``local[*]`` is
+    what spark-submit sets when it was given none, so it reads as unset."""
+    from pyspark import SparkConf, SparkContext
+    SparkContext._ensure_initialized()
+    master = SparkConf().get("spark.master", None)
+    return None if master in (None, "local[*]") else master
+
+
+def _master_cores(master: str) -> int:
+    """Task slots of a ``local``/``local[N]``/``local[N,F]`` master; for any
+    other master (a cluster), ``default_cpus()``."""
+    if master == "local":
+        return 1
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", master)
+    return int(m.group(1)) if m else default_cpus()
+
+
 def get_spark(app_name: str = "polycheck_spark", master: str | None = None,
               shuffle_partitions: int | None = None, **extra) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    """Session with ``ENGINE_CONFS``.  Master: the caller's, else the
+    launcher's, else ``local[default_cpus()]``; shuffle partitions default
+    to the master's task slots."""
+    master = master or _launcher_master() or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = _master_cores(master)
     b = SparkSession.builder.appName(app_name).master(master)
     for k, v in {**ENGINE_CONFS,
                  "spark.sql.shuffle.partitions": str(shuffle_partitions),

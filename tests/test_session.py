@@ -1,5 +1,11 @@
 """``session.local_frame``: driver rows -> a JVM LocalRelation that reads
-back exactly as ``spark.createDataFrame`` over the same rows."""
+back exactly as ``spark.createDataFrame`` over the same rows; and
+``get_spark`` keeps the master a launcher set."""
+
+import os
+import shutil
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import types as T
@@ -37,3 +43,26 @@ def test_local_frame_equals_create_dataframe(spark, case):
     assert got.collect() == want.collect()
     plan = got._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+
+
+def test_get_spark_keeps_spark_submit_master(tmp_path):
+    """``spark-submit --master 'local[2]'`` on a script that calls
+    ``get_spark`` with no master runs at ``local[2]`` with 2 shuffle
+    partitions (the jobs' ``main()`` path), not at a hard-coded default."""
+    submit = shutil.which("spark-submit")
+    if submit is None:
+        pytest.skip("spark-submit not on PATH")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from polycheck_spark.session import get_spark\n"
+        "s = get_spark('probe')\n"
+        "print('PROBE', s.sparkContext.master,\n"
+        "      s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n")
+    env = dict(os.environ, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable)
+    env.pop("SPARK_GRAFT_CPUS", None)
+    out = subprocess.run([submit, "--master", "local[2]", str(script)],
+                         capture_output=True, text=True, env=env, timeout=300)
+    probe = [ln for ln in out.stdout.splitlines() if ln.startswith("PROBE")]
+    assert probe == ["PROBE local[2] 2"], out.stdout[-2000:] + out.stderr[-2000:]
