@@ -1,0 +1,25 @@
+"""Importing polycheck_spark makes ``importlib.invalidate_caches()`` skip zip
+archives whose (inode, size, mtime) is unchanged since their importer's last
+re-read.  PySpark calls it on every Python task (``worker_util``), and CPython
+< 3.13 then re-reads each cached ``zipimporter``'s directory (3.13 defers it):
+12 on ``pyspark.zip`` (1,328 entries) and 2 on the spark-core jar (5,359) cost
+0.15-0.29 CPU s per task on a 4-core host, against ~9 ms of PIP kernel.  A first
+call, a rewritten (``--py-files`` too) or missing archive re-reads as before."""
+import os
+from zipimport import zipimporter
+
+_reread = zipimporter.invalidate_caches
+
+
+def _invalidate_if_changed(self):
+    try:
+        st = os.stat(self.archive)
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:
+        key = None
+    if key is None or self.__dict__.get("_stat_key") != key:
+        _reread(self)
+    self._stat_key = key
+
+
+zipimporter.invalidate_caches = _invalidate_if_changed

@@ -15,9 +15,12 @@ Scale notes (10^12 docs):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 from polycheck_spark.operators.text import tokens_col, _tokens_sql, _tok_int, _tok_int_sql
+from polycheck_spark.session import spread
 
 NGRAM = 3
 N_MINHASH = 16
@@ -61,33 +64,38 @@ def _shingles(docs: DataFrame, id_col: str, text_col: str,
     strings, and the per-doc set dedup IS the global distinct — (id,
     shingle) is unique once each doc's shingles are, so the distinct
     shuffle disappears entirely.  Same rows, same strings, same oracle."""
+    src = docs.select(F.col(id_col).alias("id"),
+                      tokens_col(F.col(text_col)).alias("toks"))
+    src = spread(src)
+    return src.mapInPandas(functools.partial(_gram_batches, distinct),
+                           "id long, shingle string")
+
+
+# This module's mapInPandas bodies (``_gram_batches``, ``_minhash_batches``,
+# ``_simhash_wide_batches``, ``_containment_batches``) are module-level
+# functions, not closures: a worker then imports this module to unpickle them,
+# which installs the package's zip-cache fix (see ``polycheck_spark``).
+
+def _gram_batches(distinct: bool, batches):
+    """(id, shingle) rows of each batch; per-doc set if ``distinct``."""
     import numpy as np
     import pandas as pd
 
-    dedup = distinct
-
-    def grams(batches):
-        for pdf in batches:
-            out_id, out_sh = [], []
-            for did, toks in zip(pdf["id"], pdf["toks"]):
-                n = len(toks) - NGRAM + 1
-                if n <= 0:
-                    continue
-                tl = list(toks)
-                g = [" ".join(tl[i:i + NGRAM]) for i in range(n)]
-                if dedup:
-                    g = list(dict.fromkeys(g))
-                out_id.append(np.full(len(g), did, dtype=np.int64))
-                out_sh.extend(g)
-            yield pd.DataFrame({
-                "id": np.concatenate(out_id) if out_id else np.array([], dtype=np.int64),
-                "shingle": out_sh})
-
-    src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
-    from polycheck_spark.session import spread
-    src = spread(src)
-    return src.mapInPandas(grams, "id long, shingle string")
+    for pdf in batches:
+        out_id, out_sh = [], []
+        for did, toks in zip(pdf["id"], pdf["toks"]):
+            n = len(toks) - NGRAM + 1
+            if n <= 0:
+                continue
+            tl = list(toks)
+            g = [" ".join(tl[i:i + NGRAM]) for i in range(n)]
+            if distinct:
+                g = list(dict.fromkeys(g))
+            out_id.append(np.full(len(g), did, dtype=np.int64))
+            out_sh.extend(g)
+        yield pd.DataFrame({
+            "id": np.concatenate(out_id) if out_id else np.array([], dtype=np.int64),
+            "shingle": out_sh})
 
 
 def _shingles_sql(table: str, id_col: str, text_col: str) -> str:
@@ -210,6 +218,15 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     was 16 interpreted HOF folds — slower than the explode; the NumPy
     batch path beats both.)
     """
+    src = docs.select(F.col(id_col).alias("id"),
+                      tokens_col(F.col(text_col)).alias("toks"))
+    src = spread(src)
+    schema = "id long, " + ", ".join(f"m{i} long" for i in range(N_MINHASH))
+    return src.mapInPandas(_minhash_batches, schema)
+
+
+def _minhash_batches(batches):
+    """(id, m0..m{N-1}) rows of each batch (:func:`minhash_signatures`)."""
     import hashlib
 
     import numpy as np
@@ -217,48 +234,38 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
 
     A = np.array(_MH_A, dtype=np.int64)
     B = np.array(_MH_B, dtype=np.int64)
-    cols = [f"m{i}" for i in range(N_MINHASH)]
+    cache: dict[str, int] = {}
 
-    def sig(batches):
-        cache: dict[str, int] = {}
+    def gram_h(g: str) -> int:
+        v = cache.get(g)
+        if v is None:
+            v = int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) % _MH_Q
+            cache[g] = v
+        return v
 
-        def gram_h(g: str) -> int:
-            v = cache.get(g)
-            if v is None:
-                v = int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) % _MH_Q
-                cache[g] = v
-            return v
-
-        for pdf in batches:
-            ids, lens, flat = [], [], []
-            for did, toks in zip(pdf["id"], pdf["toks"]):
-                n = len(toks) - NGRAM + 1
-                if n <= 0:
-                    continue        # explode() emitted no rows for the doc
-                tl = list(toks)
-                flat.extend(" ".join(tl[i:i + NGRAM]) for i in range(n))
-                ids.append(did)
-                lens.append(n)
-            if not ids:
-                continue
-            codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
-            uh = np.fromiter((gram_h(g) for g in uniq),
-                             dtype=np.int64, count=len(uniq))
-            vals = (uh[codes][:, None] * A[None, :] + B[None, :]) % _MH_P
-            starts = np.zeros(len(lens), dtype=np.int64)
-            starts[1:] = np.cumsum(lens)[:-1]
-            mins = np.minimum.reduceat(vals, starts, axis=0)
-            out = {"id": np.asarray(ids, dtype=np.int64)}
-            for i, c in enumerate(cols):
-                out[c] = mins[:, i]
-            yield pd.DataFrame(out)
-
-    src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
-    from polycheck_spark.session import spread
-    src = spread(src)
-    schema = "id long, " + ", ".join(f"{c} long" for c in cols)
-    return src.mapInPandas(sig, schema)
+    for pdf in batches:
+        ids, lens, flat = [], [], []
+        for did, toks in zip(pdf["id"], pdf["toks"]):
+            n = len(toks) - NGRAM + 1
+            if n <= 0:
+                continue        # explode() emitted no rows for the doc
+            tl = list(toks)
+            flat.extend(" ".join(tl[i:i + NGRAM]) for i in range(n))
+            ids.append(did)
+            lens.append(n)
+        if not ids:
+            continue
+        codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
+        uh = np.fromiter((gram_h(g) for g in uniq),
+                         dtype=np.int64, count=len(uniq))
+        vals = (uh[codes][:, None] * A[None, :] + B[None, :]) % _MH_P
+        starts = np.zeros(len(lens), dtype=np.int64)
+        starts[1:] = np.cumsum(lens)[:-1]
+        mins = np.minimum.reduceat(vals, starts, axis=0)
+        out = {"id": np.asarray(ids, dtype=np.int64)}
+        for i in range(N_MINHASH):
+            out[f"m{i}"] = mins[:, i]
+        yield pd.DataFrame(out)
 
 
 def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -373,11 +380,6 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             sim = sim + F.when(v > 0, F.lit(1 << b)).otherwise(F.lit(0))
         return per_doc.select("id", sim.cast("long").alias("simhash"))
 
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     # r8, wide widths: signatures are computed MAP-SIDE, no shuffle at all.  A document's
     # tokens live in its own row, so the former explode -> groupBy shipped
     # the 200x-bigger token relation through an exchange and evaluated
@@ -391,47 +393,53 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # bit-identical to the former aggregate (sum of +-1 == 2*ones - n) and
     # the SQL oracle is untouched.  Scale shape: strictly better — the
     # former path's token exchange (its dominant shuffle) is gone.
-    nhex = 15                      # bits > 32 here: the 60-bit token hash
-    shifts = np.arange(bits, dtype=np.int64)
-
-    def sig(batches):
-        cache: dict[str, int] = {}
-
-        def tok_int(t: str) -> int:
-            v = cache.get(t)
-            if v is None:
-                v = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:nhex], 16)
-                cache[t] = v
-            return v
-
-        for pdf in batches:
-            lens = np.fromiter((len(t) for t in pdf["toks"]),
-                               dtype=np.int64, count=len(pdf))
-            keep = lens > 0             # explode() emitted no rows for those
-            if not keep.any():
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)[keep]
-            lens = lens[keep]
-            flat = np.concatenate([np.asarray(t, dtype=object)
-                                   for t in pdf["toks"][keep]])
-            # hash each DISTINCT token once per batch (factorize is a hash
-            # pass over the token stream; the md5 loop runs vocabulary-sized)
-            codes, uniq = pd.factorize(flat)
-            uh = np.fromiter((tok_int(t) for t in uniq),
-                             dtype=np.int64, count=len(uniq))
-            bitsmat = (uh[codes][:, None] >> shifts[None, :]) & 1
-            starts = np.zeros(len(lens), dtype=np.int64)
-            starts[1:] = np.cumsum(lens)[:-1]
-            ones = np.add.reduceat(bitsmat, starts, axis=0)
-            v = 2 * ones - lens[:, None]    # == sum over tokens of +-1
-            sims = ((v > 0).astype(np.int64) << shifts[None, :]).sum(axis=1)
-            yield pd.DataFrame({"id": ids, "simhash": sims})
-
     src = docs.select(F.col(id_col).alias("id"),
                       tokens_col(F.col(text_col)).alias("toks"))
-    from polycheck_spark.session import spread
     src = spread(src)
-    return src.mapInPandas(sig, "id long, simhash long")
+    return src.mapInPandas(functools.partial(_simhash_wide_batches, bits),
+                           "id long, simhash long")
+
+
+def _simhash_wide_batches(bits: int, batches):
+    """(id, simhash) rows of each batch, 33-60 bit widths (:func:`simhash`)."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    nhex = 15                      # bits > 32 here: the 60-bit token hash
+    shifts = np.arange(bits, dtype=np.int64)
+    cache: dict[str, int] = {}
+
+    def tok_int(t: str) -> int:
+        v = cache.get(t)
+        if v is None:
+            v = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:nhex], 16)
+            cache[t] = v
+        return v
+
+    for pdf in batches:
+        lens = np.fromiter((len(t) for t in pdf["toks"]),
+                           dtype=np.int64, count=len(pdf))
+        keep = lens > 0             # explode() emitted no rows for those
+        if not keep.any():
+            continue
+        ids = pdf["id"].to_numpy(dtype=np.int64)[keep]
+        lens = lens[keep]
+        flat = np.concatenate([np.asarray(t, dtype=object)
+                               for t in pdf["toks"][keep]])
+        # hash each DISTINCT token once per batch (factorize is a hash
+        # pass over the token stream; the md5 loop runs vocabulary-sized)
+        codes, uniq = pd.factorize(flat)
+        uh = np.fromiter((tok_int(t) for t in uniq),
+                         dtype=np.int64, count=len(uniq))
+        bitsmat = (uh[codes][:, None] >> shifts[None, :]) & 1
+        starts = np.zeros(len(lens), dtype=np.int64)
+        starts[1:] = np.cumsum(lens)[:-1]
+        ones = np.add.reduceat(bitsmat, starts, axis=0)
+        v = 2 * ones - lens[:, None]    # == sum over tokens of +-1
+        sims = ((v > 0).astype(np.int64) << shifts[None, :]).sum(axis=1)
+        yield pd.DataFrame({"id": ids, "simhash": sims})
 
 
 def simhash_sql(table: str, id_col: str = "doc_id", text_col: str = "text",
@@ -1233,7 +1241,6 @@ def containment_pairs(docs: DataFrame, threshold: tuple[int, int] = (8, 10),
                 .filter(F.col("n_common") * den >= num * F.col("n_contained")))
 
     import numpy as np
-    import pandas as pd
 
     spark = docs.sparkSession
     # inverted index: shingle -> posting array of doc CODES (dense 0..N-1
@@ -1256,46 +1263,52 @@ def containment_pairs(docs: DataFrame, threshold: tuple[int, int] = (8, 10),
     schema = ("contained long, container long, n_common long, "
               "n_contained long, n_container long")
 
-    def score(batches):
-        idx, ids_v, sizes_v = bc.value
-        n_docs = len(ids_v)
-        for pdf in batches:
-            o_a, o_b, o_c, o_na, o_nb = [], [], [], [], []
-            for did, toks in zip(pdf["id"], pdf["toks"]):
-                n = len(toks) - NGRAM + 1
-                if n <= 0:
-                    continue
-                tl = list(toks)
-                grams = dict.fromkeys(" ".join(tl[i:i + NGRAM])
-                                      for i in range(n))
-                counts = np.bincount(
-                    np.concatenate([idx[g] for g in grams]),
-                    minlength=n_docs)
-                me = np.searchsorted(ids_v, did)
-                na = counts[me]            # every own posting contains me
-                counts[me] = 0             # never pair with self
-                cand = np.flatnonzero(counts)
-                keep = counts[cand] * den >= num * na
-                cand = cand[keep]
-                o_a.append(np.full(len(cand), did, dtype=np.int64))
-                o_b.append(ids_v[cand])
-                o_c.append(counts[cand])
-                o_na.append(np.full(len(cand), na, dtype=np.int64))
-                o_nb.append(sizes_v[cand])
-            e = np.array([], dtype=np.int64)
-            yield pd.DataFrame({
-                "contained": np.concatenate(o_a) if o_a else e,
-                "container": np.concatenate(o_b) if o_b else e,
-                "n_common": np.concatenate(o_c) if o_c else e,
-                "n_contained": np.concatenate(o_na) if o_na else e,
-                "n_container": np.concatenate(o_nb) if o_nb else e,
-            })
-
     src = docs.select(F.col(id_col).alias("id"),
                       tokens_col(F.col(text_col)).alias("toks"))
-    from polycheck_spark.session import spread
     src = spread(src)
-    return src.mapInPandas(score, schema)
+    return src.mapInPandas(
+        functools.partial(_containment_batches, bc, num, den), schema)
+
+
+def _containment_batches(bc, num: int, den: int, batches):
+    """Per-doc containment rows of each batch (:func:`containment_pairs`'s
+    broadcast inverted-index path); ``bc`` holds (postings, ids, sizes)."""
+    import numpy as np
+    import pandas as pd
+
+    idx, ids_v, sizes_v = bc.value
+    n_docs = len(ids_v)
+    for pdf in batches:
+        o_a, o_b, o_c, o_na, o_nb = [], [], [], [], []
+        for did, toks in zip(pdf["id"], pdf["toks"]):
+            n = len(toks) - NGRAM + 1
+            if n <= 0:
+                continue
+            tl = list(toks)
+            grams = dict.fromkeys(" ".join(tl[i:i + NGRAM])
+                                  for i in range(n))
+            counts = np.bincount(
+                np.concatenate([idx[g] for g in grams]),
+                minlength=n_docs)
+            me = np.searchsorted(ids_v, did)
+            na = counts[me]            # every own posting contains me
+            counts[me] = 0             # never pair with self
+            cand = np.flatnonzero(counts)
+            keep = counts[cand] * den >= num * na
+            cand = cand[keep]
+            o_a.append(np.full(len(cand), did, dtype=np.int64))
+            o_b.append(ids_v[cand])
+            o_c.append(counts[cand])
+            o_na.append(np.full(len(cand), na, dtype=np.int64))
+            o_nb.append(sizes_v[cand])
+        e = np.array([], dtype=np.int64)
+        yield pd.DataFrame({
+            "contained": np.concatenate(o_a) if o_a else e,
+            "container": np.concatenate(o_b) if o_b else e,
+            "n_common": np.concatenate(o_c) if o_c else e,
+            "n_contained": np.concatenate(o_na) if o_na else e,
+            "n_container": np.concatenate(o_nb) if o_nb else e,
+        })
 
 
 def containment_pairs_sql(table: str, threshold: tuple[int, int] = (8, 10),

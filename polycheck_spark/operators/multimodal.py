@@ -114,8 +114,7 @@ def _le16_hex_int(hx, pos: int):
                            F.substring(hx, pos, 2)), 16, 10).cast("long")
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _jpeg_dims_udf(payload: pd.Series) -> pd.Series:
+def _jpeg_dims(payload: pd.Series) -> pd.Series:
     """[width, height] from the first SOF0/SOF1/SOF2 segment, else None.
 
     Walks the segment chain (marker FF xx + big-endian length that counts
@@ -146,6 +145,12 @@ def _jpeg_dims_udf(payload: pd.Series) -> pd.Series:
                     i += 2 + seg_len
         out.append(dims)
     return pd.Series(out, dtype=object)
+
+
+# wrapped, not decorated: ``_jpeg_dims`` stays importable by name, so a worker
+# imports this module to unpickle it, which installs the package's zip-cache
+# fix (see ``polycheck_spark``)
+_jpeg_dims_udf = F.pandas_udf(_jpeg_dims, T.ArrayType(T.LongType()))
 
 
 def media_dims(df: DataFrame, payload_col: str = "html") -> DataFrame:

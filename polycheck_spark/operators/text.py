@@ -11,6 +11,8 @@ the first 8 hex digits of md5 — the one hash both engines compute identically.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from polycheck_spark.session import local_frame, spread
@@ -216,35 +218,40 @@ def _doc_token_tf(docs: DataFrame, id_col: str, text_col: str,
 
     Shared by :func:`vocab_topk`, :func:`doc_top_terms` and
     :func:`unigram_quality`."""
-    import numpy as np
-    import pandas as pd
-
-    def counts(batches):
-        for pdf in batches:
-            lens = np.fromiter((len(t) for t in pdf["toks"]),
-                               dtype=np.int64, count=len(pdf))
-            keep = lens > 0
-            if not keep.any():
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)[keep]
-            lens = lens[keep]
-            flat = np.concatenate([np.asarray(t, dtype=object)
-                                   for t in pdf["toks"][keep]])
-            codes, uniq = pd.factorize(flat)
-            doc_idx = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
-            packed = doc_idx * len(uniq) + codes
-            pk, tf = np.unique(packed, return_counts=True)
-            yield pd.DataFrame({
-                "id": ids[pk // len(uniq)],
-                "token": uniq[pk % len(uniq)],
-                tf_name: tf.astype(np.int64),
-            })
-
     src = docs.select(F.col(id_col).alias("id"),
                       tokens_col(F.col(text_col)).alias("toks"))
     src = spread(src)
-    return (src.mapInPandas(counts, f"id long, token string, {tf_name} long")
+    return (src.mapInPandas(functools.partial(_token_tf_batches, tf_name),
+                            f"id long, token string, {tf_name} long")
             .withColumnRenamed("id", id_col))
+
+
+def _token_tf_batches(tf_name: str, batches):
+    """``mapInPandas`` body of :func:`_doc_token_tf`.  Module-level, not a
+    closure: a worker then imports this module to unpickle it, which installs
+    the package's zip-cache fix (see ``polycheck_spark``)."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        lens = np.fromiter((len(t) for t in pdf["toks"]),
+                           dtype=np.int64, count=len(pdf))
+        keep = lens > 0
+        if not keep.any():
+            continue
+        ids = pdf["id"].to_numpy(dtype=np.int64)[keep]
+        lens = lens[keep]
+        flat = np.concatenate([np.asarray(t, dtype=object)
+                               for t in pdf["toks"][keep]])
+        codes, uniq = pd.factorize(flat)
+        doc_idx = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
+        packed = doc_idx * len(uniq) + codes
+        pk, tf = np.unique(packed, return_counts=True)
+        yield pd.DataFrame({
+            "id": ids[pk // len(uniq)],
+            "token": uniq[pk % len(uniq)],
+            tf_name: tf.astype(np.int64),
+        })
 
 
 
