@@ -1280,18 +1280,6 @@ def q_simhash_pairs_wide(spark, sf_dir):
 # must genuinely WALK the segment chain while the oracle — knowing the
 # formula — checks it against the computed fixed offset.
 
-def _spread(spark, df):
-    """Round-robin repartition to the session parallelism: the documents
-    parquet reads as 1-2 input splits, so without this every payload
-    synthesis + Python decode stage of the media queries ran on <= 2 of
-    the 32 cores (measured: the image corpus decode alone was 12.5 s at
-    sf1.0 on 2 cores, ~1 s spread).  Placing the repartition BEFORE the
-    payload projection keeps the hex-expression synthesis above the
-    exchange too.  Row placement never affects results — every media
-    query is per-row deterministic and output-ordered."""
-    return spread(df)
-
-
 def _media_dims_payload_col():
     d = F.col("doc_id")
     def hex4(c):
@@ -1329,7 +1317,7 @@ def q_media_dimensions(spark, sf_dir):
     GIF logical screen as pure hex Column arithmetic, JPEG SOF via the
     Arrow segment walk — checked against a fixed-offset oracle."""
     from polycheck_spark.operators.multimodal import media_dims, media_metadata
-    # no _spread here: the dims walk is pure JVM hex arithmetic and cheap
+    # no spread here: the dims walk is pure JVM hex arithmetic and cheap
     # enough that the extra exchange costs more than the parallelism buys
     # (A/B: 0.55 s unspread vs 0.73 s spread at sf1.0)
     docs = _docs(spark, sf_dir).select(
@@ -1473,7 +1461,9 @@ def q_media_decode(spark, sf_dir):
     decoders (padding, comments, chunk walk, signed samples) with every
     integer pixel/sample statistic checked in closed form."""
     from polycheck_spark.operators.multimodal import decode_media_basic
-    docs = _spread(spark, _docs(spark, sf_dir)).select(
+    # spread BEFORE the payload projection, so the payload synthesis runs
+    # after the exchange, on every core
+    docs = spread(_docs(spark, sf_dir)).select(
         "doc_id", _media_decode_payload_col().alias("payload"))
     return decode_media_basic(docs).orderBy("doc_id")
 
@@ -1553,7 +1543,9 @@ def q_image_near_dup(spark, sf_dir):
     against a brute-force closed-form oracle."""
     from polycheck_spark.operators.dedup import hamming_near_pairs
     from polycheck_spark.operators.multimodal import image_dhash
-    docs = _spread(spark, _docs(spark, sf_dir)).select(
+    # spread BEFORE the payload projection, so the payload synthesis runs
+    # after the exchange, on every core
+    docs = spread(_docs(spark, sf_dir)).select(
         "doc_id", _image_corpus_payload_col().alias("payload"))
     sig = image_dhash(docs)
     return hamming_near_pairs(sig, max_hamming=IMG_NEAR_DUP_HAMMING,
@@ -1596,7 +1588,7 @@ def q_audio_features(spark, sf_dir):
     real RIFF decode -> integer amplitude/zero-crossing stats, frame
     count at a small test frame so multi-frame clips exist."""
     from polycheck_spark.operators.multimodal import audio_features
-    # no _spread: the WAV slice is 1/4 of the corpus and decode-light;
+    # no spread: the WAV slice is 1/4 of the corpus and decode-light;
     # A/B at sf1.0 read equal (1.3 s both ways), so skip the exchange
     docs = (_docs(spark, sf_dir).filter(F.pmod(F.col("doc_id"), F.lit(4)) == 2)
             .select("doc_id", _media_decode_payload_col().alias("payload")))

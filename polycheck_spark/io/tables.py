@@ -6,7 +6,9 @@ snapshot checkpointing, partition-granular resume, per-partition lineage and
 row-count/latency metrics — as a thin manifest layer over partitioned parquet:
 
     out_dir/
+      _staged_<name>/              (a job's write-once staged input)
       bucket=K/ *.parquet          (one directory per work bucket)
+      _lineage/stage_<name>.json   (staging marker: the job's exact parameters)
       _lineage/bucket_K.json       (atomic marker: rows, timings, status)
       _snapshots/snapshot_N.json   (append-only snapshot log)
 
@@ -15,16 +17,22 @@ leaves a half-claimed bucket: on restart, buckets without a marker re-run and
 buckets with one are skipped — output is deterministic per bucket, making the
 whole job idempotent. If a real Iceberg catalog is present, the same driver
 loop binds to Iceberg snapshots instead.
+
+:meth:`CheckpointedWriter.stage` is the one staging path: every job scans its
+source once through it, and it alone decides when staged data and bucket
+lineage are stale.  :meth:`CheckpointedWriter.read_bucket` is the
+partition-pruned read of one staged bucket.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from polycheck_spark.session import local_frame
 
@@ -65,50 +73,66 @@ class CheckpointedWriter:
             json.dump(record, f)
         os.replace(tmp, self._marker_path(bucket))  # atomic claim
 
-    # -- one-time staging markers ---------------------------------------------
+    # -- one-time staging ----------------------------------------------------
 
     def _stage_marker_path(self, name: str) -> str:
         return os.path.join(self.lineage_dir, f"stage_{name}.json")
 
-    def is_staged(self, name: str) -> bool:
-        return os.path.exists(self._stage_marker_path(name))
+    def stage(self, name: str, params: dict, write: Callable[[str], None],
+              downstream: tuple[CheckpointedWriter, ...] = ()) -> str:
+        """Run the write-once staging step ``name`` unless it already ran
+        with exactly ``params``; returns its path, ``<out_dir>/_staged_<name>``.
 
-    def staged_record(self, name: str) -> dict | None:
-        """The marker's record, or None if this stage never completed —
-        callers compare it against their CURRENT parameters so a resume with
-        different arguments re-stages instead of reusing stale data.
-        A corrupt/empty marker (possible after power loss) reads as None so
-        the job self-heals by re-staging instead of crashing forever."""
+        A resume must never reuse data or lineage of a differently
+        parameterized run, and a crash at any point must read as "never
+        staged".  Hence, in this order:
+
+        1. the marker is compared with ``params`` (after a JSON round trip,
+           so tuples equal lists); equal means staged and current, and
+           nothing else happens.  A missing, empty or corrupt marker (power
+           loss) never compares equal, so the job re-stages;
+        2. the marker is tombstoned BEFORE the staged data is overwritten;
+        3. every bucket marker and directory is removed, and so are the
+           stage markers and lineage of each ``downstream`` writer (jobs that
+           consume this stage's output).  Bucket markers are
+           parameter-insensitive, so ``params`` must hold every parameter
+           that shapes any bucket's output, not just the staging inputs;
+        4. ``write(path)`` materializes the staged data;
+        5. an fsync'd marker recording ``params`` is atomically put in place.
+        """
+        path = os.path.join(self.out_dir, f"_staged_{name}")
+        params = json.loads(json.dumps(params))
+        marker = self._stage_marker_path(name)
         try:
-            with open(self._stage_marker_path(name)) as f:
-                return json.load(f)
+            with open(marker) as f:
+                if json.load(f) == params:
+                    return path
         except (FileNotFoundError, json.JSONDecodeError):
-            return None
-
-    def clear_stage(self, name: str) -> None:
-        """Tombstone the stage marker BEFORE overwriting staged data: a crash
-        mid-overwrite must read as 'never staged', not as the old record."""
-        try:
-            os.remove(self._stage_marker_path(name))
-        except FileNotFoundError:
             pass
-
-    def mark_staged(self, name: str, record: dict) -> None:
-        """Atomic + durable marker for a write-once staging step: killed
-        mid-stage -> no marker -> re-stage; marker present -> every resume
-        reads the staged data instead of rescanning the source."""
-        tmp = self._stage_marker_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
+        self._invalidate(name)
+        for w in downstream:
+            w._invalidate()
+        write(path)
+        with open(marker + ".tmp", "w") as f:
+            json.dump(params, f)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, self._stage_marker_path(name))
+        os.replace(marker + ".tmp", marker)
+        return path
 
-    def reset_lineage(self) -> None:
-        """Invalidate every bucket completion marker and output directory —
-        required when job PARAMETERS change: bucket markers are
-        parameter-insensitive, so resuming a differently-parameterized job
-        over old lineage would silently return the old job's output."""
+    @staticmethod
+    def read_bucket(spark: SparkSession, path: str, col: str,
+                    k: int) -> DataFrame:
+        """Bucket ``k`` of a table staged ``partitionBy(col)``: the equality
+        on the partition column becomes a ``PartitionFilters`` scan of that
+        one directory, so a bucket never rescans the others."""
+        return spark.read.parquet(path).filter(F.col(col) == k).drop(col)
+
+    def _invalidate(self, stage: str | None = None) -> None:
+        """Tombstone stage marker ``stage`` (every stage marker if None),
+        then every bucket marker, then every bucket directory."""
+        for marker in glob.glob(self._stage_marker_path(stage or "*")):
+            os.remove(marker)
         for b in self.completed_buckets():
             os.remove(self._marker_path(b))
         import shutil
@@ -206,7 +230,7 @@ class CheckpointedWriter:
         """Read the table AS OF a snapshot (Iceberg time travel): only the
         bucket directories that snapshot's manifest lists.  Buckets are
         write-once (a marker commits them; only a parameter-change
-        ``reset_lineage`` ever tombstones), so earlier snapshots remain
+        :meth:`stage` ever tombstones), so earlier snapshots remain
         readable as later ones append buckets — the same immutability
         contract Iceberg manifests rely on."""
         manifest = self.snapshot(snapshot_id)

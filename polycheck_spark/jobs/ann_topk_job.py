@@ -87,19 +87,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
             F.col("vec_id").alias("cid"),
             F.col("embedding").cast("array<double>").alias("cvec"))
 
-    staged_dir = os.path.join(out_dir, "_staged_emb")
-    probes_dir = os.path.join(out_dir, "_staged_probes")
-    # EVERY parameter that shapes any bucket's output belongs here, not just
-    # the staging inputs: bucket completion markers are parameter-insensitive,
-    # so a resume with a changed k/top_m against old lineage would silently
-    # mix old and new bucket outputs — the params mismatch resets lineage
-    stage_params = {"vecs": num_vecs, "buckets": n_buckets, "dim": dim,
-                    "n_probe": n_probe, "q_mod": q_mod, "k": k,
-                    "top_m": top_m,
-                    "n_centroids": n_centroids, "path": staged_dir}
-    if writer.staged_record(STAGE) != stage_params:
-        writer.clear_stage(STAGE)
-        writer.reset_lineage()
+    def write(path):
         cents = centroids()
         t = corpus().select(F.col("vec_id"),
                             F.col("embedding").cast("array<double>").alias("embedding"))
@@ -107,15 +95,22 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
         (assigned
          .withColumn("tq", _quant_col(F.col("embedding")))
          .withColumn("wb", F.pmod(F.col("list_id"), F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").partitionBy("wb").parquet(staged_dir))
+         .write.mode("overwrite").partitionBy("wb").parquet(f"{path}/vectors"))
         q = t.filter(F.col("vec_id") % q_mod == 0).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
         probed = SIM._assign_lists(q, cents, "query_id", "qvec", n_probe)
         (probed
          .withColumn("qq", _quant_col(F.col("qvec")))
          .withColumn("wb", F.pmod(F.col("list_id"), F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").parquet(probes_dir))
-        writer.mark_staged(STAGE, stage_params)
+         .write.mode("overwrite").parquet(f"{path}/probes"))
+
+    # k and top_m shape every bucket's output, not the staged data: they
+    # are here so a change to either resets the bucket lineage
+    staged = writer.stage(STAGE, {"vecs": num_vecs, "buckets": n_buckets,
+                                  "dim": dim, "n_probe": n_probe,
+                                  "q_mod": q_mod, "k": k, "top_m": top_m,
+                                  "n_centroids": n_centroids}, write)
+    probes_dir = f"{staged}/probes"
 
     def build_bucket(kb: int):
         # the bucket's probe table is SMALL by contract (queries x n_probe /
@@ -171,7 +166,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
                     "iscore": np.concatenate(out_s) if out_s else empty,
                 })
 
-        part = spark.read.parquet(staged_dir).filter(F.col("wb") == kb)
+        part = writer.read_bucket(spark, f"{staged}/vectors", "wb", kb)
         # stage 1 reads ONLY the int8 column (ReadSchema prunes the doubles)
         partial = (part.select("vec_id", "list_id", "tq")
                    .mapInPandas(stage1, schema))

@@ -119,18 +119,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
     phase2 = CheckpointedWriter(os.path.join(out_dir, "fuzzy_pairs"))
 
     # ---- phase 1 staging: frontier dedup + extract + strip + gates --------
-    staged1 = os.path.join(out_dir, "_staged_clean")
-    params1 = {"pages": num_pages, "buckets": n_buckets,
-               "variant_mod": variant_mod, "dup_mod": dup_mod,
-               "near_mod": near_mod,
-               "min_tokens": min_tokens, "max_line_df": max_line_df,
-               "langs_keep": list(langs_keep), "path": staged1}
-    if phase1.staged_record(STAGE1) != params1:
-        phase1.clear_stage(STAGE1)
-        phase1.reset_lineage()
-        # phase 2 consumes phase 1's output: its lineage is stale too
-        phase2.clear_stage(STAGE2)
-        phase2.reset_lineage()
+    def write_clean(path):
         crawl = _synth_crawl(spark, num_pages, variant_mod, dup_mod, near_mod)
         canon = crawl.withColumn("curl", W.canonical_url_col(F.col("url")))
         frontier = canon.join(
@@ -153,13 +142,19 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
          .withColumn("bucket",
                      F.pmod(F.conv(F.substring("text_md5", 1, 8), 16, 10)
                             .cast("long"), F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(staged1))
-        phase1.mark_staged(STAGE1, params1)
+         .write.mode("overwrite").partitionBy("bucket").parquet(path))
+
+    params1 = {"pages": num_pages, "buckets": n_buckets,
+               "variant_mod": variant_mod, "dup_mod": dup_mod,
+               "near_mod": near_mod,
+               "min_tokens": min_tokens, "max_line_df": max_line_df,
+               "langs_keep": langs_keep}
+    # phase 2 consumes phase 1's output: a phase-1 restage makes it stale too
+    staged1 = phase1.stage(STAGE1, params1, write_clean, downstream=(phase2,))
 
     # ---- phase 1 buckets: exact dedup + signature stamping ----------------
     def build_clean_bucket(k: int):
-        bucket = (spark.read.parquet(staged1)
-                  .filter(F.col("bucket") == k).drop("bucket"))
+        bucket = phase1.read_bucket(spark, staged1, "bucket", k)
         keep = (bucket.groupBy("text_md5")
                 .agg(F.min("url").alias("url"),
                      F.count(F.lit(1)).alias("n_exact_dups")))
@@ -175,11 +170,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
     snap1 = phase1.commit_snapshot()
 
     # ---- phase 2 staging: survivors exploded to band keys -----------------
-    staged2 = os.path.join(out_dir, "_staged_bands")
-    params2 = {"input": params1, "agree_min": agree_min, "path": staged2}
-    if phase2.staged_record(STAGE2) != params2:
-        phase2.clear_stage(STAGE2)
-        phase2.reset_lineage()
+    def write_bands(path):
         survivors = phase1.read_output(spark)
         bands = survivors.select(
             "doc_key", *[f"m{i}" for i in range(N_MINHASH)],
@@ -192,12 +183,14 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                  F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
         (bands.withColumn("wb", F.pmod(F.xxhash64("band", "bkey"),
                                        F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").partitionBy("wb").parquet(staged2))
-        phase2.mark_staged(STAGE2, params2)
+         .write.mode("overwrite").partitionBy("wb").parquet(path))
+
+    staged2 = phase2.stage(STAGE2, {"input": params1, "agree_min": agree_min},
+                           write_bands)
 
     # ---- phase 2 buckets: disjoint verified candidate pairs ---------------
     def build_pair_bucket(k: int):
-        part = spark.read.parquet(staged2).filter(F.col("wb") == k).drop("wb")
+        part = phase2.read_bucket(spark, staged2, "wb", k)
         x = part.alias("x")
         y = part.alias("y")
         j = (x.join(y, ["band", "bkey"])

@@ -20,7 +20,6 @@ never overlap.
 from __future__ import annotations
 
 import argparse
-import os
 
 from pyspark.sql import functions as F
 
@@ -37,12 +36,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str,
     dedups them resumably.  Returns run stats + the committed snapshot."""
     writer = CheckpointedWriter(out_dir)
 
-    staged_dir = os.path.join(out_dir, "_staged_pages")
-    stage_params = {"pages": num_pages, "buckets": n_buckets,
-                    "dup_mod": dup_mod, "path": staged_dir}
-    if writer.staged_record(STAGE) != stage_params:
-        writer.clear_stage(STAGE)
-        writer.reset_lineage()
+    def write(path):
         pages = synth.generate_pages(spark, num_pages)
         dups = (pages.filter(F.pmod(F.xxhash64("url"), F.lit(dup_mod)) == 0)
                 .withColumn("url", F.concat(F.col("url"), F.lit("?d"))))
@@ -53,12 +47,13 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str,
             "bucket",
             F.pmod(F.conv(F.substring("text_md5", 1, 8), 16, 10).cast("long"),
                    F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(staged_dir))
-        writer.mark_staged(STAGE, stage_params)
+         .write.mode("overwrite").partitionBy("bucket").parquet(path))
+
+    staged = writer.stage(STAGE, {"pages": num_pages, "buckets": n_buckets,
+                                  "dup_mod": dup_mod}, write)
 
     def build_bucket(k: int):
-        bucket = (spark.read.parquet(staged_dir)
-                  .filter(F.col("bucket") == k).drop("bucket"))
+        bucket = writer.read_bucket(spark, staged, "bucket", k)
         keep = (bucket.groupBy("text_md5")
                 .agg(F.min("url").alias("url"),
                      F.count(F.lit(1)).alias("n_dups")))

@@ -88,18 +88,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
             synth.generate_embeddings(spark, num_vecs, dim),
             dim, dup_mod, DUP_OFFSET)
 
-    staged_dir = os.path.join(out_dir, "_staged_emb")
-    # threshold included although staging doesn't depend on it: bucket
-    # completion markers are parameter-insensitive, so a resume with a
-    # changed threshold against old lineage would mix bucket outputs
-    # rescored under different thresholds — the mismatch resets lineage
-    stage_params = {"vecs": num_vecs, "buckets": n_buckets, "dim": dim,
-                    "dup_mod": dup_mod, "planes": n_planes,
-                    "threshold": list(threshold),
-                    "path": staged_dir}
-    if writer.staged_record(STAGE) != stage_params:
-        writer.clear_stage(STAGE)
-        writer.reset_lineage()
+    def write(path):
         both = corpus().withColumn(
             "bucket", SIM.bucket_key_col(F.col("embedding"), dim,
                                          n_planes=n_planes))
@@ -114,8 +103,14 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
                             "embedding", F.lit("p").alias("side"))
         (exact.unionByName(probe)
          .withColumn("wb", F.pmod(F.col("bucket"), F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").partitionBy("wb").parquet(staged_dir))
-        writer.mark_staged(STAGE, stage_params)
+         .write.mode("overwrite").partitionBy("wb").parquet(path))
+
+    # threshold included although staging doesn't depend on it: a changed
+    # threshold must not reuse buckets rescored under the old one
+    staged = writer.stage(STAGE, {"vecs": num_vecs, "buckets": n_buckets,
+                                  "dim": dim, "dup_mod": dup_mod,
+                                  "planes": n_planes, "threshold": threshold},
+                          write)
 
     num, den = threshold
 
@@ -135,7 +130,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
             yield pdf.loc[SIM.np_guarded_cosine(a, b) * den >= num, ["a", "b"]]
 
     def build_bucket(k: int):
-        part = spark.read.parquet(staged_dir).filter(F.col("wb") == k).drop("wb")
+        part = writer.read_bucket(spark, staged, "wb", k)
         e = part.filter(F.col("side") == "e").select(
             F.col("vec_id").alias("a"), "bucket",
             F.col("embedding").alias("avec"))

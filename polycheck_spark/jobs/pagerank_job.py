@@ -79,24 +79,17 @@ def synth_linked_pages(spark, num_pages: int, hosts: int):
 def stage_edges(spark, writer: CheckpointedWriter, num_pages: int,
                 hosts: int) -> str:
     """Extract the host link graph once; out-weights are pre-joined so the
-    per-round build never re-aggregates.  Web-shape parameter changes
-    tombstone the stage AND all round lineage (old rounds were computed
-    over a different graph)."""
-    path = os.path.join(writer.out_dir, "_staged_edges")
-    params = {"pages": num_pages, "hosts": hosts}
-    rec = writer.staged_record(STAGE)
-    if rec is not None and all(rec.get(k) == v for k, v in params.items()):
-        return path
-    writer.clear_stage(STAGE)
-    writer.reset_lineage()
-    edges = G.host_link_graph(synth_linked_pages(spark, num_pages, hosts))
-    outw = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_w"))
-    (edges.join(outw, "src_host")
-     .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"),
-             F.col("n_links").cast("long").alias("w"), "out_w")
-     .write.mode("overwrite").parquet(path))
-    writer.mark_staged(STAGE, params)
-    return path
+    per-round build never re-aggregates.  The round budget is deliberately
+    not a staging parameter (see module docstring)."""
+    def write(path):
+        edges = G.host_link_graph(synth_linked_pages(spark, num_pages, hosts))
+        outw = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_w"))
+        (edges.join(outw, "src_host")
+         .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"),
+                 F.col("n_links").cast("long").alias("w"), "out_w")
+         .write.mode("overwrite").parquet(path))
+
+    return writer.stage(STAGE, {"pages": num_pages, "hosts": hosts}, write)
 
 
 def _nodes(spark, edges_path: str):
@@ -107,25 +100,16 @@ def _nodes(spark, edges_path: str):
 
 def build_round(spark, writer: CheckpointedWriter, edges_path: str,
                 k: int):
-    """Rank table after round k+1: one equi-join + one groupBy-sum over
-    host-sized frames, reading round k's committed parquet (or the uniform
-    BASE table for the first round)."""
+    """Rank table after round k+1: :func:`graph.pagerank_round` over the
+    staged edges, reading round k's committed parquet (or the uniform BASE
+    table for the first round)."""
     nodes = _nodes(spark, edges_path)
     if k == 0:
         prev = nodes.select("host", F.lit(G.BASE).cast("long").alias("pr"))
     else:
         prev = spark.read.parquet(os.path.join(writer.out_dir,
                                                f"bucket={k - 1}"))
-    e = spark.read.parquet(edges_path)
-    contrib = (e.join(prev, e.src == prev.host)
-               .select(F.col("dst"),
-                       F.expr(f"(pr * {G.D_NUM} * w) div ({G.D_DEN} * out_w)")
-                       .alias("c")))
-    in_mass = contrib.groupBy("dst").agg(F.sum("c").alias("m"))
-    return (nodes.join(in_mass, nodes.host == in_mass.dst, "left")
-            .select("host",
-                    (F.lit(G.TELEPORT) + F.coalesce(F.col("m"), F.lit(0)))
-                    .cast("long").alias("pr")))
+    return G.pagerank_round(spark.read.parquet(edges_path), nodes, prev)
 
 
 def run_job(spark, out_dir: str, num_pages: int, hosts: int, iters: int,

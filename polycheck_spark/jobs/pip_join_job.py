@@ -15,7 +15,6 @@ deterministic bucket assignment give exactly-once output.
 from __future__ import annotations
 
 import argparse
-import os
 
 from pyspark.sql import functions as F
 
@@ -32,30 +31,19 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str,
     layer = default_query_layer()
     writer = CheckpointedWriter(out_dir)
 
-    # stage 0 (once): ONE scan of the source, written partitioned by bucket.
-    # bucket is provably non-nullable (pmod of a hash) so the partition
-    # filter below prunes directories instead of re-evaluating expressions.
-    staged_dir = os.path.join(out_dir, "_staged_pages")
-    stage_params = {"pages": num_pages, "buckets": n_buckets, "path": staged_dir}
-    # markers are only valid for the SAME job parameters: a resume with a
-    # different page/bucket count over stale staged data or stale bucket
-    # markers would silently return the old job's rows. Order matters — the
-    # old marker is tombstoned BEFORE the overwrite so a crash mid-overwrite
-    # reads as "never staged", and the whole bucket lineage is invalidated
-    # with it (bucket markers are parameter-insensitive).
-    if writer.staged_record(STAGE) != stage_params:
-        writer.clear_stage(STAGE)
-        writer.reset_lineage()
+    # stage 0 (once): ONE scan of the source, written partitioned by bucket
+    def write(path):
         pages = synth.geocoded_pages(spark, num_pages)
         (pages.withColumn(
             "bucket",
             F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(staged_dir))
-        writer.mark_staged(STAGE, stage_params)
+         .write.mode("overwrite").partitionBy("bucket").parquet(path))
+
+    staged = writer.stage(STAGE, {"pages": num_pages, "buckets": n_buckets},
+                          write)
 
     def build_bucket(k: int):
-        bucket = (spark.read.parquet(staged_dir)
-                  .filter(F.col("bucket") == k).drop("bucket"))
+        bucket = writer.read_bucket(spark, staged, "bucket", k)
         joined = PJ.pip_join(spark, bucket, layer)
         return joined.select("url", "polygon_id", "cell_id", "lon", "lat",
                              F.sha2(F.col("text"), 256).alias("text_sha"))

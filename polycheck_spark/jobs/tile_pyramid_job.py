@@ -29,7 +29,6 @@ exposes by construction.
 from __future__ import annotations
 
 import argparse
-import os
 
 from pyspark.sql import functions as F
 
@@ -50,25 +49,21 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str,
         raise ValueError("need 0 <= res_coarse <= res_fine <= MAX_RES")
     writer = CheckpointedWriter(out_dir)
 
-    staged_dir = os.path.join(out_dir, "_staged_points")
-    stage_params = {"pages": num_pages, "buckets": n_buckets,
-                    "res_fine": res_fine, "res_coarse": res_coarse,
-                    "path": staged_dir}
-    if writer.staged_record(STAGE) != stage_params:
-        writer.clear_stage(STAGE)
-        writer.reset_lineage()
+    def write(path):
         pts = synth.geocoded_pages(spark, num_pages).select("url", "lon", "lat")
         ix, iy = C.ixiy_cols(F.col("lon"), F.col("lat"), res_coarse)
         coarse = C.encode_col(ix, iy, res_coarse)
         (pts.withColumn("bucket",
                         F.pmod(F.xxhash64(coarse), F.lit(n_buckets))
                         .cast("int"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(staged_dir))
-        writer.mark_staged(STAGE, stage_params)
+         .write.mode("overwrite").partitionBy("bucket").parquet(path))
+
+    staged = writer.stage(STAGE, {"pages": num_pages, "buckets": n_buckets,
+                                  "res_fine": res_fine,
+                                  "res_coarse": res_coarse}, write)
 
     def build_bucket(k: int):
-        pts_k = (spark.read.parquet(staged_dir)
-                 .filter(F.col("bucket") == k).drop("bucket"))
+        pts_k = writer.read_bucket(spark, staged, "bucket", k)
         return PJ.tile_rollup(pts_k, res_fine=res_fine, res_coarse=res_coarse)
 
     result = writer.run(list(range(n_buckets)), build_bucket, fail_on=fail_on)

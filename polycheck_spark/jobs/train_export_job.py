@@ -62,13 +62,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                           fail_on=clean_fail_on)
 
     exporter = CheckpointedWriter(os.path.join(out_dir, "export"))
-    staged = os.path.join(out_dir, "_staged_packed")
-    params = {"pages": num_pages, "clean_buckets": n_buckets,
-              "budget": budget, "shards": n_shards,
-              "pack_shards": n_pack_shards, "path": staged}
-    if exporter.staged_record(STAGE) != params:
-        exporter.clear_stage(STAGE)
-        exporter.reset_lineage()
+    def write(path):
         corpus = spark.read.parquet(clean_res["final_dir"])
         counted = (corpus.withColumn(
             "n_tokens", F.size(tokens_col(F.col("text"))))
@@ -84,14 +78,17 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                               F.pmod(F.xxhash64("lang", "bin_id"),
                                      F.lit(n_shards)).cast("int")))
         (packed.select("shard", *EXPORT_COLS)
-         .write.mode("overwrite").partitionBy("shard").parquet(staged))
-        exporter.mark_staged(STAGE, params)
+         .write.mode("overwrite").partitionBy("shard").parquet(path))
+
+    staged = exporter.stage(STAGE, {"pages": num_pages,
+                                    "clean_buckets": n_buckets,
+                                    "budget": budget, "shards": n_shards,
+                                    "pack_shards": n_pack_shards}, write)
 
     def build_shard(k: int):
         # partition-pruned read; one file per shard, rows in stream order —
         # the layout a sequential dataloader consumes without a sort
-        return (spark.read.parquet(staged)
-                .filter(F.col("shard") == k).drop("shard")
+        return (exporter.read_bucket(spark, staged, "shard", k)
                 .coalesce(1)
                 .sortWithinPartitions("lang", "pack_shard", "start_off"))
 

@@ -1,7 +1,11 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
-Everything is pure DataFrame composition (JVM expressions + shuffles Catalyst
-can see) — no Python in the row path.  Each operator has a DuckDB SQL twin.
+Operators compose DataFrames (JVM expressions + shuffles Catalyst can see);
+the row path enters Python only in four ``mapInPandas`` bodies:
+``_gram_batches`` (shingles), ``_minhash_batches`` (MinHash signatures),
+``_simhash_wide_batches`` (SimHash wider than 32 bits) and
+``_containment_batches`` (containment scoring).  Each operator has a DuckDB
+SQL twin.
 
 Scale notes (10^12 docs):
 * exact dedup is a hash groupBy — one shuffle on the digest, map-side partial

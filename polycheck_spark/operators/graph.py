@@ -136,17 +136,27 @@ def pagerank(edges: DataFrame, *, iters: int = 3, src_col: str = "src_host",
     ew = e.join(outw, "src")
     ranks = nodes.select(node_col, F.lit(BASE).cast("long").alias("pr"))
     for _ in range(iters):
-        contrib = (ew.join(ranks, ew.src == F.col(node_col))
-                   .select(F.col("dst"),
-                           F.expr(f"(pr * {D_NUM} * w) div ({D_DEN} * out_w)")
-                           .alias("c")))
-        in_mass = contrib.groupBy("dst").agg(F.sum("c").alias("m"))
-        ranks = (nodes.join(in_mass, nodes[node_col] == in_mass.dst, "left")
-                 .select(node_col,
-                         (F.lit(TELEPORT) + F.coalesce(F.col("m"), F.lit(0)))
-                         .cast("long").alias("pr"))
-                 .localCheckpoint(eager=False))
+        ranks = pagerank_round(ew, nodes, ranks, node_col).localCheckpoint(
+            eager=False)
     return ranks
+
+
+def pagerank_round(ew: DataFrame, nodes: DataFrame, ranks: DataFrame,
+                   node_col: str = "host") -> DataFrame:
+    """(node, pr) after one fixed-point round: the previous ``ranks``
+    (node, pr) move ``(pr * 85 * w) div (100 * out_w)`` along every edge of
+    ``ew`` (src, dst, w, out_w), and every node of ``nodes`` adds the
+    teleport share to its in-mass.  One equi-join + one groupBy-sum over
+    host-sized frames."""
+    contrib = (ew.join(ranks, ew.src == F.col(node_col))
+               .select(F.col("dst"),
+                       F.expr(f"(pr * {D_NUM} * w) div ({D_DEN} * out_w)")
+                       .alias("c")))
+    in_mass = contrib.groupBy("dst").agg(F.sum("c").alias("m"))
+    return (nodes.join(in_mass, nodes[node_col] == in_mass.dst, "left")
+            .select(node_col,
+                    (F.lit(TELEPORT) + F.coalesce(F.col("m"), F.lit(0)))
+                    .cast("long").alias("pr")))
 
 
 def pagerank_sql(edges_cte: str, iters: int = 3, src_col: str = "src_host",

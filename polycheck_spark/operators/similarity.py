@@ -195,16 +195,6 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
     return qids, qmat
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism so a
-    single-file parquet scan does not serialize the whole mapInPandas stage
-    through one task (observed: the embedding table reads as 1-2 input
-    splits, so every ANN map stage ran on <= 2 of 32 cores).  Result sets
-    are batching-invariant (per-batch top-k is a superset filter), so the
-    round-robin placement never changes output."""
-    return spread(df)
-
-
 def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
                           id_col: str, vec_col: str,
                           pair_mask=None) -> DataFrame:
@@ -293,8 +283,8 @@ def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
                 "cosine": cos[keep],
             })
 
-    src = _spread(embeddings.select(F.col(id_col).alias("__id"),
-                                    F.col(vec_col).alias("__vec")))
+    src = spread(embeddings.select(F.col(id_col).alias("__id"),
+                                   F.col(vec_col).alias("__vec")))
     return src.mapInPandas(score, schema)
 
 
@@ -794,8 +784,8 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
     # vectors stay float32 through the shuffle (the fold widens to float64
     # in-memory, exactly like the former cast-then-join did) — half the
     # exchange bytes of the old array<double> join sides (guide §2.3)
-    src = _spread(embeddings.select(F.col(id_col).alias("vid"),
-                                    F.col(vec_col).alias("v")))
+    src = spread(embeddings.select(F.col(id_col).alias("vid"),
+                                   F.col(vec_col).alias("v")))
     bk = src.mapInPandas(bucketize, "vid long, bucket long, v array<float>") \
             .localCheckpoint(eager=False)   # ONE bucketing pass feeds both sides
     probes = F.array(F.col("bucket"),
@@ -1042,8 +1032,8 @@ def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
                 "cosine": cos,
             })
 
-    src = _spread(embeddings.select(F.col(id_col).alias("__id"),
-                                    F.col(vec_col).alias("__vec")))
+    src = spread(embeddings.select(F.col(id_col).alias("__id"),
+                                   F.col(vec_col).alias("__vec")))
     partial = src.mapInPandas(score, schema)
     w1 = Window.partitionBy("query_id").orderBy(F.col("idot").desc(),
                                                 F.col("target_id").asc())

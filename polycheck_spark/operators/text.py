@@ -1,7 +1,9 @@
 """Text-analysis operators for web-scale training-data pipelines.
 
-All hot paths are pure Column expressions (JVM, whole-stage codegen — no
-Python UDFs).  Every operator has a DuckDB SQL twin emitter so the driver's
+Hot paths are Column expressions (JVM, whole-stage codegen); the one Python
+body is the ``mapInPandas`` ``_token_tf_batches`` behind the per-document
+token counts of :func:`vocab_topk`, :func:`doc_top_terms` and
+:func:`unigram_quality`.  Every operator has a DuckDB SQL twin emitter so the
 oracle differential can verify it; both sides share the same constants.
 
 Token model: whitespace split, empty tokens dropped (identical in Spark's

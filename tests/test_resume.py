@@ -42,16 +42,14 @@ def test_job_stages_source_once_and_prunes(spark, tmp_path):
     (stage marker) and each bucket's scan carries a partition filter — no
     per-bucket source rescan."""
     import os
-    from pyspark.sql import functions as F
     out_dir = str(tmp_path / "job")
     run_job(spark, 2000, 4, out_dir)
-    w = CheckpointedWriter(out_dir)
-    assert w.is_staged("pages")
+    assert os.path.exists(os.path.join(out_dir, "_lineage", "stage_pages.json"))
     staged = os.path.join(out_dir, "_staged_pages")
     assert sorted(n for n in os.listdir(staged) if n.startswith("bucket=")) \
         == [f"bucket={k}" for k in range(4)]
     # the bucket read is partition-pruned, not expression-filtered over all rows
-    df = spark.read.parquet(staged).filter(F.col("bucket") == 2)
+    df = CheckpointedWriter.read_bucket(spark, staged, "bucket", 2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan, plan
     pf = plan.split("PartitionFilters", 1)[1][:160]
@@ -79,6 +77,57 @@ def test_param_change_invalidates_lineage(spark, tmp_path):
     open(marker, "w").close()
     again = run_job(spark, 3000, 4, out_dir)
     assert again["snapshot"]["row_counts"] == fresh["snapshot"]["row_counts"]
+
+
+def test_stage_crash_mid_restage_reads_as_never_staged(spark, tmp_path):
+    """A restage that dies inside ``write`` leaves neither the old stage
+    marker nor any bucket marker behind — its own or a downstream writer's —
+    and the next ``stage`` call, even with the ORIGINAL parameters, writes
+    again instead of trusting half-overwritten data."""
+    import os
+    w = CheckpointedWriter(str(tmp_path / "t"))
+    down = CheckpointedWriter(str(tmp_path / "down"))
+    calls = []
+
+    def write(path):
+        calls.append(path)
+        spark.range(10).selectExpr("id", "id % 2 AS bucket") \
+            .write.mode("overwrite").partitionBy("bucket").parquet(path)
+
+    def crash(path):
+        raise RuntimeError("killed mid-stage")
+
+    a, b = {"n": 10}, {"n": 20}
+    path = w.stage("s", a, write)
+    assert path == os.path.join(w.out_dir, "_staged_s") and len(calls) == 1
+    w.run([0, 1], lambda k: w.read_bucket(spark, path, "bucket", k))
+    assert w.completed_buckets() == {0, 1}
+    assert w.stage("s", a, write) == path and len(calls) == 1   # current
+    dpath = down.stage("d", {"input": a}, write)
+    down.run([0], lambda k: down.read_bucket(spark, dpath, "bucket", k))
+
+    with pytest.raises(RuntimeError, match="killed mid-stage"):
+        w.stage("s", b, crash, downstream=(down,))
+    for x in (w, down):
+        assert not [n for n in os.listdir(x.lineage_dir) if n.startswith("stage_")]
+        assert x.completed_buckets() == set()
+        assert not any(n.startswith("bucket=") for n in os.listdir(x.out_dir))
+
+    w.stage("s", a, write)
+    down.stage("d", {"input": a}, write)
+    assert len(calls) == 4
+
+
+def test_jobs_stage_only_through_the_writer():
+    """The staging protocol lives in ``CheckpointedWriter.stage`` alone: no
+    job names the lineage directory or a marker primitive."""
+    import pathlib
+    import polycheck_spark.jobs as J
+    banned = ("_lineage", "is_staged", "staged_record", "clear_stage",
+              "mark_staged", "reset_lineage")
+    hits = [(p.name, b) for p in sorted(pathlib.Path(J.__file__).parent.glob("*.py"))
+            for b in banned if b in p.read_text()]
+    assert hits == [], hits
 
 
 def test_lineage_metrics_recorded(spark, tmp_path):
@@ -181,7 +230,7 @@ def test_dedup_job_exact_and_resumable(spark, tmp_path):
     got = CheckpointedWriter(out_dir).read_output(spark)
     rows = got.select("url", "text_md5", "n_dups").collect()
 
-    staged = spark.read.parquet(f"{out_dir}/_staged_pages")
+    staged = spark.read.parquet(f"{out_dir}/_staged_pages_by_digest")
     n_distinct = staged.select("text_md5").distinct().count()
     assert len(rows) == n_distinct == res["snapshot"]["total_rows"]
     md5s = [r["text_md5"] for r in rows]
@@ -336,6 +385,13 @@ def test_pagerank_job_iteration_resume_and_refinement(spark, tmp_path):
     exp = sorted((r["host"], r["pr"]) for r in
                  G.pagerank(edges, iters=iters).collect())
     assert got == exp and len(got) == hosts
+    # the job and the operator share one round function, so the DuckDB twin
+    # over the same edges is the independent reference
+    import duckdb
+    con = duckdb.connect()
+    con.register("edges", edges.toArrow())
+    assert got == sorted(con.sql(G.pagerank_sql("SELECT * FROM edges",
+                                                iters=iters)).fetchall())
 
     # kill before round 3 (bucket 2) commits, resume, bit-equal output
     resumed = str(tmp_path / "pr_resumed")
