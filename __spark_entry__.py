@@ -1828,8 +1828,7 @@ def q_near_dup(spark, sf_dir):
     """Embedding-cosine near-dup pairs (LSH-bucketed scale path) over the
     injected-copy corpus; the oracle mirrors the bucketing too (recall is
     covered by pytest; the oracle check is value parity)."""
-    return (SIM.near_dup_pairs(_near_dup_corpus(spark, sf_dir), NEAR_DUP_THRESH,
-                               mode="lsh")
+    return (SIM.near_dup_pairs(_near_dup_corpus(spark, sf_dir), NEAR_DUP_THRESH)
             .orderBy("a", "b"))
 
 
@@ -1837,7 +1836,7 @@ def q_near_dup_capped(spark, sf_dir):
     """Same near-dup pipeline with the hot-bucket cap ON (the 100-TB
     configuration) — value-checked against a cap-mirroring oracle."""
     return (SIM.near_dup_pairs(_near_dup_corpus(spark, sf_dir), NEAR_DUP_THRESH,
-                               mode="lsh", max_bucket_freq=BUCKET_CAP)
+                               max_bucket_freq=BUCKET_CAP)
             .orderBy("a", "b"))
 
 

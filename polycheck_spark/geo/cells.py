@@ -8,7 +8,7 @@ environment, so the index is a deterministic Morton (Z-order) quadtree:
 * world bounds lon in [-180, 180), lat in [-90, 90)
 * resolution r in [0, 28]: a 2^r x 2^r grid
 * ``cell_id = (r << 56) | interleave_bits(ix, iy)`` — int64, always >= 0
-* parent/child/k-ring are pure bit arithmetic
+* parent/child are pure bit arithmetic
 
 Z-order keeps spatially-near cells numerically near, so sorting/partitioning
 by cell_id clusters neighborhoods together (range pruning on parquet
@@ -108,42 +108,6 @@ def children(cid) -> np.ndarray:
     ix2, iy2 = ix << 1, iy << 1
     quads = [encode(ix2 + dx, iy2 + dy, r) for dy in (0, 1) for dx in (0, 1)]
     return np.stack(quads, axis=-1)
-
-
-def k_ring(cid: int, k: int) -> np.ndarray:
-    """All cells within Chebyshev distance k (the (2k+1)^2 block, clamped at
-    the grid edge; no lon wraparound — pages near the antimeridian simply get
-    slightly conservative candidate sets)."""
-    ix, iy, res = decode(np.asarray([cid]))
-    res = int(res[0])
-    n = np.int64(1) << res
-    xs = np.arange(max(0, int(ix[0]) - k), min(int(n), int(ix[0]) + k + 1), dtype=np.int64)
-    ys = np.arange(max(0, int(iy[0]) - k), min(int(n), int(iy[0]) + k + 1), dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    return encode(gx.ravel(), gy.ravel(), res)
-
-
-def ring_shell(cid: int, k: int) -> np.ndarray:
-    """Cells at exactly Chebyshev distance k (the hollow ring)."""
-    if k == 0:
-        return np.asarray([cid], dtype=np.int64)
-    full = k_ring(cid, k)
-    inner = set(k_ring(cid, k - 1).tolist())
-    return np.asarray([c for c in full.tolist() if c not in inner], dtype=np.int64)
-
-
-def cell_bounds(cid) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(lon_min, lat_min, lon_max, lat_max) of a cell."""
-    ix, iy, res = decode(cid)
-    n = (np.int64(1) << res).astype(np.float64)
-    lon_min = ix / n * 360.0 - 180.0
-    lat_min = iy / n * 180.0 - 90.0
-    return lon_min, lat_min, lon_min + 360.0 / n, lat_min + 180.0 / n
-
-
-def cell_center(cid) -> tuple[np.ndarray, np.ndarray]:
-    lon_min, lat_min, lon_max, lat_max = cell_bounds(cid)
-    return (lon_min + lon_max) / 2.0, (lat_min + lat_max) / 2.0
 
 
 def cells_covering_bbox(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:

@@ -12,10 +12,11 @@ row-count/latency metrics — as a thin manifest layer over partitioned parquet:
       _lineage/bucket_K.json       (atomic marker: rows, timings, status)
       _snapshots/snapshot_N.json   (append-only snapshot log)
 
-Markers are written tmp + os.replace (atomic on POSIX), so a killed job never
-leaves a half-claimed bucket: on restart, buckets without a marker re-run and
-buckets with one are skipped — output is deterministic per bucket, making the
-whole job idempotent. If a real Iceberg catalog is present, the same driver
+Markers and manifests are written tmp + fsync + os.replace (atomic on
+POSIX, :func:`_write_json_atomic`), so a killed job never leaves a
+half-claimed bucket: on restart, buckets without a marker re-run and buckets
+with one are skipped — output is deterministic per bucket, making the whole
+job idempotent. If a real Iceberg catalog is present, the same driver
 loop binds to Iceberg snapshots instead.
 
 :meth:`CheckpointedWriter.stage` is the one staging path: every job scans its
@@ -35,6 +36,18 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from polycheck_spark.session import local_frame
+
+
+def _write_json_atomic(path: str, obj) -> None:
+    """Put ``obj`` at ``path`` as JSON all at once: a tmp file, flushed and
+    fsync'd, then ``os.replace`` — a crash leaves the old file or the new
+    one, never a torn or empty one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def _parquet_row_count(path: str) -> int:
@@ -68,10 +81,7 @@ class CheckpointedWriter:
         return out
 
     def _write_marker(self, bucket: int, record: dict) -> None:
-        tmp = self._marker_path(bucket) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        os.replace(tmp, self._marker_path(bucket))  # atomic claim
+        _write_json_atomic(self._marker_path(bucket), record)  # atomic claim
 
     # -- one-time staging ----------------------------------------------------
 
@@ -113,11 +123,7 @@ class CheckpointedWriter:
         for w in downstream:
             w._invalidate()
         write(path)
-        with open(marker + ".tmp", "w") as f:
-            json.dump(params, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(marker + ".tmp", marker)
+        _write_json_atomic(marker, params)
         return path
 
     @staticmethod
@@ -182,6 +188,9 @@ class CheckpointedWriter:
 
     def commit_snapshot(self) -> dict:
         """Append a snapshot manifest covering all completed buckets."""
+        return self._commit({})
+
+    def _commit(self, extra: dict) -> dict:
         sid = self.next_snapshot_id()
         lineage = self.lineage()
         manifest = {
@@ -191,11 +200,10 @@ class CheckpointedWriter:
             "buckets": sorted(r["bucket"] for r in lineage),
             "row_counts": {str(r["bucket"]): r["rows"] for r in lineage},
             "total_rows": sum(r["rows"] for r in lineage),
+            **extra,
         }
-        tmp = os.path.join(self.snapshot_dir, f"snapshot_{sid}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.snapshot_dir, f"snapshot_{sid}.json"))
+        _write_json_atomic(os.path.join(self.snapshot_dir, f"snapshot_{sid}.json"),
+                           manifest)
         return manifest
 
     def lineage(self) -> list[dict]:
@@ -278,15 +286,7 @@ class CheckpointedWriter:
             os.remove(self._marker_path(b))      # marker first: atomic unclaim
             shutil.rmtree(os.path.join(self.out_dir, f"bucket={b}"),
                           ignore_errors=True)
-        manifest = self.commit_snapshot()
-        manifest["rollback_of"] = snapshot_id
-        tmp = os.path.join(self.snapshot_dir,
-                           f"snapshot_{manifest['snapshot_id']}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(
-            self.snapshot_dir, f"snapshot_{manifest['snapshot_id']}.json"))
-        return manifest
+        return self._commit({"rollback_of": snapshot_id})
 
     def read_snapshot_evolved(self, spark: SparkSession,
                               snapshot_id: int) -> DataFrame:

@@ -16,7 +16,7 @@ target) candidate pair — which exists only when the target's list is among
 the query's probe lists — belongs to exactly one work bucket; the union of
 bucket outputs is the exact candidate set, no cross-bucket coordination.
 
-Staging writes each vector ONCE (unlike near_dup_job's multiprobe staging —
+Staging writes each vector ONCE (unlike near_dup_job's one-bit-probe staging —
 IVF probes fan out on the QUERY side, which is small by contract): vec_id +
 int8 quantized copy + float vector, partitioned by work bucket, plus the
 tiny probed-query table.  Per bucket, stage 1 scans ONLY (vec_id, list_id,

@@ -13,14 +13,14 @@ Resume granularity is the CANDIDATE-PAIR stage, which dominates the cost
 buckets are groups of LSH buckets (``lsh_bucket % n_buckets``), and the key
 property making per-bucket work globally exact is the same disjointness the
 query path relies on: a vector has exactly ONE exact bucket, and a pair
-(a, b) is emitted only where a's exact bucket meets one of b's multiprobe
+(a, b) is emitted only where a's exact bucket meets one of b's probe
 buckets — so each pair belongs to exactly one work bucket and the union of
 bucket outputs is the exact global pair set, no cross-bucket coordination,
 no dedup pass.  A killed job resumes from the last committed bucket with
 identical final output (pinned by tests/test_resume.py).
 
 The staged table carries each vector on its exact row plus one row per
-multiprobe bucket — n_planes + 1 rows per vector in total (n_planes scales
+one-bit probe bucket — n_planes + 1 rows per vector in total (n_planes scales
 ~log2(N/16) with the corpus, so ~15x staging at the default 100k vectors).
 That is the self-contained-bucket trade: staging amplification for
 embarrassingly parallel bucket jobs that never rescan the source; at 100 TB
@@ -71,7 +71,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
     8-plane setting the oracle queries pin degrades quadratically past
     ~10^5 uniform vectors (measured: 100k vectors x 8 planes = ~190M
     candidate pairs; x13 planes = ~10M).  More planes trade recall per
-    probe (each extra plane adds a sign-flip chance the 1-bit multiprobe
+    probe (each extra plane adds a sign-flip chance the 1-bit probes
     must absorb) — the standard LSH tuning surface, exercised by the
     kill-resume test at both settings."""
     if num_vecs > DUP_OFFSET:
@@ -93,7 +93,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
             "bucket", SIM.bucket_key_col(F.col("embedding"), dim,
                                          n_planes=n_planes))
         # exact side: one row per vector, keyed by its own bucket;
-        # probe side: bucket + n_planes one-bit flips (the multiprobe set)
+        # probe side: bucket + n_planes one-bit flips (the probe set)
         exact = both.select("vec_id", "bucket", "embedding",
                             F.lit("e").alias("side"))
         probes = F.array(F.col("bucket"),

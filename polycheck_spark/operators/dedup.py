@@ -50,19 +50,15 @@ FROM {table} GROUP BY 1 HAVING COUNT(*) > 1
 
 # --- shingles ----------------------------------------------------------------
 
-def _shingles(docs: DataFrame, id_col: str, text_col: str,
-              distinct: bool = True) -> DataFrame:
-    """Word-NGRAM shingles per doc: (id, shingle).
-
-    ``distinct=True`` (set semantics) is required by Jaccard counting;
-    MinHash passes ``distinct=False`` because min-aggregation is
-    duplicate-insensitive — skipping the dedup saves a full shuffle on the
-    dominant (shingle) table.
+def _shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Word-NGRAM shingles per doc as a set: (id, shingle) rows are unique.
+    Set semantics is what Jaccard counting needs, and MinHash's
+    min-aggregation does not care either way.
 
     r8: grams are built MAP-SIDE in Python batches.  The former
     ``transform(sequence, i -> concat_ws(slice))`` ran as an interpreted
     lambda per gram (Spark never codegens HOFs — 14.9 s at sf1.0 for the
-    2.6M-shingle corpus), and ``distinct=True`` then paid a full exchange
+    2.6M-shingle corpus), and a global distinct then paid a full exchange
     of the shingle relation.  Tokenization stays the JVM split
     (bit-identical token stream); ``' '.join`` builds the identical gram
     strings, and the per-doc set dedup IS the global distinct — (id,
@@ -71,8 +67,7 @@ def _shingles(docs: DataFrame, id_col: str, text_col: str,
     src = docs.select(F.col(id_col).alias("id"),
                       tokens_col(F.col(text_col)).alias("toks"))
     src = spread(src)
-    return src.mapInPandas(functools.partial(_gram_batches, distinct),
-                           "id long, shingle string")
+    return src.mapInPandas(_gram_batches, "id long, shingle string")
 
 
 # This module's mapInPandas bodies (``_gram_batches``, ``_minhash_batches``,
@@ -80,8 +75,8 @@ def _shingles(docs: DataFrame, id_col: str, text_col: str,
 # functions, not closures: a worker then imports this module to unpickle them,
 # which installs the package's zip-cache fix (see ``polycheck_spark``).
 
-def _gram_batches(distinct: bool, batches):
-    """(id, shingle) rows of each batch; per-doc set if ``distinct``."""
+def _gram_batches(batches):
+    """(id, shingle) rows of each batch, one per distinct gram of a doc."""
     import numpy as np
     import pandas as pd
 
@@ -92,9 +87,7 @@ def _gram_batches(distinct: bool, batches):
             if n <= 0:
                 continue
             tl = list(toks)
-            g = [" ".join(tl[i:i + NGRAM]) for i in range(n)]
-            if distinct:
-                g = list(dict.fromkeys(g))
+            g = list(dict.fromkeys(" ".join(tl[i:i + NGRAM]) for i in range(n)))
             out_id.append(np.full(len(g), did, dtype=np.int64))
             out_sh.extend(g)
         yield pd.DataFrame({
@@ -335,15 +328,11 @@ FROM {src} x JOIN {src} y ON x.band = y.band AND x.bkey = y.bkey AND x.id < y.id
 
 # --- SimHash ----------------------------------------------------------------------
 
-def _tok_int60(col):
+def _tok_int60_sql(expr: str) -> str:
     """First 15 md5 hex digits as a 60-bit BIGINT — the wide token hash for
     simhash signatures beyond 32 bits (the default 32-bit
     :func:`text._tok_int` would leave bits 32+ constant).  15 hex digits
     stay below 2^60, safely inside a signed 64-bit in both engines."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _tok_int60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
@@ -359,7 +348,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     the bottleneck.  Same values, one pass, map-side partial combine.
 
     ``bits`` defaults to the oracle-pinned 16; widths up to 60 switch to
-    the 15-hex-digit token hash (:func:`_tok_int60`).  Width is a
+    the 15-hex-digit token hash (:func:`_tok_int60_sql`).  Width is a
     capacity knob: the Hamming pair join's band key space is 2^(bits/nb),
     so wide signatures are what scale it (see
     :func:`simhash_near_pairs`)."""

@@ -2,24 +2,15 @@
 
 Media travel as opaque ``binary`` columns with typed metadata. The Spark-side
 plumbing — schemas, Arrow batch shapes, ``mapInPandas`` signatures,
-partitioning — is real and tested.  Decode comes in two tiers:
-
-* ``decode_media_basic`` — REAL decode for the codec-free format slice:
-  uncompressed BMP, binary PGM/PPM, and WAV PCM parse in pure NumPy
-  (headers, row padding, RIFF chunk walk, signed samples), emitting
-  integer pixel/sample statistics that a DuckDB oracle checks exactly.
-* compressed codecs (JPEG/PNG pixel data, MP3, video) are STUBBED because
-  no image/audio libraries exist in this container:
-  ``decode_media(..., strict=True)`` raises NotImplementedError at call
-  time (the documented production hook — plug Pillow/ffmpeg there);
-  ``strict=False`` substitutes a deterministic fake decode
-  (byte-histogram features) so downstream feature plumbing is
-  exercisable end-to-end.
+partitioning — is real and tested.  ``decode_media_basic`` is a real
+decode for the codec-free format slice: uncompressed BMP, binary PGM/PPM,
+and WAV PCM parse in pure NumPy (headers, row padding, RIFF chunk walk,
+signed samples), emitting integer pixel/sample statistics that a DuckDB
+oracle checks exactly.  Compressed codecs (JPEG/PNG pixel data, MP3,
+video) are not decoded; only their header dimensions are read.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
@@ -210,58 +201,6 @@ def media_dims_sql(hex_expr: str, jpeg_sof_pos_expr: str | None = None) -> tuple
     h = (f"CASE WHEN {png} THEN {be(41, 4)} WHEN {gif} THEN {le16(17)} "
          f"WHEN {jpeg} THEN {jh} ELSE NULL END")
     return w, h
-
-
-N_FEATURES = 16
-_FEAT_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("media_bytes", T.LongType()),
-    T.StructField("features", T.ArrayType(T.FloatType())),
-])
-
-
-def decode_media(df: DataFrame, *, payload_col: str = "html",
-                 key_col: str = "url", strict: bool = True) -> DataFrame:
-    """Decode + feature-extract media payloads via ``mapInPandas``.
-
-    strict=True: raises NotImplementedError when executed (codec libs absent
-    in this environment — wire a real decoder here in production).
-    strict=False: deterministic fake decode — 16-bin byte histogram, L1
-    normalized — preserving batch shape, schema and determinism guarantees.
-    """
-    def _decode(batches):
-        for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "media codecs unavailable in this environment; "
-                    "install Pillow/ffmpeg and replace _fake_features")
-            payloads = pdf[payload_col]
-            feats = [_fake_features(bytes(b)) for b in payloads]
-            yield pd.DataFrame({
-                "url": pdf[key_col],
-                "media_bytes": [len(bytes(b)) for b in payloads],
-                "features": feats,
-            })
-
-    return df.mapInPandas(_decode, schema=_FEAT_SCHEMA)
-
-
-def _fake_features(payload: bytes) -> list[float]:
-    """Deterministic stand-in 'decode': 16-bin byte histogram, L1-normalized."""
-    if not payload:
-        return [0.0] * N_FEATURES
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    hist = np.bincount(arr >> 4, minlength=N_FEATURES).astype(np.float64)
-    return (hist / hist.sum()).astype(np.float32).tolist()
-
-
-def frame_sample_plan(df: DataFrame, *, every_n: int = 10,
-                      payload_col: str = "html", key_col: str = "url") -> DataFrame:
-    """Frame-sampling plumbing: emit (url, frame_idx) rows for every_n-th
-    'frame' — index arithmetic is real; frame decode is the stub above."""
-    n_frames = (F.length(F.col(payload_col)) / F.lit(1024)).cast("int") + 1
-    idx = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-    return df.select(F.col(key_col).alias("url"), F.explode(idx).alias("frame_idx"))
 
 
 # --- codec-free REAL decode: BMP / PGM / PPM / WAV-PCM -----------------------

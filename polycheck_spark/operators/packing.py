@@ -1,39 +1,25 @@
 """Sequence packing: arranging documents into fixed-token-budget training
 bins — the last stage before a pre-training dataloader.
 
-Two industry-standard layouts, two execution shapes:
-
-* :func:`pack_chunks` — concatenate-and-chunk (the GPT-style pretraining
-  layout): documents are laid end-to-end in a deterministic order and the
-  stream is cut every ``budget`` tokens, so documents may straddle bin
-  boundaries.  This is CLOSED-FORM: a bin is an integer function of the
-  exclusive prefix sum of token counts, which is one window aggregate —
-  fully relational, whole-stage-codegen, and exactly mirrored in SQL
-  (the driver-oracle mode).
-
-* :func:`pack_greedy` — first-fit-in-order without straddling (the
-  SFT/packed-sample layout): walk documents in order, open a new bin
-  whenever the next document would overflow the budget.  The recurrence
-  has no closed form (each bin boundary depends on the previous), so it
-  runs as an Arrow-batched ``applyInPandas`` per group — sequential
-  WITHIN a group, embarrassingly parallel ACROSS groups — and is pinned
-  by pytest against an independent pure-Python reference plus invariant
-  checks (never over budget except single oversized docs, order
-  preserved, greedy-maximal fills).
+:func:`pack_chunks` — concatenate-and-chunk (the GPT-style pretraining
+layout): documents are laid end-to-end in a deterministic order and the
+stream is cut every ``budget`` tokens, so documents may straddle bin
+boundaries.  This is CLOSED-FORM: a bin is an integer function of the
+exclusive prefix sum of token counts, which is one window aggregate —
+fully relational, whole-stage-codegen, and exactly mirrored in SQL
+(the driver-oracle mode).
 
 Scale contract: packing order is (group, doc_id) and groups are the unit
-of parallelism.  At 10^12 documents a bare ``lang`` group would serialize
-continents of data through one task, so callers shard the group key —
-``group_cols=("lang", "shard")`` with ``shard = doc_id div S`` — keeping
-determinism (shards are id-derived, not partition-derived) while bounding
-every sequential walk to S documents.  The chunk layout needs no such
-care: its window is translation-invariant, but the same sharding bounds
-the window's sort.
+of parallelism.  The window is translation-invariant, so no group needs
+special care, but at 10^12 documents sharding the group key —
+``group_cols=("lang", "shard")`` with ``shard = doc_id div S`` — bounds
+the window's sort while keeping determinism (shards are id-derived, not
+partition-derived).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def pack_chunks(docs: DataFrame, budget: int, *,
@@ -85,66 +71,3 @@ FROM (
            AS start_off
   FROM (SELECT {g}, {id_col}, CAST({tokens_expr} AS BIGINT) AS n FROM {table}))
 """
-
-
-def pack_greedy(docs: DataFrame, budget: int, *,
-                group_cols: tuple[str, ...] = ("lang",),
-                id_col: str = "doc_id",
-                tokens_col_name: str = "n_tokens") -> DataFrame:
-    """First-fit-in-order packing without document straddling.
-
-    Within each group (docs ordered by ``id_col``): a document joins the
-    current bin if it fits, else opens the next bin; a document larger
-    than the budget gets a bin of its own.  Returns (group..., id,
-    n_tokens, bin_id, pos_in_bin, bin_fill) where ``bin_fill`` is the
-    bin's running token total INCLUDING this doc.  Sequential per group by
-    nature (each boundary depends on the last), Arrow-batched per group —
-    shard the group key to bound the walk (module docstring).
-    """
-    gcols = list(group_cols)
-    in_fields = [docs.schema[c] for c in gcols]
-    schema = T.StructType(in_fields + [
-        T.StructField(id_col, T.LongType()),
-        T.StructField("n_tokens", T.IntegerType()),
-        T.StructField("bin_id", T.LongType()),
-        T.StructField("pos_in_bin", T.IntegerType()),
-        T.StructField("bin_fill", T.LongType()),
-    ])
-
-    def pack(pdf):
-        import pandas as pd
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        ns = pdf[tokens_col_name].astype("int64").to_numpy()
-        bins, poss, fills = [], [], []
-        b, fill, pos = 0, 0, 0
-        for n in ns:
-            if fill > 0 and fill + n > budget:
-                b, fill, pos = b + 1, 0, 0
-            fill += int(n)
-            bins.append(b)
-            poss.append(pos)
-            fills.append(fill)
-            pos += 1
-        out = {c: pdf[c] for c in gcols}
-        out[id_col] = pdf[id_col].astype("int64")
-        out["n_tokens"] = pdf[tokens_col_name].astype("int32")
-        out["bin_id"] = pd.Series(bins, dtype="int64")
-        out["pos_in_bin"] = pd.Series(poss, dtype="int32")
-        out["bin_fill"] = pd.Series(fills, dtype="int64")
-        return pd.DataFrame(out)
-
-    cols = gcols + [id_col, tokens_col_name]
-    return (docs.select(*cols).groupBy(*gcols).applyInPandas(pack, schema))
-
-
-def pack_greedy_py(rows, budget):
-    """Independent reference for tests: rows = [(id, n_tokens)] pre-sorted;
-    returns [(id, bin_id, pos_in_bin, bin_fill)]."""
-    out, b, fill, pos = [], 0, 0, 0
-    for i, n in rows:
-        if fill > 0 and fill + n > budget:
-            b, fill, pos = b + 1, 0, 0
-        fill += n
-        out.append((i, b, pos, fill))
-        pos += 1
-    return out

@@ -18,11 +18,12 @@ Scale notes (design target 10^12 pages, 1000 executors):
   ``session.local_frame``, the one path for driver constants: a JVM
   ``LocalTableScan``, so no Python task runs to unpickle it.
 * The equi-join key is the Z-order cell at a cover resolution chosen so each
-  polygon expands to <= max_cover_cells cells; candidate fan-out per page is
+  polygon expands to <= MAX_COVER_CELLS cells; candidate fan-out per page is
   bounded by polygons overlapping its cell (bbox refine then drops most).
 * Hot cells (geocode artifacts like null island) are salted deterministically:
-  build rows for hot cells are replicated n_salt times, probe rows pick
-  xxhash64(url) % n_salt — row multiset is provably unchanged (tested).
+  build rows for hot cells are replicated DEFAULT_N_SALT times, probe rows
+  pick xxhash64(url) % DEFAULT_N_SALT — row multiset is provably unchanged
+  (tested).
 * The exact kernel is float32-identical to the reference
   (/root/reference/polycheck/polycheck.py:203-247); bbox and cell prefilters
   are lossless (cells cover the bbox, the bbox covers the polygon).
@@ -50,13 +51,15 @@ def assign_tiles(pages: DataFrame, res: int = DEFAULT_TILE_RES,
     return C.with_cell_id(pages, F.col(lon_col), F.col(lat_col), res)
 
 
-def choose_cover_res(layer: list[dict], max_cells: int = MAX_COVER_CELLS) -> int:
-    """Finest resolution at which every polygon's bbox covers <= max_cells cells."""
+def choose_cover_res(layer: list[dict]) -> int:
+    """Finest resolution at which every polygon's bbox covers <=
+    MAX_COVER_CELLS cells."""
     res = C.MAX_RES
     for p in layer:
         xs = [x for x, _ in p["vertices"]]
         ys = [y for _, y in p["vertices"]]
-        while res > 0 and C.num_bbox_cells(min(xs), min(ys), max(xs), max(ys), res) > max_cells:
+        while (res > 0 and C.num_bbox_cells(min(xs), min(ys), max(xs), max(ys), res)
+               > MAX_COVER_CELLS):
             res -= 1
     return res
 
@@ -82,17 +85,21 @@ def _pip_udf(spark, layer: list[dict]):
 
     CSR polygon arrays travel once per executor via sc.broadcast — the Spark
     analog of the reference's single host->device upload (polycheck.py:1341-1366).
+    Polygons are packed in id order, so a polygon's CSR index is the
+    ``searchsorted`` position of its id: the broadcast is O(layer) whatever
+    the id values.  Ids must be unique (the oracle would sum the edges of
+    two polygons sharing one).
     """
-    verts, offsets, ids = layer_to_csr(layer)
-    id_to_idx = np.full(int(ids.max()) + 2, -1, dtype=np.int64)
-    id_to_idx[ids] = np.arange(len(ids))
-    bc = spark.sparkContext.broadcast((verts, offsets, id_to_idx))
+    verts, offsets, ids = layer_to_csr(sorted(layer, key=lambda p: p["polygon_id"]))
+    if (np.diff(ids) == 0).any():
+        raise ValueError("pip_join: duplicate polygon_id in layer")
+    bc = spark.sparkContext.broadcast((verts, offsets, ids))
 
     @F.pandas_udf(T.BooleanType())
     def pip(lon: pd.Series, lat: pd.Series, polygon_id: pd.Series) -> pd.Series:
-        v, o, lut = bc.value
+        v, o, sorted_ids = bc.value
         pts = np.column_stack([lon.to_numpy(np.float64), lat.to_numpy(np.float64)])
-        idx = lut[polygon_id.to_numpy(np.int64)]
+        idx = np.searchsorted(sorted_ids, polygon_id.to_numpy(np.int64))
         return pd.Series(contains_csr(v, o, idx, pts) > 0)
 
     return pip
@@ -107,17 +114,17 @@ def _bbox_refine(df: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
 
 def pip_join(spark, pages: DataFrame, layer: list[dict], *,
              lon_col: str = "lon", lat_col: str = "lat",
-             mode: str = "broadcast", cover_res: int | None = None,
-             hot_cells: list[int] | None = None, n_salt: int = DEFAULT_N_SALT,
+             mode: str = "broadcast", hot_cells: list[int] | None = None,
              key_col: str = "url") -> DataFrame:
     """Join pages to every polygon containing them.
 
     Returns the pages columns + ``polygon_id`` + ``cell_id`` (cover res).
     ``mode='broadcast'``: build side broadcast (the common case — polygon
     layers are small). ``mode='partitioned'``: shuffle equi-join on cell_id
-    with optional deterministic salting of ``hot_cells``.
+    with optional deterministic salting of ``hot_cells`` (DEFAULT_N_SALT
+    ways).  The cover resolution is :func:`choose_cover_res` of the layer.
     """
-    res = cover_res if cover_res is not None else choose_cover_res(layer)
+    res = choose_cover_res(layer)
     probe = C.with_cell_id(pages, F.col(lon_col), F.col(lat_col), res)
     if not layer:  # empty layer -> empty join result with the full schema
         return probe.withColumn("polygon_id", F.lit(0).cast("long")).filter(F.lit(False))
@@ -126,28 +133,25 @@ def pip_join(spark, pages: DataFrame, layer: list[dict], *,
     if mode == "broadcast":
         cand = probe.join(F.broadcast(base_build), "cell_id")
     elif mode == "partitioned":
-        hot = set(hot_cells or [])
-        # salt replication via Column exprs: hot cells fan out n_salt ways
+        hot = sorted(set(hot_cells or []))
         if hot:
-            hot_arr_b = F.array(*[F.lit(h) for h in sorted(hot)])
-            salts = F.when(F.array_contains(hot_arr_b, F.col("cell_id")),
-                           F.sequence(F.lit(0), F.lit(n_salt - 1))
+            is_hot = F.array_contains(F.array(*[F.lit(h) for h in hot]),
+                                      F.col("cell_id"))
+            # salt replication via Column exprs: hot cells fan out n ways
+            salts = F.when(is_hot, F.sequence(F.lit(0), F.lit(DEFAULT_N_SALT - 1))
                            ).otherwise(F.array(F.lit(0)))
-        else:
-            salts = F.array(F.lit(0))
-        build = base_build.withColumn("salt", F.explode(salts))
-        if hot:
-            hot_arr = F.array(*[F.lit(h) for h in sorted(hot)])
             # coalesce: keep the join key provably non-nullable, else Catalyst
             # pushes an isnotnull(<entire salt+cell tree>) filter below the
             # projections and re-evaluates the whole expression per row
             salt = F.coalesce(
-                F.when(F.array_contains(hot_arr, F.col("cell_id")),
-                       F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_salt)).cast("int"))
+                F.when(is_hot, F.pmod(F.xxhash64(F.col(key_col)),
+                                      F.lit(DEFAULT_N_SALT)).cast("int"))
                  .otherwise(F.lit(0)),
                 F.lit(0))
         else:
+            salts = F.array(F.lit(0))
             salt = F.lit(0)
+        build = base_build.withColumn("salt", F.explode(salts))
         probe = probe.withColumn("salt", salt)
         cand = probe.join(build, ["cell_id", "salt"]).drop("salt")
     else:

@@ -1,14 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-* :func:`cosine_topk` — brute-force exact top-k. The dot product and norms are
-  higher-order Column functions (``zip_with`` + ``aggregate``) — JVM-side, no
-  Python. Queries are broadcast; the big side streams.  This is the baseline
-  and the verifier for the approximate path.
+* :func:`cosine_topk` — brute-force exact top-k, the baseline and the
+  verifier for the approximate paths.
 * :func:`lsh_bucket_topk` — random-hyperplane LSH: deterministic pseudo-planes
   hashed from (plane, dim), sign-bit bucket key, candidates restricted to
-  same-bucket (+ optional 1-bit-flip probing), exact rescoring inside buckets.
-  At scale the bucket join replaces the full cross product.
+  the same bucket or a 1-bit flip of it, exact rescoring inside buckets.
+  :func:`near_dup_pairs` pairs a corpus with itself over the same buckets.
+* :func:`ivf_topk` (inverted lists) and :func:`quantized_topk` (int8
+  re-rank) — the other approximate paths.
+
+Every path has a DuckDB twin (``*_sql``) that the oracle checks run.
 
 Outputs carry (query_id, target_id, rank) — ranks are float-order-robust
 because embedding cosines are generic reals; both engines order by
@@ -372,99 +373,11 @@ def _assign_lists(vecs: DataFrame, cents: DataFrame, id_col: str,
             .select(id_col, vec_col, F.col("cid").alias("list_id")))
 
 
-def ivf_train_kmeans(embeddings: DataFrame, *,
-                     n_centroids: int = IVF_CENTROID_BUDGET,
-                     iters: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     n_vectors: int | None = None) -> DataFrame:
-    """Spherical k-means coarse quantizer for IVF — the trained alternative
-    to the modulus-subset centroids.
-
-    Initialization is the SAME deterministic modulus subset the untrained
-    path uses (re-keyed 0..C-1 in id order), followed by a FIXED number of
-    Lloyd rounds: one distributed pass per round computes per-partition
-    (centroid, sum-of-assigned-normalized-vectors, count) partials via a
-    BLAS argmax per Arrow batch (ties -> lowest centroid index, matching
-    :func:`_assign_lists`); the driver reduces the C x dim partials (a few
-    KB — never O(N) driver state) and renormalizes.  An empty cluster keeps
-    its previous centroid.  No RNG anywhere; given a partitioning the run
-    is reproducible, and across partitionings centroids differ only by
-    float-sum reassociation ulps — irrelevant to recall, which is the
-    quantity training buys (the untrained subset stays the oracle-exact
-    default; trained centroids are approximate-by-nature, covered by the
-    recall pytest rather than a SQL twin).
-
-    Returns a (cid, cvec) DataFrame accepted by :func:`ivf_topk` via its
-    ``centroids`` parameter.  At 10^12 vectors each round is one scan + one
-    C x dim reduce — the textbook distributed k-means shape; sample the
-    training input (e.g. :func:`polycheck_spark.operators.sampling.sample_hash`)
-    to train on a subset when even one scan per round is too much.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    n = n_vectors if n_vectors is not None else embeddings.count()
-    mod = _centroid_modulus(n, n_centroids)
-    crows = (embeddings.filter(F.col(id_col) % mod == 0)
-             .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-             .orderBy(F.col(id_col)).collect())
-    if not crows:
-        raise ValueError("ivf_train_kmeans: empty init centroid set")
-    cmat = np.array([r[1] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(cmat, axis=1, keepdims=True)
-    cmat = np.divide(cmat, np.where(cn > 0, cn, 1.0))
-    c, dim = cmat.shape
-
-    schema = T.StructType([
-        T.StructField("cid", T.LongType()),
-        T.StructField("vsum", T.ArrayType(T.DoubleType())),
-        T.StructField("cnt", T.LongType()),
-    ])
-
-    src = embeddings.select(F.col(vec_col).cast("array<double>").alias("__vec"))
-    for _ in range(iters):
-        cm = cmat  # bind the round's matrix (closure over the loop var)
-
-        def partials(batches, cm=cm):
-            sums = np.zeros((c, dim))
-            cnt = np.zeros(c, dtype=np.int64)
-            for pdf in batches:
-                v = np.array(list(pdf["__vec"]), dtype=np.float64)
-                vn = np.linalg.norm(v, axis=1, keepdims=True)
-                v = np.divide(v, np.where(vn > 0, vn, 1.0))
-                best = np.argmax(v @ cm.T, axis=1)   # first max = lowest cid
-                np.add.at(sums, best, v)
-                np.add.at(cnt, best, 1)
-            live = np.flatnonzero(cnt)
-            yield pd.DataFrame({"cid": live.astype(np.int64),
-                                "vsum": [sums[i] for i in live],
-                                "cnt": cnt[live]})
-
-        rows = src.mapInPandas(partials, schema).collect()
-        sums = np.zeros((c, dim))
-        cnt = np.zeros(c, dtype=np.int64)
-        for r in rows:
-            sums[r["cid"]] += np.asarray(r["vsum"])
-            cnt[r["cid"]] += r["cnt"]
-        live = cnt > 0
-        means = np.divide(sums, cnt[:, None], out=np.zeros_like(sums),
-                          where=live[:, None])
-        mn = np.linalg.norm(means, axis=1, keepdims=True)
-        means = np.divide(means, np.where(mn > 0, mn, 1.0))
-        cmat = np.where((live & (mn[:, 0] > 0))[:, None], means, cmat)
-
-    spark = embeddings.sparkSession
-    out = [(int(i), [float(x) for x in cmat[i]]) for i in range(c)]
-    return local_frame(spark, out, "cid long, cvec array<double>")
-
-
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
              id_col: str = "vec_id", vec_col: str = "embedding",
              n_probe: int = IVF_NPROBE,
              n_centroids: int = IVF_CENTROID_BUDGET,
-             n_vectors: int | None = None,
-             centroids: DataFrame | None = None) -> DataFrame:
+             n_vectors: int | None = None) -> DataFrame:
     """IVF-flat approximate cosine top-k — the inverted-list alternative to
     :func:`lsh_bucket_topk`.
 
@@ -488,11 +401,6 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     product.  All arithmetic is double (bit-identical across engines), so
     the whole path is oracle-checkable (:func:`ivf_topk_sql`).
 
-    ``centroids``: an optional (cid, cvec) DataFrame overriding the
-    modulus subset — pass :func:`ivf_train_kmeans` output for trained
-    coarse quantization (higher recall on clustered corpora; the trained
-    path trades the SQL oracle for a recall pytest).
-
     r8: assignment + rescore now run as ONE fold-exact mapInPandas pass
     (see :func:`cosine_topk`): the centroid table (fixed budget — always
     driver-small) is collected once, each target batch fold-assigns its
@@ -504,15 +412,11 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     once (invariant pinned by test_ann_outputs_have_no_duplicate_pairs);
     cosines, ties and ranks are bit-identical to the former join."""
     import numpy as np
-    if centroids is not None:
-        crows = centroids.select(F.col("cid"),
-                                 F.col("cvec").cast("array<double>")).collect()
-    else:
-        n = n_vectors if n_vectors is not None else embeddings.count()
-        mod = _centroid_modulus(n, n_centroids)
-        crows = (embeddings.filter(F.col(id_col) % mod == 0)
-                 .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-                 .collect())
+    n = n_vectors if n_vectors is not None else embeddings.count()
+    mod = _centroid_modulus(n, n_centroids)
+    crows = (embeddings.filter(F.col(id_col) % mod == 0)
+             .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+             .collect())
     qids, qmat = _collect_queries(queries, id_col, vec_col)
     if qids is None or not crows:
         # empty queries or an empty centroid set both joined to nothing in
@@ -594,28 +498,16 @@ SELECT query_id, target_id, CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank 
 """
 
 
-def _plane_component(plane: int, dim_idx):
-    """Deterministic pseudo-hyperplane component in [-1, 1): first 8 md5 hex
-    digits of 'plane:dim' — md5 is the one hash both engines compute
-    identically (same scheme as text._tok_int), so the whole LSH path is
-    oracle-expressible (see :func:`lsh_bucket_topk_sql`)."""
-    h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(f"{plane}:"), dim_idx.cast("string"))), 1, 8),
-        16, 10).cast("long")
-    return (F.pmod(h, F.lit(2_000_003)) - F.lit(1_000_001.5)) / F.lit(1_000_001.5)
-
-
 @_lru_cache(maxsize=None)
 def _plane_weights(dim: int, n_planes: int = N_PLANES) -> tuple[tuple[float, ...], ...]:
     """The n_planes x dim hyperplane weight matrix, computed ONCE driver-side.
 
-    Same derivation as :func:`_plane_component` (md5 -> int -> affine), same
-    IEEE-double arithmetic — the two are bit-identical (pinned by
-    tests/test_text_ops.py), so buckets and oracle hashes are unchanged.
-    The weight depends only on (plane, dim index); evaluating it inside the
-    per-row ``transform`` lambda re-ran 8 x dim md5+conv calls per ROW
-    (Catalyst cannot hoist an expression of the lambda variable) — the
-    constant factor on the hot path of every LSH query."""
+    Each weight is a deterministic pseudo-hyperplane component in [-1, 1):
+    the first 8 md5 hex digits of 'plane:dim' mapped affinely.  md5 is the
+    one hash both engines compute identically (same scheme as
+    text._tok_int), and the arithmetic is the same IEEE-double affine map
+    as :func:`_plane_component_sql` — the two are bit-identical (pinned by
+    tests/test_text_ops.py), so the whole LSH path is oracle-expressible."""
     import hashlib
     rows = []
     for p in range(n_planes):
@@ -634,15 +526,12 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"]) if row is not None else 0
 
 
-def bucket_key_col(vec_col, dim: int | None = None,
-                   n_planes: int = N_PLANES):
+def bucket_key_col(vec_col, dim: int, n_planes: int = N_PLANES):
     """Sign-bit LSH bucket id from ``n_planes`` pseudo-random hyperplanes.
 
-    With ``dim`` the plane weights are precomputed literal arrays (JVM-side
-    constant, zero per-row hashing).  ``dim=None`` falls back to deriving the
-    weights per element — only for callers that truly cannot know the width
-    (ragged vectors would bucket by prefix either way: zip_with nulls out
-    length mismatches, so fixed-width input is assumed regardless).
+    The plane weights are precomputed literal arrays of width ``dim``
+    (JVM-side constant, zero per-row hashing); fixed-width input is
+    assumed (zip_with nulls out length mismatches).
 
     ``n_planes`` defaults to the oracle-pinned 8 (256 buckets — what every
     driver-checked query uses); scale paths size it with the corpus —
@@ -652,11 +541,7 @@ def bucket_key_col(vec_col, dim: int | None = None,
     jobs/near_dup_job.py)."""
     key = F.lit(0).cast("long")
     for p in range(n_planes):
-        if dim is not None:
-            wcol = F.array(*[F.lit(w) for w in _plane_weights(dim, n_planes)[p]])
-        else:
-            wcol = F.transform(F.sequence(F.lit(0), F.size(vec_col) - 1),
-                               lambda i: _plane_component(p, i))
+        wcol = F.array(*[F.lit(w) for w in _plane_weights(dim, n_planes)[p]])
         proj = F.aggregate(
             F.zip_with(vec_col, wcol, lambda x, w: x * w),
             F.lit(0.0), lambda acc, v: acc + v)
@@ -666,11 +551,10 @@ def bucket_key_col(vec_col, dim: int | None = None,
 
 def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
                     id_col: str = "vec_id", vec_col: str = "embedding",
-                    multiprobe: bool = True, dim: int | None = None) -> DataFrame:
+                    dim: int | None = None) -> DataFrame:
     """Approximate cosine top-k: candidates share an LSH bucket (or differ by
-    one sign bit when multiprobe), rescored exactly, ranked per query.
-    ``dim`` (inferred from one row when omitted) switches the bucketer to
-    precomputed literal plane weights — no per-row md5.
+    one sign bit), rescored exactly, ranked per query.  ``dim`` is inferred
+    from one row when omitted.
 
     r8: one mapInPandas pass replaces the interpreted-HOF bucketer + rescore
     (both ran as uncompiled lambdas) and the bucket join: each target batch
@@ -689,11 +573,8 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     planes = np.array(_plane_weights(dim, N_PLANES), dtype=np.float64)
     powers = (1 << np.arange(N_PLANES)).astype(np.int64)
     qb = _fold_buckets_np(qmat, planes, powers)
-    if multiprobe:
-        probe_arr = np.stack([qb] + [qb ^ (1 << p) for p in range(N_PLANES)],
-                             axis=1)                     # Q x (P+1)
-    else:
-        probe_arr = qb[:, None]
+    probe_arr = np.stack([qb] + [qb ^ (1 << p) for p in range(N_PLANES)],
+                         axis=1)                         # Q x (P+1)
 
     def pair_mask(ids, tmat):
         tb = _fold_buckets_np(tmat, planes, powers)
@@ -707,18 +588,18 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
 
 def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20), *,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   mode: str = "lsh", dim: int | None = None,
+                   dim: int | None = None,
                    max_bucket_freq: int | None = None,
                    n_planes: int = N_PLANES) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b) with a < b and
     cosine(a, b) >= num/den.
 
-    mode 'lsh' (the 100-TB path): candidates restricted to shared LSH buckets
-    (multiprobe, same md5 hyperplanes as :func:`lsh_bucket_topk`), exact
-    cosine rescore inside buckets — never an all-pairs product.  mode
-    'exact': brute-force all-pairs (the small-scale verifier; recall 1).
-    The threshold is rational (num, den) cross-multiplied so there is no
-    float-literal boundary drift between engines.
+    Candidates are restricted to shared LSH buckets (1-bit probes, same md5
+    hyperplanes as :func:`lsh_bucket_topk`), exact cosine rescore inside
+    buckets — never an all-pairs product.  :func:`near_dup_pairs_sql` with
+    ``mode='exact'`` is the brute-force all-pairs verifier.  The threshold
+    is rational (num, den) cross-multiplied so there is no float-literal
+    boundary drift between engines.
 
     ``max_bucket_freq``: hot-bucket cap for scale.  A bucket holding S
     vectors yields ~S^2 candidate rows, so one degenerate bucket (e.g.
@@ -754,18 +635,6 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
     import pandas as pd
 
     num, den = threshold
-    if mode == "exact":
-        t = embeddings.select(F.col(id_col).alias("a"),
-                              F.col(vec_col).cast("array<double>").alias("avec"))
-        u = embeddings.select(F.col(id_col).alias("b"),
-                              F.col(vec_col).cast("array<double>").alias("bvec"))
-        cand = t.join(u, F.col("a") < F.col("b"))
-        cos = _cosine(F.col("avec"), F.col("bvec"))
-        return (cand.withColumn("cosine", cos)
-                .filter(F.col("cosine") * den >= F.lit(num))
-                .select("a", "b"))
-    if mode != "lsh":
-        raise ValueError("mode must be 'lsh' or 'exact'")
     if dim is None:
         dim = _infer_dim(embeddings, vec_col)
 
@@ -907,7 +776,7 @@ def _bucket_sql(vec: str, n_planes: int = N_PLANES) -> str:
 
 def lsh_bucket_topk_sql(table: str, queries_filter: str, k: int,
                         id_col: str = "vec_id", vec_col: str = "embedding") -> str:
-    """DuckDB twin of :func:`lsh_bucket_topk` (multiprobe on): identical md5
+    """DuckDB twin of :func:`lsh_bucket_topk`: identical md5
     plane weights, sign-bit buckets, 1-bit probes, exact rescore + rank."""
     probes = ", ".join(["qbucket"] + [f"xor(qbucket, {1 << p})" for p in range(N_PLANES)])
     return f"""

@@ -176,14 +176,6 @@ LITERAL_BLOCKLIST_CAP = 100_000
 LITERAL_OR_CAP = 64
 
 
-def host_suffixes_col(host):
-    """array<string> of dot-suffixes of a host, longest first."""
-    parts = F.split(host, r"\.")
-    n = F.size(parts)
-    return F.transform(F.sequence(F.lit(1), n),
-                       lambda i: F.array_join(F.slice(parts, i, n), "."))
-
-
 def host_suffixes_sql(host_expr: str) -> str:
     return (f"list_transform(range(1, len(string_split({host_expr}, '.')) + 1), "
             f"i -> array_to_string(string_split({host_expr}, '.')"

@@ -55,10 +55,6 @@ def assert_no_persisted_rdd_leak(request):
         "test left CacheManager entries: operator or test called "
         ".cache()/.persist() with no unpersist path — use a lazy "
         "localCheckpoint instead (ContextCleaner-reclaimed)")
-    if spark.streams.active:
-        # a still-running streaming query holds state asynchronously; its
-        # own test is responsible for stopping it — don't race the check
-        return
     leaked = _persisted_rdd_ids(spark) - before
     deadline = time.time() + 8
     while leaked and time.time() < deadline:

@@ -28,33 +28,6 @@ def test_parent_consistency(lon, lat, res):
     assert fine[0] in set(C.children(coarse).ravel().tolist())
 
 
-def test_cell_center_in_bounds():
-    cid = C.cell_id(np.array([13.4]), np.array([52.5]), 12)
-    lon_min, lat_min, lon_max, lat_max = C.cell_bounds(cid)
-    clon, clat = C.cell_center(cid)
-    assert lon_min[0] <= 13.4 < lon_max[0]
-    assert lat_min[0] <= 52.5 < lat_max[0]
-    assert lon_min[0] < clon[0] < lon_max[0]
-
-
-def test_k_ring_counts_and_symmetry():
-    cid = int(C.cell_id(np.array([13.4]), np.array([52.5]), 10)[0])
-    for k in (0, 1, 2, 3):
-        ring = C.k_ring(cid, k)
-        assert len(ring) == (2 * k + 1) ** 2
-        assert cid in set(ring.tolist())
-    # neighbor symmetry: a in ring(b) <=> b in ring(a)
-    for other in C.k_ring(cid, 1):
-        assert cid in set(C.k_ring(int(other), 1).tolist())
-
-
-def test_ring_shell_is_hollow():
-    cid = int(C.cell_id(np.array([0.0]), np.array([0.0]), 8)[0])
-    shell = C.ring_shell(cid, 2)
-    assert len(shell) == (5 * 5) - (3 * 3)
-    assert cid not in set(shell.tolist())
-
-
 def test_cells_covering_bbox_contains_inner_points():
     res = 8
     cover = set(C.cells_covering_bbox(-10.0, -5.0, 10.0, 5.0, res).tolist())

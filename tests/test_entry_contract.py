@@ -1,5 +1,10 @@
 """Driver-contract sanity: entry() shape, queries()/oracle_sql() alignment,
-and golden star-grid tile assignment through the full Spark join path."""
+golden star-grid tile assignment through the full Spark join path, and the
+caller census that keeps test-only code out of the program."""
+
+import ast
+import glob
+import os
 
 import numpy as np
 import pytest
@@ -77,3 +82,84 @@ def test_star_grid_exact_through_spark_join(spark):
     got_ids = {r["point_id"] for r in joined.select("point_id").collect()}
     assert got_ids == expected_ids
     assert len(got_ids) == 776  # the star's known containment count
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PROGRAM_GLOBS = ("polycheck_spark/**/*.py", "__spark_entry__.py", "bench*.py",
+                  "tools/**/*.py", "perfbench/**/*.py")
+
+# Program defs that no program file calls, each kept for a stated reason.
+_CENSUS_ALLOW = {
+    "visibility.visibility_local":
+        "reference twin: NumPy raster visibility the Spark operator is tested against",
+    "visibility.visibility_from_region_local":
+        "reference twin of visibility_from_region",
+    "visibility.visibility_from_real_region_local":
+        "reference twin of visibility_from_real_region",
+    "visibility.sensor_visibility_local":
+        "reference twin of sensor_visibility",
+    "web.url_path_col":
+        "reference twin: Column form of the raw-path parse robots rules match on",
+    "cells.cell_id":
+        "reference twin: NumPy cell index the Column and SQL encoders are tested against",
+    "cells.children":
+        "reference twin: inverse of parent, pins the quadtree in property tests",
+    "cells.parent_sql":
+        "reference twin: DuckDB twin of parent",
+    "kernel.faux_scan":
+        "reference twin: the reference API's whole-scan entry, pinned by golden ranges",
+    "tables.CheckpointedWriter.lineage_df":
+        "snapshot API: per-bucket lineage as a DataFrame (the Iceberg surface)",
+    "tables.CheckpointedWriter.read_snapshot":
+        "snapshot API: time travel (the Iceberg surface)",
+    "tables.CheckpointedWriter.rollback_to":
+        "snapshot API: rollback (the Iceberg surface)",
+    "tables.CheckpointedWriter.read_snapshot_evolved":
+        "snapshot API: add-column schema evolution (the Iceberg surface)",
+    "tables.CheckpointedWriter.expire_snapshots":
+        "snapshot API: snapshot expiry (the Iceberg surface)",
+}
+
+
+def _program_files():
+    return sorted({p for g in _PROGRAM_GLOBS
+                   for p in glob.glob(os.path.join(_ROOT, g), recursive=True)})
+
+
+def test_every_program_def_has_a_program_caller():
+    """Caller census: every top-level function, class and method under
+    polycheck_spark/ is referenced by name (a Name, an Attribute or an
+    import) from some program file — the package, the driver entry, the
+    bench scripts, tools/ or perfbench/.  Code that only tests reach is
+    deleted, not kept; the few deliberate exceptions are listed with a
+    reason in _CENSUS_ALLOW, and an entry that gains a caller leaves it."""
+    refs = set()
+    for path in _program_files():
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.Name):
+                refs.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                refs.add(node.attr)
+            elif isinstance(node, ast.alias):
+                refs.update(node.name.split("."))
+    defs = {}
+    for path in glob.glob(os.path.join(_ROOT, "polycheck_spark/**/*.py"),
+                          recursive=True):
+        mod = os.path.splitext(os.path.basename(path))[0]
+        for node in ast.parse(open(path).read(), path).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef)):
+                continue
+            defs[f"{mod}.{node.name}"] = node.name
+            if isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if (isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                            and not (m.name.startswith("__")
+                                     and m.name.endswith("__"))):
+                        defs[f"{mod}.{node.name}.{m.name}"] = m.name
+    uncalled = {q for q, name in defs.items() if name not in refs}
+    assert uncalled <= set(_CENSUS_ALLOW), (
+        f"no program caller (delete it, with the tests that only it "
+        f"serves): {sorted(uncalled - set(_CENSUS_ALLOW))}")
+    assert uncalled == set(_CENSUS_ALLOW), (
+        f"allowlisted but called or gone: {sorted(set(_CENSUS_ALLOW) - uncalled)}")

@@ -1,7 +1,4 @@
-"""Multimodal binary-column plumbing tests (decode itself is stubbed)."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Multimodal binary-column plumbing and codec-free decode tests."""
 
 from polycheck_spark.data import synth
 from polycheck_spark.operators import multimodal as M
@@ -105,36 +102,6 @@ def test_media_dims_sql_twin_matches(spark):
         f"SELECT i, {w_sql} AS w, {h_sql} AS h "
         f"FROM (SELECT * FROM (VALUES {hex_rows}) t(i, hx))").fetchall())
     assert got == exp
-
-
-def test_decode_media_strict_raises(spark):
-    pages = synth.generate_pages(spark, 5)
-    with pytest.raises(Exception) as ei:
-        M.decode_media(pages, strict=True).collect()
-    assert "NotImplementedError" in str(ei.value) or "codecs" in str(ei.value)
-
-
-def test_decode_media_fake_features_deterministic(spark):
-    pages = synth.generate_pages(spark, 40)
-    a = {r["url"]: (r["media_bytes"], tuple(r["features"]))
-         for r in M.decode_media(pages, strict=False).collect()}
-    b = {r["url"]: (r["media_bytes"], tuple(r["features"]))
-         for r in M.decode_media(synth.generate_pages(spark, 40, partitions=7),
-                                 strict=False).collect()}
-    assert a == b
-    for nbytes, feats in a.values():
-        assert len(feats) == M.N_FEATURES
-        assert abs(sum(feats) - 1.0) < 1e-3
-        assert nbytes > 0
-
-
-def test_frame_sample_plan(spark):
-    pages = synth.generate_pages(spark, 10)
-    plan = M.frame_sample_plan(pages, every_n=2)
-    rows = plan.groupBy("url").agg(F.collect_list("frame_idx").alias("idx")).collect()
-    for r in rows:
-        assert sorted(r["idx"]) == r["idx"]
-        assert all(i % 2 == 0 for i in r["idx"])
 
 
 # --- codec-free real decode (BMP / PNM / WAV) --------------------------------

@@ -1,11 +1,4 @@
-"""Sequence packing: chunk-mode closed form and greedy-mode invariants
-against an independent pure-Python reference."""
-
-import random
-
-import pytest
-
-from pyspark.sql import functions as F
+"""Sequence packing: the chunk-mode closed form and its plan shape."""
 
 from polycheck_spark.operators import packing as PK
 
@@ -35,48 +28,6 @@ def test_pack_chunks_offsets_and_straddles(spark):
     # de group is an independent stream: exact 1024 fits bin 0 exactly
     assert got[10]["bin_id"] == 0 and not got[10]["straddles"]
     assert got[11]["start_off"] == 1024 and got[11]["bin_id"] == 1
-
-
-def test_pack_greedy_matches_python_reference(spark):
-    got = sorted((r["doc_id"], r["bin_id"], r["pos_in_bin"], r["bin_fill"])
-                 for r in PK.pack_greedy(_df(spark, ROWS), 1024).collect()
-                 if r["lang"] == "en")
-    exp = sorted(PK.pack_greedy_py(
-        [(i, n) for g, i, n in ROWS if g == "en"], 1024))
-    assert got == exp
-
-
-def test_pack_greedy_invariants_random(spark):
-    rng = random.Random(7)
-    rows = [("en", i, rng.randint(0, 600)) for i in range(1, 301)]
-    budget = 1024
-    out = sorted((r["doc_id"], r["bin_id"], r["pos_in_bin"], r["bin_fill"])
-                 for r in PK.pack_greedy(_df(spark, rows), budget).collect())
-    assert [d for d, *_ in out] == list(range(1, 301))  # order preserved
-    by_bin = {}
-    for d, b, p, f in out:
-        by_bin.setdefault(b, []).append((p, d, f))
-    n = dict((i, t) for _, i, t in rows)
-    for b in sorted(by_bin):
-        docs = sorted(by_bin[b])
-        assert [p for p, _, _ in docs] == list(range(len(docs)))
-        total = sum(n[d] for _, d, _ in docs)
-        assert docs[-1][2] == total  # bin_fill is the running total
-        # never over budget unless a single oversized doc
-        assert total <= budget or len(docs) == 1
-        # greedy-maximal: the first doc of bin b+1 would NOT have fit
-        if b + 1 in by_bin:
-            nxt = sorted(by_bin[b + 1])[0][1]
-            assert total + n[nxt] > budget
-
-
-def test_pack_greedy_oversized_doc_gets_own_bin(spark):
-    rows = [("en", 1, 10), ("en", 2, 5000), ("en", 3, 10)]
-    got = {r["doc_id"]: r for r in
-           PK.pack_greedy(_df(spark, rows), 100).collect()}
-    assert got[1]["bin_id"] == 0
-    assert got[2]["bin_id"] == 1 and got[2]["pos_in_bin"] == 0
-    assert got[3]["bin_id"] == 2
 
 
 def test_pack_chunks_plan_is_python_free_single_shuffle(spark):

@@ -53,6 +53,24 @@ def test_partitioned_equals_broadcast(spark, pages, layer):
     assert _rows(a) == _rows(b)
 
 
+def test_large_polygon_ids_join_like_small_ones(spark, pages, layer):
+    """The PIP UDF's id lookup is sized by the layer, not by the largest id:
+    a dense table indexed by ids near 2**40 would need 8 TiB."""
+    shift = 2 ** 40
+    big = [dict(p, polygon_id=p["polygon_id"] + shift) for p in layer]
+    got = _rows(PJ.pip_join(spark, pages, big))
+    exp = [(u, pid + shift) for u, pid in _rows(PJ.pip_join(spark, pages, layer))]
+    assert got == exp and got
+
+
+def test_duplicate_polygon_ids_rejected(spark, pages, layer):
+    """Two polygons under one id are refused when the plan is built (the
+    DuckDB oracle would sum both polygons' edges under that id)."""
+    dup = layer + [dict(layer[1], polygon_id=layer[0]["polygon_id"])]
+    with pytest.raises(ValueError, match="duplicate polygon_id"):
+        PJ.pip_join(spark, pages, dup)
+
+
 def test_salted_partitioned_preserves_multiset(spark, pages, layer):
     res = PJ.choose_cover_res(layer)
     hot = PJ.detect_hot_cells(pages, res, sample_frac=0.5, threshold_frac=0.02)

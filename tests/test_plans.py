@@ -109,7 +109,7 @@ def test_near_dup_buckets_once_vectors_never_rejoin(spark, sf_dir):
     candidate pair), no join operator at all."""
     from polycheck_spark.operators import similarity as S
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    plan = _plan(S.near_dup_pairs(emb, (3, 5), mode="lsh"))
+    plan = _plan(S.near_dup_pairs(emb, (3, 5)))
     assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
     assert plan.count("Scan ExistingRDD") == 2, plan
     assert plan.count("FileScan parquet") == 0, plan

@@ -259,10 +259,10 @@ def test_cosine_topk(spark, sf_dir):
 
 
 def test_simhash_wide_matches_oracle(spark, sf_dir, docs):
-    """The 60-bit token hash (_tok_int60 vs _tok_int60_sql) must agree
-    cross-engine — the wide-signature path the 16-bit driver default never
-    exercises (ADVICE r4): conv(md5[1:15], 16, 10) in Spark vs the '0x'
-    cast in DuckDB, folded through the full simhash bit-vote."""
+    """The 60-bit token hash must agree cross-engine — the wide-signature
+    path the 16-bit driver default never exercises (ADVICE r4): hashlib's
+    md5[:15] in the Spark workers vs _tok_int60_sql's '0x' cast in DuckDB,
+    folded through the full simhash bit-vote."""
     got = _sorted_rows(D.simhash(docs, bits=60))
     exp = sorted(_duck(sf_dir, D.simhash_sql("documents", bits=60)))
     assert got == exp and got
@@ -302,8 +302,10 @@ def test_simhash_near_pairs_computes_signatures_once(spark, sf_dir):
 
 
 def test_near_dup_exact_vs_lsh(spark, sf_dir):
-    """Embedding-cosine near-dup: exact mode finds every injected duplicate;
-    the LSH-bucketed mode returns a subset with usable recall."""
+    """Embedding-cosine near-dup: the brute-force all-pairs oracle
+    (near_dup_pairs_sql mode='exact' in DuckDB, over the same union) finds
+    every injected duplicate; the LSH-bucketed Spark path returns a subset
+    with usable recall."""
     from polycheck_spark.operators.similarity import near_dup_pairs
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pert = (F.concat(
@@ -314,10 +316,16 @@ def test_near_dup_exact_vs_lsh(spark, sf_dir):
                     pert.alias("embedding")))
     both = emb.select("vec_id", "embedding").unionByName(dups)
     n_injected = dups.count()
-    exact = {(r["a"], r["b"]) for r in
-             near_dup_pairs(both, (3, 5), mode="exact").collect()}
-    lsh = {(r["a"], r["b"]) for r in
-           near_dup_pairs(both, (3, 5), mode="lsh").collect()}
+    exact = set(_duck(sf_dir, f"""
+WITH both_ AS (
+  SELECT vec_id, embedding FROM embeddings
+  UNION ALL
+  SELECT vec_id + 100000 AS vec_id,
+         [CAST(embedding[1] + 0.25 AS FLOAT)] || embedding[2:] AS embedding
+  FROM embeddings WHERE vec_id % 50 = 0
+)
+SELECT a, b FROM ({S.near_dup_pairs_sql("both_", (3, 5), mode="exact")})"""))
+    lsh = {(r["a"], r["b"]) for r in near_dup_pairs(both, (3, 5)).collect()}
     injected = {(r["vec_id"], r["vec_id"] + 100_000)
                 for r in emb.filter(F.col("vec_id") % 50 == 0).collect()}
     assert injected <= exact                      # exact mode: recall 1
@@ -330,7 +338,7 @@ def test_near_dup_nondefault_planes_match_oracle(spark, sf_dir):
     (ADVICE r4: an 8-plane oracle silently compared against an N-plane
     Spark run before) — pinned at a non-default count cross-engine."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = _sorted_rows(S.near_dup_pairs(emb, (3, 5), mode="lsh", n_planes=5))
+    got = _sorted_rows(S.near_dup_pairs(emb, (3, 5), n_planes=5))
     exp = sorted(_duck(sf_dir, S.near_dup_pairs_sql(
         "embeddings", (3, 5), mode="lsh", n_planes=5)))
     assert got == exp
@@ -378,65 +386,25 @@ def test_lsh_ann_recall_on_clustered_data(spark):
     assert ivf_recall >= 0.8, ivf_recall
 
 
-def _clustered_corpus(spark, n_clusters, per, dim, noise_denom=500):
-    rows = []
-    for c in range(n_clusters):
-        base = [(((c * 31 + d * 17) % 97) - 48) / 48.0 for d in range(dim)]
-        for m in range(per):
-            vec = [base[d] + (((c * 7 + m * 13 + d * 3) % 11) - 5) / noise_denom
-                   for d in range(dim)]
-            rows.append((c * per + m, [float(v) for v in vec]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_ivf_trained_centroids_raise_recall(spark):
-    """Deterministic spherical k-means must lift IVF recall to >= 0.9 in a
-    regime where the untrained modulus subset drops below it (the untrained
-    path is pinned at >= 0.8 elsewhere).  The regime: DIFFUSE clusters
-    (noise comparable to inter-center gaps) probed with n_probe=1, so
-    cluster members split across list boundaries when centroids sit
-    off-center — exactly what Lloyd rounds fix (measured here: 0.87
-    untrained -> 0.95 trained).  Tight clusters co-locate wholesale under
-    ANY centroids, which is why the easy corpus cannot separate the two.
-    Also pins training invariants: FIXED centroid budget (never O(N)),
-    unit-norm outputs, and the Arrow path consuming the same centroids
-    identically."""
-    import math
-    per = 12
-    emb = _clustered_corpus(spark, n_clusters=80, per=per, dim=16,
-                            noise_denom=25)
-    q = emb.filter(F.col("vec_id") % (4 * per) == 0)
-    exact = {(r["query_id"], r["target_id"])
-             for r in S.cosine_topk(emb, q, 5).collect()}
-    untrained = {(r["query_id"], r["target_id"])
-                 for r in S.ivf_topk(emb, q, 5, n_probe=1).collect()}
-    cents = S.ivf_train_kmeans(emb, iters=5)
-    crows = cents.collect()
-    assert len(crows) <= 2 * S.IVF_CENTROID_BUDGET          # fixed budget
-    for r in crows:
-        assert math.isclose(sum(v * v for v in r["cvec"]), 1.0, rel_tol=1e-9)
-    trained = {(r["query_id"], r["target_id"])
-               for r in S.ivf_topk(emb, q, 5, n_probe=1, centroids=cents).collect()}
-    r_untrained = len(exact & untrained) / len(exact)
-    r_trained = len(exact & trained) / len(exact)
-    assert r_trained >= 0.9, (r_trained, r_untrained)
-    assert r_trained >= r_untrained + 0.03, (r_trained, r_untrained)
-
-
 def test_plane_weights_bitwise_equal(spark):
     """The precomputed literal plane-weight matrix must be BIT-identical to
-    the md5 Column derivation it replaced (buckets — and therefore oracle
+    DuckDB's md5 derivation in the oracles (buckets — and therefore oracle
     hashes — depend on exact sign boundaries)."""
+    import struct
     dim = 16
+    con = duckdb.connect()
+    for p, row in enumerate(S._plane_weights(dim)):
+        sql = (f"SELECT list({S._plane_component_sql(p, 'i')} ORDER BY i) "
+               f"FROM range({dim}) t(i)")
+        duck = con.execute(sql).fetchone()[0]
+        assert ([struct.pack("<d", w) for w in row]
+                == [struct.pack("<d", w) for w in duck]), p
     rows = [(i, [((i * 13 + d * 7) % 29 - 14) / 14.0 for d in range(dim)])
             for i in range(64)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     lit_path = emb.select("vec_id",
                           S.bucket_key_col(F.col("embedding"), dim).alias("b"))
-    md5_path = emb.select("vec_id",
-                          S.bucket_key_col(F.col("embedding")).alias("b"))
-    assert _sorted_rows(lit_path) == _sorted_rows(md5_path)
-    # and the literal path's plan carries no md5 call at all
+    # the literal path's plan carries no md5 call at all
     assert "md5" not in lit_path._jdf.queryExecution().executedPlan().toString()
 
 
@@ -501,13 +469,13 @@ def test_near_dup_hot_bucket_cap(spark):
     rows += [(1000, cool_vec), (1001, cool_vec)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     capped = {(r["a"], r["b"]) for r in
-              S.near_dup_pairs(emb, (19, 20), mode="lsh", dim=dim,
+              S.near_dup_pairs(emb, (19, 20), dim=dim,
                                max_bucket_freq=4).collect()}
     assert capped == {(1000, 1001)}
     # uncapped on the cool slice alone agrees (sanity: cap is the only delta)
     cool = emb.filter(F.col("vec_id") >= 1000)
     uncapped_cool = {(r["a"], r["b"]) for r in
-                     S.near_dup_pairs(cool, (19, 20), mode="lsh", dim=dim).collect()}
+                     S.near_dup_pairs(cool, (19, 20), dim=dim).collect()}
     assert uncapped_cool == {(1000, 1001)}
 
 
@@ -713,7 +681,7 @@ def test_ann_outputs_have_no_duplicate_pairs(spark, sf_dir):
     for df, keys in ((S.lsh_bucket_topk(emb, q, 5), ("query_id", "target_id")),
                      (S.ivf_topk(emb, q, 5), ("query_id", "target_id")),
                      (S.quantized_topk(emb, q, 5), ("query_id", "target_id")),
-                     (S.near_dup_pairs(emb, (3, 5), mode="lsh"), ("a", "b"))):
+                     (S.near_dup_pairs(emb, (3, 5)), ("a", "b"))):
         rows = [tuple(r[k] for k in keys) for r in df.select(*keys).collect()]
         assert len(rows) == len(set(rows)), keys
 

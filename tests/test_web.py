@@ -179,12 +179,6 @@ def test_domain_block_filter_literal_is_map_side_join_broadcasts(spark):
     assert "BroadcastHashJoin" in join_plan, join_plan
 
 
-def test_host_suffixes_longest_first(spark):
-    df = spark.createDataFrame([("a.b.example.com",)], "h string")
-    got = df.select(W.host_suffixes_col(F.col("h")).alias("s")).collect()[0]["s"]
-    assert got == ["a.b.example.com", "b.example.com", "example.com", "com"]
-
-
 def test_robots_verdicts_semantics(spark):
     rules = spark.createDataFrame(
         [("ex.com", "/private", False), ("ex.com", "/private/pub", True),

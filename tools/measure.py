@@ -452,7 +452,7 @@ def near_dup_300k(spark, s, cpus):
     corpus = synth.inject_perturbed_copies(synth.generate_embeddings(spark, n, dim),
                                            dim, 20, off)
     n_inj = corpus.count() - n
-    found, dt = _timed(lambda: SIM.near_dup_pairs(corpus, (3, 5), mode="lsh", dim=dim,
+    found, dt = _timed(lambda: SIM.near_dup_pairs(corpus, (3, 5), dim=dim,
                                                   n_planes=n_planes)
                        .filter(F.col("b") == F.col("a") + off).count())
     return _rated({"vectors": n + n_inj, "dim": dim, "n_planes": n_planes, "injected": n_inj,
