@@ -1973,7 +1973,7 @@ def q_visibility_real_region(spark, sf_dir):
     starts = local_frame(spark, _O4_STARTS, "sx double, sy double")
     ends = local_frame(spark, _O4_ENDS, "ex double, ey double")
     return (visibility_from_region_df(spark, _o4_grid(), starts, ends,
-                                      max_range=_O4_MAX_RANGE, real=True,
+                                      max_range=_O4_MAX_RANGE,
                                       origin=_O4_ORIGIN, resolution=_O4_RES)
             .select("sx", "sy", "ex", "ey", "vis").orderBy("sx", "sy", "ex", "ey"))
 
@@ -2016,7 +2016,7 @@ def q_sensor_product_real(spark, sf_dir):
         spark, _O6_SENSORS,
         "sensor_id int, x double, y double, range double, direction double, fov double")
     _, combined = sensor_visibility_df(spark, _o6_grid(), sensors, "product",
-                                       real=True, origin=_O6_ORIGIN, resolution=_O6_RES)
+                                       origin=_O6_ORIGIN, resolution=_O6_RES)
     return combined.select("ex", "ey", "p").orderBy("ey", "ex")
 
 

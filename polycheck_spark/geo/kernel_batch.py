@@ -1,13 +1,22 @@
-"""Lockstep-vectorized Bresenham walks: many rays advance together.
+"""Lockstep-vectorized ray walks: many rays advance together.
 
 The scalar kernels in geo/kernel.py are the semantic anchor (one ray at a
 time, exactly the reference control flow).  At scale a sensors x cells cross
 join produces millions of rays per Arrow batch, and a Python-level loop over
 rays caps throughput at ~10^5 rays/s/core.  These batch versions advance ALL
-rays one Bresenham step per NumPy pass (masked), so the per-step cost is a
-handful of vector ops over the active rays — the same parallelization the
-reference gets from one-thread-per-ray on the GPU (polycheck.py:711-750),
-re-expressed as SIMD-over-rays.
+rays one step per NumPy pass (masked), so the per-step cost is a handful of
+vector ops over the active rays — the same parallelization the reference
+gets from one-thread-per-ray on the GPU (polycheck.py:711-750), re-expressed
+as SIMD-over-rays.
+
+One batch kernel per traversal, with the ``mode`` of its SQL twin in
+data/walk_oracles.py: :func:`bresenham_batch` (integer grid) and
+:func:`dda_batch` (world coordinates), each ``"product"`` (transmittance) or
+``"sum"`` (sum-blocking clear probability).
+:func:`sensor_cell_observation_batch` is the per-(sensor, cell) kernel of
+both regimes and :func:`line_range_batch` marches faux-scan rays.  A walk
+keeps its live rays in one namespace of per-ray arrays (:func:`_live`);
+finished rays leave it through the one compaction, :func:`_retire`.
 
 Exactness: state transitions replicate the scalar kernels branch for branch
 (including early-break order); tests/test_kernel_batch.py asserts equality
@@ -16,130 +25,129 @@ against the scalar versions over randomized grids and endpoints.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import numpy as np
 
-from polycheck_spark.geo.kernel import contains
+from polycheck_spark.geo.kernel import FLT_EPSILON, contains
 
-FLT_EPSILON = np.float32(1.1920928955078125e-07)
+_MODES = ("product", "sum")
+_F32_MAX = np.float32(np.finfo(np.float32).max)
 
 
-def line_observation_sum_batch(data: np.ndarray, sx, sy, ex, ey) -> np.ndarray:
-    """Vectorized twin of kernel.line_observation_sum (sum-blocking walk,
-    destination excluded, float32 accumulation, bounds-checked)."""
+def _outside(x, y, width, height):
+    return (x < 0) | (x >= width) | (y < 0) | (y >= height)
+
+
+def _clear(blocked):
+    """Sum-walk value of a ray that arrives with float32 blocking sum
+    ``blocked``: clamp01(1 - blocked)."""
+    f = np.float32
+    return np.minimum(f(1.0), np.maximum(f(0.0), f(1.0) - blocked))
+
+
+def _live(idx, **state):
+    """A walk's live set: output slots ``idx`` plus each per-ray state array
+    cut to those rays (fancy indexing copies, so walks update in place)."""
+    return SimpleNamespace(idx=idx, **{k: a[idx] for k, a in state.items()})
+
+
+def _retire(out, rays, done, values):
+    """The one compaction both walks use: write ``values`` (a scalar, or one
+    per ``done`` ray) to the ``done`` rays' ``out`` slots and cut every array
+    of ``rays`` to the survivors.  Walks call it only on a step where some
+    ray ends: compacting on every step was 25-45 % slower.  Returns the
+    number of rays still live."""
+    out[rays.idx[done]] = values
+    keep = ~done
+    state = vars(rays)
+    for name, a in state.items():
+        # one array at a time, so each old array is freed before the next
+        # is cut: cutting all first and swapping after was ~10 % slower
+        state[name] = a[keep]
+    return len(rays.idx)
+
+
+def bresenham_batch(data, sx, sy, ex, ey, mode, max_range=0) -> np.ndarray:
+    """Vectorized twin of kernel.line_observation (``mode="product"``) and
+    kernel.line_observation_sum (``mode="sum"``); bresenham_oracle_sql is
+    their SQL twin.  Destination excluded in both.
+
+    product: float64 transmittance, zero below 2*FLT_EPSILON, ``max_range``
+    counts steps (0 = unlimited), no bounds checks.
+    sum: float32 blocking sum, zero for out-of-grid ends or cells and at a
+    sum >= 1.  The scalar sum walk has no range rule, so ``max_range > 0``
+    raises rather than invent one.
+    """
+    if mode not in _MODES:
+        raise ValueError(f"mode must be one of {_MODES}, not {mode!r}")
+    product = mode == "product"
+    if not product and max_range > 0:
+        raise ValueError("the sum walk has no max_range")
+    acc_dtype = np.float64 if product else np.float32
     data = np.asarray(data, dtype=np.float32)
     height, width = data.shape
-    flat = data.ravel()
-    sx = np.asarray(sx, dtype=np.int64).copy()
-    sy = np.asarray(sy, dtype=np.int64).copy()
-    ex = np.asarray(ex, dtype=np.int64)
-    ey = np.asarray(ey, dtype=np.int64)
+    flat = data.ravel().astype(acc_dtype)
+    sx, sy, ex, ey = (np.asarray(a, dtype=np.int64) for a in (sx, sy, ex, ey))
     n = len(sx)
-    out = np.zeros(n, dtype=np.float32)
-    blocked = np.zeros(n, dtype=np.float32)
-
-    oob = (sx < 0) | (sx >= width) | (sy < 0) | (sy >= height) \
-        | (ex < 0) | (ex >= width) | (ey < 0) | (ey >= height)
-    same = (sx == ex) & (sy == ey)
-    out[same & ~oob] = 1.0
-
-    active = ~(oob | same)
-    if not active.any():
-        return out
+    out = np.zeros(n, dtype=acc_dtype)
+    oob = np.zeros(n, dtype=bool) if product else \
+        _outside(sx, sy, width, height) | _outside(ex, ey, width, height)
+    same = (sx == ex) & (sy == ey) & ~oob
+    out[same] = 1.0
 
     dx = np.abs(sx - ex)
     dy = -np.abs(sy - ey)
-    step_x = np.where(sx < ex, 1, -1)
-    step_y = np.where(sy < ey, 1, -1)
-    error = dx + dy
-
-    idx = np.flatnonzero(active)
-    # compact state for active rays only
-    asx, asy = sx[idx], sy[idx]
-    aex, aey = ex[idx], ey[idx]
-    adx, ady = dx[idx], dy[idx]
-    astx, asty = step_x[idx], step_y[idx]
-    aerr = error[idx]
-    ablk = blocked[idx]
-
-    def finish(mask, values):
-        nonlocal idx, asx, asy, aex, aey, adx, ady, astx, asty, aerr, ablk
-        out[idx[mask]] = values
-        keep = ~mask
-        idx = idx[keep]
-        asx, asy = asx[keep], asy[keep]
-        aex, aey = aex[keep], aey[keep]
-        adx, ady = adx[keep], ady[keep]
-        astx, asty = astx[keep], asty[keep]
-        aerr = aerr[keep]
-        ablk = ablk[keep]
-
-    while len(idx):
-        # arrival before stepping
-        arr = (asx == aex) & (asy == aey)
-        if arr.any():
-            finish(arr, np.minimum(np.float32(1.0),
-                                   np.maximum(np.float32(0.0),
-                                              np.float32(1.0) - ablk[arr])))
-            if not len(idx):
-                break
-        e2 = 2 * aerr
-        c1 = e2 >= ady
-        # break: c1 and already at target column
-        b1 = c1 & (asx == aex)
-        if b1.any():
-            finish(b1, np.minimum(np.float32(1.0),
-                                  np.maximum(np.float32(0.0),
-                                             np.float32(1.0) - ablk[b1])))
-            if not len(idx):
-                break
-            e2 = e2[~b1]
-            c1 = c1[~b1]
-        m1 = c1
-        aerr[m1] += ady[m1]
-        asx[m1] += astx[m1]
-        c2 = e2 <= adx
-        b2 = c2 & (asy == aey)
-        if b2.any():
-            finish(b2, np.minimum(np.float32(1.0),
-                                  np.maximum(np.float32(0.0),
-                                             np.float32(1.0) - ablk[b2])))
-            if not len(idx):
-                break
-            c2 = c2[~b2]
-        m2 = c2
-        aerr[m2] += adx[m2]
-        asy[m2] += asty[m2]
-
-        # arrival right after the move: destination excluded from the sum
-        arr2 = (asx == aex) & (asy == aey)
-        if arr2.any():
-            finish(arr2, np.minimum(np.float32(1.0),
-                                    np.maximum(np.float32(0.0),
-                                               np.float32(1.0) - ablk[arr2])))
-            if not len(idx):
-                break
-        oob2 = (asx < 0) | (asx >= width) | (asy < 0) | (asy >= height)
-        if oob2.any():
-            finish(oob2, np.float32(0.0))
-            if not len(idx):
-                break
-        ablk = np.float32(ablk + flat[asy * width + asx])
-        full = ablk >= np.float32(1.0)
-        if full.any():
-            finish(full, np.float32(0.0))
-    return out
-
-
-_F32_MAX = np.float32(np.finfo(np.float32).max)
+    rays = _live(np.flatnonzero(~(same | oob)), sx=sx, sy=sy, ex=ex, ey=ey,
+                 dx=dx, dy=dy, step_x=np.where(sx < ex, 1, -1),
+                 step_y=np.where(sy < ey, 1, -1), error=dx + dy,
+                 acc=np.full(n, 1.0 if product else 0.0, dtype=acc_dtype))
+    settle = (lambda acc: acc) if product else _clear
+    steps = 0  # lockstep: every live ray has taken the same number of steps
+    eps2 = float(FLT_EPSILON) * 2.0
+    # The reference's arrival test at the head of its loop is the previous
+    # step's arrival test below (no ray starts at its target), so it runs
+    # once per step here.
+    while len(rays.idx):
+        e2 = 2 * rays.error
+        move_x = e2 >= rays.dy
+        move_y = e2 <= rays.dx
+        # A ray due to step x at its target column ends, as does one due to
+        # step y at its target row.  Letting it move anyway is harmless: its
+        # value does not depend on its cell, and it retires before the read.
+        hit = (move_x & (rays.sx == rays.ex)) | (move_y & (rays.sy == rays.ey))
+        rays.error[move_x] += rays.dy[move_x]
+        rays.sx[move_x] += rays.step_x[move_x]
+        rays.error[move_y] += rays.dx[move_y]
+        rays.sy[move_y] += rays.step_y[move_y]
+        # arrival after the move: the destination is not accumulated
+        hit |= (rays.sx == rays.ex) & (rays.sy == rays.ey)
+        ended = hit if product else hit | _outside(rays.sx, rays.sy, width, height)
+        if ended.any() and not _retire(
+                out, rays, ended,
+                np.where(hit[ended], settle(rays.acc[ended]), 0.0)):
+            break
+        steps += 1
+        if max_range > 0 and steps > max_range:
+            break  # every live ray is out of range and keeps its 0
+        if product:
+            rays.acc *= 1.0 - flat[rays.sy * width + rays.sx]
+            dead = rays.acc < eps2
+        else:
+            rays.acc += flat[rays.sy * width + rays.sx]
+            dead = rays.acc >= np.float32(1.0)
+        if dead.any():
+            _retire(out, rays, dead, 0.0)
+    return out.astype(np.float32, copy=False)
 
 
 def _dda_state(src_x, src_y, end_x, end_y, origin_x, origin_y, resolution,
                max_range, height, width, check_end_cell: bool):
     """Vectorized Amanatides-Woo setup, float32-exact to kernel._dda_setup.
 
-    Returns (out, done, state...) where ``done`` rays already have their final
-    value in ``out`` (range-reject, zero-magnitude, out-of-grid starts/ends,
-    same-cell) and the rest carry live traversal state.
+    Returns (out, rays): rays that end before the first step (range-reject,
+    zero-magnitude, out-of-grid starts/ends, same-cell) already have their
+    final value in ``out``; ``rays`` is the live set of the rest.
     """
     f = np.float32
     src_x = np.asarray(src_x, f)
@@ -162,8 +170,7 @@ def _dda_state(src_x, src_y, end_x, end_y, origin_x, origin_y, resolution,
     if zero_mag.any():
         scx = np.floor(((src_x - ox) / res).astype(f)).astype(np.int64)
         scy = np.floor(((src_y - oy) / res).astype(f)).astype(np.int64)
-        inside = (scx >= 0) & (scx < width) & (scy >= 0) & (scy < height)
-        out[zero_mag & inside] = 1.0
+        out[zero_mag & ~_outside(scx, scy, width, height)] = 1.0
         done |= zero_mag
 
     with np.errstate(divide="ignore", invalid="ignore"):
@@ -173,14 +180,12 @@ def _dda_state(src_x, src_y, end_x, end_y, origin_x, origin_y, resolution,
     ry = ((src_y - oy) / res).astype(f)
     sx = np.floor(rx).astype(np.int64)
     sy = np.floor(ry).astype(np.int64)
-    oob = (sx < 0) | (sx >= width) | (sy < 0) | (sy >= height)
-    done |= (~done) & oob
+    done |= _outside(sx, sy, width, height)
 
     ex = np.floor(((end_x - ox) / res).astype(f)).astype(np.int64)
     ey = np.floor(((end_y - oy) / res).astype(f)).astype(np.int64)
     if check_end_cell:
-        eoob = (ex < 0) | (ex >= width) | (ey < 0) | (ey >= height)
-        done |= (~done) & eoob
+        done |= _outside(ex, ey, width, height)
     same = (~done) & (sx == ex) & (sy == ey)
     out[same] = 1.0
     done |= same
@@ -202,130 +207,116 @@ def _dda_state(src_x, src_y, end_x, end_y, origin_x, origin_y, resolution,
 
     step_x, t_max_x, t_delta_x = axis(ndx, rx)
     step_y, t_max_y, t_delta_y = axis(ndy, ry)
-    return (out, done, sx, sy, ex, ey, magnitude,
-            step_x, t_max_x, t_delta_x, step_y, t_max_y, t_delta_y)
+    return out, _live(np.flatnonzero(~done), sx=sx, sy=sy, ex=ex, ey=ey,
+                      mag=magnitude, step_x=step_x, t_max_x=t_max_x,
+                      t_delta_x=t_delta_x, step_y=step_y, t_max_y=t_max_y,
+                      t_delta_y=t_delta_y)
 
 
-def _dda_walk(data, state, mode: str):
-    """Shared lockstep DDA loop; mode 'product' (float32 transmittance) or
-    'sum' (float32 blocking sum, early-out at >= 1)."""
+def _dda_walk(data, out, rays, mode: str):
+    """Lockstep DDA loop over the live set of :func:`_dda_state`; mode
+    'product' (float32 transmittance) or 'sum' (float32 blocking sum,
+    early-out at >= 1)."""
     f = np.float32
     height, width = data.shape
     flat = np.asarray(data, f).ravel()
-    (out, done, sx, sy, ex, ey, mag,
-     stx, tmx, tdx, sty, tmy, tdy) = state
-    idx = np.flatnonzero(~done)
-    sx, sy = sx[idx].copy(), sy[idx].copy()
-    ex, ey = ex[idx], ey[idx]
-    mag = mag[idx]
-    stx, sty = stx[idx], sty[idx]
-    tmx, tmy = tmx[idx].copy(), tmy[idx].copy()
-    tdx, tdy = tdx[idx], tdy[idx]
-    acc = np.ones(len(idx), f) if mode == "product" else np.zeros(len(idx), f)
+    product = mode == "product"
+    rays.acc = np.full(len(rays.idx), 1.0 if product else 0.0, dtype=f)
+    settle = (lambda acc: acc) if product else _clear
+    while len(rays.idx):
+        over = np.minimum(rays.t_max_x, rays.t_max_y) > rays.mag
+        if over.any() and not _retire(out, rays, over, settle(rays.acc[over])):
+            break
+        move_x = rays.t_max_x < rays.t_max_y
+        rays.sx[move_x] += rays.step_x[move_x]
+        rays.t_max_x[move_x] = (rays.t_max_x[move_x]
+                                + rays.t_delta_x[move_x]).astype(f)
+        move_y = ~move_x
+        rays.sy[move_y] += rays.step_y[move_y]
+        rays.t_max_y[move_y] = (rays.t_max_y[move_y]
+                                + rays.t_delta_y[move_y]).astype(f)
 
-    def finish(mask, values):
-        nonlocal idx, sx, sy, ex, ey, mag, stx, sty, tmx, tmy, tdx, tdy, acc
-        out[idx[mask]] = values
-        keep = ~mask
-        idx = idx[keep]
-        sx, sy, ex, ey = sx[keep], sy[keep], ex[keep], ey[keep]
-        mag = mag[keep]
-        stx, sty = stx[keep], sty[keep]
-        tmx, tmy = tmx[keep], tmy[keep]
-        tdx, tdy = tdx[keep], tdy[keep]
-        acc = acc[keep]
-
-    while len(idx):
-        over = np.minimum(tmx, tmy) > mag
-        if over.any():
-            vals = acc[over] if mode == "product" else \
-                np.minimum(f(1.0), np.maximum(f(0.0), f(1.0) - acc[over]))
-            finish(over, vals)
-            if not len(idx):
-                break
-        move_x = tmx < tmy
-        sx[move_x] += stx[move_x]
-        tmx[move_x] = (tmx[move_x] + tdx[move_x]).astype(f)
-        my = ~move_x
-        sy[my] += sty[my]
-        tmy[my] = (tmy[my] + tdy[my]).astype(f)
-
-        arr = (sx == ex) & (sy == ey)
-        if arr.any():
-            vals = acc[arr] if mode == "product" else \
-                np.minimum(f(1.0), np.maximum(f(0.0), f(1.0) - acc[arr]))
-            finish(arr, vals)
-            if not len(idx):
-                break
-        oob = (sx < 0) | (sx >= width) | (sy < 0) | (sy >= height)
-        if oob.any():
-            finish(oob, f(0.0))
-            if not len(idx):
-                break
-        if mode == "product":
-            acc = (acc * (f(1.0) - flat[sy * width + sx])).astype(f)
-            dead = np.abs(acc) <= FLT_EPSILON
+        # arrival outranks the grid test (a product ray may end off-grid)
+        arrived = (rays.sx == rays.ex) & (rays.sy == rays.ey)
+        ended = arrived | _outside(rays.sx, rays.sy, width, height)
+        if ended.any() and not _retire(
+                out, rays, ended,
+                np.where(arrived[ended], settle(rays.acc[ended]), f(0.0))):
+            break
+        cell = flat[rays.sy * width + rays.sx]
+        if product:
+            rays.acc = (rays.acc * (f(1.0) - cell)).astype(f)
+            dead = np.abs(rays.acc) <= FLT_EPSILON
         else:
-            acc = (acc + flat[sy * width + sx]).astype(f)
-            dead = acc >= f(1.0)
+            rays.acc = (rays.acc + cell).astype(f)
+            dead = rays.acc >= f(1.0)
         if dead.any():
-            finish(dead, f(0.0))
+            _retire(out, rays, dead, f(0.0))
     return out
 
 
-def line_real_observation_batch(data, origin_x, origin_y, resolution,
-                                src_x, src_y, end_x, end_y, max_range=0.0) -> np.ndarray:
-    """Vectorized twin of kernel.line_real_observation (DDA transmittance)."""
+def dda_batch(data, origin_x, origin_y, resolution, sx, sy, ex, ey, mode,
+              max_range=0.0) -> np.ndarray:
+    """Vectorized twin of kernel.line_real_observation (``mode="product"``)
+    and kernel.line_real_observation_sum (``mode="sum"``, which also zeroes
+    out-of-grid end cells); dda_oracle_sql is their SQL twin.  ``max_range``
+    (a scalar or one per ray) caps the float32 Euclidean length, 0 = none."""
+    if mode not in _MODES:
+        raise ValueError(f"mode must be one of {_MODES}, not {mode!r}")
     h, w = np.asarray(data).shape
-    state = _dda_state(src_x, src_y, end_x, end_y, origin_x, origin_y,
-                       resolution, max_range, h, w, check_end_cell=False)
-    return _dda_walk(data, state, "product")
+    out, rays = _dda_state(sx, sy, ex, ey, origin_x, origin_y, resolution,
+                           max_range, h, w, check_end_cell=mode == "sum")
+    return _dda_walk(data, out, rays, mode)
 
 
-def line_real_observation_sum_batch(data, origin_x, origin_y, resolution,
-                                    src_x, src_y, end_x, end_y, max_range=0.0) -> np.ndarray:
-    """Vectorized twin of kernel.line_real_observation_sum (DDA sum-blocking)."""
-    h, w = np.asarray(data).shape
-    state = _dda_state(src_x, src_y, end_x, end_y, origin_x, origin_y,
-                       resolution, max_range, h, w, check_end_cell=True)
-    return _dda_walk(data, state, "sum")
+def _epsilon_round(v):
+    """Vectorized kernel.epsilon_round: round within 2e-6, else truncate."""
+    rounded = np.rint(v)
+    return np.where(np.abs(v - rounded) < 2e-6, rounded,
+                    np.trunc(v)).astype(np.int64)
 
 
-def sensor_cell_observation_real_batch(data, x, y, rng, drn, fov, ex, ey,
-                                       origin, resolution) -> np.ndarray:
-    """Vectorized per-(sensor, cell) clear probability, real regime — batch
-    twin of kernel.sensor_cell_observation with origin/resolution set."""
-    f = np.float32
-    height, width = np.asarray(data).shape
-    x = np.asarray(x, np.float64)
-    y = np.asarray(y, np.float64)
+def sensor_cell_observation_batch(data, sx, sy, rng, drn, fov, ex, ey,
+                                  origin=None, resolution=None) -> np.ndarray:
+    """Vectorized per-(sensor, cell) clear probability — the batch twin of
+    kernel.sensor_cell_observation, with its regime switch: ``origin`` set
+    walks the DDA from the world position to the cell centre, ``origin``
+    None epsilon-rounds the sensor to its cell and walks Bresenham.  Both
+    share the zero-range own-cell rule and the exact float32 FOV gate."""
+    sx = np.asarray(sx, np.float64)
+    sy = np.asarray(sy, np.float64)
     rng = np.asarray(rng, np.float64)
     ex = np.asarray(ex, np.int64)
     ey = np.asarray(ey, np.int64)
-    ox, oy = float(origin[0]), float(origin[1])
-    res = float(resolution)
-    out = np.zeros(len(x), dtype=f)
-
-    # target = cell center, float64 like the scalar twin (consumers cast f32)
-    tx = ox + (ex + 0.5) * res
-    ty = oy + (ey + 0.5) * res
-    scx = np.floor((x - ox) / res).astype(np.int64)
-    scy = np.floor((y - oy) / res).astype(np.int64)
+    out = np.zeros(len(sx), dtype=np.float32)
+    # (gx, gy) is where the FOV gate sees the sensor: its world position
+    # (real) or its rounded cell (grid), as in the scalar kernel
+    if origin is not None:
+        ox, oy, res = float(origin[0]), float(origin[1]), float(resolution)
+        # target = cell center, float64 like the scalar twin (consumers cast f32)
+        tx = ox + (ex + 0.5) * res
+        ty = oy + (ey + 0.5) * res
+        scx = np.floor((sx - ox) / res).astype(np.int64)
+        scy = np.floor((sy - oy) / res).astype(np.int64)
+        gx, gy = sx, sy
+    else:
+        scx, scy = _epsilon_round(sx), _epsilon_round(sy)
+        tx, ty, gx, gy = ex, ey, scx, scy
 
     zero_range = rng <= 0.0
-    own = (ex == scx) & (ey == scy)
-    out[zero_range & own] = 1.0
-
-    live = ~zero_range
-    gate = np.zeros(len(x), dtype=bool)
-    if live.any():
-        gate[live] = in_sensor_fov_batch(
-            x[live], y[live], tx[live], ty[live], rng[live],
-            np.asarray(drn)[live], np.asarray(fov)[live])
-    walk = live & gate
-    if walk.any():
-        out[walk] = line_real_observation_sum_batch(
-            data, ox, oy, res, x[walk], y[walk], tx[walk], ty[walk], rng[walk])
+    out[zero_range & (ex == scx) & (ey == scy)] = 1.0
+    live = np.flatnonzero(~zero_range)
+    walk = live[in_sensor_fov_batch(gx[live], gy[live], tx[live], ty[live],
+                                    rng[live], np.asarray(drn)[live],
+                                    np.asarray(fov)[live])]
+    if not len(walk):
+        return out
+    if origin is None:
+        out[walk] = bresenham_batch(data, scx[walk], scy[walk], ex[walk],
+                                    ey[walk], "sum")
+    else:
+        out[walk] = dda_batch(data, ox, oy, res, sx[walk], sy[walk],
+                              tx[walk], ty[walk], "sum", rng[walk])
     return out
 
 
@@ -356,122 +347,6 @@ def in_sensor_fov_batch(sx, sy, tx, ty, rng, drn, fov) -> np.ndarray:
     delta = np.abs(wrapped).astype(f)
     fov_ok = (~has_fov) | at_origin | (delta <= (0.5 * fov).astype(f))
     return ok & fov_ok
-
-
-def sensor_cell_observation_grid_batch(data, scx, scy, ex, ey, rng, drn, fov) -> np.ndarray:
-    """Vectorized per-(sensor, cell) clear probability, grid regime —
-    the batch twin of kernel.sensor_cell_observation with origin=None
-    (zero-range own-cell rule, exact float32 FOV gate, sum-blocking walk)."""
-    scx = np.asarray(scx, np.int64)
-    scy = np.asarray(scy, np.int64)
-    ex = np.asarray(ex, np.int64)
-    ey = np.asarray(ey, np.int64)
-    rng = np.asarray(rng, np.float64)
-    out = np.zeros(len(scx), dtype=np.float32)
-
-    zero_range = rng <= 0.0
-    own = (ex == scx) & (ey == scy)
-    out[zero_range & own] = 1.0
-
-    live = ~zero_range
-    gate = np.zeros(len(scx), dtype=bool)
-    if live.any():
-        gate[live] = in_sensor_fov_batch(
-            scx[live].astype(np.float32), scy[live].astype(np.float32),
-            ex[live].astype(np.float32), ey[live].astype(np.float32),
-            rng[live], np.asarray(drn)[live], np.asarray(fov)[live])
-    walk = live & gate
-    if walk.any():
-        out[walk] = line_observation_sum_batch(
-            data, scx[walk], scy[walk], ex[walk], ey[walk])
-    return out
-
-
-def line_observation_batch(data: np.ndarray, sx, sy, ex, ey,
-                           max_range: int = 0) -> np.ndarray:
-    """Vectorized twin of kernel.line_observation (transmittance product,
-    double accumulator, step-count max_range, no bounds checks)."""
-    data = np.asarray(data, dtype=np.float32)
-    height, width = data.shape
-    flat = data.ravel().astype(np.float64)
-    sx = np.asarray(sx, dtype=np.int64).copy()
-    sy = np.asarray(sy, dtype=np.int64).copy()
-    ex = np.asarray(ex, dtype=np.int64)
-    ey = np.asarray(ey, dtype=np.int64)
-    n = len(sx)
-    out = np.zeros(n, dtype=np.float64)
-    same = (sx == ex) & (sy == ey)
-    out[same] = 1.0
-
-    idx = np.flatnonzero(~same)
-    asx, asy = sx[idx], sy[idx]
-    aex, aey = ex[idx], ey[idx]
-    adx = np.abs(asx - aex)
-    ady = -np.abs(asy - aey)
-    astx = np.where(asx < aex, 1, -1)
-    asty = np.where(asy < aey, 1, -1)
-    aerr = adx + ady
-    aobs = np.ones(len(idx), dtype=np.float64)
-    steps = np.zeros(len(idx), dtype=np.int64)
-    eps2 = float(FLT_EPSILON) * 2.0
-
-    def finish(mask, values):
-        nonlocal idx, asx, asy, aex, aey, adx, ady, astx, asty, aerr, aobs, steps
-        out[idx[mask]] = values
-        keep = ~mask
-        idx = idx[keep]
-        asx, asy = asx[keep], asy[keep]
-        aex, aey = aex[keep], aey[keep]
-        adx, ady = adx[keep], ady[keep]
-        astx, asty = astx[keep], asty[keep]
-        aerr = aerr[keep]
-        aobs = aobs[keep]
-        steps = steps[keep]
-
-    while len(idx):
-        arr = (asx == aex) & (asy == aey)
-        if arr.any():
-            finish(arr, aobs[arr])
-            if not len(idx):
-                break
-        e2 = 2 * aerr
-        c1 = e2 >= ady
-        b1 = c1 & (asx == aex)
-        if b1.any():
-            finish(b1, aobs[b1])
-            if not len(idx):
-                break
-            e2 = e2[~b1]
-            c1 = c1[~b1]
-        aerr[c1] += ady[c1]
-        asx[c1] += astx[c1]
-        c2 = e2 <= adx
-        b2 = c2 & (asy == aey)
-        if b2.any():
-            finish(b2, aobs[b2])
-            if not len(idx):
-                break
-            c2 = c2[~b2]
-        aerr[c2] += adx[c2]
-        asy[c2] += asty[c2]
-
-        arr2 = (asx == aex) & (asy == aey)
-        if arr2.any():
-            finish(arr2, aobs[arr2])
-            if not len(idx):
-                break
-        steps += 1
-        if max_range > 0:
-            over = steps > max_range
-            if over.any():
-                finish(over, 0.0)
-                if not len(idx):
-                    break
-        aobs *= 1.0 - flat[asy * width + asx]
-        dead = aobs < eps2
-        if dead.any():
-            finish(dead, 0.0)
-    return out.astype(np.float32)
 
 
 def line_range_batch(csr_vertices, csr_offsets, sx, sy, angles,

@@ -44,7 +44,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Window, functions as F, types as T
 
 from polycheck_spark.data import synth
 from polycheck_spark.io.tables import CheckpointedWriter

@@ -107,45 +107,17 @@ def np_guarded_cosine(a, b):
 _TOPK_BAND = 1e-9
 
 
-def _fold_norms_np(mat):
-    """Per-row sequential sum of squares of an (N, dim) float64 matrix —
-    the dim-ordered twin of :func:`_norm2`."""
+def _fold_dot(a, b):
+    """Sequential dot over the last axis of two float64 arrays that
+    broadcast: acc = acc + a[..., i] * b[..., i] in dimension order from
+    zeros — the dim-ordered twin of :func:`_dot`, of :func:`_norm2` (a with
+    itself) and of :func:`bucket_key_col`'s per-plane aggregate.  Callers
+    broadcast (``A[:, None, :]`` against ``Q[None, :, :]`` gives all pairs,
+    O(B*Q) memory — bounded via Arrow batch size)."""
     import numpy as np
-    acc = np.zeros(mat.shape[0])
-    for i in range(mat.shape[1]):
-        v = mat[:, i]
-        acc = acc + v * v
-    return acc
-
-
-def _fold_dot_rows_np(a, b):
-    """Row-paired sequential dot of two (N, dim) float64 matrices — the
-    dim-ordered twin of :func:`_dot` on N (a_row, b_row) pairs."""
-    import numpy as np
-    acc = np.zeros(a.shape[0])
-    for i in range(a.shape[1]):
-        acc = acc + a[:, i] * b[:, i]
-    return acc
-
-
-def _fold_dot_vec_np(a, v):
-    """Sequential dot of every row of an (N, dim) matrix against ONE dim
-    vector — the dim-ordered twin of :func:`_dot` with a shared right side."""
-    import numpy as np
-    acc = np.zeros(a.shape[0])
-    for i in range(a.shape[1]):
-        acc = acc + a[:, i] * v[i]
-    return acc
-
-
-def _fold_dot_matrix_np(a, q):
-    """All-pairs sequential dot: (B, dim) x (Q, dim) -> (B, Q), each cell
-    accumulated in dimension order (the brute-force twin of :func:`_dot`).
-    O(B*Q) memory — callers bound B via Arrow batch size."""
-    import numpy as np
-    acc = np.zeros((a.shape[0], q.shape[0]))
-    for i in range(a.shape[1]):
-        acc = acc + a[:, i, None] * q[None, :, i]
+    acc = np.zeros(np.broadcast_shapes(a.shape, b.shape)[:-1])
+    for i in range(a.shape[-1]):
+        acc = acc + a[..., i] * b[..., i]
     return acc
 
 
@@ -157,23 +129,12 @@ def _guarded_cos_np(dot, na2, nb2):
     return np.divide(dot, np.sqrt(n2), out=np.zeros_like(dot), where=n2 > 0)
 
 
-def _fold_proj_np(mat, planes):
-    """(N, P) hyperplane projections of an (N, dim) float64 matrix, each
-    accumulated in dimension order — the twin of :func:`bucket_key_col`'s
-    per-plane aggregate(zip_with(vec, w, x*w))."""
-    import numpy as np
-    acc = np.zeros((mat.shape[0], planes.shape[0]))
-    for i in range(mat.shape[1]):
-        acc = acc + mat[:, i, None] * planes[None, :, i]
-    return acc
-
-
 def _fold_buckets_np(mat, planes, powers):
     """Sign-bit LSH bucket ids from dim-ordered fold projections — bit-exact
     twin of :func:`bucket_key_col` (not ulp-approximate like a BLAS matmul:
     the fold order is preserved, so a projection that the Column path rounds
     to exactly 0.0 rounds to 0.0 here too)."""
-    proj = _fold_proj_np(mat, planes)
+    proj = _fold_dot(mat[:, None, :], planes[None, :, :])
     return ((proj > 0) @ powers).astype("int64")
 
 
@@ -212,7 +173,7 @@ def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
     import pandas as pd
     from pyspark.sql import types as T
 
-    qn2 = _fold_norms_np(qmat)
+    qn2 = _fold_dot(qmat, qmat)
     schema = T.StructType([
         T.StructField("query_id", T.LongType()),
         T.StructField("target_id", T.LongType()),
@@ -225,7 +186,7 @@ def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
                 continue
             ids = pdf["__id"].to_numpy(dtype=np.int64)
             tmat = _vec_matrix(pdf["__vec"])
-            tn2 = _fold_norms_np(tmat)
+            tn2 = _fold_dot(tmat, tmat)
             if pair_mask is None:
                 # brute force: BLAS GEMM picks each query's per-batch
                 # candidates with a guard band, then the dim-ordered fold
@@ -253,7 +214,7 @@ def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
                     if not len(sel):
                         continue
                     cos = _guarded_cos_np(
-                        _fold_dot_vec_np(tmat[sel], qmat[j]),
+                        _fold_dot(tmat[sel], qmat[j]),
                         tn2[sel], qn2[j])
                     order = np.lexsort((ids[sel], -cos))[:kk]
                     out_q.append(np.full(len(order), qids[j], dtype=np.int64))
@@ -270,7 +231,7 @@ def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
             bi, qi = np.nonzero(mask)
             if not len(bi):
                 continue
-            dot = _fold_dot_rows_np(tmat[bi], qmat[qi])
+            dot = _fold_dot(tmat[bi], qmat[qi])
             cos = _guarded_cos_np(dot, tn2[bi], qn2[qi])
             order = np.lexsort((ids[bi], -cos, qi))
             qs = qi[order]
@@ -425,17 +386,17 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     crows.sort(key=lambda r: r[0])              # cid ascending: first max
     cids = np.array([r[0] for r in crows], dtype=np.int64)
     cmat = np.array([r[1] for r in crows], dtype=np.float64)
-    cn2 = _fold_norms_np(cmat)
-    qn2 = _fold_norms_np(qmat)
-    qcos = _guarded_cos_np(_fold_dot_matrix_np(qmat, cmat),
+    cn2 = _fold_dot(cmat, cmat)
+    qn2 = _fold_dot(qmat, qmat)
+    qcos = _guarded_cos_np(_fold_dot(qmat[:, None, :], cmat[None, :, :]),
                            qn2[:, None], cn2[None, :])
     keepn = min(n_probe, len(cids))
     qprobe = np.stack([cids[np.lexsort((cids, -qcos[j]))[:keepn]]
                        for j in range(len(qids))])       # Q x n_probe
 
     def pair_mask(ids, tmat):
-        tn2 = _fold_norms_np(tmat)
-        tcos = _guarded_cos_np(_fold_dot_matrix_np(tmat, cmat),
+        tn2 = _fold_dot(tmat, tmat)
+        tcos = _guarded_cos_np(_fold_dot(tmat[:, None, :], cmat[None, :, :]),
                                tn2[:, None], cn2[None, :])
         assign = cids[np.argmax(tcos, axis=1)]  # first max -> lowest cid
         return (assign[:, None, None] == qprobe[None, :, :]).any(axis=2)
@@ -680,8 +641,8 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
             b_ids = pr_pdf["pvid"].to_numpy(dtype=np.int64)
             amat = _vec_matrix(ex_pdf["v"])
             bmat = _vec_matrix(pr_pdf["pv"])
-            na2 = _fold_norms_np(amat)
-            nb2 = _fold_norms_np(bmat)
+            na2 = _fold_dot(amat, amat)
+            nb2 = _fold_dot(bmat, bmat)
             # GEMM margins decide every pair clear of the threshold by
             # the guard band; the (empirically empty) boundary band is
             # re-decided with the exact dim-ordered fold — the accepted
@@ -703,7 +664,7 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
                 gi, gj = np.nonzero(gray)
                 if len(gi):
                     cos = _guarded_cos_np(
-                        _fold_dot_rows_np(amat[lo:hi][gi], bmat[gj]),
+                        _fold_dot(amat[lo:hi][gi], bmat[gj]),
                         na2[lo:hi][gi], nb2[gj])
                     accept[gi, gj] = cos * den >= num
                 ai, bi = np.nonzero(accept)
@@ -858,7 +819,7 @@ def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
         return np.floor(mat * scale).astype(np.int64)
 
     qq = quant_np(qmat)                                  # Q x D int64
-    qn2 = _fold_norms_np(qmat)
+    qn2 = _fold_dot(qmat, qmat)
 
     schema = T.StructType([
         T.StructField("query_id", T.LongType()),
@@ -880,7 +841,7 @@ def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
             # matmul loop
             idot = np.rint(tq.astype(np.float64)
                            @ qq.T.astype(np.float64)).astype(np.int64)
-            tn2 = _fold_norms_np(tmat)
+            tn2 = _fold_dot(tmat, tmat)
             mm = min(m, idot.shape[0])
             sel_b, sel_q = [], []
             for j in range(idot.shape[1]):
@@ -892,7 +853,7 @@ def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
             qi = np.concatenate(sel_q) if sel_q else np.array([], dtype=np.int64)
             if not len(bi):
                 continue
-            cos = _guarded_cos_np(_fold_dot_rows_np(tmat[bi], qmat[qi]),
+            cos = _guarded_cos_np(_fold_dot(tmat[bi], qmat[qi]),
                                   tn2[bi], qn2[qi])
             yield pd.DataFrame({
                 "query_id": qids[qi],

@@ -8,6 +8,11 @@ side (ends / starts x ends / sensors x cells) is a DataFrame.  Cheap gates
 prunes rows that never need a ray walk — the relational analog of the
 reference's early-exit tests (polycheck.py:260-262, 735-745).
 
+Each operator picks its regime as its local twin does: ``origin`` set means
+world coordinates walked by the DDA (O4/O6), else grid cells walked by
+Bresenham (O2/O3/O5).  Inside the Arrow UDF one lockstep batch kernel per
+traversal (geo/kernel_batch.py) walks the whole batch.
+
 Results match the float32 kernels exactly; golden tests compare against the
 local kernel API below and the reference's closed-form fixtures.
 """
@@ -123,8 +128,8 @@ def visibility_df(spark, data, start, ends_df: DataFrame, max_range=None) -> Dat
         grid = bc.value
         exs = ex.to_numpy(np.int64)
         eys = ey.to_numpy(np.int64)
-        vis = KB.line_observation_batch(
-            grid, np.full(len(exs), sx), np.full(len(exs), sy), exs, eys, mr)
+        vis = KB.bresenham_batch(grid, np.full(len(exs), sx),
+                                 np.full(len(exs), sy), exs, eys, "product", mr)
         return pd.Series(vis)
 
     # filter-split (not when()): an Arrow UDF evaluates its whole batch, so
@@ -150,10 +155,11 @@ def scatter_to_raster(spark, vis_df: DataFrame, height: int, width: int) -> Data
 
 
 def visibility_from_region_df(spark, data, starts_df: DataFrame, ends_df: DataFrame,
-                              max_range=None, real: bool = False,
-                              origin=None, resolution=None) -> DataFrame:
+                              max_range=None, origin=None, resolution=None) -> DataFrame:
     """O3/O4: all-pairs starts x ends -> (sx, sy, ex, ey, vis).
 
+    With ``origin`` set the pairs are world coordinates walked by the DDA
+    (O4), else grid cells walked by Bresenham (O3), as in the local twins.
     The max_range gate runs as a Column filter BEFORE the UDF (rows beyond
     range are assigned vis=0 without a ray walk).
     """
@@ -161,23 +167,17 @@ def visibility_from_region_df(spark, data, starts_df: DataFrame, ends_df: DataFr
     h, w = np.asarray(data).shape
     mr = 0.0 if max_range is None else float(max_range)
     pairs = starts_df.crossJoin(ends_df)
+    real = origin is not None
+    frame = (float(origin[0]), float(origin[1]), float(resolution)) if real else None
 
-    if real:
-        ox, oy, res = float(origin[0]), float(origin[1]), float(resolution)
-
-        @F.pandas_udf(T.FloatType())
-        def walk(sx: pd.Series, sy: pd.Series, ex: pd.Series, ey: pd.Series) -> pd.Series:
-            grid = bc.value
-            return pd.Series(KB.line_real_observation_batch(
-                grid, ox, oy, res, sx.to_numpy(np.float64), sy.to_numpy(np.float64),
-                ex.to_numpy(np.float64), ey.to_numpy(np.float64), mr))
-    else:
-        @F.pandas_udf(T.FloatType())
-        def walk(sx: pd.Series, sy: pd.Series, ex: pd.Series, ey: pd.Series) -> pd.Series:
-            grid = bc.value
-            return pd.Series(KB.line_observation_batch(
-                grid, sx.to_numpy(np.int64), sy.to_numpy(np.int64),
-                ex.to_numpy(np.int64), ey.to_numpy(np.int64), int(mr)))
+    @F.pandas_udf(T.FloatType())
+    def walk(sx: pd.Series, sy: pd.Series, ex: pd.Series, ey: pd.Series) -> pd.Series:
+        grid = bc.value
+        if real:
+            rays = (c.to_numpy(np.float64) for c in (sx, sy, ex, ey))
+            return pd.Series(KB.dda_batch(grid, *frame, *rays, "product", mr))
+        rays = (c.to_numpy(np.int64) for c in (sx, sy, ex, ey))
+        return pd.Series(KB.bresenham_batch(grid, *rays, "product", int(mr)))
 
     zero_gate = None
     if mr > 0:
@@ -215,10 +215,13 @@ def visibility_from_region_df(spark, data, starts_df: DataFrame, ends_df: DataFr
 
 
 def sensor_visibility_df(spark, data, sensors_df: DataFrame, combine: str = "union",
-                         real: bool = False, origin=None, resolution=None) -> tuple[DataFrame, DataFrame]:
+                         origin=None, resolution=None) -> tuple[DataFrame, DataFrame]:
     """O5/O6 + O8/O9: (per-sensor df, combined df).
 
-    sensors_df: (sensor_id, x, y, range, direction, fov).
+    sensors_df: (sensor_id, x, y, range, direction, fov).  With ``origin``
+    set the sensors sit in world coordinates and walk the DDA to each cell
+    centre (O6), else they are epsilon-rounded to a cell (O5), as in
+    :func:`sensor_visibility_local`.
     The FOV/range/coverage gate is pure Column trig (O9 — no UDF); only
     covered pairs reach the ray-walk UDF. Combine (O8) is a log-space
     aggregation over sensors per cell.
@@ -239,6 +242,7 @@ def sensor_visibility_df(spark, data, sensors_df: DataFrame, combine: str = "uni
         (F.col("id") / w).cast("int").alias("ey"),
         F.pmod(F.col("id"), F.lit(w)).cast("int").alias("ex"))
     pairs = cells.crossJoin(F.broadcast(sensors_df))
+    real = origin is not None
 
     if real:
         ox, oy, res = float(origin[0]), float(origin[1]), float(resolution)
@@ -278,32 +282,17 @@ def sensor_visibility_df(spark, data, sensors_df: DataFrame, combine: str = "uni
     covered = F.when(zero_range, own_cell).otherwise(in_range & in_fov)
     pairs = pairs.withColumn("covered", covered)
 
-    origin_t = (float(origin[0]), float(origin[1])) if real else None
-    res_t = float(resolution) if real else None
-
-    if real:
-        @F.pandas_udf(T.FloatType())
-        def pair_obs(x: pd.Series, y: pd.Series, rng: pd.Series, drn: pd.Series,
-                     fov: pd.Series, exs: pd.Series, eys: pd.Series) -> pd.Series:
-            grid = bc.value
-            return pd.Series(KB.sensor_cell_observation_real_batch(
-                grid, x.to_numpy(np.float64), y.to_numpy(np.float64),
-                rng.to_numpy(np.float64), drn.to_numpy(np.float64),
-                fov.to_numpy(np.float64), exs.to_numpy(np.int64),
-                eys.to_numpy(np.int64), origin_t, res_t))
-        udf_inputs = [F.col("x"), F.col("y")]
-    else:
-        # grid regime: lockstep-vectorized gate + sum walk over the whole batch
-        @F.pandas_udf(T.FloatType())
-        def pair_obs(x: pd.Series, y: pd.Series, rng: pd.Series, drn: pd.Series,
-                     fov: pd.Series, exs: pd.Series, eys: pd.Series) -> pd.Series:
-            grid = bc.value
-            return pd.Series(KB.sensor_cell_observation_grid_batch(
-                grid, x.to_numpy(np.int64), y.to_numpy(np.int64),
-                exs.to_numpy(np.int64), eys.to_numpy(np.int64),
-                rng.to_numpy(np.float64), drn.to_numpy(np.float64),
-                fov.to_numpy(np.float64)))
-        udf_inputs = [F.col("scx"), F.col("scy")]
+    # lockstep-vectorized gate + sum walk over the whole batch; the kernel
+    # does its own regime's sensor-cell rounding, so both regimes pass x, y
+    @F.pandas_udf(T.FloatType())
+    def pair_obs(x: pd.Series, y: pd.Series, rng: pd.Series, drn: pd.Series,
+                 fov: pd.Series, exs: pd.Series, eys: pd.Series) -> pd.Series:
+        grid = bc.value
+        return pd.Series(KB.sensor_cell_observation_batch(
+            grid, x.to_numpy(np.float64), y.to_numpy(np.float64),
+            rng.to_numpy(np.float64), drn.to_numpy(np.float64),
+            fov.to_numpy(np.float64), exs.to_numpy(np.int64),
+            eys.to_numpy(np.int64), origin, resolution))
 
     # The exact float32 gate lives INSIDE the kernel (polycheck.py:735-748);
     # the Column gate below is a strictly-conservative prefilter (slack covers
@@ -314,7 +303,7 @@ def sensor_visibility_df(spark, data, sensors_df: DataFrame, combine: str = "uni
     walk_part = pairs.filter(gate).withColumn(
         "p",
         F.when(zero_range, F.when(own_cell, F.lit(1.0)).otherwise(F.lit(0.0)))
-         .otherwise(pair_obs(*udf_inputs, F.col("range"),
+         .otherwise(pair_obs(F.col("x"), F.col("y"), F.col("range"),
                              F.col("direction"), F.col("fov"),
                              F.col("ex"), F.col("ey"))).cast("float"))
     pruned_part = pairs.filter(~gate).withColumn("p", F.lit(0.0).cast("float"))

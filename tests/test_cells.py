@@ -1,7 +1,6 @@
 """Property tests for the Z-order cell index."""
 
 import numpy as np
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from polycheck_spark.geo import cells as C

@@ -1,8 +1,6 @@
 """Directional containment + corpus-boilerplate stats: planted-excerpt
 semantics, direction asymmetry, cap conservativeness, zero-shingle docs."""
 
-from pyspark.sql import functions as F
-
 from polycheck_spark.operators.dedup import (
     NGRAM, containment_pairs, common_shingle_stats)
 

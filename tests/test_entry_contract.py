@@ -7,7 +7,6 @@ import glob
 import os
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -163,3 +162,26 @@ def test_every_program_def_has_a_program_caller():
         f"serves): {sorted(uncalled - set(_CENSUS_ALLOW))}")
     assert uncalled == set(_CENSUS_ALLOW), (
         f"allowlisted but called or gone: {sorted(set(_CENSUS_ALLOW) - uncalled)}")
+
+
+def test_no_unused_module_imports():
+    """Unused-import census: every module-level import binding in a program
+    file or a test is referenced as a Name (an Attribute's base is one) in
+    its own file.  ``from __future__`` imports are compiler directives and
+    are skipped.  ``ast`` only: the census needs no linter."""
+    paths = _program_files() + sorted(
+        glob.glob(os.path.join(_ROOT, "tests/**/*.py"), recursive=True))
+    unused = []
+    for path in paths:
+        tree = ast.parse(open(path).read(), path)
+        names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    bound = alias.asname or alias.name.split(".")[0]
+                    if bound not in names:
+                        unused.append(f"{os.path.relpath(path, _ROOT)}:"
+                                      f"{node.lineno} {bound}")
+    assert not unused, f"unused module-level imports: {unused}"

@@ -3,8 +3,6 @@ drop, and bit-equality against an independent pure-Python integer oracle."""
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from polycheck_spark.operators import graph as G
 
 

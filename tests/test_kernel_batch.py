@@ -1,6 +1,9 @@
 """Lockstep batch walks must equal the scalar reference kernels exactly."""
 
+import math
+
 import numpy as np
+import pytest
 
 from polycheck_spark.geo import kernel as K
 from polycheck_spark.geo import kernel_batch as KB
@@ -22,10 +25,17 @@ def _random_cases(seed, n, h, w, occ_density=0.15):
 def test_sum_batch_equals_scalar():
     for seed in range(5):
         grid, sx, sy, ex, ey = _random_cases(seed, 400, 15 + seed, 20)
-        got = KB.line_observation_sum_batch(grid, sx, sy, ex, ey)
+        got = KB.bresenham_batch(grid, sx, sy, ex, ey, "sum")
         exp = np.array([K.line_observation_sum(grid, a, b, c, d)
                         for a, b, c, d in zip(sx, sy, ex, ey)], dtype=np.float32)
         assert np.array_equal(got, exp), seed
+
+
+def test_sum_batch_rejects_max_range():
+    """The scalar sum walk has no range rule, so the batch one takes none."""
+    grid, sx, sy, ex, ey = _random_cases(0, 10, 8, 8)
+    with pytest.raises(ValueError):
+        KB.bresenham_batch(grid, sx, sy, ex, ey, "sum", max_range=1)
 
 
 def test_product_batch_equals_scalar():
@@ -41,35 +51,46 @@ def test_product_batch_equals_scalar():
         sy = rng.randint(0, h, n)
         ex = rng.randint(0, w, n)
         ey = rng.randint(0, h, n)
-        for mr in (0, 7):
-            got = KB.line_observation_batch(grid, sx, sy, ex, ey, mr)
+        for mr in (0, 1, 3, 7, 15):
+            got = KB.bresenham_batch(grid, sx, sy, ex, ey, "product", mr)
             exp = np.array([K.line_observation(grid, a, b, c, d, mr)
                             for a, b, c, d in zip(sx, sy, ex, ey)], dtype=np.float32)
             assert np.array_equal(got, exp), (seed, mr)
 
 
-def test_sensor_grid_batch_equals_scalar():
-    import math
+@pytest.mark.parametrize("regime", ["grid", "real"])
+def test_sensor_batch_equals_scalar(regime):
+    """Both regimes of the one sensor-cell kernel equal the scalar
+    kernel.sensor_cell_observation.  Grid sensors sit on, within 1e-6 of,
+    and between cell corners, so the epsilon rounding is exercised."""
     rng = np.random.RandomState(3)
     h, w = 12, 14
     grid = np.zeros((h, w), dtype=np.float32)
     m = rng.rand(h, w) < 0.2
     grid[m] = rng.rand(m.sum()).astype(np.float32)
     n = 600
-    scx = rng.randint(0, w, n)
-    scy = rng.randint(0, h, n)
+    if regime == "grid":
+        origin, res = None, None
+        x = rng.randint(0, w, n) + rng.choice([0.0, 1e-6, 0.5, 1 - 1e-6], n)
+        y = rng.randint(0, h, n) + rng.choice([0.0, 1e-6, 0.5, 1 - 1e-6], n)
+    else:
+        origin, res = (-0.5, 0.25), 0.8
+        x = rng.uniform(origin[0], origin[0] + w * res, n)
+        y = rng.uniform(origin[1], origin[1] + h * res, n)
     ex = rng.randint(0, w, n)
     ey = rng.randint(0, h, n)
     ranges = rng.choice([0.0, 1.0, 3.5, 5.0, 20.0], n)
     drn = rng.uniform(-math.pi, math.pi, n)
     fov = rng.choice([math.pi / 4, math.pi / 2, math.pi, 2 * math.pi], n)
-    got = KB.sensor_cell_observation_grid_batch(grid, scx, scy, ex, ey, ranges, drn, fov)
+    got = KB.sensor_cell_observation_batch(grid, x, y, ranges, drn, fov, ex, ey,
+                                           origin, res)
     exp = np.array([
-        K.sensor_cell_observation(grid, (float(a), float(b), float(r), float(d), float(f)),
-                                  int(cx), int(cy))
-        for a, b, r, d, f, cx, cy in zip(scx, scy, ranges, drn, fov, ex, ey)],
+        K.sensor_cell_observation(grid, (a, b, r, d, f), int(cx), int(cy),
+                                  origin=origin, resolution=res)
+        for a, b, r, d, f, cx, cy in zip(x, y, ranges, drn, fov, ex, ey)],
         dtype=np.float32)
     assert np.array_equal(got, exp)
+    assert 0 < np.count_nonzero(got) < n
 
 
 def test_real_dda_batch_equals_scalar():
@@ -86,41 +107,12 @@ def test_real_dda_batch_equals_scalar():
     ey = rng.uniform(-2, h + 2, n)
     ox, oy, res = -0.5, 0.25, 0.8
     for mr in (0.0, 6.0):
-        got_p = KB.line_real_observation_batch(grid, ox, oy, res, sx, sy, ex, ey, mr)
-        exp_p = np.array([K.line_real_observation(grid, h, w, ox, oy, res,
-                                                  a, b, c, d, mr)
-                          for a, b, c, d in zip(sx, sy, ex, ey)], dtype=np.float32)
-        assert np.array_equal(got_p, exp_p), ("product", mr)
-        got_s = KB.line_real_observation_sum_batch(grid, ox, oy, res, sx, sy, ex, ey, mr)
-        exp_s = np.array([K.line_real_observation_sum(grid, h, w, ox, oy, res,
-                                                      a, b, c, d, mr)
-                          for a, b, c, d in zip(sx, sy, ex, ey)], dtype=np.float32)
-        assert np.array_equal(got_s, exp_s), ("sum", mr)
-
-
-def test_sensor_real_batch_equals_scalar():
-    import math
-    rng = np.random.RandomState(13)
-    h, w = 10, 12
-    grid = np.zeros((h, w), dtype=np.float32)
-    m = rng.rand(h, w) < 0.25
-    grid[m] = rng.rand(m.sum()).astype(np.float32)
-    n = 500
-    x = rng.uniform(0, w, n)
-    y = rng.uniform(0, h, n)
-    ranges = rng.choice([0.0, 2.0, 5.5, 30.0], n)
-    drn = rng.uniform(-math.pi, math.pi, n)
-    fov = rng.choice([math.pi / 3, math.pi, 2 * math.pi], n)
-    ex = rng.randint(0, w, n)
-    ey = rng.randint(0, h, n)
-    got = KB.sensor_cell_observation_real_batch(grid, x, y, ranges, drn, fov,
-                                                ex, ey, (0.0, 0.0), 1.0)
-    exp = np.array([
-        K.sensor_cell_observation(grid, (a, b, r, d, f2), int(cx), int(cy),
-                                  origin=(0.0, 0.0), resolution=1.0)
-        for a, b, r, d, f2, cx, cy in zip(x, y, ranges, drn, fov, ex, ey)],
-        dtype=np.float32)
-    assert np.array_equal(got, exp)
+        for mode, scalar in (("product", K.line_real_observation),
+                             ("sum", K.line_real_observation_sum)):
+            got = KB.dda_batch(grid, ox, oy, res, sx, sy, ex, ey, mode, mr)
+            exp = np.array([scalar(grid, h, w, ox, oy, res, a, b, c, d, mr)
+                            for a, b, c, d in zip(sx, sy, ex, ey)], dtype=np.float32)
+            assert np.array_equal(got, exp), (mode, mr)
 
 
 def _random_layer(rng, n_polys):
@@ -135,7 +127,6 @@ def _random_layer(rng, n_polys):
 
 
 def test_line_range_batch_equals_scalar():
-    import math
     for seed in range(4):
         rng = np.random.RandomState(200 + seed)
         polys = _random_layer(rng, 1 + seed)
@@ -166,7 +157,6 @@ def test_fov_wrap_is_promotion_independent():
     """The scalar gate's angle wrap must run in float64 under BOTH NumPy
     promotion regimes (value-based 1.x and NEP-50 2.x): wrap_to_pi fed an
     explicit float64 equals the batch twin's float64 wrap bit-for-bit."""
-    import math
     rng = np.random.RandomState(21)
     for _ in range(200):
         bearing = np.float32(rng.uniform(-math.pi, math.pi))
@@ -195,7 +185,7 @@ def test_batch_throughput_sane():
     import time
     grid, sx, sy, ex, ey = _random_cases(7, 20000, 50, 50, 0.05)
     t0 = time.time()
-    KB.line_observation_sum_batch(grid, sx, sy, ex, ey)
+    KB.bresenham_batch(grid, sx, sy, ex, ey, "sum")
     t_batch = time.time() - t0
     t0 = time.time()
     for a, b, c, d in zip(sx[:2000], sy[:2000], ex[:2000], ey[:2000]):

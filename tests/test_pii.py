@@ -1,9 +1,5 @@
 """PII redaction: planted spans, clean-row negatives, engine parity traps."""
 
-import pytest
-
-from pyspark.sql import functions as F
-
 from polycheck_spark.operators import pii as P
 
 

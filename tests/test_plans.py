@@ -7,8 +7,6 @@ matter at 100 TB — broadcast joins where the build side is small, pushed
 filters and pruned columns at the scan, no pathological isnotnull(CASE...)
 trees — so they fail loudly instead of silently costing a scale factor."""
 
-import pytest
-
 import __spark_entry__ as E
 
 

@@ -5,7 +5,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from polycheck_spark.geo import kernel as K
 from polycheck_spark.data.polygons import GOLDEN_POLYGONS
@@ -99,7 +98,7 @@ def test_real_region_visibility_matches_local(spark):
     ends_df = spark.createDataFrame(ends, "ex double, ey double")
     got = {(r["sx"], r["sy"], r["ex"], r["ey"]): r["vis"]
            for r in V.visibility_from_region_df(
-               spark, g, starts_df, ends_df, real=True,
+               spark, g, starts_df, ends_df,
                origin=(0.0, 0.0), resolution=1.0).collect()}
     local = V.visibility_from_real_region_local(g, (0.0, 0.0), 1.0, starts, ends)
     for si, s in enumerate(starts):
@@ -169,7 +168,7 @@ def test_sensor_real_region_spark(spark):
     sensors = [[0.5, 2.5, 10.0, 0.0, 2 * math.pi]]
     per, combined = V.sensor_visibility_df(
         spark, grid, _sensor_df(spark, sensors), "union",
-        real=True, origin=(0.0, 0.0), resolution=1.0)
+        origin=(0.0, 0.0), resolution=1.0)
     got = _collect_combined(combined, 5, 5)
     _, local_combined = V.sensor_visibility_local(
         grid, sensors, "union", origin=(0.0, 0.0), resolution=1.0)
