@@ -47,13 +47,13 @@ from polycheck_spark.data import synth
 from polycheck_spark.io.tables import CheckpointedWriter
 from polycheck_spark.operators import web as W
 from polycheck_spark.operators.dedup import (
-    BAND_SIZE, N_MINHASH, connected_components, minhash_signatures)
+    BAND_SIZE, N_BANDS, N_MINHASH, band_rows, connected_components,
+    digest_bucket_col, minhash_signatures)
 from polycheck_spark.operators.text import strip_boilerplate, tokens_col
 from polycheck_spark.session import local_frame
 
 STAGE1 = "cleaned_by_digest"
 STAGE2 = "survivors_by_band"
-N_BANDS = N_MINHASH // BAND_SIZE
 
 BOILERPLATE = "subscribe to our newsletter for daily updates"
 
@@ -139,9 +139,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                  .filter(F.col("lang").isin(*langs_keep)))
         (gated.withColumn("text_md5", F.md5("text"))
          .withColumn("doc_key", F.xxhash64("url"))
-         .withColumn("bucket",
-                     F.pmod(F.conv(F.substring("text_md5", 1, 8), 16, 10)
-                            .cast("long"), F.lit(n_buckets)).cast("int"))
+         .withColumn("bucket", digest_bucket_col(F.col("text_md5"), n_buckets))
          .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
     params1 = {"pages": num_pages, "buckets": n_buckets,
@@ -171,16 +169,8 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
 
     # ---- phase 2 staging: survivors exploded to band keys -----------------
     def write_bands(path):
-        survivors = phase1.read_output(spark)
-        bands = survivors.select(
-            "doc_key", *[f"m{i}" for i in range(N_MINHASH)],
-            F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"),
-                         F.concat_ws(",", *[F.col(f"m{b * BAND_SIZE + j}").cast("string")
-                                            for j in range(BAND_SIZE)]).alias("bkey"))
-                for b in range(N_BANDS)])).alias("bb")
-        ).select("doc_key", *[f"m{i}" for i in range(N_MINHASH)],
-                 F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+        bands = band_rows(phase1.read_output(spark), "doc_key",
+                          *[f"m{i}" for i in range(N_MINHASH)])
         (bands.withColumn("wb", F.pmod(F.xxhash64("band", "bkey"),
                                        F.lit(n_buckets)).cast("int"))
          .write.mode("overwrite").partitionBy("wb").parquet(path))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from polycheck_spark.data import synth
 from polycheck_spark.io.tables import CheckpointedWriter
+from polycheck_spark.operators.dedup import digest_bucket_col
 
 STAGE = "pages_by_digest"
 
@@ -43,10 +44,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str,
         both = pages.unionByName(dups).withColumn("text_md5", F.md5("text"))
         # bucket by the DIGEST, not the url: byte-identical texts collapse
         # into one bucket, making per-bucket dedup globally exact
-        (both.withColumn(
-            "bucket",
-            F.pmod(F.conv(F.substring("text_md5", 1, 8), 16, 10).cast("long"),
-                   F.lit(n_buckets)).cast("int"))
+        (both.withColumn("bucket", digest_bucket_col(F.col("text_md5"), n_buckets))
          .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
     staged = writer.stage(STAGE, {"pages": num_pages, "buckets": n_buckets,

@@ -6,13 +6,18 @@
 The third pipeline on the checkpoint layer (cf. pip_join_job.py,
 dedup_job.py): the 100-TB embedding-dedup shape — LSH bucketing -> per-bucket
 candidate pairs + exact rescore -> connected components -> survivors — made
-kill-resumable at its expensive stage.
+kill-resumable at its expensive stage.  The job runs the kernels of the
+oracle-checked operator: buckets come from ``similarity.lsh_buckets`` (the
+dim-ordered-fold bucketer of ``near_dup_pairs``) and each bucket's pairs
+from the same cogrouped GEMM/fold rescore, so the job's pair set equals
+``near_dup_pairs(corpus, THRESHOLD, n_planes=scaled_n_planes(N))``
+(pinned by tests/test_resume.py).
 
 Resume granularity is the CANDIDATE-PAIR stage, which dominates the cost
-(per-bucket self-joins + exact cosine rescoring of every candidate).  Work
-buckets are groups of LSH buckets (``lsh_bucket % n_buckets``), and the key
-property making per-bucket work globally exact is the same disjointness the
-query path relies on: a vector has exactly ONE exact bucket, and a pair
+(per-bucket pair matrices + exact cosine rescoring of every candidate).
+Work buckets are groups of LSH buckets (``lsh_bucket % n_buckets``), and the
+key property making per-bucket work globally exact is the same disjointness
+the query path relies on: a vector has exactly ONE exact bucket, and a pair
 (a, b) is emitted only where a's exact bucket meets one of b's probe
 buckets — so each pair belongs to exactly one work bucket and the union of
 bucket outputs is the exact global pair set, no cross-bucket coordination,
@@ -20,13 +25,13 @@ no dedup pass.  A killed job resumes from the last committed bucket with
 identical final output (pinned by tests/test_resume.py).
 
 The staged table carries each vector on its exact row plus one row per
-one-bit probe bucket — n_planes + 1 rows per vector in total (n_planes scales
-~log2(N/16) with the corpus, so ~15x staging at the default 100k vectors).
-That is the self-contained-bucket trade: staging amplification for
-embarrassingly parallel bucket jobs that never rescan the source; at 100 TB
-the alternative — ids-only staging + a by-id vector fetch per bucket —
-trades that storage for one bucketed join per work bucket, same checkpoint
-shape.
+probe bucket (its own and the n_planes one-bit flips) — n_planes + 2 rows
+per vector in total (n_planes scales ~log2(N/16) with the corpus, so ~16x
+staging at the default 100k vectors).  That is the self-contained-bucket
+trade: staging amplification for embarrassingly parallel bucket jobs that
+never rescan the source; at 100 TB the alternative — ids-only staging + a
+by-id vector fetch per bucket — trades that storage for one bucketed join
+per work bucket, same checkpoint shape.
 
 The closing CC + survivor stage is one cheap pass over the PAIRS (orders of
 magnitude smaller than the corpus) and reruns idempotently on resume —
@@ -50,96 +55,64 @@ from polycheck_spark.operators.dedup import connected_components
 
 STAGE = "emb_by_bucket"
 DUP_OFFSET = 10_000_000
+#: every ``vec_id % DUP_MOD == 0`` vector gets an injected near-copy
+DUP_MOD = 20
+#: near-dup cosine threshold as a rational (num, den): cosine >= 0.6
+THRESHOLD = (3, 5)
 
 
-TARGET_BUCKET_POP = 16
+def corpus(spark, num_vecs: int, dim: int):
+    """The job's deterministic corpus: embeddings plus injected near-copies
+    (every ``vec_id % DUP_MOD == 0`` vector re-appears at ``vec_id +
+    DUP_OFFSET`` with element 0 shifted +0.25)."""
+    return synth.inject_perturbed_copies(
+        synth.generate_embeddings(spark, num_vecs, dim), dim, DUP_MOD, DUP_OFFSET)
 
 
 def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
-            dim: int = 16, dup_mod: int = 20,
-            threshold: tuple[int, int] = (3, 5),
-            n_planes: int | None = None, fail_on=None) -> dict:
-    """Synthesizes embeddings with injected near-duplicates (every
-    ``vec_id % dup_mod == 0`` vector re-appears at ``vec_id + DUP_OFFSET``
-    with element 0 shifted +0.25), then finds near-dup pairs resumably and
-    collapses them to survivors.  Returns run stats + snapshot + survivor
-    count.
-
-    ``n_planes`` defaults to ~log2(N / TARGET_BUCKET_POP): per-bucket
-    candidate cost is quadratic in bucket population, so the plane count
-    must GROW with the corpus to hold population constant — the fixed
-    8-plane setting the oracle queries pin degrades quadratically past
-    ~10^5 uniform vectors (measured: 100k vectors x 8 planes = ~190M
-    candidate pairs; x13 planes = ~10M).  More planes trade recall per
-    probe (each extra plane adds a sign-flip chance the 1-bit probes
-    must absorb) — the standard LSH tuning surface, exercised by the
-    kill-resume test at both settings."""
+            dim: int = 16, fail_on=None) -> dict:
+    """Finds the near-dup pairs of :func:`corpus` resumably and collapses
+    them to survivors.  Returns run stats + snapshot + survivor count.  The
+    plane count is ``SIM.scaled_n_planes(num_vecs)``, so bucket population
+    stays constant as the corpus grows."""
     if num_vecs > DUP_OFFSET:
         # injected-copy ids are originals + DUP_OFFSET; a corpus reaching
         # the offset would collide real and injected ids (ambiguous a<b
         # pairs, corrupt CC) with no error — refuse instead
         raise ValueError(f"num_vecs must be <= {DUP_OFFSET} (injected-id offset)")
     writer = CheckpointedWriter(out_dir)
-    if n_planes is None:
-        n_planes = max(8, (max(2, num_vecs // TARGET_BUCKET_POP) - 1).bit_length())
+    n_planes = SIM.scaled_n_planes(num_vecs)
 
-    def corpus():
-        return synth.inject_perturbed_copies(
-            synth.generate_embeddings(spark, num_vecs, dim),
-            dim, dup_mod, DUP_OFFSET)
+    def tagged(side, key):
+        return F.struct(key.alias("bucket"), F.lit(side).alias("side"))
 
     def write(path):
-        both = corpus().withColumn(
-            "bucket", SIM.bucket_key_col(F.col("embedding"), dim,
-                                         n_planes=n_planes))
-        # exact side: one row per vector, keyed by its own bucket;
-        # probe side: bucket + n_planes one-bit flips (the probe set)
-        exact = both.select("vec_id", "bucket", "embedding",
-                            F.lit("e").alias("side"))
-        probes = F.array(F.col("bucket"),
-                         *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                           for p in range(n_planes)])
-        probe = both.select("vec_id", F.explode(probes).alias("bucket"),
-                            "embedding", F.lit("p").alias("side"))
-        (exact.unionByName(probe)
+        bk = SIM.lsh_buckets(corpus(spark, num_vecs, dim), dim, n_planes)
+        # one row per (vector, staged bucket): side 'e' on its own bucket,
+        # side 'p' on every key of its probe set
+        keys = [tagged("e", F.col("bucket"))] + [
+            tagged("p", key) for key in SIM._probe_keys(F.col("bucket"), n_planes)]
+        (bk.select(F.col("vid").alias("vec_id"), F.col("v").alias("embedding"),
+                   F.explode(F.array(*keys)).alias("r"))
+         .select("vec_id", "r.bucket", "embedding", "r.side")
          .withColumn("wb", F.pmod(F.col("bucket"), F.lit(n_buckets)).cast("int"))
          .write.mode("overwrite").partitionBy("wb").parquet(path))
 
     # threshold included although staging doesn't depend on it: a changed
     # threshold must not reuse buckets rescored under the old one
     staged = writer.stage(STAGE, {"vecs": num_vecs, "buckets": n_buckets,
-                                  "dim": dim, "dup_mod": dup_mod,
-                                  "planes": n_planes, "threshold": threshold},
+                                  "dim": dim, "dup_mod": DUP_MOD,
+                                  "planes": n_planes, "threshold": THRESHOLD},
                           write)
-
-    num, den = threshold
-
-    def rescore(batches):
-        # vectorized exact rescore (shared np_guarded_cosine kernel): one
-        # einsum per Arrow batch instead of the interpreted HOF fold — the
-        # rescore dominates per-bucket cost (candidate counts are quadratic
-        # in bucket population) and the job has no SQL oracle to stay
-        # fold-bit-exact for; each pair's cosine depends only on its own
-        # values, so the keep-set is deterministic under any batching
-        import numpy as np
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.array(list(pdf["avec"]), dtype=np.float64)
-            b = np.array(list(pdf["bvec"]), dtype=np.float64)
-            yield pdf.loc[SIM.np_guarded_cosine(a, b) * den >= num, ["a", "b"]]
 
     def build_bucket(k: int):
         part = writer.read_bucket(spark, staged, "wb", k)
-        e = part.filter(F.col("side") == "e").select(
-            F.col("vec_id").alias("a"), "bucket",
-            F.col("embedding").alias("avec"))
-        p = part.filter(F.col("side") == "p").select(
-            F.col("vec_id").alias("b"), "bucket",
-            F.col("embedding").alias("bvec"))
-        cand = e.join(p, "bucket").filter(F.col("a") < F.col("b"))
-        return cand.select("a", "b", "avec", "bvec") \
-                   .mapInPandas(rescore, "a long, b long")
+        exact = part.filter(F.col("side") == "e").select(
+            F.col("vec_id").alias("vid"), "bucket", F.col("embedding").alias("v"))
+        probe = part.filter(F.col("side") == "p").select(
+            F.col("vec_id").alias("pvid"), F.col("bucket").alias("pbucket"),
+            F.col("embedding").alias("pv"))
+        return SIM._bucket_pairs(exact, probe, THRESHOLD)
 
     result = writer.run(list(range(n_buckets)), build_bucket, fail_on=fail_on)
     snapshot = writer.commit_snapshot()
@@ -156,7 +129,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
                  .distinct())
     labels = connected_components(endpoints, pairs, id_col="id")
     non_survivors = labels.filter(F.col("cluster_id") != F.col("id")).select("id")
-    survivors = (corpus().select(F.col("vec_id").alias("id"))
+    survivors = (corpus(spark, num_vecs, dim).select(F.col("vec_id").alias("id"))
                  .join(non_survivors, "id", "left_anti"))
     surv_dir = os.path.join(out_dir, "survivors")
     survivors.write.mode("overwrite").parquet(surv_dir)

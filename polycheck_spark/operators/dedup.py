@@ -28,7 +28,8 @@ from polycheck_spark.session import spread
 
 NGRAM = 3
 N_MINHASH = 16
-BAND_SIZE = 4  # -> 4 bands
+BAND_SIZE = 4
+N_BANDS = N_MINHASH // BAND_SIZE
 SIMHASH_BITS = 16
 
 
@@ -46,6 +47,14 @@ def exact_duplicates_sql(table: str, id_col: str = "doc_id", text_col: str = "te
 SELECT md5({text_col}) AS text_md5, COUNT(*) AS n_dups, MIN({id_col}) AS min_id
 FROM {table} GROUP BY 1 HAVING COUNT(*) > 1
 """
+
+
+def digest_bucket_col(md5_col, n_buckets: int):
+    """Work bucket of a hex md5 digest Column: its first 8 hex digits mod
+    ``n_buckets``.  Byte-identical texts share a digest, so they share a
+    bucket, which makes per-bucket exact dedup globally exact."""
+    return F.pmod(F.conv(F.substring(md5_col, 1, 8), 16, 10).cast("long"),
+                  F.lit(n_buckets)).cast("int")
 
 
 # --- shingles ----------------------------------------------------------------
@@ -279,16 +288,7 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     exact dedup upstream anyway, which handles identical texts at S log S).
     None disables the cap (exact LSH semantics; the driver-checked default).
     """
-    sig = minhash_signatures(docs, id_col, text_col)
-    n_bands = N_MINHASH // BAND_SIZE
-    bands = sig.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.concat_ws(",", *[F.col(f"m{b * BAND_SIZE + j}").cast("string")
-                                        for j in range(BAND_SIZE)]).alias("bkey"))
-            for b in range(n_bands)])).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
+    bands = band_rows(minhash_signatures(docs, id_col, text_col), "id")
     if max_band_freq is not None:
         cool = (bands.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("bf"))
                 .filter(F.col("bf") <= max_band_freq).select("band", "bkey"))
@@ -300,17 +300,30 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     return pairs
 
 
+def band_rows(sig: DataFrame, *keep: str) -> DataFrame:
+    """One row per LSH band of each MinHash signature row (columns
+    m0..m{N_MINHASH-1}): the ``keep`` columns plus (band, bkey), where bkey
+    is the band's BAND_SIZE values joined with ','."""
+    bands = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.concat_ws(",", *[F.col(f"m{b * BAND_SIZE + j}").cast("string")
+                                    for j in range(BAND_SIZE)]).alias("bkey"))
+        for b in range(N_BANDS)])
+    return (sig.select(*keep, F.explode(bands).alias("__bb"))
+            .select(*keep, F.col("__bb.band").alias("band"),
+                    F.col("__bb.bkey").alias("bkey")))
+
+
 def lsh_candidate_pairs_sql(table: str, id_col: str = "doc_id", text_col: str = "text",
                             max_band_freq: int | None = None) -> str:
-    n_bands = N_MINHASH // BAND_SIZE
     h = f"(({_tok_int_sql('shingle')}) % {_MH_Q})"
     mins = ", ".join(
         f"MIN(({h} * {_MH_A[i]} + {_MH_B[i]}) % {_MH_P}) AS m{i}"
         for i in range(N_MINHASH))
-    band_rows = " UNION ALL ".join(
+    band_selects = " UNION ALL ".join(
         "SELECT id, {b} AS band, ({key}) AS bkey FROM sig".format(
             b=b, key=" || ',' || ".join(f"m{b * BAND_SIZE + j}" for j in range(BAND_SIZE)))
-        for b in range(n_bands))
+        for b in range(N_BANDS))
     cap_cte = ""
     if max_band_freq is not None:
         cap_cte = f""",
@@ -320,7 +333,7 @@ banded AS (SELECT * FROM banded0
     return f"""
 WITH sh AS ({_shingles_sql(table, id_col, text_col)}),
 sig AS (SELECT id, {mins} FROM sh GROUP BY id),
-banded0 AS ({band_rows}){cap_cte}
+banded0 AS ({band_selects}){cap_cte}
 SELECT DISTINCT x.id AS a, y.id AS b
 FROM {src} x JOIN {src} y ON x.band = y.band AND x.bkey = y.bkey AND x.id < y.id
 """

@@ -9,7 +9,13 @@
 * :func:`ivf_topk` (inverted lists) and :func:`quantized_topk` (int8
   re-rank) — the other approximate paths.
 
-Every path has a DuckDB twin (``*_sql``) that the oracle checks run.
+Every path has a DuckDB twin (``*_sql``) that the oracle checks run.  The
+Spark side is one Arrow-batch NumPy pass per path, with the dim-ordered fold
+arithmetic below in place of Spark's interpreted array lambdas.  The batch
+kernels are module-level functions bound with ``functools.partial``, so the
+resumable jobs (``jobs/near_dup_job.py``, ``jobs/ann_topk_job.py``) run the
+same LSH bucketer, IVF assigner, int8 scorer and cosine rescore as the
+oracle-checked operators.
 
 Outputs carry (query_id, target_id, rank) — ranks are float-order-robust
 because embedding cosines are generic reals; both engines order by
@@ -18,32 +24,13 @@ because embedding cosines are generic reals; both engines order by
 
 from __future__ import annotations
 
-from functools import lru_cache as _lru_cache
+import functools
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 from polycheck_spark.session import local_frame, spread
 
 N_PLANES = 8
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm2(a):
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-
-
-def _cosine(a, b):
-    """Guarded cosine: a zero-norm vector scores 0.0 against everything
-    (cosine is undefined there; under ANSI mode the raw division raises
-    DIVIDE_BY_ZERO).  CaseWhen evaluates the division branch lazily, so the
-    guard costs nothing on the normal path and the value is unchanged for
-    every non-zero vector — oracle hashes are unaffected."""
-    n2 = _norm2(a) * _norm2(b)
-    return F.when(n2 > 0, _dot(a, b) / F.sqrt(n2)).otherwise(F.lit(0.0))
 
 
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
@@ -57,8 +44,8 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     query) pair with ~10-50x-off-vectorized lambda expressions (Spark never
     codegens HOF lambdas) and shuffled ALL N x Q scored rows into the
     ranking window — 328 s at sf1.0.  Now one mapInPandas pass computes
-    dim-ordered fold cosines (bit-identical to the HOF/DuckDB left fold —
-    see the fold helpers above) and emits only per-batch top-k partials, so
+    dim-ordered fold cosines (bit-identical to the DuckDB left fold — see
+    the fold helpers below) and emits only per-batch top-k partials, so
     the window ranks O(k * n_batches) rows per query.  Output is
     bit-identical: same cosines, same ties, same ranks."""
     qids, qmat = _collect_queries(queries, id_col, vec_col)
@@ -71,35 +58,23 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
 
 def _cos_sql(a: str, b: str) -> str:
     """Engine-parity cosine in DuckDB SQL (single source for every twin);
-    same zero-norm guard as :func:`_cosine`."""
+    same zero-norm guard as :func:`_guarded_cos_np`."""
     n2 = (f"(list_sum(list_transform({a}, x -> x * x))"
           f" * list_sum(list_transform({b}, x -> x * x)))")
     dot = f"list_sum(list_transform(range(len({a})), i -> {a}[i + 1] * {b}[i + 1]))"
     return f"(CASE WHEN {n2} > 0 THEN {dot} / sqrt({n2}) ELSE 0.0 END)"
 
 
-def np_guarded_cosine(a, b):
-    """Row-wise guarded cosine of two (N, dim) float64 arrays — the NumPy
-    twin of :func:`_cosine` (zero-norm pairs score 0.0).  One einsum per
-    term; each row's value depends only on its own elements, so the result
-    is batching/partitioning-invariant.  Shared by the banded rescore and
-    the near-dup job so the vectorized threshold semantics exist once."""
-    import numpy as np
-    dot = np.einsum("ij,ij->i", a, b)
-    n2 = np.einsum("ij,ij->i", a, a) * np.einsum("ij,ij->i", b, b)
-    return np.divide(dot, np.sqrt(n2), out=np.zeros_like(dot), where=n2 > 0)
-
-
-# --- dim-ordered fold arithmetic (bit-exact NumPy twins of the HOF exprs) ----
+# --- dim-ordered fold arithmetic (bit-exact NumPy twins of the SQL folds) ----
 #
-# F.aggregate(zip_with(a, b, x*y), 0.0, acc+v) is a SEQUENTIAL left fold:
+# The oracles' list_sum(list_transform(...)) is a SEQUENTIAL left fold:
 # acc_{i+1} = acc_i + a[i]*b[i] in element order.  The same recurrence can be
 # vectorized ACROSS ROWS while keeping the per-row operation order: loop over
 # the dimension index and accumulate one elementwise product per step.  Every
-# intermediate is the same IEEE-double value the interpreted HOF (and the
-# DuckDB list_sum twin) produces, so cosines — and therefore ranks, ties and
-# threshold decisions — are bit-identical, at NumPy speed instead of
-# interpreted-expression speed (Spark never codegens lambdas; guide §4).
+# intermediate is the same IEEE-double value the DuckDB twin produces, so
+# cosines — and therefore ranks, ties and threshold decisions — are
+# bit-identical, at NumPy speed instead of the interpreted-lambda speed of
+# Spark's array HOFs (Spark never codegens lambdas; guide §4).
 
 #: guard band for GEMM-assisted candidate selection: ~10^4 x the worst
 #: pairwise-vs-sequential summation divergence for dim <= 10^4 (~dim*eps);
@@ -110,8 +85,8 @@ _TOPK_BAND = 1e-9
 def _fold_dot(a, b):
     """Sequential dot over the last axis of two float64 arrays that
     broadcast: acc = acc + a[..., i] * b[..., i] in dimension order from
-    zeros — the dim-ordered twin of :func:`_dot`, of :func:`_norm2` (a with
-    itself) and of :func:`bucket_key_col`'s per-plane aggregate.  Callers
+    zeros — the dim-ordered twin of :func:`_cos_sql`'s dot and norms (a
+    with itself) and of :func:`_bucket_sql`'s per-plane projection.  Callers
     broadcast (``A[:, None, :]`` against ``Q[None, :, :]`` gives all pairs,
     O(B*Q) memory — bounded via Arrow batch size)."""
     import numpy as np
@@ -122,8 +97,9 @@ def _fold_dot(a, b):
 
 
 def _guarded_cos_np(dot, na2, nb2):
-    """cosine from fold dot + fold norms with the :func:`_cosine` zero-norm
-    guard, same op order: n2 = na2*nb2; dot/sqrt(n2) when n2 > 0 else 0."""
+    """cosine from fold dot + fold norms with :func:`_cos_sql`'s zero-norm
+    guard (cosine is undefined there; a zero-norm vector scores 0.0), same
+    op order: n2 = na2*nb2; dot/sqrt(n2) when n2 > 0 else 0."""
     import numpy as np
     n2 = na2 * nb2
     return np.divide(dot, np.sqrt(n2), out=np.zeros_like(dot), where=n2 > 0)
@@ -131,9 +107,9 @@ def _guarded_cos_np(dot, na2, nb2):
 
 def _fold_buckets_np(mat, planes, powers):
     """Sign-bit LSH bucket ids from dim-ordered fold projections — bit-exact
-    twin of :func:`bucket_key_col` (not ulp-approximate like a BLAS matmul:
-    the fold order is preserved, so a projection that the Column path rounds
-    to exactly 0.0 rounds to 0.0 here too)."""
+    twin of :func:`_bucket_sql` (not ulp-approximate like a BLAS matmul:
+    the fold order is preserved, so a projection that the oracle rounds to
+    exactly 0.0 rounds to 0.0 here too)."""
     proj = _fold_dot(mat[:, None, :], planes[None, :, :])
     return ((proj > 0) @ powers).astype("int64")
 
@@ -167,7 +143,7 @@ def _ranked_topk_partials(embeddings: DataFrame, qids, qmat, k: int, *,
     pairs ``pair_mask(ids, tmat) -> (B, Q) bool`` admits), drops
     self-matches, and emits its per-query top-k by (cosine desc, id asc).
     Because emitted cosines ARE the exact fold values, the caller's final
-    window reproduces the interpreted-HOF ranking bit-for-bit; per-batch
+    window reproduces the DuckDB twin's ranking bit-for-bit; per-batch
     top-k only prunes rows that can never reach the global top k."""
     import numpy as np
     import pandas as pd
@@ -274,7 +250,8 @@ def _empty_ranked(df: DataFrame) -> DataFrame:
 
 def cosine_topk_sql(table: str, queries_filter: str, k: int,
                     id_col: str = "vec_id", vec_col: str = "embedding") -> str:
-    """DuckDB twin using explicit per-element sums (same math as zip_with)."""
+    """DuckDB twin using explicit per-element sums (the left fold
+    :func:`_fold_dot` reproduces)."""
     return f"""
 WITH t AS (SELECT {id_col} AS target_id,
                   list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
@@ -306,32 +283,73 @@ def _centroid_modulus(n_vectors: int, n_centroids: int) -> int:
     return max(1, n_vectors // max(1, n_centroids))
 
 
-def _assign_lists(vecs: DataFrame, cents: DataFrame, id_col: str,
-                  vec_col: str, keep: int) -> DataFrame:
-    """Nearest-centroid assignment by cosine (ties -> lowest centroid id):
-    cross join against the broadcast centroid table, keep the top lists.
+def _ivf_centroids(embeddings: DataFrame, n_vectors: int, n_centroids: int,
+                   *, id_col: str, vec_col: str):
+    """Driver-side coarse quantizer ``(cids, cmat, cn2)``, cid ascending, or
+    None for an empty centroid set.  The centroids are the ids divisible by
+    :func:`_centroid_modulus` — a fixed budget, so the collect is bounded at
+    any data size."""
+    import numpy as np
+    mod = _centroid_modulus(n_vectors, n_centroids)
+    rows = (embeddings.filter(F.col(id_col) % mod == 0)
+            .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+            .collect())
+    if not rows:
+        return None
+    rows.sort(key=lambda r: r[0])              # cid ascending: first max
+    cmat = np.array([r[1] for r in rows], dtype=np.float64)
+    return (np.array([r[0] for r in rows], dtype=np.int64), cmat,
+            _fold_dot(cmat, cmat))
 
-    ``keep == 1`` (the TARGET side — all N vectors) is an argmax, computed
-    as ``groupBy(max(struct(ccos, -cid, vec)))``: a hash aggregate with
-    map-side partial combine, so only N pre-combined rows shuffle instead
-    of the window path's full N x n_centroids sort-shuffle — the dominant
-    IVF cost at scale.  Same semantics as rank 1 (max cosine, tie -> min
-    cid; cid is unique so the trailing struct fields never decide).
-    ``keep > 1`` (the QUERY side — small) keeps the window top-k."""
-    cos = _cosine(F.col(vec_col), F.col("cvec"))
-    scored = vecs.crossJoin(F.broadcast(cents)).withColumn("ccos", cos)
-    if keep == 1:
-        best = F.max(F.struct(F.col("ccos"),
-                              (-F.col("cid")).alias("negcid"),
-                              F.col(vec_col).alias("v"))).alias("m")
-        return (scored.groupBy(id_col).agg(best)
-                .select(id_col, F.col("m.v").alias(vec_col),
-                        (-F.col("m.negcid")).alias("list_id")))
-    w = Window.partitionBy(id_col).orderBy(F.col("ccos").desc(), F.col("cid").asc())
-    return (scored
-            .withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= keep)
-            .select(id_col, vec_col, F.col("cid").alias("list_id")))
+
+def _centroid_cos(cents, mat):
+    """(N, C) fold cosines of each row of ``mat`` against every centroid."""
+    _, cmat, cn2 = cents
+    return _guarded_cos_np(_fold_dot(mat[:, None, :], cmat[None, :, :]),
+                           _fold_dot(mat, mat)[:, None], cn2[None, :])
+
+
+def _ivf_assign(cents, mat):
+    """Each row's IVF list: the max-cosine centroid, ties -> lowest cid."""
+    import numpy as np
+    return cents[0][np.argmax(_centroid_cos(cents, mat), axis=1)]
+
+
+def _ivf_probe_lists(cents, qmat, n_probe: int):
+    """(Q, min(n_probe, C)) probed lists per query: its nearest centroids by
+    (cosine desc, cid asc)."""
+    import numpy as np
+    cids = cents[0]
+    qcos = _centroid_cos(cents, qmat)
+    keepn = min(n_probe, len(cids))
+    return np.stack([cids[np.lexsort((cids, -qcos[j]))[:keepn]]
+                     for j in range(len(qmat))])
+
+
+def _ivf_pair_mask(cents, qprobe, ids, tmat):
+    """(B, Q) admitted pairs: the target's list is among the query's probed
+    lists."""
+    assign = _ivf_assign(cents, tmat)
+    return (assign[:, None, None] == qprobe[None, :, :]).any(axis=2)
+
+
+def _ivf_list_batches(cents, vec_col: str, batches):
+    """Each row of a batch with its IVF ``list_id`` appended."""
+    for pdf in batches:
+        if len(pdf):
+            yield pdf.assign(list_id=_ivf_assign(cents, _vec_matrix(pdf[vec_col])))
+
+
+def ivf_lists(embeddings: DataFrame, cents, *,
+              vec_col: str = "embedding") -> DataFrame:
+    """``embeddings`` with each row's IVF ``list_id`` (long) appended — the
+    assignment :func:`ivf_topk` masks its targets with, in one Arrow-batch
+    pass over the driver-collected centroids ``cents``."""
+    from pyspark.sql import types as T
+    schema = T.StructType(embeddings.schema.fields
+                          + [T.StructField("list_id", T.LongType())])
+    return spread(embeddings).mapInPandas(
+        functools.partial(_ivf_list_batches, cents, vec_col), schema)
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
@@ -372,38 +390,18 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     probed lists are pairwise distinct, so each pair is considered at most
     once (invariant pinned by test_ann_outputs_have_no_duplicate_pairs);
     cosines, ties and ranks are bit-identical to the former join."""
-    import numpy as np
     n = n_vectors if n_vectors is not None else embeddings.count()
-    mod = _centroid_modulus(n, n_centroids)
-    crows = (embeddings.filter(F.col(id_col) % mod == 0)
-             .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-             .collect())
+    cents = _ivf_centroids(embeddings, n, n_centroids,
+                           id_col=id_col, vec_col=vec_col)
     qids, qmat = _collect_queries(queries, id_col, vec_col)
-    if qids is None or not crows:
+    if qids is None or cents is None:
         # empty queries or an empty centroid set both joined to nothing in
         # the former Column plan — preserve that, don't raise
         return _empty_ranked(embeddings)
-    crows.sort(key=lambda r: r[0])              # cid ascending: first max
-    cids = np.array([r[0] for r in crows], dtype=np.int64)
-    cmat = np.array([r[1] for r in crows], dtype=np.float64)
-    cn2 = _fold_dot(cmat, cmat)
-    qn2 = _fold_dot(qmat, qmat)
-    qcos = _guarded_cos_np(_fold_dot(qmat[:, None, :], cmat[None, :, :]),
-                           qn2[:, None], cn2[None, :])
-    keepn = min(n_probe, len(cids))
-    qprobe = np.stack([cids[np.lexsort((cids, -qcos[j]))[:keepn]]
-                       for j in range(len(qids))])       # Q x n_probe
-
-    def pair_mask(ids, tmat):
-        tn2 = _fold_dot(tmat, tmat)
-        tcos = _guarded_cos_np(_fold_dot(tmat[:, None, :], cmat[None, :, :]),
-                               tn2[:, None], cn2[None, :])
-        assign = cids[np.argmax(tcos, axis=1)]  # first max -> lowest cid
-        return (assign[:, None, None] == qprobe[None, :, :]).any(axis=2)
-
-    partial = _ranked_topk_partials(embeddings, qids, qmat, k,
-                                    id_col=id_col, vec_col=vec_col,
-                                    pair_mask=pair_mask)
+    qprobe = _ivf_probe_lists(cents, qmat, n_probe)
+    partial = _ranked_topk_partials(
+        embeddings, qids, qmat, k, id_col=id_col, vec_col=vec_col,
+        pair_mask=functools.partial(_ivf_pair_mask, cents, qprobe))
     return _rank_partials(partial, k)
 
 
@@ -459,7 +457,7 @@ SELECT query_id, target_id, CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank 
 """
 
 
-@_lru_cache(maxsize=None)
+@functools.lru_cache(maxsize=None)
 def _plane_weights(dim: int, n_planes: int = N_PLANES) -> tuple[tuple[float, ...], ...]:
     """The n_planes x dim hyperplane weight matrix, computed ONCE driver-side.
 
@@ -487,27 +485,123 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
     return int(row["d"]) if row is not None else 0
 
 
-def bucket_key_col(vec_col, dim: int, n_planes: int = N_PLANES):
-    """Sign-bit LSH bucket id from ``n_planes`` pseudo-random hyperplanes.
+def _lsh_planes(dim: int, n_planes: int):
+    """(planes, powers): the (n_planes, dim) float64 weight matrix and the
+    bit value of each plane's sign."""
+    import numpy as np
+    return (np.array(_plane_weights(dim, n_planes), dtype=np.float64),
+            (1 << np.arange(n_planes)).astype(np.int64))
 
-    The plane weights are precomputed literal arrays of width ``dim``
-    (JVM-side constant, zero per-row hashing); fixed-width input is
-    assumed (zip_with nulls out length mismatches).
 
-    ``n_planes`` defaults to the oracle-pinned 8 (256 buckets — what every
-    driver-checked query uses); scale paths size it with the corpus —
-    ~log2(N / target_bucket_population) — so bucket population, and with it
-    the quadratic per-bucket candidate cost, stays CONSTANT as N grows
-    (fixed-plane LSH degrades quadratically instead; see
-    jobs/near_dup_job.py)."""
-    key = F.lit(0).cast("long")
-    for p in range(n_planes):
-        wcol = F.array(*[F.lit(w) for w in _plane_weights(dim, n_planes)[p]])
-        proj = F.aggregate(
-            F.zip_with(vec_col, wcol, lambda x, w: x * w),
-            F.lit(0.0), lambda acc, v: acc + v)
-        key = key.bitwiseOR(F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long"))
-    return key
+#: per-bucket population the corpus-scaled plane count aims for
+TARGET_BUCKET_POP = 16
+
+
+def scaled_n_planes(n_vectors: int) -> int:
+    """LSH plane count for a corpus of ``n_vectors``: ~log2(N /
+    TARGET_BUCKET_POP), at least the oracle-pinned :data:`N_PLANES`.
+
+    Per-bucket candidate cost is quadratic in bucket population, so the
+    plane count must GROW with the corpus to hold population constant — the
+    fixed 8-plane setting the oracle queries pin degrades quadratically past
+    ~10^5 uniform vectors (measured: 100k vectors x 8 planes = ~190M
+    candidate pairs; x13 planes = ~10M).  More planes trade recall per
+    probe (each extra plane adds a sign-flip chance the 1-bit probes must
+    absorb) — the standard LSH tuning surface."""
+    return max(N_PLANES, (max(2, n_vectors // TARGET_BUCKET_POP) - 1).bit_length())
+
+
+def _probe_keys(bucket, n_planes: int) -> list:
+    """The LSH probe set of a bucket Column: itself and its ``n_planes``
+    one-bit flips (pairwise distinct, so a pair meets at most once)."""
+    return [bucket] + [bucket.bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)]
+
+
+def _bucketize_batches(planes, powers, batches):
+    """(vid, bucket, v): each row of a (vid, v) batch stamped with its
+    dim-ordered-fold LSH bucket."""
+    import numpy as np
+    import pandas as pd
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        buckets = _fold_buckets_np(_vec_matrix(pdf["v"]), planes, powers)
+        yield pd.DataFrame({"vid": pdf["vid"].to_numpy(dtype=np.int64),
+                            "bucket": buckets,
+                            "v": pdf["v"]})
+
+
+def lsh_buckets(embeddings: DataFrame, dim: int, n_planes: int, *,
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """(vid, bucket, v): every vector with its sign-bit LSH bucket over
+    ``n_planes`` md5 hyperplanes — one Arrow-batch pass, bit-exact vs
+    :func:`_bucket_sql`.  Vectors keep their input element type."""
+    vtype = embeddings.schema[vec_col].dataType.simpleString()
+    src = spread(embeddings.select(F.col(id_col).alias("vid"),
+                                   F.col(vec_col).alias("v")))
+    return src.mapInPandas(
+        functools.partial(_bucketize_batches, *_lsh_planes(dim, n_planes)),
+        f"vid long, bucket long, v {vtype}")
+
+
+def _rescore_pairs(num: int, den: int, cap, ex_pdf, pr_pdf):
+    """(a, b) pairs of one LSH bucket: exact-side rows (vid, v) against
+    probe-side rows (pvid, pv), a < b and fold cosine * den >= num.  A
+    bucket whose exact-side population exceeds ``cap`` yields nothing."""
+    import numpy as np
+    import pandas as pd
+    out_a, out_b = [], []
+    if len(ex_pdf) and len(pr_pdf) and (cap is None or len(ex_pdf) <= cap):
+        a_ids = ex_pdf["vid"].to_numpy(dtype=np.int64)
+        b_ids = pr_pdf["pvid"].to_numpy(dtype=np.int64)
+        amat = _vec_matrix(ex_pdf["v"])
+        bmat = _vec_matrix(pr_pdf["pv"])
+        na2 = _fold_dot(amat, amat)
+        nb2 = _fold_dot(bmat, bmat)
+        # GEMM margins decide every pair clear of the threshold by the guard
+        # band; the (empirically empty) boundary band is re-decided with the
+        # exact dim-ordered fold — the accepted set is bit-identical to an
+        # all-fold rescore at BLAS speed (band analysis: see _TOPK_BAND;
+        # margins scale by den).
+        an = np.sqrt(na2)[:, None]
+        bn = np.sqrt(nb2)[:, None]
+        amatn = np.divide(amat, np.where(an > 0, an, 1.0))
+        bmatn = np.divide(bmat, np.where(bn > 0, bn, 1.0))
+        band = _TOPK_BAND * den
+        # chunk the exact side so the pair matrix stays bounded
+        step = max(1, (1 << 22) // max(1, len(b_ids)))
+        for lo in range(0, len(a_ids), step):
+            hi = min(lo + step, len(a_ids))
+            margin = (amatn[lo:hi] @ bmatn.T) * den - num
+            ordered = a_ids[lo:hi, None] < b_ids[None, :]
+            accept = ordered & (margin >= band)
+            gray = ordered & (np.abs(margin) < band)
+            gi, gj = np.nonzero(gray)
+            if len(gi):
+                cos = _guarded_cos_np(
+                    _fold_dot(amat[lo:hi][gi], bmat[gj]),
+                    na2[lo:hi][gi], nb2[gj])
+                accept[gi, gj] = cos * den >= num
+            ai, bi = np.nonzero(accept)
+            out_a.append(a_ids[lo:hi][ai])
+            out_b.append(b_ids[bi])
+    return pd.DataFrame({
+        "a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
+        "b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
+    })
+
+
+def _bucket_pairs(exact: DataFrame, probe: DataFrame,
+                  threshold: tuple[int, int], cap=None) -> DataFrame:
+    """(a, b) near-dup pairs of exact-side rows (vid, bucket, v) against
+    probe-side rows (pvid, pbucket, pv): one cogrouped rescore per bucket.
+    The probe side must carry attribute ids of its own (fresh aliases) when
+    both sides derive from one relation — shared ids make the Python-runner
+    argument dedup collapse the probe payload into the exact side's."""
+    num, den = threshold
+    return (exact.groupby("bucket").cogroup(probe.groupby("pbucket"))
+            .applyInPandas(functools.partial(_rescore_pairs, num, den, cap),
+                           "a long, b long"))
 
 
 def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
@@ -520,7 +614,7 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     r8: one mapInPandas pass replaces the interpreted-HOF bucketer + rescore
     (both ran as uncompiled lambdas) and the bucket join: each target batch
     derives its buckets with the dim-ordered fold (bit-exact vs
-    :func:`bucket_key_col`), masks itself against the driver-side query
+    :func:`_bucket_sql`), masks itself against the driver-side query
     probe sets, fold-rescores only the admitted pairs, and emits per-batch
     top-k partials.  Candidate set, cosines, ties and ranks are identical
     to the former join (a target has ONE bucket and a query's probe keys
@@ -531,8 +625,7 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     qids, qmat = _collect_queries(queries, id_col, vec_col)
     if qids is None:
         return _empty_ranked(embeddings)
-    planes = np.array(_plane_weights(dim, N_PLANES), dtype=np.float64)
-    powers = (1 << np.arange(N_PLANES)).astype(np.int64)
+    planes, powers = _lsh_planes(dim, N_PLANES)
     qb = _fold_buckets_np(qmat, planes, powers)
     probe_arr = np.stack([qb] + [qb ^ (1 << p) for p in range(N_PLANES)],
                          axis=1)                         # Q x (P+1)
@@ -572,111 +665,39 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
 
     ``n_planes``: LSH plane count — pass the same count to
     :func:`near_dup_pairs_sql` when verifying (its plane derivation is
-    width-parameterized too); size it ~log2(N / target_bucket_population)
-    at corpus scale so per-bucket candidate cost stays constant (see
-    :func:`bucket_key_col` and jobs/near_dup_job.py; scale settings are
-    additionally recall-pinned by the stress harness).
+    width-parameterized too); size it with :func:`scaled_n_planes` at
+    corpus scale so per-bucket candidate cost stays constant (scale
+    settings are additionally recall-pinned by the stress harness).
 
     r8 shape (guide §8: decide locally, move heavy bytes once): the former
     path shuffled CANDIDATE-PAIR ids out of the bucket join and then
     attached both vectors to every pair with two id joins — at sf1.0 that
     shipped each vector once per candidate pair (~pairs x 2 x 512 B, the
     dominant exchange) into an interpreted-HOF rescore (165 s; the Arrow
-    variant still paid the joins, 31 s).  Now ONE mapInPandas pass stamps
-    each vector with its dim-ordered-fold bucket (bit-exact vs
-    :func:`bucket_key_col`), the exact side groups by bucket, the probe
-    side explodes its n_planes+1 probe keys, and a cogrouped applyInPandas
-    rescore forms the per-bucket pair matrix IN MEMORY with fold cosines —
-    vectors ride the shuffle (n_planes + 2) times total, independent of the
-    candidate count, and only passing (a, b) pairs are emitted.  The
-    accepted set is bit-identical: same buckets, same probe keys, same
-    fold cosine, same rational-threshold comparison.
+    variant still paid the joins, 31 s).  Now ONE mapInPandas pass
+    (:func:`lsh_buckets`) stamps each vector with its dim-ordered-fold
+    bucket, the exact side groups by bucket, the probe side explodes its
+    n_planes+1 probe keys, and a cogrouped applyInPandas rescore
+    (:func:`_rescore_pairs`) forms the per-bucket pair matrix IN MEMORY with
+    fold cosines — vectors ride the shuffle (n_planes + 2) times total,
+    independent of the candidate count, and only passing (a, b) pairs are
+    emitted.  The accepted set is bit-identical: same buckets, same probe
+    keys, same fold cosine, same rational-threshold comparison.
     """
-    import numpy as np
-    import pandas as pd
-
-    num, den = threshold
     if dim is None:
         dim = _infer_dim(embeddings, vec_col)
-
-    planes = np.array(_plane_weights(dim, n_planes), dtype=np.float64)
-    powers = (1 << np.arange(n_planes)).astype(np.int64)
-
-    def bucketize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            buckets = _fold_buckets_np(_vec_matrix(pdf["v"]), planes, powers)
-            yield pd.DataFrame({"vid": pdf["vid"].to_numpy(dtype=np.int64),
-                                "bucket": buckets,
-                                "v": pdf["v"]})
-
-    # vectors stay float32 through the shuffle (the fold widens to float64
-    # in-memory, exactly like the former cast-then-join did) — half the
-    # exchange bytes of the old array<double> join sides (guide §2.3)
-    src = spread(embeddings.select(F.col(id_col).alias("vid"),
-                                   F.col(vec_col).alias("v")))
-    bk = src.mapInPandas(bucketize, "vid long, bucket long, v array<float>") \
-            .localCheckpoint(eager=False)   # ONE bucketing pass feeds both sides
-    probes = F.array(F.col("bucket"),
-                     *[F.col("bucket").bitwiseXOR(F.lit(1 << p))
-                       for p in range(n_planes)])
-    # the probe side re-aliases EVERY column with fresh names: both cogroup
-    # sides derive from the same checkpointed frame, and shared attribute
-    # ids across the two children make the Python-runner argument dedup
-    # collapse the probe side's payload columns into the exact side's
-    # (observed as a right-side frame holding only the key column) — the
-    # same self-join-over-checkpoint trap connected_components documents
+    # vectors keep their element type through the shuffle: float32 corpora
+    # ship half the exchange bytes of the old array<double> join sides
+    # (guide §2.3), and the fold widens to float64 in memory exactly
+    bk = lsh_buckets(embeddings, dim, n_planes, id_col=id_col, vec_col=vec_col) \
+        .localCheckpoint(eager=False)   # ONE bucketing pass feeds both sides
+    # the probe side re-aliases EVERY column (see _bucket_pairs): both
+    # cogroup sides derive from the same checkpointed frame — the same
+    # self-join-over-checkpoint trap connected_components documents
     pr = bk.select(F.col("vid").alias("pvid"), F.col("v").alias("pv"),
-                   F.explode(probes).alias("pbucket"))
-
-    cap = max_bucket_freq
-
-    def rescore(ex_pdf, pr_pdf):
-        out_a, out_b = [], []
-        # the hot-bucket cap counts EXACT-side population — a capped bucket
-        # contributes no pairs at all, exactly the former cool-semi-join
-        if len(ex_pdf) and len(pr_pdf) and (cap is None or len(ex_pdf) <= cap):
-            a_ids = ex_pdf["vid"].to_numpy(dtype=np.int64)
-            b_ids = pr_pdf["pvid"].to_numpy(dtype=np.int64)
-            amat = _vec_matrix(ex_pdf["v"])
-            bmat = _vec_matrix(pr_pdf["pv"])
-            na2 = _fold_dot(amat, amat)
-            nb2 = _fold_dot(bmat, bmat)
-            # GEMM margins decide every pair clear of the threshold by
-            # the guard band; the (empirically empty) boundary band is
-            # re-decided with the exact dim-ordered fold — the accepted
-            # set is bit-identical to an all-fold rescore at BLAS speed
-            # (band analysis: see _TOPK_BAND; margins scale by den).
-            an = np.sqrt(na2)[:, None]
-            bn = np.sqrt(nb2)[:, None]
-            amatn = np.divide(amat, np.where(an > 0, an, 1.0))
-            bmatn = np.divide(bmat, np.where(bn > 0, bn, 1.0))
-            band = _TOPK_BAND * den
-            # chunk the exact side so the pair matrix stays bounded
-            step = max(1, (1 << 22) // max(1, len(b_ids)))
-            for lo in range(0, len(a_ids), step):
-                hi = min(lo + step, len(a_ids))
-                margin = (amatn[lo:hi] @ bmatn.T) * den - num
-                ordered = a_ids[lo:hi, None] < b_ids[None, :]
-                accept = ordered & (margin >= band)
-                gray = ordered & (np.abs(margin) < band)
-                gi, gj = np.nonzero(gray)
-                if len(gi):
-                    cos = _guarded_cos_np(
-                        _fold_dot(amat[lo:hi][gi], bmat[gj]),
-                        na2[lo:hi][gi], nb2[gj])
-                    accept[gi, gj] = cos * den >= num
-                ai, bi = np.nonzero(accept)
-                out_a.append(a_ids[lo:hi][ai])
-                out_b.append(b_ids[bi])
-        return pd.DataFrame({
-            "a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
-            "b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
-        })
-
-    return (bk.groupby("bucket").cogroup(pr.groupby("pbucket"))
-            .applyInPandas(rescore, "a long, b long"))
+                   F.explode(F.array(*_probe_keys(F.col("bucket"), n_planes)))
+                   .alias("pbucket"))
+    return _bucket_pairs(bk, pr, threshold, max_bucket_freq)
 
 
 def near_dup_pairs_sql(table: str, threshold: tuple[int, int] = (19, 20),
@@ -768,10 +789,82 @@ SELECT query_id, target_id, CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank 
 QUANT_TOPM = 50
 
 
-def _quant_scale(vec_col):
-    """Per-vector quantizer scale 127/max|x| (0 for the zero vector)."""
-    mx = F.array_max(F.transform(vec_col, lambda x: F.abs(x)))
-    return F.when(mx > 0, F.lit(127.0) / mx).otherwise(F.lit(0.0))
+def _quant_np(mat):
+    """int8 floor-quantization of each row: scale = 127/max|x| (0 for the
+    zero vector), value = floor(x * scale) — float64 multiply then floor,
+    so every int matches :func:`quantized_topk_sql` exactly."""
+    import numpy as np
+    mx = np.abs(mat).max(axis=1, keepdims=True)
+    scale = np.divide(127.0, mx, out=np.zeros_like(mx), where=mx > 0)
+    return np.floor(mat * scale).astype(np.int64)
+
+
+def _int8_topm_batches(qids, qmat, m: int, pair_mask, batches):
+    """(query_id, target_id, idot, cosine) per-batch int8 top-m partials.
+
+    Each (__id, __vec) batch is quantized, scored against the quantized
+    queries with an exact integer dot, and keeps per query its top ``m``
+    by (idot desc, id asc) among the admitted pairs — all pairs, or only
+    those ``pair_mask(ids, tmat) -> (B, Q) bool`` admits — never a
+    self-match.  Kept rows carry the dim-ordered-fold exact cosine too, so
+    the caller's rerank needs no vector rejoin."""
+    import numpy as np
+    import pandas as pd
+    qq = _quant_np(qmat).astype(np.float64)           # Q x D
+    qn2 = _fold_dot(qmat, qmat)
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        ids = pdf["__id"].to_numpy(dtype=np.int64)
+        tmat = _vec_matrix(pdf["__vec"])
+        admit = ids[:, None] != qids[None, :]
+        if pair_mask is not None:
+            admit &= pair_mask(ids, tmat)
+        # float64 GEMM on int8-range values is EXACT (|products| <= 127^2
+        # and partial sums stay integers far below 2^53 for any dim < 5e11)
+        # and runs BLAS instead of NumPy's slow int64 matmul loop
+        idot = np.rint(_quant_np(tmat).astype(np.float64) @ qq.T).astype(np.int64)
+        tn2 = _fold_dot(tmat, tmat)
+        sel_b, sel_q = [], []
+        for j in range(idot.shape[1]):
+            keep = np.flatnonzero(admit[:, j])
+            order = keep[np.lexsort((ids[keep], -idot[keep, j]))][:m]
+            sel_b.append(order)
+            sel_q.append(np.full(len(order), j, dtype=np.int64))
+        bi = np.concatenate(sel_b) if sel_b else np.array([], dtype=np.int64)
+        qi = np.concatenate(sel_q) if sel_q else np.array([], dtype=np.int64)
+        if not len(bi):
+            continue
+        cos = _guarded_cos_np(_fold_dot(tmat[bi], qmat[qi]),
+                              tn2[bi], qn2[qi])
+        yield pd.DataFrame({
+            "query_id": qids[qi],
+            "target_id": ids[bi],
+            "idot": idot[bi, qi],
+            "cosine": cos,
+        })
+
+
+def _int8_rerank(embeddings: DataFrame, qids, qmat, k: int, m: int, *,
+                 id_col: str, vec_col: str, pair_mask=None) -> DataFrame:
+    """(query_id, target_id, cosine, rank): the two-stage int8 re-rank —
+    one :func:`_int8_topm_batches` pass, then a window keeping each query's
+    top ``m`` by (idot desc, id asc) and one ranking those by exact cosine
+    (cosine desc, id asc) down to ``k``."""
+    src = spread(embeddings.select(F.col(id_col).alias("__id"),
+                                   F.col(vec_col).alias("__vec")))
+    partial = src.mapInPandas(
+        functools.partial(_int8_topm_batches, qids, qmat, m, pair_mask),
+        "query_id long, target_id long, idot long, cosine double")
+    w1 = Window.partitionBy("query_id").orderBy(F.col("idot").desc(),
+                                                F.col("target_id").asc())
+    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
+                                                F.col("target_id").asc())
+    return (partial.withColumn("mrank", F.row_number().over(w1))
+            .filter(F.col("mrank") <= m)
+            .withColumn("rank", F.row_number().over(w2))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "target_id", "cosine", "rank"))
 
 
 def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
@@ -783,96 +876,27 @@ def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     floor-quantized — floor, not round: identical in every engine) with an
     INTEGER dot product and keeps the top ``m`` per query; stage 2 rescores
     only those ``m`` survivors with the exact double cosine and ranks top
-    ``k``.  At 10^12 vectors the quantized copy is what ships through the
-    scan/shuffle — 8x fewer bytes than float64 (1 B/dim) — and per-executor
-    integer matmuls replace the global sort.  Integer arithmetic is
-    bit-identical across engines, so the survivor SET (ties broken by id)
-    and therefore the final ranking are oracle-exact
-    (:func:`quantized_topk_sql`).
+    ``k``.  Integer arithmetic is bit-identical across engines, so the
+    survivor SET (ties broken by id) and therefore the final ranking are
+    oracle-exact (:func:`quantized_topk_sql`).
 
     r8: the two stages are FUSED into one mapInPandas pass.  The former
     Column path scored every (target, query) pair with an interpreted HOF
     integer dot and sorted ALL N rows per query in a window (116 s at
     sf1.0); the former Arrow twin fixed stage 1 but still rejoined the
     float vectors by id for the stage-2 HOF rescore.  Now each target
-    batch quantizes (identical floor(x * 127/max|x|) float64 arithmetic),
-    computes the exact batch x query int64 dot matrix, keeps its per-batch
-    top ``m`` per query (idot desc, id asc), and emits those rows with BOTH
-    the integer score and the dim-ordered-fold exact cosine — so stage 1's
-    global window ranks O(m * n_batches) rows, and stage 2 is a second sort
-    over the same exchange with no vector rejoin.  Survivor set, cosines
-    and ranks are bit-identical to both former paths."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    batch quantizes (:func:`_quant_np`), computes the exact batch x query
+    int64 dot matrix, keeps its per-batch top ``m`` per query (idot desc,
+    id asc), and emits those rows with BOTH the integer score and the
+    dim-ordered-fold exact cosine — so stage 1's global window ranks
+    O(m * n_batches) rows, and stage 2 is a second sort over the same
+    exchange with no vector rejoin (:func:`_int8_rerank`).  Survivor set,
+    cosines and ranks are bit-identical to both former paths."""
     qids, qmat = _collect_queries(queries, id_col, vec_col)
     if qids is None:
         return _empty_ranked(embeddings)
-
-    def quant_np(mat: "np.ndarray") -> "np.ndarray":
-        # same arithmetic as the Column/SQL quantizer: scale = 127/max|x|
-        # (0 for the zero vector), value = floor(x * scale) — float64
-        # multiply then floor, so every int matches both engines exactly
-        mx = np.abs(mat).max(axis=1, keepdims=True)
-        scale = np.divide(127.0, mx, out=np.zeros_like(mx), where=mx > 0)
-        return np.floor(mat * scale).astype(np.int64)
-
-    qq = quant_np(qmat)                                  # Q x D int64
-    qn2 = _fold_dot(qmat, qmat)
-
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("target_id", T.LongType()),
-        T.StructField("idot", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["__id"].to_numpy(dtype=np.int64)
-            tmat = _vec_matrix(pdf["__vec"])
-            tq = quant_np(tmat)
-            # float64 GEMM on int8-range values is EXACT (|products| <=
-            # 127^2 and partial sums stay integers far below 2^53 for any
-            # dim < 5e11) and runs BLAS instead of NumPy's slow int64
-            # matmul loop
-            idot = np.rint(tq.astype(np.float64)
-                           @ qq.T.astype(np.float64)).astype(np.int64)
-            tn2 = _fold_dot(tmat, tmat)
-            mm = min(m, idot.shape[0])
-            sel_b, sel_q = [], []
-            for j in range(idot.shape[1]):
-                keep = np.flatnonzero(ids != qids[j])    # self-matches out
-                order = keep[np.lexsort((ids[keep], -idot[keep, j]))][:mm]
-                sel_b.append(order)
-                sel_q.append(np.full(len(order), j, dtype=np.int64))
-            bi = np.concatenate(sel_b) if sel_b else np.array([], dtype=np.int64)
-            qi = np.concatenate(sel_q) if sel_q else np.array([], dtype=np.int64)
-            if not len(bi):
-                continue
-            cos = _guarded_cos_np(_fold_dot(tmat[bi], qmat[qi]),
-                                  tn2[bi], qn2[qi])
-            yield pd.DataFrame({
-                "query_id": qids[qi],
-                "target_id": ids[bi],
-                "idot": idot[bi, qi],
-                "cosine": cos,
-            })
-
-    src = spread(embeddings.select(F.col(id_col).alias("__id"),
-                                   F.col(vec_col).alias("__vec")))
-    partial = src.mapInPandas(score, schema)
-    w1 = Window.partitionBy("query_id").orderBy(F.col("idot").desc(),
-                                                F.col("target_id").asc())
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                                F.col("target_id").asc())
-    return (partial.withColumn("mrank", F.row_number().over(w1))
-            .filter(F.col("mrank") <= m)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
+    return (_int8_rerank(embeddings, qids, qmat, k, m,
+                         id_col=id_col, vec_col=vec_col)
             .select("query_id", "target_id", "rank"))
 
 

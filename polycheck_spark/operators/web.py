@@ -184,26 +184,26 @@ def host_suffixes_sql(host_expr: str) -> str:
 
 def domain_block_filter(pages: DataFrame, blocklist: DataFrame, *,
                         id_col: str = "doc_id", url_col: str = "url",
-                        keep: bool = True,
-                        strategy: str = "literal") -> DataFrame:
+                        keep: bool = True) -> DataFrame:
     """Pages whose canonical host is NOT under any blocked domain
     (``keep=False`` returns the blocked complement).  ``blocklist`` is one
     column ``domain`` of already-canonical (lowercase, no www.) domains.
 
-    ``strategy='literal'`` (default): the blocklist is collected to a
-    literal array and the gate is one map-side ``arrays_overlap`` filter —
-    ZERO shuffles, zero joins; the corpus is scanned once.  NOTE the
-    collect is a driver action that runs at PLAN-BUILD time (not at
-    execution), freezing the blocklist snapshot when this function is
-    called.  It is guarded: a blocklist over ``LITERAL_BLOCKLIST_CAP``
-    rows automatically falls back to ``strategy='join'`` (same verdicts,
-    broadcast-join plan) instead of inlining an unbounded literal.
+    The blocklist's size picks the route; all three give the same verdicts:
 
-    ``strategy='join'``: for blocklists too large to inline — suffix
-    explode -> broadcast semi-join -> distinct blocked ids -> one id-keyed
-    anti(/semi)-join back onto the pages; the blocked-id relation is
-    bounded by the blocked page mass and the join keys on ``id_col``
-    alone, never on wide page payloads."""
+    * at most ``LITERAL_OR_CAP`` domains: a flat chain of codegen string
+      compares (host == d OR host ends with '.' + d);
+    * at most ``LITERAL_BLOCKLIST_CAP``: the blocklist as a literal array
+      and one map-side ``arrays_overlap`` filter over the host's suffixes;
+    * larger: suffix explode -> broadcast semi-join -> distinct blocked ids
+      -> one id-keyed anti(/semi)-join back onto the pages; the blocked-id
+      relation is bounded by the blocked page mass and the join keys on
+      ``id_col`` alone, never on wide page payloads.
+
+    The two literal routes run ZERO shuffles and zero joins; the corpus is
+    scanned once.  NOTE the blocklist collect is a driver action that runs
+    at PLAN-BUILD time (not at execution), freezing the blocklist snapshot
+    when this function is called."""
     host = F.substring_index(canonical_url_col(F.col(url_col)), "/", 1)
     # bind the host's label array to a NAMED column before the suffix
     # transform: an expression tree referenced inside a HOF lambda is
@@ -216,30 +216,28 @@ def domain_block_filter(pages: DataFrame, blocklist: DataFrame, *,
     n = F.size(F.col("__hparts"))
     sfx = F.transform(F.sequence(F.lit(1), n),
                       lambda i: F.array_join(F.slice(F.col("__hparts"), i, n), "."))
-    if strategy == "literal":
-        probe = blocklist.select("domain") \
-            .limit(LITERAL_BLOCKLIST_CAP + 1).collect()
-        if len(probe) > LITERAL_BLOCKLIST_CAP:
-            strategy = "join"  # oversized for a literal — broadcast-join it
-        else:
-            doms = sorted({r["domain"] for r in probe})
-            if len(doms) <= LITERAL_OR_CAP:
-                # small blocklist: "d is a dot-suffix of host" is exactly
-                # host == d OR host ends with '.' + d, so the gate compiles
-                # to a flat boolean chain of codegen string compares — the
-                # arrays_overlap form needs the interpreted suffix
-                # transform (HOFs never codegen), which was the whole gate
-                # cost.  Label-boundary semantics are identical: the dot
-                # prefix is what keeps "xblocked.com" out of "blocked.com".
-                hit = F.lit(False)
-                for d in doms:
-                    hit = hit | (F.col("__h") == d) \
-                        | F.col("__h").endswith("." + d)
-                hosted = pages.withColumn("__h", host)
-                return hosted.filter(~hit if keep else hit).drop("__h")
-            arr = F.array([F.lit(d) for d in doms])
-            hit = F.arrays_overlap(sfx, arr)
-            return parted.filter(~hit if keep else hit).drop("__hparts")
+    probe = blocklist.select("domain") \
+        .limit(LITERAL_BLOCKLIST_CAP + 1).collect()
+    if len(probe) <= LITERAL_BLOCKLIST_CAP:
+        doms = sorted({r["domain"] for r in probe})
+        if len(doms) <= LITERAL_OR_CAP:
+            # small blocklist: "d is a dot-suffix of host" is exactly
+            # host == d OR host ends with '.' + d, so the gate compiles
+            # to a flat boolean chain of codegen string compares — the
+            # arrays_overlap form needs the interpreted suffix
+            # transform (HOFs never codegen), which was the whole gate
+            # cost.  Label-boundary semantics are identical: the dot
+            # prefix is what keeps "xblocked.com" out of "blocked.com".
+            hit = F.lit(False)
+            for d in doms:
+                hit = hit | (F.col("__h") == d) \
+                    | F.col("__h").endswith("." + d)
+            hosted = pages.withColumn("__h", host)
+            return hosted.filter(~hit if keep else hit).drop("__h")
+        arr = F.array([F.lit(d) for d in doms])
+        hit = F.arrays_overlap(sfx, arr)
+        return parted.filter(~hit if keep else hit).drop("__hparts")
+    # oversized for a literal: broadcast-join it
     cand = (parted.select(id_col, F.explode(sfx).alias("__d")))
     blocked_ids = (cand.join(
         F.broadcast(blocklist.select(F.col("domain").alias("__d")).distinct()),

@@ -130,6 +130,25 @@ def test_jobs_stage_only_through_the_writer():
     assert hits == [], hits
 
 
+def test_jobs_run_no_python_batches_of_their_own():
+    """Jobs run the operators' kernels: no job defines its own Arrow-batch
+    Python pass or interpreted array lambda — it calls the operator that
+    owns one, whose output the oracles check."""
+    import ast
+    import pathlib
+    import polycheck_spark.jobs as J
+    banned = {"mapInPandas", "applyInPandas", "pandas_udf", "zip_with",
+              "aggregate"}
+    hits = []
+    for p in sorted(pathlib.Path(J.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text(), str(p))):
+            name = (node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name) else None)
+            if name in banned:
+                hits.append((p.name, name))
+    assert hits == [], hits
+
+
 def test_lineage_metrics_recorded(spark, tmp_path):
     out_dir = str(tmp_path / "job")
     run_job(spark, 1000, 3, out_dir)
@@ -181,11 +200,14 @@ def test_snapshot_time_travel(spark, tmp_path):
 
 def test_near_dup_job_resumable(spark, tmp_path):
     """Embedding near-dup job (LSH buckets -> per-bucket pairs + rescore ->
-    CC -> survivors): a kill before a bucket commits, then a resume, must
-    produce the identical pair set AND identical survivors as an
-    uninterrupted run — the pair stage is exactly-once per work bucket and
-    the closing CC stage is idempotent over the committed pairs."""
+    CC -> survivors): its pair set equals near_dup_pairs over the same
+    corpus and plane count, and a kill before a bucket commits, then a
+    resume, must produce the identical pair set AND identical survivors as
+    an uninterrupted run — the pair stage is exactly-once per work bucket
+    and the closing CC stage is idempotent over the committed pairs."""
+    from polycheck_spark.jobs import near_dup_job as ND
     from polycheck_spark.jobs.near_dup_job import DUP_OFFSET, run_job as nd_run
+    from polycheck_spark.operators import similarity as SIM
 
     n_vecs, n_buckets = 3000, 6
     clean = str(tmp_path / "nd_clean")
@@ -197,6 +219,10 @@ def test_near_dup_job_resumable(spark, tmp_path):
     # (cluster min is the original id), so found copies leave the survivors
     pairs = sorted(tuple(r) for r in
                    CheckpointedWriter(clean).read_output(spark).collect())
+    exp = sorted(tuple(r) for r in SIM.near_dup_pairs(
+        ND.corpus(spark, n_vecs, 16), ND.THRESHOLD,
+        n_planes=SIM.scaled_n_planes(n_vecs)).collect())
+    assert pairs == exp
     surv = {r["id"] for r in spark.read.parquet(ref["survivors_path"]).collect()}
     found_copies = {b for a, b in pairs if b == a + DUP_OFFSET}
     assert found_copies and found_copies.isdisjoint(surv)
@@ -303,6 +329,16 @@ def test_ann_topk_job_exact_and_resumable(spark, tmp_path):
              spark.read.parquet(pruned["topk_path"]).collect()}
     exact_pairs = {(a, b) for a, b, _ in got}
     assert len(got_m & exact_pairs) >= 0.9 * len(exact_pairs)
+
+
+def test_ann_topk_job_fills_every_bucket(spark, tmp_path):
+    """Work buckets follow the IVF list index: centroid ids are multiples
+    of the centroid modulus (46 here, even), so bucketing by the raw id
+    modulo 6 would leave buckets 1, 3 and 5 empty."""
+    from polycheck_spark.jobs.ann_topk_job import run_job as ann_run
+
+    out = ann_run(spark, 3000, 6, str(tmp_path / "ann"), dim=8, k=3)
+    assert all(n > 0 for n in out["snapshot"]["row_counts"].values()), out
 
 
 def test_corpus_clean_job_end_to_end_and_resumable(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Text / dedup / similarity operators vs their DuckDB SQL twins."""
 
 import duckdb
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -386,10 +387,11 @@ def test_lsh_ann_recall_on_clustered_data(spark):
     assert ivf_recall >= 0.8, ivf_recall
 
 
-def test_plane_weights_bitwise_equal(spark):
-    """The precomputed literal plane-weight matrix must be BIT-identical to
-    DuckDB's md5 derivation in the oracles (buckets — and therefore oracle
-    hashes — depend on exact sign boundaries)."""
+def test_plane_weights_bitwise_equal():
+    """The precomputed plane-weight matrix must be BIT-identical to DuckDB's
+    md5 derivation in the oracles, and the fold bucketer's buckets equal
+    the oracle's (buckets — and therefore oracle hashes — depend on exact
+    sign boundaries)."""
     import struct
     dim = 16
     con = duckdb.connect()
@@ -399,13 +401,17 @@ def test_plane_weights_bitwise_equal(spark):
         duck = con.execute(sql).fetchone()[0]
         assert ([struct.pack("<d", w) for w in row]
                 == [struct.pack("<d", w) for w in duck]), p
-    rows = [(i, [((i * 13 + d * 7) % 29 - 14) / 14.0 for d in range(dim)])
+    rows = [[((i * 13 + d * 7) % 29 - 14) / 14.0 for d in range(dim)]
             for i in range(64)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lit_path = emb.select("vec_id",
-                          S.bucket_key_col(F.col("embedding"), dim).alias("b"))
-    # the literal path's plan carries no md5 call at all
-    assert "md5" not in lit_path._jdf.queryExecution().executedPlan().toString()
+    got = S._fold_buckets_np(np.array(rows), *S._lsh_planes(dim, S.N_PLANES))
+    con.execute("CREATE TABLE v AS SELECT * FROM (VALUES "
+                + ", ".join(f"({i}, {r}::DOUBLE[])" for i, r in enumerate(rows))
+                + ") t(vec_id, embedding)")
+    duck = [b for (b,) in con.execute(
+        f"SELECT {S._bucket_sql('embedding')}::BIGINT FROM v ORDER BY vec_id"
+    ).fetchall()]
+    assert got.tolist() == duck
+    assert len(set(duck)) > 8          # the rows spread over many buckets
 
 
 def test_ivf_centroid_budget_bounded(spark):

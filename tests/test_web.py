@@ -136,14 +136,16 @@ def test_url_dedup_and_host_stats_match_oracle(spark, tmp_path):
         assert n_canonical <= n_fetches
 
 
+_SUFFIX_ROWS = [(1, "http://blocked.com/a"),          # exact -> dropped
+                (2, "http://www.BLOCKED.com/b"),      # www/case -> dropped
+                (3, "http://deep.sub.blocked.com/c"), # any depth -> dropped
+                (4, "http://notblocked.com/d"),       # different domain -> kept
+                (5, "http://blocked.com.evil.org/e"), # string-suffix trap -> kept
+                (6, "https://fine.org/f")]            # unrelated -> kept
+
+
 def test_domain_block_filter_suffix_semantics(spark):
-    rows = [(1, "http://blocked.com/a"),          # exact -> dropped
-            (2, "http://www.BLOCKED.com/b"),      # www/case -> dropped
-            (3, "http://deep.sub.blocked.com/c"), # any depth -> dropped
-            (4, "http://notblocked.com/d"),       # different domain -> kept
-            (5, "http://blocked.com.evil.org/e"), # string-suffix trap -> kept
-            (6, "https://fine.org/f")]            # unrelated -> kept
-    pages = spark.createDataFrame(rows, "doc_id long, url string")
+    pages = spark.createDataFrame(_SUFFIX_ROWS, "doc_id long, url string")
     bl = spark.createDataFrame([("blocked.com",)], "domain string")
     kept = sorted(r["doc_id"] for r in
                   W.domain_block_filter(pages, bl).collect())
@@ -153,20 +155,39 @@ def test_domain_block_filter_suffix_semantics(spark):
     assert dropped == [1, 2, 3]
 
 
-def test_domain_block_filter_strategies_agree(spark):
-    rows = [(i, u) for i, u in enumerate(
-        ["http://blocked.com/a", "http://x.sub.blocked.com/b",
-         "http://ok.com/c", "http://blocked.com.evil.org/d"])]
-    pages = spark.createDataFrame(rows, "doc_id long, url string")
-    bl = spark.createDataFrame([("blocked.com",)], "domain string")
-    lit = sorted(r["doc_id"] for r in
-                 W.domain_block_filter(pages, bl, strategy="literal").collect())
-    join = sorted(r["doc_id"] for r in
-                  W.domain_block_filter(pages, bl, strategy="join").collect())
-    assert lit == join == [2, 3]
+def test_domain_block_filter_strategies_agree(spark, monkeypatch):
+    """The blocklist size picks the route: OR chain, literal-array overlap
+    or broadcast join.  One blocklist of LITERAL_OR_CAP + 1 domains takes
+    the overlap route as is and the other two with a cap moved past it;
+    all three keep and drop the same suffix-semantics rows."""
+    pages = spark.createDataFrame(_SUFFIX_ROWS, "doc_id long, url string")
+    n = W.LITERAL_OR_CAP + 1
+    bl = spark.createDataFrame(
+        [("blocked.com",)] + [(f"filler{i}.net",) for i in range(n - 1)],
+        "domain string")
+
+    def verdicts():
+        plan = (W.domain_block_filter(pages, bl)
+                ._jdf.queryExecution().executedPlan().toString())
+        kept = sorted(r["doc_id"] for r in
+                      W.domain_block_filter(pages, bl).collect())
+        dropped = sorted(r["doc_id"] for r in
+                         W.domain_block_filter(pages, bl, keep=False).collect())
+        return plan, (kept, dropped)
+
+    overlap_plan, overlap = verdicts()
+    assert "arrays_overlap" in overlap_plan, overlap_plan
+    monkeypatch.setattr(W, "LITERAL_OR_CAP", n)
+    or_plan, or_chain = verdicts()
+    assert "arrays_overlap" not in or_plan and "Join" not in or_plan, or_plan
+    monkeypatch.setattr(W, "LITERAL_BLOCKLIST_CAP", n - 1)
+    join_plan, join = verdicts()
+    assert "BroadcastHashJoin" in join_plan, join_plan
+    assert or_chain == overlap == join == ([4, 5, 6], [1, 2, 3])
 
 
-def test_domain_block_filter_literal_is_map_side_join_broadcasts(spark):
+def test_domain_block_filter_literal_is_map_side_join_broadcasts(spark,
+                                                                  monkeypatch):
     pages = spark.createDataFrame([(1, "http://x.com/a")],
                                   "doc_id long, url string")
     bl = spark.createDataFrame([("blocked.com",)], "domain string")
@@ -174,7 +195,8 @@ def test_domain_block_filter_literal_is_map_side_join_broadcasts(spark):
                 ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in lit_plan, lit_plan      # zero shuffles
     assert "Join" not in lit_plan, lit_plan          # zero joins
-    join_plan = (W.domain_block_filter(pages, bl, strategy="join")
+    monkeypatch.setattr(W, "LITERAL_BLOCKLIST_CAP", 0)   # 1 domain > 0
+    join_plan = (W.domain_block_filter(pages, bl)
                  ._jdf.queryExecution().executedPlan().toString())
     assert "BroadcastHashJoin" in join_plan, join_plan
 

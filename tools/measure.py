@@ -448,7 +448,7 @@ def near_dup_300k(spark, s, cpus):
     recall on the injected perturbation copies is the quality evidence the SQL oracle cannot give
     at this plane count."""
     n, dim, off = _sized(300_000, s), 32, 10_000_000
-    n_planes = max(8, (n // 16 - 1).bit_length())
+    n_planes = SIM.scaled_n_planes(n)
     corpus = synth.inject_perturbed_copies(synth.generate_embeddings(spark, n, dim),
                                            dim, 20, off)
     n_inj = corpus.count() - n
