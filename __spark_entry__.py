@@ -310,7 +310,7 @@ def q_pii_profile(spark, sf_dir):
     """Corpus PII exposure profile per language — the policy-decision
     aggregate (docs carrying each kind, total spans)."""
     from polycheck_spark.operators import pii as P
-    return (P.pii_profile(_pii_docs(spark, sf_dir), group_col="lang")
+    return (P.pii_profile(_pii_docs(spark, sf_dir))
             .orderBy("lang"))
 
 
@@ -947,7 +947,7 @@ def q_bloom_inc_dedup(spark, sf_dir):
     new = docs.filter(F.pmod(F.col("doc_id"), F.lit(INC_BATCH_MOD)) == 0)
     seen = (docs.filter(F.pmod(F.col("doc_id"), F.lit(INC_BATCH_MOD)) != 0)
             .select(F.md5(F.col("text")).alias("digest")))
-    return (bloom_incremental_dedup(new, seen, m_bits=1 << 16, k=5)
+    return (bloom_incremental_dedup(new, seen, m_bits=1 << 16)
             .orderBy("doc_id"))
 
 
@@ -963,7 +963,7 @@ def q_common_ngrams(spark, sf_dir):
     """Per-doc corpus-boilerplate stats: distinct shingles vs shingles whose
     corpus doc-frequency >= 2 — the linear-cost screen for template-heavy
     pages that pairwise dedup can't catch."""
-    return (D.common_shingle_stats(_docs(spark, sf_dir), min_df=2)
+    return (D.common_shingle_stats(_docs(spark, sf_dir))
             .orderBy("doc_id"))
 
 
@@ -1631,8 +1631,7 @@ def q_events_asof(spark, sf_dir):
     snaps = (ev.filter(F.col("event_id") % 7 == 0)
              .groupBy("user_id", "ts")
              .agg(F.min("event_id").alias("snap_id")))
-    j = TP.asof_join(ev, snaps, on=["user_id"], left_ts="ts",
-                     right_ts="ts", value_cols=["snap_id"])
+    j = TP.asof_join(ev, snaps, on=["user_id"], value_cols=["snap_id"])
     age = (F.unix_millis(F.col("ts").cast("timestamp"))
            - F.unix_millis(F.col("asof_ts").cast("timestamp")))
     return (j.select("event_id", "user_id", "snap_id",
@@ -2727,7 +2726,7 @@ ORDER BY a, b""",
         "bloom_inc_dedup": _incremental_dedup_oracle(),
         "containment": (D.containment_pairs_sql("documents", threshold=(1, 2))
                         + " ORDER BY contained, container"),
-        "common_ngrams": (D.common_shingle_stats_sql("documents", min_df=2)
+        "common_ngrams": (D.common_shingle_stats_sql("documents")
                           + " ORDER BY doc_id"),
         "dedup_survivors": _dedup_survivors_oracle(),
         "interval_overlap": _interval_overlap_oracle(),

@@ -42,19 +42,17 @@ def _snap16(v: float) -> float:
     return round(v * 16.0) / 16.0
 
 
-def synthetic_layer(num_polygons: int = 12, min_vertices: int = 3,
-                    max_vertices: int = 12, base_radius: float = 12.0,
+def synthetic_layer(num_polygons: int = 12, base_radius: float = 12.0,
                     seed: int = 7) -> list[dict]:
     """Deterministic lon/lat polygon layer (no RNG state: pure arithmetic).
 
     Returns a list of dicts: {polygon_id, name, vertices [(lon, lat), ...]}.
-    Polygon k is a regular V-gon (V cycles through [min_vertices, max_vertices])
+    Polygon k is a regular V-gon (V cycles through [3, 12])
     centered on an arithmetic low-discrepancy sequence, radius varying with k.
     """
     polys = []
-    span_v = max_vertices - min_vertices + 1
     for k in range(num_polygons):
-        v = min_vertices + (k * 5 + seed) % span_v
+        v = 3 + (k * 5 + seed) % 10
         # Weyl sequences for centers: irrational-step rotations, deterministic
         cx = -180.0 + 360.0 * (((k + seed) * 0.7548776662466927) % 1.0)
         cy = -60.0 + 120.0 * (((k + seed) * 0.5698402909980532) % 1.0)
@@ -70,17 +68,16 @@ def synthetic_layer(num_polygons: int = 12, min_vertices: int = 3,
     return polys
 
 
-def golden_layer_lonlat(scale: float = 8.0, shift: tuple[float, float] = (0.0, 0.0)) -> list[dict]:
-    """Golden polygons placed into lon/lat space (affine: v*scale + shift).
+def golden_layer_lonlat() -> list[dict]:
+    """Golden polygons placed into lon/lat space, snapped to 1/16 degree.
 
-    With the default identity-ish placement the star spans [-5,5]^2 degrees
-    around (0,0) ("null island"), which deliberately coincides with geocoding
-    hot spots so the skew path sees real polygon hits.
+    The star spans [-5,5]^2 degrees around (0,0) ("null island"), which
+    deliberately coincides with geocoding hot spots so the skew path sees
+    real polygon hits.
     """
     out = []
     for name, verts in GOLDEN_POLYGONS.items():
-        vv = [(_snap16(x / 8.0 * scale + shift[0]), _snap16(y / 8.0 * scale + shift[1]))
-              for (x, y) in verts]
+        vv = [(_snap16(x), _snap16(y)) for (x, y) in verts]
         out.append({"polygon_id": GOLDEN_IDS[name], "name": name, "vertices": vv})
     return out
 
@@ -121,9 +118,7 @@ def edges_values_sql(layer: list[dict]) -> str:
     return ",\n    ".join(rows)
 
 
-def winding_join_sql(points_cte: str, layer: list[dict],
-                     point_id: str = "doc_id", lon: str = "lon", lat: str = "lat",
-                     bbox_prefilter: bool = True) -> str:
+def winding_join_sql(points_cte: str, layer: list[dict]) -> str:
     """Full DuckDB query: nonzero-winding PIP join of ``points_cte`` vs layer.
 
     Float32-exact twin of kernel.contains: points are rounded to float32 and
@@ -143,16 +138,15 @@ def winding_join_sql(points_cte: str, layer: list[dict],
         bbox_rows.append(f"({p['polygon_id']}, {_flit(min(xs))}, {_flit(min(ys))}, "
                          f"{_flit(max(xs))}, {_flit(max(ys))})")
     bbox_filter = (
-        f"JOIN bboxes b ON b.polygon_id = e.polygon_id "
-        f"AND p.plon >= b.xmin AND p.plon <= b.xmax "
-        f"AND p.plat >= b.ymin AND p.plat <= b.ymax"
-    ) if bbox_prefilter else ""
+        "JOIN bboxes b ON b.polygon_id = e.polygon_id "
+        "AND p.plon >= b.xmin AND p.plon <= b.xmax "
+        "AND p.plat >= b.ymin AND p.plat <= b.ymax")
     side = ("CAST(CAST(CAST(p.plat - e.y1 AS FLOAT) * e.dx AS FLOAT)"
             " - CAST(CAST(p.plon - e.x1 AS FLOAT) * e.dy AS FLOAT) AS FLOAT)")
     return f"""
 WITH pts AS ({points_cte}),
 pts32 AS (
-  SELECT {point_id}, CAST({lon} AS FLOAT) AS plon, CAST({lat} AS FLOAT) AS plat
+  SELECT doc_id, CAST(lon AS FLOAT) AS plon, CAST(lat AS FLOAT) AS plat
   FROM pts
 ),
 edges(polygon_id, x1, y1, x2, y2, dx, dy) AS (VALUES
@@ -168,7 +162,7 @@ wn AS (
              WHEN y1 > plat AND y2 <= plat AND side < 0 THEN -1
              ELSE 0 END) AS w
   FROM (
-    SELECT p.{point_id} AS point_id, e.polygon_id,
+    SELECT p.doc_id AS point_id, e.polygon_id,
            p.plat, e.y1, e.y2, {side} AS side
     FROM pts32 p
     JOIN edges e ON TRUE

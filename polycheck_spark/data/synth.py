@@ -84,16 +84,15 @@ def geocoded_pages(spark: SparkSession, num_pages: int, partitions: int | None =
     return df.withColumn("lon", lon).withColumn("lat", lat)
 
 
-def generate_embeddings(spark: SparkSession, num_vecs: int, dim: int = 16,
-                        partitions: int | None = None) -> DataFrame:
+def generate_embeddings(spark: SparkSession, num_vecs: int,
+                        dim: int = 16) -> DataFrame:
     """Deterministic (vec_id, embedding array<double>) table: component j of
     vector i is an xxhash64(i, j)-derived uniform in [-1, 1] — pure Column
     arithmetic like :func:`generate_pages`, so the same vector is produced
     for any partitioning/rerun (what makes embedding-job resume testable).
     Random vectors are near-orthogonal, so only deliberately injected
     perturbation copies form near-duplicate pairs."""
-    df = (spark.range(0, num_vecs, 1, partitions) if partitions
-          else spark.range(num_vecs))
+    df = spark.range(num_vecs)
     vec = F.transform(
         F.sequence(F.lit(0), F.lit(dim - 1)),
         lambda j: (F.pmod(F.xxhash64(F.col("id"), j), F.lit(2001)) - F.lit(1000))
@@ -101,20 +100,18 @@ def generate_embeddings(spark: SparkSession, num_vecs: int, dim: int = 16,
     return df.select(F.col("id").alias("vec_id"), vec.alias("embedding"))
 
 
-def inject_perturbed_copies(emb: DataFrame, dim: int, every: int, offset: int,
-                            delta: float = 0.25,
-                            id_col: str = "vec_id",
-                            vec_col: str = "embedding") -> DataFrame:
+def inject_perturbed_copies(emb: DataFrame, dim: int, every: int,
+                            offset: int) -> DataFrame:
     """Corpus + near-duplicate injections: every ``id % every == 0`` vector
-    re-appears at ``id + offset`` with element 0 shifted by ``delta`` —
+    re-appears at ``id + offset`` with element 0 shifted by 0.25 —
     the deterministic ground truth the near-dup job and the stress harness
     measure recall against (random vectors are near-orthogonal, so these
     are the only constructed near-dups)."""
-    pert = F.concat(F.array(F.element_at(F.col(vec_col), 1) + F.lit(delta)),
-                    F.slice(F.col(vec_col), 2, dim - 1))
-    dups = (emb.filter(F.col(id_col) % every == 0)
-            .select((F.col(id_col) + offset).alias(id_col),
-                    pert.alias(vec_col)))
+    pert = F.concat(F.array(F.element_at(F.col("embedding"), 1) + F.lit(0.25)),
+                    F.slice(F.col("embedding"), 2, dim - 1))
+    dups = (emb.filter(F.col("vec_id") % every == 0)
+            .select((F.col("vec_id") + offset).alias("vec_id"),
+                    pert.alias("embedding")))
     return emb.unionByName(dups)
 
 

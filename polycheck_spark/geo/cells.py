@@ -93,12 +93,11 @@ def decode(cid) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return _compact_np(morton), _compact_np(morton >> 1), res
 
 
-def parent(cid, parent_res: int | None = None) -> np.ndarray:
-    """Containing cell at a coarser resolution (default: res-1)."""
+def parent(cid) -> np.ndarray:
+    """Containing cell one resolution coarser."""
     ix, iy, res = decode(cid)
-    pres = (res - 1) if parent_res is None else parent_res
-    shift = res - pres
-    return encode(ix >> shift, iy >> shift, int(np.max(pres)) if np.ndim(pres) else int(pres))
+    pres = res - 1
+    return encode(ix >> 1, iy >> 1, int(np.max(pres)) if np.ndim(pres) else int(pres))
 
 
 def children(cid) -> np.ndarray:
@@ -173,8 +172,8 @@ def cell_id_col(lon_col, lat_col, res: int):
     return encode_col(ix, iy, res)
 
 
-def with_cell_id(df, lon_col, lat_col, res: int, out: str = "cell_id"):
-    """Add ``out`` = cell_id(lon, lat, res) via staged projections.
+def with_cell_id(df, lon_col, lat_col, res: int):
+    """Add ``cell_id`` = cell_id(lon, lat, res) via staged projections.
 
     Each Morton spread level lands in its own column, so Catalyst keeps the
     levels as separate Projects (CollapseProject refuses to duplicate
@@ -183,7 +182,7 @@ def with_cell_id(df, lon_col, lat_col, res: int, out: str = "cell_id"):
     """
     from pyspark.sql import functions as F
     ix, iy = ixiy_cols(lon_col, lat_col, res)
-    cx, cy = f"__{out}_x", f"__{out}_y"
+    cx, cy = "__cell_id_x", "__cell_id_y"
     df = df.withColumn(cx, ix).withColumn(cy, iy)
     for shift, mask in _SPREAD_MASKS:
         df = df.withColumn(
@@ -191,7 +190,7 @@ def with_cell_id(df, lon_col, lat_col, res: int, out: str = "cell_id"):
         df = df.withColumn(
             cy, (F.col(cy).bitwiseOR(F.shiftleft(F.col(cy), shift))).bitwiseAND(F.lit(mask)))
     morton = F.col(cx).bitwiseOR(F.shiftleft(F.col(cy), 1))
-    return df.withColumn(out, F.lit(res << RES_SHIFT).bitwiseOR(morton)).drop(cx, cy)
+    return df.withColumn("cell_id", F.lit(res << RES_SHIFT).bitwiseOR(morton)).drop(cx, cy)
 
 
 # ---------------------------------------------------------------------------

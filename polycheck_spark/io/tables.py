@@ -220,8 +220,20 @@ class CheckpointedWriter:
             spark, rows, "bucket int, rows long, t_start double, t_end double, "
                          "latency_sec double, status string")
 
+    def _bucket_paths(self, buckets, what: str) -> list[str]:
+        """The ``bucket=K/`` directories of ``buckets`` (``what`` names the
+        table in the error when there are none)."""
+        paths = [os.path.join(self.out_dir, f"bucket={b}") for b in buckets]
+        if not paths:
+            raise ValueError(f"{what} has no buckets")
+        return paths
+
     def read_output(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.out_dir, "bucket=*"))
+        """The committed buckets: exactly the directories the lineage
+        markers name.  A ``bucket=K/`` that a crashed :meth:`run` wrote but
+        never committed is not read."""
+        return spark.read.parquet(*self._bucket_paths(
+            sorted(self.completed_buckets()), f"the output under {self.out_dir}"))
 
     # -- time travel -----------------------------------------------------------
 
@@ -244,11 +256,8 @@ class CheckpointedWriter:
         manifest = self.snapshot(snapshot_id)
         if manifest is None:
             raise ValueError(f"no snapshot {snapshot_id} under {self.snapshot_dir}")
-        paths = [os.path.join(self.out_dir, f"bucket={b}")
-                 for b in manifest["buckets"]]
-        if not paths:
-            raise ValueError(f"snapshot {snapshot_id} is empty")
-        return spark.read.parquet(*paths)
+        return spark.read.parquet(*self._bucket_paths(
+            manifest["buckets"], f"snapshot {snapshot_id}"))
 
     def validate_snapshot(self, snapshot_id: int) -> dict:
         """Cross-check a snapshot's recorded per-bucket row counts against
@@ -302,11 +311,8 @@ class CheckpointedWriter:
         manifest = self.snapshot(snapshot_id)
         if manifest is None:
             raise ValueError(f"no snapshot {snapshot_id} under {self.snapshot_dir}")
-        paths = [os.path.join(self.out_dir, f"bucket={b}")
-                 for b in manifest["buckets"]]
-        if not paths:
-            raise ValueError(f"snapshot {snapshot_id} is empty")
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return spark.read.option("mergeSchema", "true").parquet(
+            *self._bucket_paths(manifest["buckets"], f"snapshot {snapshot_id}"))
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Expire old snapshot manifests (Iceberg ``expire_snapshots``):

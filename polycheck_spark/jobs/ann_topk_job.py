@@ -59,23 +59,24 @@ STAGE = "emb_by_list"
 #: staged columns and work-bucket rule — a marker written for another
 #: layout re-stages
 LAYOUT = "vec_id,list_id,embedding; wb = list index % buckets"
+#: every Q_MOD-th vector is a query
+Q_MOD = 101
+#: integer-prefilter width per unit of k
+PREFILTER_PER_K = 4
 
 
 def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
-            dim: int = 64, k: int = 10, n_probe: int = SIM.IVF_NPROBE,
-            q_mod: int = 101, top_m: int | None = None,
-            fail_on=None) -> dict:
+            dim: int = 64, k: int = 10, fail_on=None) -> dict:
     """Synthesizes a deterministic embedding corpus, takes every
-    ``vec_id % q_mod == 0`` vector as a query, and computes each query's
-    top-k neighbors over its ``n_probe`` nearest IVF lists (the
+    ``vec_id % Q_MOD == 0`` vector as a query, and computes each query's
+    top-k neighbors over its ``SIM.IVF_NPROBE`` nearest IVF lists (the
     ``SIM.IVF_CENTROID_BUDGET`` centroids of ``ivf_topk``), resumably.
     Returns run stats + snapshot + result path.
 
-    ``top_m`` (default 4k) is the per-(query, bucket) integer-prefilter
-    width; pass a value >= the largest bucket candidate count to disable
-    pruning (then the output equals ivf_topk exactly)."""
-    if top_m is None:
-        top_m = 4 * k
+    ``top_m = PREFILTER_PER_K * k`` is the per-(query, bucket)
+    integer-prefilter width; at or above the largest bucket candidate
+    count it prunes nothing (then the output equals ivf_topk exactly)."""
+    top_m = PREFILTER_PER_K * k
     writer = CheckpointedWriter(out_dir)
     # centroid ids are the multiples of mod, so list_id // mod numbers the
     # lists 0, 1, 2, ... and consecutive lists go to consecutive work
@@ -86,8 +87,8 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
     cents = SIM._ivf_centroids(corpus, num_vecs, SIM.IVF_CENTROID_BUDGET,
                                id_col="vec_id", vec_col="embedding")
     qids, qmat = SIM._collect_queries(
-        corpus.filter(F.col("vec_id") % q_mod == 0), "vec_id", "embedding")
-    qprobe = SIM._ivf_probe_lists(cents, qmat, n_probe)
+        corpus.filter(F.col("vec_id") % Q_MOD == 0), "vec_id", "embedding")
+    qprobe = SIM._ivf_probe_lists(cents, qmat, SIM.IVF_NPROBE)
 
     def write(path):
         (SIM.ivf_lists(corpus, cents)
@@ -97,8 +98,8 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
     # k, top_m, n_probe and q_mod shape every bucket's output, not the
     # staged data: they are here so a change to any resets the bucket lineage
     staged = writer.stage(STAGE, {"vecs": num_vecs, "buckets": n_buckets,
-                                  "dim": dim, "n_probe": n_probe,
-                                  "q_mod": q_mod, "k": k, "top_m": top_m,
+                                  "dim": dim, "n_probe": SIM.IVF_NPROBE,
+                                  "q_mod": Q_MOD, "k": k, "top_m": top_m,
                                   "n_centroids": SIM.IVF_CENTROID_BUDGET,
                                   "layout": LAYOUT}, write)
 

@@ -26,7 +26,7 @@ pipeline runs over a crawl —
   decidable bucket-locally because rows carry the full 16-value signature
   — so bucket outputs are disjoint and their union is exactly the global
   candidate set (the near_dup_job property).  Pairs are verified by
-  signature-agreement fraction (>= agree_min of 16) before emission.
+  signature-agreement fraction (>= AGREE_MIN of 16) before emission.
 * **Finalize**: fuzzy pairs are a tiny relation (bounded by true near-dup
   mass); connected components runs on their ENDPOINTS only, and survivors
   come from one anti-join of the clean corpus against the non-minimum
@@ -57,9 +57,19 @@ STAGE2 = "survivors_by_band"
 
 BOILERPLATE = "subscribe to our newsletter for daily updates"
 
+#: 1-in-N pages of the synthetic crawl that get a URL variant, an exact
+#: copy and a near copy
+VARIANT_MOD, DUP_MOD, NEAR_MOD = 7, 5, 6
+#: token gate; at least the shingle width (3), so every gated doc has a
+#: MinHash signature
+MIN_TOKENS = 6
+#: signature values (of 16) a candidate pair must agree on
+AGREE_MIN = 12
+#: phase-2 crash injection (a bucket predicate), for the resume tests
+FAIL_ON_PAIRS = None
 
-def _synth_crawl(spark, num_pages: int, variant_mod: int, dup_mod: int,
-                 near_mod: int):
+
+def _synth_crawl(spark, num_pages: int):
     """Deterministic crawl with the failure modes each stage exists for:
     url variants of the same fetch (frontier dedup), exact text copies
     under different canonicals (exact dedup), NEAR copies — one token
@@ -69,15 +79,15 @@ def _synth_crawl(spark, num_pages: int, variant_mod: int, dup_mod: int,
     pages = synth.generate_pages(spark, num_pages) \
         .select("url", "warc_ts", "text", "lang")
     # same fetch re-crawled with a tracking query: collapses at the frontier
-    variants = (pages.filter(F.pmod(F.xxhash64("url", F.lit(1)), F.lit(variant_mod)) == 0)
+    variants = (pages.filter(F.pmod(F.xxhash64("url", F.lit(1)), F.lit(VARIANT_MOD)) == 0)
                 .withColumn("url", F.concat(F.col("url"), F.lit("?utm=1"))))
     # same bytes under a DIFFERENT canonical: survives the frontier, caught
     # by the digest buckets
-    copies = (pages.filter(F.pmod(F.xxhash64("url", F.lit(2)), F.lit(dup_mod)) == 0)
+    copies = (pages.filter(F.pmod(F.xxhash64("url", F.lit(2)), F.lit(DUP_MOD)) == 0)
               .withColumn("url", F.concat(F.col("url"), F.lit("/copy"))))
     # near copy: distinct canonical AND distinct bytes, but almost every
     # shingle shared — only the fuzzy stage can catch these
-    nears = (pages.filter(F.pmod(F.xxhash64("url", F.lit(3)), F.lit(near_mod)) == 0)
+    nears = (pages.filter(F.pmod(F.xxhash64("url", F.lit(3)), F.lit(NEAR_MOD)) == 0)
              .withColumn("url", F.concat(F.col("url"), F.lit("/v2")))
              .withColumn("text", F.concat(F.col("text"), F.lit(" updated"))))
     crawl = (pages.unionByName(variants).unionByName(copies)
@@ -101,26 +111,18 @@ def _extract_lines_col(html):
 
 
 def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
-            variant_mod: int = 7, dup_mod: int = 5, near_mod: int = 6,
-            min_tokens: int = 6,
-            max_line_df: int | None = None, langs_keep: tuple[str, ...] | None = None,
-            agree_min: int = 12, fail_on=None, fail_on_pairs=None) -> dict:
-    if min_tokens < 3:
-        raise ValueError("min_tokens must cover the shingle width (>= 3) so "
-                         "every gated doc has a MinHash signature")
-    if max_line_df is None:
-        # the planted boilerplate rides ~1/3 of pages; organic lines are
-        # text-level dups bounded by the copy injection (~1/dup_mod)
-        max_line_df = max(8, num_pages // 50)
-    if langs_keep is None:
-        langs_keep = tuple(synth.LANGS[:-1])   # gate drops the last language
+            fail_on=None) -> dict:
+    # the planted boilerplate rides ~1/3 of pages; organic lines are
+    # text-level dups bounded by the copy injection (~1/DUP_MOD)
+    max_line_df = max(8, num_pages // 50)
+    langs_keep = tuple(synth.LANGS[:-1])   # gate drops the last language
 
     phase1 = CheckpointedWriter(os.path.join(out_dir, "cleaned"))
     phase2 = CheckpointedWriter(os.path.join(out_dir, "fuzzy_pairs"))
 
     # ---- phase 1 staging: frontier dedup + extract + strip + gates --------
     def write_clean(path):
-        crawl = _synth_crawl(spark, num_pages, variant_mod, dup_mod, near_mod)
+        crawl = _synth_crawl(spark, num_pages)
         canon = crawl.withColumn("curl", W.canonical_url_col(F.col("url")))
         frontier = canon.join(
             canon.groupBy("curl").agg(F.min("url").alias("url")),
@@ -135,7 +137,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
             .select("url", "warc_ts", "lang",
                     F.col("clean_text").alias("text")))
         gated = (cleaned
-                 .filter(F.size(tokens_col(F.col("text"))) >= min_tokens)
+                 .filter(F.size(tokens_col(F.col("text"))) >= MIN_TOKENS)
                  .filter(F.col("lang").isin(*langs_keep)))
         (gated.withColumn("text_md5", F.md5("text"))
          .withColumn("doc_key", F.xxhash64("url"))
@@ -143,9 +145,9 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
          .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
     params1 = {"pages": num_pages, "buckets": n_buckets,
-               "variant_mod": variant_mod, "dup_mod": dup_mod,
-               "near_mod": near_mod,
-               "min_tokens": min_tokens, "max_line_df": max_line_df,
+               "variant_mod": VARIANT_MOD, "dup_mod": DUP_MOD,
+               "near_mod": NEAR_MOD,
+               "min_tokens": MIN_TOKENS, "max_line_df": max_line_df,
                "langs_keep": langs_keep}
     # phase 2 consumes phase 1's output: a phase-1 restage makes it stale too
     staged1 = phase1.stage(STAGE1, params1, write_clean, downstream=(phase2,))
@@ -157,7 +159,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                 .agg(F.min("url").alias("url"),
                      F.count(F.lit(1)).alias("n_exact_dups")))
         reps = bucket.join(keep, ["text_md5", "url"], "inner")
-        sig = minhash_signatures(reps, id_col="doc_key", text_col="text") \
+        sig = minhash_signatures(reps, id_col="doc_key") \
             .withColumnRenamed("id", "doc_key")
         return (reps.join(sig, "doc_key")
                 .select("doc_key", "url", "warc_ts", "lang", "text",
@@ -175,7 +177,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                                        F.lit(n_buckets)).cast("int"))
          .write.mode("overwrite").partitionBy("wb").parquet(path))
 
-    staged2 = phase2.stage(STAGE2, {"input": params1, "agree_min": agree_min},
+    staged2 = phase2.stage(STAGE2, {"input": params1, "agree_min": AGREE_MIN},
                            write_bands)
 
     # ---- phase 2 buckets: disjoint verified candidate pairs ---------------
@@ -199,12 +201,12 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
                       for i in range(N_MINHASH))
         return (j.filter(first_agree)
                 .withColumn("n_agree", n_agree)
-                .filter(F.col("n_agree") >= agree_min)
+                .filter(F.col("n_agree") >= AGREE_MIN)
                 .select(F.col("x.doc_key").alias("a"),
                         F.col("y.doc_key").alias("b"), "n_agree"))
 
     run2 = phase2.run(list(range(n_buckets)), build_pair_bucket,
-                      fail_on=fail_on_pairs)
+                      fail_on=FAIL_ON_PAIRS)
     snap2 = phase2.commit_snapshot()
 
     # ---- finalize: CC on pair endpoints, anti-join the corpus -------------

@@ -127,7 +127,7 @@ def run_job(spark, num_vecs: int, n_buckets: int, out_dir: str,
     endpoints = (pairs.select(F.col("a").alias("id"))
                  .unionByName(pairs.select(F.col("b").alias("id")))
                  .distinct())
-    labels = connected_components(endpoints, pairs, id_col="id")
+    labels = connected_components(endpoints, pairs)
     non_survivors = labels.filter(F.col("cluster_id") != F.col("id")).select("id")
     survivors = (corpus(spark, num_vecs, dim).select(F.col("vec_id").alias("id"))
                  .join(non_survivors, "id", "left_anti"))

@@ -113,12 +113,12 @@ def build_round(spark, writer: CheckpointedWriter, edges_path: str,
 
 
 def run_job(spark, out_dir: str, num_pages: int, hosts: int, iters: int,
-            fail_at: int | None = None) -> dict:
+            fail_on=None) -> dict:
     writer = CheckpointedWriter(out_dir)
     edges_path = stage_edges(spark, writer, num_pages, hosts)
     writer.run(list(range(iters)),
                lambda k: build_round(spark, writer, edges_path, k),
-               fail_on=(lambda k: k == fail_at) if fail_at is not None else None)
+               fail_on=fail_on)
     snap = writer.commit_snapshot()
     final = spark.read.parquet(os.path.join(writer.out_dir,
                                             f"bucket={iters - 1}"))

@@ -42,33 +42,30 @@ from polycheck_spark.operators.text import tokens_col
 STAGE = "packed_by_shard"
 EXPORT_COLS = ("doc_key", "url", "lang", "pack_shard", "text", "n_tokens",
                "start_off", "bin_id", "end_bin", "straddles")
+#: crash injection for the inner cleaning job (a bucket predicate), for the
+#: resume tests
+CLEAN_FAIL_ON = None
 
 
 def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
             budget: int = 512, n_shards: int = 8,
-            n_pack_shards: int = 1,
-            fail_on=None, clean_fail_on=None) -> dict:
+            fail_on=None) -> dict:
     """Returns {clean, export_snapshot, n_docs, n_bins, export_dir}.
 
-    ``n_pack_shards`` shards the packing group key (``pack_shard =
-    doc_key mod n_pack_shards`` — id-derived, so deterministic) per the
-    packing scale contract: no sequential packing walk spans more than
-    ~N/n_pack_shards documents.  The default (1) keeps one stream per
-    lang at test sizes; a 10^12-doc run sets it so each walk is
-    task-sized.  ``fail_on``/``clean_fail_on`` are the test crash hooks
-    (export shard / inner clean bucket)."""
+    Packing runs one stream per lang (``pack_shard`` is 0 in every row;
+    the column keeps the export layout's group key).  ``fail_on`` and
+    :data:`CLEAN_FAIL_ON` are the test crash hooks (export shard / inner
+    clean bucket)."""
     clean_dir = os.path.join(out_dir, "clean")
     clean_res = clean_run(spark, num_pages, n_buckets, clean_dir,
-                          fail_on=clean_fail_on)
+                          fail_on=CLEAN_FAIL_ON)
 
     exporter = CheckpointedWriter(os.path.join(out_dir, "export"))
     def write(path):
         corpus = spark.read.parquet(clean_res["final_dir"])
         counted = (corpus.withColumn(
             "n_tokens", F.size(tokens_col(F.col("text"))))
-            .withColumn("pack_shard",
-                        F.pmod(F.col("doc_key"), F.lit(n_pack_shards))
-                        .cast("long")))
+            .withColumn("pack_shard", F.lit(0).cast("long")))
         layout = pack_chunks(counted, budget,
                              group_cols=("lang", "pack_shard"),
                              id_col="doc_key")
@@ -83,7 +80,7 @@ def run_job(spark, num_pages: int, n_buckets: int, out_dir: str, *,
     staged = exporter.stage(STAGE, {"pages": num_pages,
                                     "clean_buckets": n_buckets,
                                     "budget": budget, "shards": n_shards,
-                                    "pack_shards": n_pack_shards}, write)
+                                    "pack_shards": 1}, write)
 
     def build_shard(k: int):
         # partition-pruned read; one file per shard, rows in stream order —

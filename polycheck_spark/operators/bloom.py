@@ -70,9 +70,8 @@ def bloom_build(values: DataFrame, col: str, *, m_bits: int,
 
 
 def bloom_might_contain(df: DataFrame, col: str, bloom: DataFrame, *,
-                        m_bits: int, k: int = 5,
-                        out_col: str = "bloom_hit") -> DataFrame:
-    """``df`` plus boolean ``out_col``: False means ``df[col]`` is
+                        m_bits: int, k: int = 5) -> DataFrame:
+    """``df`` plus boolean ``bloom_hit``: False means ``df[col]`` is
     DEFINITELY not in the built set; True means maybe.  ``m_bits``/``k``
     must match the :func:`bloom_build` call that produced ``bloom``.
     ``col`` must be a plain column name (the tests are SQL expressions).
@@ -85,12 +84,11 @@ def bloom_might_contain(df: DataFrame, col: str, bloom: DataFrame, *,
         hit = hit & F.expr(
             f"(shiftright(element_at(words, CAST({p} div 64 AS INT) + 1), "
             f"CAST(pmod({p}, 64) AS INT)) & 1) = 1")
-    return probed.withColumn(out_col, hit).drop("words")
+    return probed.withColumn("bloom_hit", hit).drop("words")
 
 
 def bloom_incremental_dedup(new_docs: DataFrame, seen_digests: DataFrame, *,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            m_bits: int = 1 << 20, k: int = 5) -> DataFrame:
+                            m_bits: int = 1 << 20) -> DataFrame:
     """Bloom-accelerated twin of
     :func:`polycheck_spark.operators.dedup.incremental_dedup` — same
     (id, digest, status) output BIT-FOR-BIT (pytest-pinned), because the
@@ -104,19 +102,19 @@ def bloom_incremental_dedup(new_docs: DataFrame, seen_digests: DataFrame, *,
     in production the bitmap is persisted with the index (see module
     docstring), so the per-batch cost is probe + hit-fraction join."""
     from pyspark.sql import Window
-    batch = new_docs.select(id_col, F.md5(F.col(text_col)).alias("digest"))
+    batch = new_docs.select("doc_id", F.md5(F.col("text")).alias("digest"))
     seen = seen_digests.select("digest").distinct()
-    bloom = bloom_build(seen, "digest", m_bits=m_bits, k=k)
-    probed = bloom_might_contain(batch, "digest", bloom, m_bits=m_bits, k=k)
+    bloom = bloom_build(seen, "digest", m_bits=m_bits, k=5)
+    probed = bloom_might_contain(batch, "digest", bloom, m_bits=m_bits, k=5)
     hits = (probed.filter(F.col("bloom_hit"))
             .join(seen.withColumn("__seen", F.lit(True)), "digest", "left"))
     misses = (probed.filter(~F.col("bloom_hit"))
               .withColumn("__seen", F.lit(None).cast("boolean")))
-    j = (hits.select(id_col, "digest", "__seen")
-         .unionByName(misses.select(id_col, "digest", "__seen")))
-    w = Window.partitionBy("digest").orderBy(id_col)
+    j = (hits.select("doc_id", "digest", "__seen")
+         .unionByName(misses.select("doc_id", "digest", "__seen")))
+    w = Window.partitionBy("digest").orderBy("doc_id")
     return (j.withColumn("__rn", F.row_number().over(w))
-            .select(id_col, "digest",
+            .select("doc_id", "digest",
                     F.when(F.col("__seen").isNotNull(), "dup_of_corpus")
                     .when(F.col("__rn") > 1, "dup_in_batch")
                     .otherwise("new").alias("status")))

@@ -31,20 +31,23 @@ N_MINHASH = 16
 BAND_SIZE = 4
 N_BANDS = N_MINHASH // BAND_SIZE
 SIMHASH_BITS = 16
+#: round budget of :func:`connected_components`, a safety bound: pointer
+#: jumping converges in O(log n) rounds
+CC_MAX_ITERS = 20
 
 
 # --- exact dedup -------------------------------------------------------------
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Groups of byte-identical texts: (text_md5, n_dups, min_id)."""
-    return (docs.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
+    return (docs.groupBy(F.md5(F.col("text")).alias("text_md5"))
             .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("min_id"))
             .filter(F.col("n_dups") > 1))
 
 
-def exact_duplicates_sql(table: str, id_col: str = "doc_id", text_col: str = "text") -> str:
+def exact_duplicates_sql(table: str) -> str:
     return f"""
-SELECT md5({text_col}) AS text_md5, COUNT(*) AS n_dups, MIN({id_col}) AS min_id
+SELECT md5(text) AS text_md5, COUNT(*) AS n_dups, MIN(doc_id) AS min_id
 FROM {table} GROUP BY 1 HAVING COUNT(*) > 1
 """
 
@@ -59,7 +62,7 @@ def digest_bucket_col(md5_col, n_buckets: int):
 
 # --- shingles ----------------------------------------------------------------
 
-def _shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _shingles(docs: DataFrame) -> DataFrame:
     """Word-NGRAM shingles per doc as a set: (id, shingle) rows are unique.
     Set semantics is what Jaccard counting needs, and MinHash's
     min-aggregation does not care either way.
@@ -73,8 +76,8 @@ def _shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     strings, and the per-doc set dedup IS the global distinct — (id,
     shingle) is unique once each doc's shingles are, so the distinct
     shuffle disappears entirely.  Same rows, same strings, same oracle."""
-    src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
+    src = docs.select(F.col("doc_id").alias("id"),
+                      tokens_col(F.col("text")).alias("toks"))
     src = spread(src)
     return src.mapInPandas(_gram_batches, "id long, shingle string")
 
@@ -84,6 +87,14 @@ def _shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # functions, not closures: a worker then imports this module to unpickle them,
 # which installs the package's zip-cache fix (see ``polycheck_spark``).
 
+def _grams(toks) -> list[str]:
+    """A doc's word-NGRAM strings in order, repeats kept; empty for a doc
+    of fewer than NGRAM tokens.  Each batch body keeps its own per-doc
+    dedup."""
+    tl = list(toks)
+    return [" ".join(tl[i:i + NGRAM]) for i in range(len(tl) - NGRAM + 1)]
+
+
 def _gram_batches(batches):
     """(id, shingle) rows of each batch, one per distinct gram of a doc."""
     import numpy as np
@@ -92,11 +103,9 @@ def _gram_batches(batches):
     for pdf in batches:
         out_id, out_sh = [], []
         for did, toks in zip(pdf["id"], pdf["toks"]):
-            n = len(toks) - NGRAM + 1
-            if n <= 0:
+            g = list(dict.fromkeys(_grams(toks)))
+            if not g:
                 continue
-            tl = list(toks)
-            g = list(dict.fromkeys(" ".join(tl[i:i + NGRAM]) for i in range(n)))
             out_id.append(np.full(len(g), did, dtype=np.int64))
             out_sh.extend(g)
         yield pd.DataFrame({
@@ -104,21 +113,20 @@ def _gram_batches(batches):
             "shingle": out_sh})
 
 
-def _shingles_sql(table: str, id_col: str, text_col: str) -> str:
-    t = _tokens_sql(text_col)
+def _shingles_sql(table: str) -> str:
+    t = _tokens_sql("text")
     return f"""
-  SELECT DISTINCT {id_col} AS id,
+  SELECT DISTINCT doc_id AS id,
          array_to_string(tl[s : s + {NGRAM} - 1], ' ') AS shingle
-  FROM (SELECT {id_col}, tl,
+  FROM (SELECT doc_id, tl,
                unnest(generate_series(1, len(tl) - {NGRAM} + 1)) AS s
-        FROM (SELECT {id_col}, {t} AS tl FROM {table}))
+        FROM (SELECT doc_id, {t} AS tl FROM {table}))
 """
 
 
 # --- n-gram Jaccard ------------------------------------------------------------
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: tuple[int, int] = (1, 2),
-                        id_col: str = "doc_id", text_col: str = "text",
                         max_doc_freq: int | None = None) -> DataFrame:
     """All doc pairs (a < b) with shingle-set Jaccard >= num/den.
 
@@ -140,7 +148,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: tuple[int, int] = (1, 2),
     # CacheManager entry lives until session end — is reclaimed by the
     # ContextCleaner when the result frame is garbage-collected (the
     # pattern similarity.near_dup_pairs already uses; r4 review finding)
-    sh = _shingles(docs, id_col, text_col).localCheckpoint(eager=False)
+    sh = _shingles(docs).localCheckpoint(eager=False)
     sh = sh.select(*[F.col(c).alias(c) for c in sh.columns])
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     pair_sh = sh
@@ -161,7 +169,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: tuple[int, int] = (1, 2),
 
 
 def ngram_jaccard_pairs_sql(table: str, threshold: tuple[int, int] = (1, 2),
-                            id_col: str = "doc_id", text_col: str = "text",
                             max_doc_freq: int | None = None) -> str:
     """DuckDB twin; ``max_doc_freq`` mirrors the Spark cap exactly (pairing
     restricted to cool shingles, n_a/n_b stay full-set sizes)."""
@@ -174,7 +181,7 @@ psh AS (SELECT * FROM sh
         QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {max_doc_freq})"""
         pair_src = "psh"
     return f"""
-WITH sh AS ({_shingles_sql(table, id_col, text_col)}),
+WITH sh AS ({_shingles_sql(table)}),
 sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id){cap_cte},
 pairs AS (
   SELECT x.id AS a, y.id AS b, COUNT(*) AS n_common
@@ -199,8 +206,7 @@ _MH_B = [1013904223, 826366247, 104729, 40503, 65537,
          131071, 524287, 6700417, 2147483647, 998244353, 69313]
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, m0..m{N-1}): N_MINHASH min-hashes per doc.
 
     One shingle pass, N_MINHASH min-aggregates computed side by side — no
@@ -225,7 +231,7 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     batch path beats both.)
     """
     src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
+                      tokens_col(F.col("text")).alias("toks"))
     src = spread(src)
     schema = "id long, " + ", ".join(f"m{i} long" for i in range(N_MINHASH))
     return src.mapInPandas(_minhash_batches, schema)
@@ -252,13 +258,12 @@ def _minhash_batches(batches):
     for pdf in batches:
         ids, lens, flat = [], [], []
         for did, toks in zip(pdf["id"], pdf["toks"]):
-            n = len(toks) - NGRAM + 1
-            if n <= 0:
+            g = _grams(toks)
+            if not g:
                 continue        # explode() emitted no rows for the doc
-            tl = list(toks)
-            flat.extend(" ".join(tl[i:i + NGRAM]) for i in range(n))
+            flat.extend(g)
             ids.append(did)
-            lens.append(n)
+            lens.append(len(g))
         if not ids:
             continue
         codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
@@ -274,9 +279,7 @@ def _minhash_batches(batches):
         yield pd.DataFrame(out)
 
 
-def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        max_band_freq: int | None = None) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, max_band_freq: int | None = None) -> DataFrame:
     """Near-dup candidates: pairs agreeing on all BAND_SIZE hashes of >=1 band.
 
     ``max_band_freq``: hot-band cap for scale.  A (band, key) shared by S
@@ -288,7 +291,7 @@ def lsh_candidate_pairs(docs: DataFrame, id_col: str = "doc_id",
     exact dedup upstream anyway, which handles identical texts at S log S).
     None disables the cap (exact LSH semantics; the driver-checked default).
     """
-    bands = band_rows(minhash_signatures(docs, id_col, text_col), "id")
+    bands = band_rows(minhash_signatures(docs), "id")
     if max_band_freq is not None:
         cool = (bands.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("bf"))
                 .filter(F.col("bf") <= max_band_freq).select("band", "bkey"))
@@ -314,8 +317,7 @@ def band_rows(sig: DataFrame, *keep: str) -> DataFrame:
                     F.col("__bb.bkey").alias("bkey")))
 
 
-def lsh_candidate_pairs_sql(table: str, id_col: str = "doc_id", text_col: str = "text",
-                            max_band_freq: int | None = None) -> str:
+def lsh_candidate_pairs_sql(table: str, max_band_freq: int | None = None) -> str:
     h = f"(({_tok_int_sql('shingle')}) % {_MH_Q})"
     mins = ", ".join(
         f"MIN(({h} * {_MH_A[i]} + {_MH_B[i]}) % {_MH_P}) AS m{i}"
@@ -331,7 +333,7 @@ banded AS (SELECT * FROM banded0
            QUALIFY COUNT(*) OVER (PARTITION BY band, bkey) <= {max_band_freq})"""
     src = "banded" if max_band_freq is not None else "banded0"
     return f"""
-WITH sh AS ({_shingles_sql(table, id_col, text_col)}),
+WITH sh AS ({_shingles_sql(table)}),
 sig AS (SELECT id, {mins} FROM sh GROUP BY id),
 banded0 AS ({band_selects}){cap_cte}
 SELECT DISTINCT x.id AS a, y.id AS b
@@ -349,8 +351,7 @@ def _tok_int60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """``bits``-wide simhash over whitespace tokens (count-weighted).
 
     All per-bit sums run side by side in ONE groupBy over the plain token
@@ -374,8 +375,8 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         # while at 60 bits the aggregate expressions dominate 4:1 the
         # other way.  Same values either way; the sum of +-1 equals
         # 2*ones - n, expressed CaseWhen-free.
-        toks = tokens_col(F.col(text_col))
-        tok = (docs.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
+        toks = tokens_col(F.col("text"))
+        tok = (docs.select(F.col("doc_id").alias("id"), F.explode(toks).alias("tok"))
                .withColumn("h", _tok_int(F.col("tok"))))
         sums = [F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))).alias(f"s{b}")
                 for b in range(bits)] + [F.count(F.lit(1)).alias("nt")]
@@ -399,8 +400,8 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # bit-identical to the former aggregate (sum of +-1 == 2*ones - n) and
     # the SQL oracle is untouched.  Scale shape: strictly better — the
     # former path's token exchange (its dominant shuffle) is gone.
-    src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
+    src = docs.select(F.col("doc_id").alias("id"),
+                      tokens_col(F.col("text")).alias("toks"))
     src = spread(src)
     return src.mapInPandas(functools.partial(_simhash_wide_batches, bits),
                            "id long, simhash long")
@@ -448,14 +449,13 @@ def _simhash_wide_batches(bits: int, batches):
         yield pd.DataFrame({"id": ids, "simhash": sims})
 
 
-def simhash_sql(table: str, id_col: str = "doc_id", text_col: str = "text",
-                bits: int = SIMHASH_BITS) -> str:
-    t = _tokens_sql(text_col)
+def simhash_sql(table: str, bits: int = SIMHASH_BITS) -> str:
+    t = _tokens_sql("text")
     h = _tok_int_sql("u.tok") if bits <= 32 else _tok_int60_sql("u.tok")
     return f"""
 WITH tok AS (
-  SELECT {id_col} AS id, {h} AS h
-  FROM (SELECT {id_col}, unnest({t}) AS tok FROM {table}) u({id_col}, tok)
+  SELECT doc_id AS id, {h} AS h
+  FROM (SELECT doc_id, unnest({t}) AS tok FROM {table}) u(doc_id, tok)
 ),
 bits AS (
   SELECT id, b.bit, CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END AS c
@@ -468,8 +468,6 @@ FROM per_bit GROUP BY id
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3, *,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       max_band_freq: int | None = None,
                        bits: int = SIMHASH_BITS) -> DataFrame:
     """(a, b) document pairs whose simhashes differ in <= ``max_hamming``
     bits — the signature-level near-dup join SimHash exists for.
@@ -493,20 +491,11 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3, *,
     the former per-band union recomputed the dominant token aggregation
     nb x per join side) and only (id, simhash, band, bval) rows ride the
     join.
-
-    ``max_band_freq`` mirrors the MinHash hot-band cap: band values held
-    by more than the cap are dropped from candidate generation (capped
-    output is a strict subset) — the guard against degenerate signatures
-    (e.g. millions of empty docs hashing to 0).  Note the cap composes
-    with width: if N >> cap * 2^(bits/nb), every band value is hot and
-    the capped output collapses toward empty — widen ``bits`` first.
     """
     if not 0 <= max_hamming < bits:
         raise ValueError("need 0 <= max_hamming < bits")
-    sig = simhash(docs, id_col=id_col, text_col=text_col, bits=bits)
-    return hamming_near_pairs(sig, max_hamming=max_hamming, id_col="id",
-                              hash_col="simhash", bits=bits,
-                              max_band_freq=max_band_freq)
+    sig = simhash(docs, bits=bits)
+    return hamming_near_pairs(sig, max_hamming=max_hamming, bits=bits)
 
 
 def hamming_near_pairs(sig: DataFrame, *, max_hamming: int = 3,
@@ -524,6 +513,13 @@ def hamming_near_pairs(sig: DataFrame, *, max_hamming: int = 3,
     entry point exists so non-text fingerprints share one audited join
     instead of reimplementing banding.  ``bits`` may be 64 here (dHash):
     band extraction uses unsigned shifts, so the sign bit is just bit 63.
+
+    ``max_band_freq`` mirrors the MinHash hot-band cap: band values held
+    by more than the cap are dropped from candidate generation (capped
+    output is a strict subset) — the guard against degenerate signatures
+    (e.g. millions of empty docs hashing to 0).  Note the cap composes
+    with width: if N >> cap * 2^(bits/nb), every band value is hot and
+    the capped output collapses toward empty — widen ``bits`` first.
     """
     if not 0 <= max_hamming < bits <= 64:
         raise ValueError("need 0 <= max_hamming < bits <= 64")
@@ -589,8 +585,6 @@ def hamming_near_pairs(sig: DataFrame, *, max_hamming: int = 3,
 
 
 def simhash_near_pairs_sql(table: str, max_hamming: int = 3,
-                           id_col: str = "doc_id", text_col: str = "text",
-                           max_band_freq: int | None = None,
                            bits: int = SIMHASH_BITS) -> str:
     """DuckDB twin of :func:`simhash_near_pairs` (same bands, same
     bit_count rescore)."""
@@ -603,18 +597,11 @@ def simhash_near_pairs_sql(table: str, max_hamming: int = 3,
         rows.append(f"SELECT id, simhash, {b} AS band, "
                     f"(simhash >> {lo}) & {(1 << w) - 1} AS bval FROM sig")
     band_rows = " UNION ALL ".join(rows)
-    cap_cte = ""
-    src = "banded0"
-    if max_band_freq is not None:
-        cap_cte = f""",
-banded AS (SELECT * FROM banded0
-           QUALIFY COUNT(*) OVER (PARTITION BY band, bval) <= {max_band_freq})"""
-        src = "banded"
     return f"""
-WITH sig AS ({simhash_sql(table, id_col, text_col, bits=bits)}),
-banded0 AS ({band_rows}){cap_cte}
+WITH sig AS ({simhash_sql(table, bits=bits)}),
+banded0 AS ({band_rows})
 SELECT DISTINCT x.id AS a, y.id AS b
-FROM {src} x JOIN {src} y
+FROM banded0 x JOIN banded0 y
   ON x.band = y.band AND x.bval = y.bval AND x.id < y.id
 WHERE bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
 """
@@ -622,9 +609,7 @@ WHERE bit_count(xor(x.simhash, y.simhash)) <= {max_hamming}
 
 # --- incremental (batch-vs-corpus) dedup -------------------------------------
 
-def incremental_dedup(new_docs: DataFrame, seen_digests: DataFrame, *,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, seen_digests: DataFrame) -> DataFrame:
     """(id, digest, status) for an INCOMING batch against an existing
     corpus digest index — the shape every continuously-ingesting pipeline
     runs: a new crawl lands, and only texts never seen before (in the
@@ -640,42 +625,37 @@ def incremental_dedup(new_docs: DataFrame, seen_digests: DataFrame, *,
     never rescanned: ``seen_digests`` is the persisted index a production
     deployment maintains (here derived on the fly by callers)."""
     from pyspark.sql import Window
-    batch = new_docs.select(id_col, F.md5(F.col(text_col)).alias("digest"))
+    batch = new_docs.select("doc_id", F.md5(F.col("text")).alias("digest"))
     seen = seen_digests.select(F.col("digest").alias("digest"),
                                F.lit(True).alias("__seen")).distinct()
     j = batch.join(seen, "digest", "left")
-    w = Window.partitionBy("digest").orderBy(id_col)
+    w = Window.partitionBy("digest").orderBy("doc_id")
     return (j.withColumn("__rn", F.row_number().over(w))
-            .select(id_col, "digest",
+            .select("doc_id", "digest",
                     F.when(F.col("__seen").isNotNull(), "dup_of_corpus")
                     .when(F.col("__rn") > 1, "dup_in_batch")
                     .otherwise("new").alias("status")))
 
 
-def incremental_dedup_sql(batch_cte: str, seen_cte: str,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> str:
+def incremental_dedup_sql(batch_cte: str, seen_cte: str) -> str:
     """DuckDB twin of :func:`incremental_dedup` (seen_cte yields `digest`)."""
     return f"""
-SELECT {id_col}, digest,
+SELECT doc_id, digest,
        CASE WHEN seen THEN 'dup_of_corpus'
             WHEN rn > 1 THEN 'dup_in_batch'
             ELSE 'new' END AS status
 FROM (
-  SELECT b.{id_col}, b.digest,
+  SELECT b.doc_id, b.digest,
          s.digest IS NOT NULL AS seen,
-         row_number() OVER (PARTITION BY b.digest ORDER BY b.{id_col}) AS rn
-  FROM (SELECT {id_col}, md5({text_col}) AS digest FROM ({batch_cte})) b
+         row_number() OVER (PARTITION BY b.digest ORDER BY b.doc_id) AS rn
+  FROM (SELECT doc_id, md5(text) AS digest FROM ({batch_cte})) b
   LEFT JOIN (SELECT DISTINCT digest FROM ({seen_cte})) s USING (digest))
 """
 
 
 # --- benchmark decontamination ----------------------------------------------
 
-def decontaminate(docs: DataFrame, eval_docs: DataFrame, *,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  eval_id_col: str = "doc_id",
-                  eval_text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Per-document n-gram contamination against a benchmark/eval set:
     (id, n_shingles, n_contaminated, contaminated) for EVERY corpus doc.
 
@@ -691,15 +671,15 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame, *,
     join and one groupBy, never a shuffle keyed on shingles.  Docs with
     fewer than NGRAM tokens have no shingles and report (0, 0, false).
     """
-    sh = _shingles(docs, id_col, text_col)
-    ev = (_shingles(eval_docs, eval_id_col, eval_text_col)
+    sh = _shingles(docs)
+    ev = (_shingles(eval_docs)
           .select("shingle").distinct()
           .withColumn("__hit", F.lit(True)))
     marked = sh.join(F.broadcast(ev), "shingle", "left")
     per_doc = (marked.groupBy("id")
                .agg(F.count(F.lit(1)).alias("n_shingles"),
                     F.count("__hit").alias("n_contaminated")))
-    base = docs.select(F.col(id_col).alias("id"))
+    base = docs.select(F.col("doc_id").alias("id"))
     return (base.join(per_doc, "id", "left")
             .select("id",
                     F.coalesce("n_shingles", F.lit(0)).alias("n_shingles"),
@@ -707,33 +687,29 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame, *,
             .withColumn("contaminated", F.col("n_contaminated") > 0))
 
 
-def decontaminate_sql(table: str, eval_table: str,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      eval_id_col: str = "doc_id",
-                      eval_text_col: str = "text") -> str:
+def decontaminate_sql(table: str, eval_table: str) -> str:
     """DuckDB twin of :func:`decontaminate` — same shingles, same flag."""
     return f"""
-WITH dsh AS ({_shingles_sql(table, id_col, text_col)}),
+WITH dsh AS ({_shingles_sql(table)}),
 esh AS (SELECT DISTINCT shingle
-        FROM ({_shingles_sql(eval_table, eval_id_col, eval_text_col)})),
+        FROM ({_shingles_sql(eval_table)})),
 per_doc AS (
   SELECT d.id, COUNT(*) AS n_shingles,
          COUNT(e.shingle) AS n_contaminated
   FROM dsh d LEFT JOIN esh e ON e.shingle = d.shingle
   GROUP BY d.id)
-SELECT t.{id_col} AS id,
+SELECT t.doc_id AS id,
        coalesce(p.n_shingles, 0) AS n_shingles,
        coalesce(p.n_contaminated, 0) AS n_contaminated,
        coalesce(p.n_contaminated, 0) > 0 AS contaminated
-FROM {table} t LEFT JOIN per_doc p ON p.id = t.{id_col}
+FROM {table} t LEFT JOIN per_doc p ON p.id = t.doc_id
 """
 
 
 # --- candidate verification (the stage between LSH and clustering) ----------
 
 def verify_pairs_jaccard(docs: DataFrame, pairs: DataFrame,
-                         threshold: tuple[int, int] = (1, 2), *,
-                         id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+                         threshold: tuple[int, int] = (1, 2)) -> DataFrame:
     """Exact shingle-set Jaccard verification RESTRICTED to candidate pairs.
 
     LSH candidates are probabilistic: a band collision happens with
@@ -753,7 +729,7 @@ def verify_pairs_jaccard(docs: DataFrame, pairs: DataFrame,
     """
     num, den = threshold
     # one shingle materialization feeds sizes + both endpoint joins
-    sh = _shingles(docs, id_col, text_col).localCheckpoint(eager=False)
+    sh = _shingles(docs).localCheckpoint(eager=False)
     sh = sh.select(*[F.col(c).alias(c) for c in sh.columns])
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     sha = sh.select(F.col("id").alias("a"), "shingle")
@@ -768,9 +744,8 @@ def verify_pairs_jaccard(docs: DataFrame, pairs: DataFrame,
             .select("a", "b"))
 
 
-def verified_dup_clusters(docs: DataFrame, threshold: tuple[int, int] = (1, 2), *,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          max_band_freq: int | None = None) -> DataFrame:
+def verified_dup_clusters(docs: DataFrame,
+                          threshold: tuple[int, int] = (1, 2)) -> DataFrame:
     """The production fuzzy-dedup composition: LSH candidate generation ->
     exact-Jaccard edge verification -> connected components.
 
@@ -781,24 +756,19 @@ def verified_dup_clusters(docs: DataFrame, threshold: tuple[int, int] = (1, 2), 
     the corpus's biggest clusters at 10^12 docs.  Returns (id, cluster_id)
     for every document.
     """
-    cand = lsh_candidate_pairs(docs, id_col, text_col,
-                               max_band_freq=max_band_freq)
-    edges = verify_pairs_jaccard(docs, cand, threshold,
-                                 id_col=id_col, text_col=text_col)
-    verts = docs.select(id_col)
-    return cluster_assignments(verts, edges, id_col=id_col)
+    cand = lsh_candidate_pairs(docs)
+    edges = verify_pairs_jaccard(docs, cand, threshold)
+    verts = docs.select("doc_id")
+    return cluster_assignments(verts, edges, id_col="doc_id")
 
 
-def verified_pairs_sql(table: str, threshold: tuple[int, int] = (1, 2),
-                       id_col: str = "doc_id", text_col: str = "text",
-                       max_band_freq: int | None = None) -> str:
+def verified_pairs_sql(table: str, threshold: tuple[int, int] = (1, 2)) -> str:
     """DuckDB twin of ``verify_pairs_jaccard(lsh_candidate_pairs(...))`` —
     same candidates, same integer-exact Jaccard gate."""
     num, den = threshold
     return f"""
-WITH vcand AS ({lsh_candidate_pairs_sql(table, id_col, text_col,
-                                        max_band_freq=max_band_freq)}),
-vsh AS ({_shingles_sql(table, id_col, text_col)}),
+WITH vcand AS ({lsh_candidate_pairs_sql(table)}),
+vsh AS ({_shingles_sql(table)}),
 vsizes AS (SELECT id, COUNT(*) AS n FROM vsh GROUP BY id),
 vcommon AS (
   SELECT c.a, c.b, COUNT(*) AS n_common
@@ -814,8 +784,7 @@ WHERE m.n_common * {den} >= {num} * (sa.n + sb.n - m.n_common)
 # --- duplicate-cluster assignment (connected components) ---------------------
 
 def connected_components(vertices: DataFrame, edges: DataFrame, *,
-                         id_col: str = "id", src_col: str = "a",
-                         dst_col: str = "b", max_iters: int = 20) -> DataFrame:
+                         id_col: str = "id") -> DataFrame:
     """(id, cluster_id): every vertex labeled with the smallest id reachable
     in the undirected graph — the step a dedup pipeline needs AFTER pair
     generation, turning near-dup PAIRS into canonical-representative
@@ -829,7 +798,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
     label doubles per round, so convergence is O(log n) rounds on ANY
     graph shape, not O(diameter) — a 64-vertex path converges in ~6 rounds
     instead of 63 (pinned by test).  Near-dup clusters are near-cliques
-    and converge in 2-3 rounds regardless; ``max_iters`` is a safety
+    and converge in 2-3 rounds regardless; :data:`CC_MAX_ITERS` is a safety
     bound, convergence is detected by an any-label-changed probe on the
     checkpointed frames.  No driver-side graph state.
     """
@@ -839,8 +808,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
     # the whole candidate-generation DAG re-executes per round (measured
     # ~Nx the query time for N rounds); after it, each round scans a
     # pinned RDD
-    und = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")) \
-        .unionAll(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))) \
+    und = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")) \
+        .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))) \
         .localCheckpoint(eager=False)
     # each round's plan embeds the previous round's, so WITHOUT lineage
     # truncation the logical plan doubles per iteration (driver OOM by ~10
@@ -860,7 +829,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
     prev_sum = label_sum(labels)
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         prop = (und.join(labels, und.src == labels.id)
                 .select(F.col("dst").alias("id"), "label"))
         stepped = (labels.select("id", "label").unionAll(prop)
@@ -891,9 +860,9 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
             break
         prev_sum = new_sum
     else:
-        # the loop exhausted max_iters with the last round still changing
+        # the loop exhausted CC_MAX_ITERS with the last round still changing
         # labels — the final round may nonetheless have REACHED the
-        # fixpoint (exactly-sufficient max_iters).  One extra change probe
+        # fixpoint (exactly-sufficient CC_MAX_ITERS).  One extra change probe
         # decides it: a propagation step leaves the exact label sum
         # unchanged iff no label can move, and at that point labels are
         # constant per component and equal the component-minimum id (for
@@ -909,16 +878,15 @@ def connected_components(vertices: DataFrame, edges: DataFrame, *,
             import warnings
             warnings.warn(
                 f"connected_components: convergence unverified after "
-                f"{max_iters} rounds (labels still changing at the final "
+                f"{CC_MAX_ITERS} rounds (labels still changing at the final "
                 f"probe) — labels may be partially propagated; raise "
-                f"max_iters (pointer jumping needs O(log n) rounds)",
+                f"CC_MAX_ITERS (pointer jumping needs O(log n) rounds)",
                 RuntimeWarning, stacklevel=2)
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 
 def cluster_assignments(vertices: DataFrame, edges: DataFrame, *,
-                        id_col: str = "id", src_col: str = "a",
-                        dst_col: str = "b", max_iters: int = 20) -> DataFrame:
+                        id_col: str = "id") -> DataFrame:
     """(id, cluster_id) for EVERY vertex — semantically identical to
     running :func:`connected_components` over the full vertex set, but the
     iterative propagation touches only the edge ENDPOINTS.
@@ -934,13 +902,11 @@ def cluster_assignments(vertices: DataFrame, edges: DataFrame, *,
     # pin the (usually deeply lazy) pair pipeline once — both the endpoint
     # derivation and every CC round read this RDD instead of re-running
     # candidate generation
-    edges = edges.select(src_col, dst_col).localCheckpoint()
-    endpoints = (edges.select(F.col(src_col).alias(id_col))
-                 .unionAll(edges.select(F.col(dst_col).alias(id_col)))
+    edges = edges.select("a", "b").localCheckpoint()
+    endpoints = (edges.select(F.col("a").alias(id_col))
+                 .unionAll(edges.select(F.col("b").alias(id_col)))
                  .distinct())
-    labeled = connected_components(endpoints, edges, id_col=id_col,
-                                   src_col=src_col, dst_col=dst_col,
-                                   max_iters=max_iters)
+    labeled = connected_components(endpoints, edges, id_col=id_col)
     singles = (vertices.select(F.col(id_col).alias("id"))
                .join(labeled.select("id"), "id", "left_anti")
                .select("id", F.col("id").alias("cluster_id")))
@@ -969,15 +935,12 @@ SELECT id AS {out_id}, MIN(r) AS cluster_id FROM reach GROUP BY id
 
 # --- corpus-level line dedup (keep first occurrence) ------------------------
 
-def line_dedup_corpus(docs: DataFrame, *, id_col: str = "doc_id",
-                      text_col: str = "text", delim: str = "\n",
-                      min_len: int = 1) -> DataFrame:
+def line_dedup_corpus(docs: DataFrame) -> DataFrame:
     """Corpus-wide exact line dedup, RefinedWeb-style: every line that
     occurs more than once ANYWHERE in the corpus survives only at its
     first occurrence (smallest ``(id, pos)``); later repeats are removed
-    and each document is reassembled in original order.  Lines shorter
-    than ``min_len`` characters (default: empty lines) never participate
-    — they are kept verbatim everywhere.  Emits
+    and each document is reassembled in original order.  Empty lines never
+    participate — they are kept verbatim everywhere.  Emits
     (id, n_lines, n_lines_kept, clean_text); a document whose every line
     is a repeat keeps an empty clean_text rather than disappearing.
 
@@ -996,11 +959,10 @@ def line_dedup_corpus(docs: DataFrame, *, id_col: str = "doc_id",
     key; AQE skew-join splits it because the canonical side is one row per
     line (broadcastable fragments).
     """
-    import re
-    parts = F.split(F.col(text_col), re.escape(delim), -1)
-    lines = docs.select(F.col(id_col).alias("id"),
+    parts = F.split(F.col("text"), "\n", -1)
+    lines = docs.select(F.col("doc_id").alias("id"),
                         F.posexplode(parts).alias("pos", "line"))
-    part = lines.filter(F.length("line") >= min_len)
+    part = lines.filter(F.length("line") >= 1)
     canon = part.groupBy("line").agg(
         F.min(F.struct(F.col("id"), F.col("pos"))).alias("first"))
     marked = lines.join(canon, "line", "left")
@@ -1014,26 +976,24 @@ def line_dedup_corpus(docs: DataFrame, *, id_col: str = "doc_id",
     return (marked.groupBy("id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_lines"),
                  F.count(F.when(keep, F.lit(1))).cast("int").alias("n_lines_kept"),
-                 F.array_join(ordered, delim).alias("clean_text"))
-            .select(F.col("id").alias(id_col), "n_lines", "n_lines_kept",
+                 F.array_join(ordered, "\n").alias("clean_text"))
+            .select(F.col("id").alias("doc_id"), "n_lines", "n_lines_kept",
                     "clean_text"))
 
 
-def line_dedup_corpus_sql(table: str, id_col: str = "doc_id",
-                          text_col: str = "text", delim: str = "\n",
-                          min_len: int = 1) -> str:
+def line_dedup_corpus_sql(table: str) -> str:
     """DuckDB twin of :func:`line_dedup_corpus` (same first-occurrence
     rule via min-(id,pos) per line, same positional reassembly)."""
     from polycheck_spark.operators.text import _delim_sql
-    d = _delim_sql(delim)
+    d = _delim_sql("\n")
     return f"""
-WITH ld_parts AS (SELECT {id_col} AS id, string_split({text_col}, {d}) AS pl FROM {table}),
+WITH ld_parts AS (SELECT doc_id AS id, string_split(text, {d}) AS pl FROM {table}),
 ld_lines AS (
   SELECT id, s - 1 AS pos, pl[s] AS line
   FROM (SELECT id, pl, unnest(generate_series(1, len(pl))) AS s FROM ld_parts)),
 ld_canon AS (
   SELECT line, MIN({{'id': id, 'pos': pos}}) AS first
-  FROM ld_lines WHERE len(line) >= {min_len} GROUP BY line),
+  FROM ld_lines WHERE len(line) >= 1 GROUP BY line),
 ld_marked AS (
   SELECT l.id, l.pos, l.line,
          (c.line IS NULL OR (c.first.id = l.id AND c.first.pos = l.pos)) AS keep
@@ -1044,7 +1004,7 @@ ld_agg AS (
          coalesce(string_agg(CASE WHEN keep THEN line END, {d} ORDER BY pos)
                   FILTER (WHERE keep), '') AS clean_text
   FROM ld_marked GROUP BY id)
-SELECT id AS {id_col}, CAST(n_lines AS INT) AS n_lines,
+SELECT id AS doc_id, CAST(n_lines AS INT) AS n_lines,
        CAST(n_lines_kept AS INT) AS n_lines_kept, clean_text
 FROM ld_agg
 """
@@ -1053,10 +1013,9 @@ FROM ld_agg
 SPAN_NGRAM = 8
 
 
-def duplicate_span_dedup(docs: DataFrame, *, id_col: str = "doc_id",
-                         text_col: str = "text", n: int = SPAN_NGRAM) -> DataFrame:
+def duplicate_span_dedup(docs: DataFrame) -> DataFrame:
     """Exact repeated-substring removal at token-window granularity
-    ("deduplicating training data" style: any ``n``-token window whose
+    ("deduplicating training data" style: any ``SPAN_NGRAM``-token window whose
     exact text occurs more than once ANYWHERE in the corpus is a
     duplicate; the occurrence with the smallest ``(id, p)`` is kept and
     every other occurrence is cut from its document).  Overlapping and
@@ -1078,14 +1037,15 @@ def duplicate_span_dedup(docs: DataFrame, *, id_col: str = "doc_id",
     AQE skew-join splits it for free.
     """
     from pyspark.sql import Window
-    base = docs.select(F.col(id_col).alias("id"),
-                       tokens_col(F.col(text_col)).alias("toks"))
-    wins = (base.filter(F.size("toks") >= n)
+    base = docs.select(F.col("doc_id").alias("id"),
+                       tokens_col(F.col("text")).alias("toks"))
+    wins = (base.filter(F.size("toks") >= SPAN_NGRAM)
             .select("id",
-                    F.explode(F.sequence(F.lit(0), F.size("toks") - n)).alias("p"),
+                    F.explode(F.sequence(F.lit(0), F.size("toks") - SPAN_NGRAM))
+                    .alias("p"),
                     "toks")
             .select("id", "p",
-                    F.array_join(F.slice(F.col("toks"), F.col("p") + 1, n), " ")
+                    F.array_join(F.slice(F.col("toks"), F.col("p") + 1, SPAN_NGRAM), " ")
                     .alias("gram")))
     canon = (wins.groupBy("gram")
              .agg(F.count(F.lit(1)).alias("cnt"),
@@ -1102,11 +1062,11 @@ def duplicate_span_dedup(docs: DataFrame, *, id_col: str = "doc_id",
     isl = dup.select(
         "id", "p",
         F.sum(F.when(F.lag("p").over(w).isNull()
-                     | (F.col("p") > F.lag("p").over(w) + n), 1).otherwise(0))
+                     | (F.col("p") > F.lag("p").over(w) + SPAN_NGRAM), 1).otherwise(0))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .alias("island"))
     spans = (isl.groupBy("id", "island")
-             .agg(F.min("p").alias("s"), (F.max("p") + F.lit(n - 1)).alias("e")))
+             .agg(F.min("p").alias("s"), (F.max("p") + F.lit(SPAN_NGRAM - 1)).alias("e")))
     per_doc = (spans.groupBy("id")
                .agg(F.count(F.lit(1)).cast("int").alias("n_dup_spans"),
                     F.sum(F.col("e") - F.col("s") + 1).cast("int")
@@ -1121,24 +1081,23 @@ def duplicate_span_dedup(docs: DataFrame, *, id_col: str = "doc_id",
         lambda t, i: ~F.exists(F.col("__iv"),
                                lambda iv: (i >= iv["s"]) & (i <= iv["e"])))
     return joined.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.size("toks").alias("n_tokens"),
         F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
         F.coalesce("n_dup_tokens", F.lit(0)).alias("n_dup_tokens"),
         F.array_join(kept, " ").alias("clean_text"))
 
 
-def duplicate_span_dedup_sql(table: str, id_col: str = "doc_id",
-                             text_col: str = "text", n: int = SPAN_NGRAM) -> str:
+def duplicate_span_dedup_sql(table: str) -> str:
     """DuckDB twin of :func:`duplicate_span_dedup` (same keep-first rule,
     same token-adjacent island merge, same whitespace-normalized
     reassembly)."""
     return f"""
-WITH ds_tok AS (SELECT {id_col} AS id, {_tokens_sql(text_col)} AS toks FROM {table}),
+WITH ds_tok AS (SELECT doc_id AS id, {_tokens_sql("text")} AS toks FROM {table}),
 ds_gram AS (
-  SELECT id, p, array_to_string(list_slice(toks, p + 1, p + {n}), ' ') AS gram
-  FROM (SELECT id, toks, unnest(generate_series(0, len(toks) - {n})) AS p
-        FROM ds_tok WHERE len(toks) >= {n})),
+  SELECT id, p, array_to_string(list_slice(toks, p + 1, p + {SPAN_NGRAM}), ' ') AS gram
+  FROM (SELECT id, toks, unnest(generate_series(0, len(toks) - {SPAN_NGRAM})) AS p
+        FROM ds_tok WHERE len(toks) >= {SPAN_NGRAM})),
 ds_canon AS (
   SELECT gram, MIN({{'id': id, 'p': p}}) AS first
   FROM ds_gram GROUP BY gram HAVING COUNT(*) > 1),
@@ -1147,13 +1106,13 @@ ds_dup AS (
   WHERE NOT (c.first.id = g.id AND c.first.p = g.p)),
 ds_isl AS (
   SELECT id, p,
-         SUM(CASE WHEN prev_p IS NULL OR p > prev_p + {n} THEN 1 ELSE 0 END)
+         SUM(CASE WHEN prev_p IS NULL OR p > prev_p + {SPAN_NGRAM} THEN 1 ELSE 0 END)
            OVER (PARTITION BY id ORDER BY p
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
   FROM (SELECT id, p, lag(p) OVER (PARTITION BY id ORDER BY p) AS prev_p
         FROM ds_dup)),
 ds_spans AS (
-  SELECT id, island, MIN(p) AS s, MAX(p) + {n - 1} AS e
+  SELECT id, island, MIN(p) AS s, MAX(p) + {SPAN_NGRAM - 1} AS e
   FROM ds_isl GROUP BY id, island),
 ds_per AS (
   SELECT id, COUNT(*) AS n_dup_spans, SUM(e - s + 1) AS n_dup_tokens
@@ -1168,7 +1127,7 @@ ds_clean AS (
   WHERE NOT EXISTS (SELECT 1 FROM ds_spans v
                     WHERE v.id = t.id AND t.i BETWEEN v.s AND v.e)
   GROUP BY t.id)
-SELECT d.id AS {id_col}, CAST(len(d.toks) AS INT) AS n_tokens,
+SELECT d.id AS doc_id, CAST(len(d.toks) AS INT) AS n_tokens,
        CAST(coalesce(p.n_dup_spans, 0) AS INT) AS n_dup_spans,
        CAST(coalesce(p.n_dup_tokens, 0) AS INT) AS n_dup_tokens,
        coalesce(c.clean_text, '') AS clean_text
@@ -1178,9 +1137,8 @@ FROM ds_tok d LEFT JOIN ds_per p USING (id) LEFT JOIN ds_clean c USING (id)
 
 # --- n-gram containment (directional partial-copy detection) ------------------
 
-def containment_pairs(docs: DataFrame, threshold: tuple[int, int] = (8, 10),
-                      id_col: str = "doc_id", text_col: str = "text",
-                      max_doc_freq: int | None = None) -> DataFrame:
+def containment_pairs(docs: DataFrame,
+                      threshold: tuple[int, int] = (8, 10)) -> DataFrame:
     """Directional shingle containment: rows ``(contained, container,
     n_common, n_contained, n_container)`` where at least ``num/den`` of the
     CONTAINED doc's shingle set also appears in the container.
@@ -1191,68 +1149,33 @@ def containment_pairs(docs: DataFrame, threshold: tuple[int, int] = (8, 10),
     lifted from elsewhere" off containment, not symmetric similarity.
     The threshold is a rational applied by integer cross-multiplication
     (``n_common * den >= num * n_contained``) — no float boundary drift
-    between engines.  Each unordered pair is scored ONCE (the ``a < b``
-    self-join half) and then fanned into its two directions, so the
-    quadratic stage costs exactly what :func:`ngram_jaccard_pairs` costs.
+    between engines.  At 10^12 docs this is the verification stage over
+    LSH candidates, same contract as Jaccard.
 
-    ``max_doc_freq`` is the same hot-shingle pairing cap (conservative
-    subset — n_contained/n_container stay full-set sizes).  At 10^12 docs
-    this is the verification stage over LSH candidates, same contract as
-    Jaccard; the uncapped form the oracle checks is exact.
-
-    r8, uncapped path only: doc-at-a-time scoring over a broadcast
-    inverted index replaces the shingle self-join.  The join shape is
-    forced to materialize and SHUFFLE every doc pair sharing a shingle
-    (measured at sf1.0: 127M join rows -> a 114M-row (a, b, n_common)
-    exchange feeding a filter that keeps 5101 rows — 27 s, almost all of
-    it the exchange).  But every surviving row's decision needs only the
-    CONTAINED doc's own shingles, the posting lists of those shingles,
-    and the container sizes — so each doc can accumulate its common-count
-    vector locally (one bincount over its shingles' posting lists) and
-    apply the threshold BEFORE anything is emitted: per-direction rows
-    are produced exactly once (each from its contained side), the
-    quadratic intermediate never leaves the task, and the output is the
-    only thing shuffled.  The index is bounded by the shingle relation —
-    fine at oracle/bench scale; at 10^12 docs the uncapped all-pairs form
-    is off the table either way (its OUTPUT is corpus-quadratic), and the
-    capped configuration keeps the shuffle-based pairing below.
+    r8: doc-at-a-time scoring over a broadcast inverted index replaces the
+    shingle self-join.  The join shape is forced to materialize and
+    SHUFFLE every doc pair sharing a shingle (measured at sf1.0: 127M join
+    rows -> a 114M-row (a, b, n_common) exchange feeding a filter that
+    keeps 5101 rows — 27 s, almost all of it the exchange).  But every
+    surviving row's decision needs only the CONTAINED doc's own shingles,
+    the posting lists of those shingles, and the container sizes — so each
+    doc can accumulate its common-count vector locally (one bincount over
+    its shingles' posting lists) and apply the threshold BEFORE anything
+    is emitted: per-direction rows are produced exactly once (each from
+    its contained side), the quadratic intermediate never leaves the task,
+    and the output is the only thing shuffled.  The index is bounded by
+    the shingle relation — fine at oracle/bench scale; at 10^12 docs the
+    all-pairs form is off the table either way (its OUTPUT is
+    corpus-quadratic).
     """
     num, den = threshold
-    if max_doc_freq is not None:
-        sh = _shingles(docs, id_col, text_col).localCheckpoint(eager=False)
-        sh = sh.select(*[F.col(c).alias(c) for c in sh.columns])
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-        cool = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_doc_freq)
-                .select("shingle"))
-        pair_sh = sh.join(cool, "shingle", "left_semi")
-        pairs = (pair_sh.alias("x").join(pair_sh.alias("y"), "shingle")
-                 .filter(F.col("x.id") < F.col("y.id"))
-                 .groupBy(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-                 .agg(F.count(F.lit(1)).alias("n_common")))
-        sized = (pairs
-                 .join(sizes.withColumnRenamed("id", "a")
-                       .withColumnRenamed("n", "n_a"), "a")
-                 .join(sizes.withColumnRenamed("id", "b")
-                       .withColumnRenamed("n", "n_b"), "b"))
-        fwd = sized.select(F.col("a").alias("contained"),
-                           F.col("b").alias("container"), "n_common",
-                           F.col("n_a").alias("n_contained"),
-                           F.col("n_b").alias("n_container"))
-        rev = sized.select(F.col("b").alias("contained"),
-                           F.col("a").alias("container"), "n_common",
-                           F.col("n_b").alias("n_contained"),
-                           F.col("n_a").alias("n_container"))
-        return (fwd.unionByName(rev)
-                .filter(F.col("n_common") * den >= num * F.col("n_contained")))
-
     import numpy as np
 
     spark = docs.sparkSession
     # inverted index: shingle -> posting array of doc CODES (dense 0..N-1
     # re-keying so the per-doc accumulator is one bincount buffer); built
     # from the same _shingles relation the join path used, collected once
-    post_pdf = (_shingles(docs, id_col, text_col)
+    post_pdf = (_shingles(docs)
                 .groupBy("shingle").agg(F.collect_list("id").alias("ids"))
                 .toPandas())
     lens = np.fromiter((len(v) for v in post_pdf["ids"]),
@@ -1269,8 +1192,8 @@ def containment_pairs(docs: DataFrame, threshold: tuple[int, int] = (8, 10),
     schema = ("contained long, container long, n_common long, "
               "n_contained long, n_container long")
 
-    src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
+    src = docs.select(F.col("doc_id").alias("id"),
+                      tokens_col(F.col("text")).alias("toks"))
     src = spread(src)
     return src.mapInPandas(
         functools.partial(_containment_batches, bc, num, den), schema)
@@ -1287,12 +1210,9 @@ def _containment_batches(bc, num: int, den: int, batches):
     for pdf in batches:
         o_a, o_b, o_c, o_na, o_nb = [], [], [], [], []
         for did, toks in zip(pdf["id"], pdf["toks"]):
-            n = len(toks) - NGRAM + 1
-            if n <= 0:
+            grams = dict.fromkeys(_grams(toks))
+            if not grams:
                 continue
-            tl = list(toks)
-            grams = dict.fromkeys(" ".join(tl[i:i + NGRAM])
-                                  for i in range(n))
             counts = np.bincount(
                 np.concatenate([idx[g] for g in grams]),
                 minlength=n_docs)
@@ -1317,25 +1237,18 @@ def _containment_batches(bc, num: int, den: int, batches):
         })
 
 
-def containment_pairs_sql(table: str, threshold: tuple[int, int] = (8, 10),
-                          id_col: str = "doc_id", text_col: str = "text",
-                          max_doc_freq: int | None = None) -> str:
-    """DuckDB twin of :func:`containment_pairs` (same one-sided scoring +
-    two-direction fan-out, same rational threshold, same pairing cap)."""
+def containment_pairs_sql(table: str,
+                          threshold: tuple[int, int] = (8, 10)) -> str:
+    """DuckDB twin of :func:`containment_pairs`: each unordered pair is
+    scored once (the ``a < b`` self-join half) and fanned into its two
+    directions, under the same rational threshold."""
     num, den = threshold
-    pair_src = "sh"
-    cap_cte = ""
-    if max_doc_freq is not None:
-        cap_cte = f""",
-psh AS (SELECT * FROM sh
-        QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {max_doc_freq})"""
-        pair_src = "psh"
     return f"""
-WITH sh AS ({_shingles_sql(table, id_col, text_col)}),
-sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id){cap_cte},
+WITH sh AS ({_shingles_sql(table)}),
+sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
 pairs AS (
   SELECT x.id AS a, y.id AS b, COUNT(*) AS n_common
-  FROM {pair_src} x JOIN {pair_src} y ON x.shingle = y.shingle AND x.id < y.id
+  FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.id < y.id
   GROUP BY 1, 2
 ),
 sized AS (
@@ -1355,13 +1268,11 @@ SELECT * FROM two_dir WHERE n_common * {den} >= {num} * n_contained
 
 # --- cross-doc common-shingle stats (corpus boilerplate fraction) -------------
 
-def common_shingle_stats(docs: DataFrame, min_df: int = 2,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def common_shingle_stats(docs: DataFrame) -> DataFrame:
     """Per doc: how much of it is made of shingles that recur elsewhere in
     the corpus — ``(id, n_shingles, n_common)`` where ``n_common`` counts
     the doc's distinct shingles whose corpus document-frequency is
-    ``>= min_df``.  ``n_common / n_shingles`` is the corpus-boilerplate
+    ``>= 2``.  ``n_common / n_shingles`` is the corpus-boilerplate
     fraction used to drop template-heavy pages that survive pairwise dedup
     (no single partner is similar enough, but the page is assembled from
     ubiquitous fragments).
@@ -1374,49 +1285,45 @@ def common_shingle_stats(docs: DataFrame, min_df: int = 2,
     (< NGRAM tokens) are preserved with 0/0 via a left join from the doc
     ids.
     """
-    sh = _shingles(docs, id_col, text_col).localCheckpoint(eager=False)
+    sh = _shingles(docs).localCheckpoint(eager=False)
     sh = sh.select(*[F.col(c).alias(c) for c in sh.columns])
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     per = (sh.join(dfreq, "shingle")
            .groupBy("id")
            .agg(F.count(F.lit(1)).alias("n_shingles"),
-                F.sum(F.when(F.col("df") >= min_df, 1).otherwise(0))
+                F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
                 .alias("n_common")))
-    ids = docs.select(F.col(id_col).alias("id"))
+    ids = docs.select(F.col("doc_id").alias("id"))
     return (ids.join(per, "id", "left")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.coalesce("n_shingles", F.lit(0).cast("long"))
                     .alias("n_shingles"),
                     F.coalesce("n_common", F.lit(0).cast("long"))
                     .alias("n_common")))
 
 
-def common_shingle_stats_sql(table: str, min_df: int = 2,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> str:
+def common_shingle_stats_sql(table: str) -> str:
     """DuckDB twin of :func:`common_shingle_stats`.  The conditional SUM is
     CAST to BIGINT — DuckDB types un-cast integer SUMs as HUGEINT, which
     the driver's representation-sensitive hash rejects (selfcheck lint)."""
     return f"""
-WITH sh AS ({_shingles_sql(table, id_col, text_col)}),
+WITH sh AS ({_shingles_sql(table)}),
 dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
 per AS (
   SELECT id, COUNT(*) AS n_shingles,
-         CAST(SUM(CASE WHEN df >= {min_df} THEN 1 ELSE 0 END) AS BIGINT)
+         CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_common
   FROM sh JOIN dfreq USING (shingle) GROUP BY id)
-SELECT d.{id_col} AS {id_col},
+SELECT d.doc_id AS doc_id,
        coalesce(p.n_shingles, CAST(0 AS BIGINT)) AS n_shingles,
        coalesce(p.n_common, CAST(0 AS BIGINT)) AS n_common
-FROM {table} d LEFT JOIN per p ON p.id = d.{id_col}
+FROM {table} d LEFT JOIN per p ON p.id = d.doc_id
 """
 
 
 # --- quality-aware survivor selection ----------------------------------------
 
-def select_survivors(assignments: DataFrame, scores: DataFrame, *,
-                     id_col: str = "doc_id", cluster_col: str = "cluster_id",
-                     score_col: str = "score") -> DataFrame:
+def select_survivors(assignments: DataFrame, scores: DataFrame) -> DataFrame:
     """One representative per cluster: the member with the HIGHEST score
     (ties -> smallest id) — ``(cluster_id, id, score, n_members)``.
 
@@ -1436,45 +1343,41 @@ def select_survivors(assignments: DataFrame, scores: DataFrame, *,
     :func:`cluster_assignments`); ``scores`` is ``(id, score)`` with
     integer scores for cross-engine exactness.
     """
-    j = (assignments.select(F.col(id_col), F.col(cluster_col))
-         .join(scores.select(F.col(id_col), F.col(score_col)), id_col))
-    agg = j.groupBy(cluster_col).agg(
+    j = (assignments.select(F.col("doc_id"), F.col("cluster_id"))
+         .join(scores.select(F.col("doc_id"), F.col("score")), "doc_id"))
+    agg = j.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
-        F.max(F.struct(F.col(score_col).alias("s"),
-                       (-F.col(id_col)).alias("nid"))).alias("__best"))
+        F.max(F.struct(F.col("score").alias("s"),
+                       (-F.col("doc_id")).alias("nid"))).alias("__best"))
     return agg.select(
-        cluster_col,
-        (-F.col("__best.nid")).alias(id_col),
-        F.col("__best.s").alias(score_col),
+        "cluster_id",
+        (-F.col("__best.nid")).alias("doc_id"),
+        F.col("__best.s").alias("score"),
         "n_members")
 
 
-def select_survivors_sql(assign_cte: str, scores_cte: str, *,
-                         id_col: str = "doc_id",
-                         cluster_col: str = "cluster_id",
-                         score_col: str = "score") -> str:
+def select_survivors_sql(assign_cte: str, scores_cte: str) -> str:
     """DuckDB twin of :func:`select_survivors` — same argmax-by-struct rule
     (named struct literal: MAX(ROW(...)) would be unnamed and its fields
     inaccessible)."""
     return f"""
 WITH sv_assign AS ({assign_cte}),
 sv_scores AS ({scores_cte}),
-sv_j AS (SELECT a.{cluster_col}, a.{id_col}, s.{score_col}
-         FROM sv_assign a JOIN sv_scores s USING ({id_col})),
+sv_j AS (SELECT a.cluster_id, a.doc_id, s.score
+         FROM sv_assign a JOIN sv_scores s USING (doc_id)),
 sv_agg AS (
-  SELECT {cluster_col}, COUNT(*) AS n_members,
-         MAX({{'s': {score_col}, 'nid': -{id_col}}}) AS best
-  FROM sv_j GROUP BY {cluster_col})
-SELECT {cluster_col}, -best.nid AS {id_col}, best.s AS {score_col}, n_members
+  SELECT cluster_id, COUNT(*) AS n_members,
+         MAX({{'s': score, 'nid': -doc_id}}) AS best
+  FROM sv_j GROUP BY cluster_id)
+SELECT cluster_id, -best.nid AS doc_id, best.s AS score, n_members
 FROM sv_agg
 """
 
 
 # --- leakage-free split assignment --------------------------------------------
 
-def leakfree_split(assignments: DataFrame, splits: list[tuple[str, int]], *,
-                   id_col: str = "doc_id", cluster_col: str = "cluster_id",
-                   salt: str = "split0") -> DataFrame:
+def leakfree_split(assignments: DataFrame,
+                   splits: list[tuple[str, int]]) -> DataFrame:
     """Train/val/test assignment that cannot leak near-duplicates across
     splits: the split is a deterministic hash of the CLUSTER id, so every
     member of a near-dup cluster lands in the same split —
@@ -1488,18 +1391,18 @@ def leakfree_split(assignments: DataFrame, splits: list[tuple[str, int]], *,
     realistic cluster-size distributions is within noise of the row ratio
     (and exact on singletons).
 
-    ``splits`` is ``[(name, weight), ...]``; buckets ``md5(salt:cluster)
-    % sum(weights)`` map to names by cumulative range — integer-exact,
-    engine-portable, stable under repartitioning.  Map-side only (one
-    projection over the assignments frame): the cluster computation
-    upstream is where the shuffles live.
+    ``splits`` is ``[(name, weight), ...]``; buckets
+    ``md5('split0:' || cluster) % sum(weights)`` map to names by cumulative
+    range — integer-exact, engine-portable, stable under repartitioning.
+    Map-side only (one projection over the assignments frame): the
+    cluster computation upstream is where the shuffles live.
     """
     if not splits or any(w <= 0 for _, w in splits):
         raise ValueError("splits must be non-empty with positive weights")
     den = sum(w for _, w in splits)
     h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"),
-                       F.col(cluster_col).cast("string"))), 1, 8),
+        F.md5(F.concat(F.lit("split0:"),
+                       F.col("cluster_id").cast("string"))), 1, 8),
         16, 10).cast("long")
     bucket = F.pmod(h, F.lit(den))
     # cumulative CASE from the left: ranges [0,w0), [w0,w0+w1), ...
@@ -1510,17 +1413,14 @@ def leakfree_split(assignments: DataFrame, splits: list[tuple[str, int]], *,
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
         cum += w
     return assignments.select(
-        F.col(id_col), F.col(cluster_col), expr.alias("split"))
+        F.col("doc_id"), F.col("cluster_id"), expr.alias("split"))
 
 
-def leakfree_split_sql(assign_cte: str, splits: list[tuple[str, int]], *,
-                       id_col: str = "doc_id",
-                       cluster_col: str = "cluster_id",
-                       salt: str = "split0") -> str:
+def leakfree_split_sql(assign_cte: str, splits: list[tuple[str, int]]) -> str:
     """DuckDB twin of :func:`leakfree_split`."""
     den = sum(w for _, w in splits)
-    h = (f"CAST('0x' || substr(md5('{salt}:' || "
-         f"CAST({cluster_col} AS VARCHAR)), 1, 8) AS BIGINT)")
+    h = ("CAST('0x' || substr(md5('split0:' || "
+         "CAST(cluster_id AS VARCHAR)), 1, 8) AS BIGINT)")
     cases, cum = [], 0
     for name, w in splits:
         cases.append(f"WHEN __b >= {cum} AND __b < {cum + w} THEN '{name}'")
@@ -1528,6 +1428,6 @@ def leakfree_split_sql(assign_cte: str, splits: list[tuple[str, int]], *,
     case = "CASE " + " ".join(cases) + " END"
     return f"""
 WITH lf_a AS ({assign_cte}),
-lf_b AS (SELECT {id_col}, {cluster_col}, ({h} % {den}) AS __b FROM lf_a)
-SELECT {id_col}, {cluster_col}, {case} AS split FROM lf_b
+lf_b AS (SELECT doc_id, cluster_id, ({h} % {den}) AS __b FROM lf_a)
+SELECT doc_id, cluster_id, {case} AS split FROM lf_b
 """

@@ -64,8 +64,7 @@ def extract_links_sql(html_expr: str) -> str:
     return f"regexp_extract_all({html_expr}, '{HREF_RE}', 1)"
 
 
-def host_link_graph(pages: DataFrame, *, url_col: str = "url",
-                    html_col: str = "html") -> DataFrame:
+def host_link_graph(pages: DataFrame) -> DataFrame:
     """(src_host, dst_host, n_links): the weighted host-level link graph.
 
     Self-loops (intra-host links, the overwhelming majority on real pages)
@@ -74,9 +73,9 @@ def host_link_graph(pages: DataFrame, *, url_col: str = "url",
     corpus collapses to a host-pair relation in a single shuffle whose key
     space is host pairs, not pages.
     """
-    src = host_col(F.col(url_col))
+    src = host_col(F.col("url"))
     links = (pages.select(src.alias("src_host"),
-                          F.explode(extract_links_col(F.col(html_col)))
+                          F.explode(extract_links_col(F.col("html")))
                           .alias("target")))
     dst = host_col(F.col("target"))
     return (links.select("src_host", dst.alias("dst_host"))
@@ -85,24 +84,21 @@ def host_link_graph(pages: DataFrame, *, url_col: str = "url",
             .agg(F.count(F.lit(1)).alias("n_links")))
 
 
-def host_link_graph_sql(pages_cte: str, url_col: str = "url",
-                        html_col: str = "html") -> str:
+def host_link_graph_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`host_link_graph` (unnest instead of explode)."""
     return f"""
 SELECT src_host, dst_host, COUNT(*) AS n_links FROM (
   SELECT src_host, {host_sql('target')} AS dst_host FROM (
-    SELECT {host_sql(url_col)} AS src_host,
-           unnest({extract_links_sql(html_col)}) AS target
+    SELECT {host_sql("url")} AS src_host,
+           unnest({extract_links_sql("html")}) AS target
     FROM ({pages_cte})))
 WHERE src_host <> dst_host
 GROUP BY 1, 2
 """
 
 
-def pagerank(edges: DataFrame, *, iters: int = 3, src_col: str = "src_host",
-             dst_col: str = "dst_host", weight_col: str | None = "n_links",
-             node_col: str = "host") -> DataFrame:
-    """(node, pr): fixed-point integer PageRank after ``iters`` rounds of
+def pagerank(edges: DataFrame, *, iters: int = 3) -> DataFrame:
+    """(host, pr): fixed-point integer PageRank after ``iters`` rounds of
     power iteration over a weighted edge list (see module docstring for the
     exact-arithmetic contract).  ``iters`` is a fixed budget, not a
     convergence probe, so the oracle can unroll it; 3 rounds already
@@ -115,78 +111,70 @@ def pagerank(edges: DataFrame, *, iters: int = 3, src_col: str = "src_host",
     for larger graphs or heavy edge weights, scale BASE down — rank
     resolution shrinks proportionally but the fixed-point exactness
     argument is independent of BASE."""
-    if node_col in ("src", "dst", "w", "out_w", "pr"):
-        raise ValueError(
-            "node_col collides with an internal working column "
-            "('src', 'dst', 'w', 'out_w', 'pr') — pick another name")
-    w = F.col(weight_col) if weight_col else F.lit(1)
     # r8: every checkpoint here is LAZY — there is no per-round convergence
     # probe (the budget is fixed), so nothing needs materializing until the
     # caller's one action, which collapses the former 2 + iters eager
     # checkpoint jobs into a single job.  The checkpoints still truncate
     # lineage (the plan of round k references round k-1's pinned RDD, not
     # its full pipeline), which is all they were for.
-    e = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
-                      w.cast("long").alias("w"))
+    e = (edges.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"),
+                      F.col("n_links").cast("long").alias("w"))
          .localCheckpoint(eager=False))
-    nodes = (e.select(F.col("src").alias(node_col))
-             .unionAll(e.select(F.col("dst").alias(node_col)))
+    nodes = (e.select(F.col("src").alias("host"))
+             .unionAll(e.select(F.col("dst").alias("host")))
              .distinct().localCheckpoint(eager=False))
     outw = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     ew = e.join(outw, "src")
-    ranks = nodes.select(node_col, F.lit(BASE).cast("long").alias("pr"))
+    ranks = nodes.select("host", F.lit(BASE).cast("long").alias("pr"))
     for _ in range(iters):
-        ranks = pagerank_round(ew, nodes, ranks, node_col).localCheckpoint(
-            eager=False)
+        ranks = pagerank_round(ew, nodes, ranks).localCheckpoint(eager=False)
     return ranks
 
 
-def pagerank_round(ew: DataFrame, nodes: DataFrame, ranks: DataFrame,
-                   node_col: str = "host") -> DataFrame:
-    """(node, pr) after one fixed-point round: the previous ``ranks``
-    (node, pr) move ``(pr * 85 * w) div (100 * out_w)`` along every edge of
+def pagerank_round(ew: DataFrame, nodes: DataFrame,
+                   ranks: DataFrame) -> DataFrame:
+    """(host, pr) after one fixed-point round: the previous ``ranks``
+    (host, pr) move ``(pr * 85 * w) div (100 * out_w)`` along every edge of
     ``ew`` (src, dst, w, out_w), and every node of ``nodes`` adds the
     teleport share to its in-mass.  One equi-join + one groupBy-sum over
     host-sized frames."""
-    contrib = (ew.join(ranks, ew.src == F.col(node_col))
+    contrib = (ew.join(ranks, ew.src == F.col("host"))
                .select(F.col("dst"),
                        F.expr(f"(pr * {D_NUM} * w) div ({D_DEN} * out_w)")
                        .alias("c")))
     in_mass = contrib.groupBy("dst").agg(F.sum("c").alias("m"))
-    return (nodes.join(in_mass, nodes[node_col] == in_mass.dst, "left")
-            .select(node_col,
+    return (nodes.join(in_mass, nodes["host"] == in_mass.dst, "left")
+            .select("host",
                     (F.lit(TELEPORT) + F.coalesce(F.col("m"), F.lit(0)))
                     .cast("long").alias("pr")))
 
 
-def pagerank_sql(edges_cte: str, iters: int = 3, src_col: str = "src_host",
-                 dst_col: str = "dst_host", weight_col: str = "n_links",
-                 node_col: str = "host") -> str:
+def pagerank_sql(edges_cte: str, iters: int = 3) -> str:
     """DuckDB twin of :func:`pagerank`: the fixed round budget unrolled as
     one CTE per iteration — same integer arithmetic, bit-equal output."""
     parts = [
-        f"pr_e AS (SELECT {src_col} AS src, {dst_col} AS dst, "
-        f"CAST({weight_col} AS BIGINT) AS w FROM ({edges_cte}))",
-        f"pr_nodes AS (SELECT DISTINCT {node_col} FROM ("
-        f"SELECT src AS {node_col} FROM pr_e "
-        f"UNION ALL SELECT dst FROM pr_e))",
+        f"pr_e AS (SELECT src_host AS src, dst_host AS dst, "
+        f"CAST(n_links AS BIGINT) AS w FROM ({edges_cte}))",
+        "pr_nodes AS (SELECT DISTINCT host FROM ("
+        "SELECT src AS host FROM pr_e "
+        "UNION ALL SELECT dst FROM pr_e))",
         "pr_out AS (SELECT src, SUM(w) AS out_w FROM pr_e GROUP BY 1)",
         "pr_ew AS (SELECT e.src, e.dst, e.w, o.out_w "
         "FROM pr_e e JOIN pr_out o USING (src))",
-        f"pr_r0 AS (SELECT {node_col}, CAST({BASE} AS BIGINT) AS pr "
+        f"pr_r0 AS (SELECT host, CAST({BASE} AS BIGINT) AS pr "
         f"FROM pr_nodes)",
     ]
     for i in range(iters):
         parts.append(
-            f"pr_r{i + 1} AS (SELECT n.{node_col}, CAST({TELEPORT} + "
+            f"pr_r{i + 1} AS (SELECT n.host, CAST({TELEPORT} + "
             f"COALESCE(SUM((r.pr * {D_NUM} * e.w) // ({D_DEN} * e.out_w)), 0) "
             f"AS BIGINT) AS pr "
             f"FROM pr_nodes n "
-            f"LEFT JOIN pr_ew e ON e.dst = n.{node_col} "
-            f"LEFT JOIN pr_r{i} r ON r.{node_col} = e.src "
-            f"GROUP BY n.{node_col})")
+            f"LEFT JOIN pr_ew e ON e.dst = n.host "
+            f"LEFT JOIN pr_r{i} r ON r.host = e.src "
+            f"GROUP BY n.host)")
     return ("WITH " + ",\n".join(parts) +
-            f"\nSELECT {node_col}, pr FROM pr_r{iters}")
+            f"\nSELECT host, pr FROM pr_r{iters}")
 
 
 # --- anchor text -------------------------------------------------------------
@@ -201,10 +189,10 @@ def pagerank_sql(edges_cte: str, iters: int = 3, src_col: str = "src_host",
 ANCHOR_RE = r'<a href="(https?://[^"]*)"[^>]*>([^<]*)</a>'
 
 
-def anchor_pairs(pages: DataFrame, *, html_col: str = "html") -> DataFrame:
+def anchor_pairs(pages: DataFrame) -> DataFrame:
     """(dst_host, anchor): one row per anchor element with non-empty inner
     text, the target canonicalized to its host."""
-    s = F.col(html_col).cast("string")
+    s = F.col("html").cast("string")
     hrefs = F.regexp_extract_all(s, F.lit(ANCHOR_RE), F.lit(1))
     texts = F.regexp_extract_all(s, F.lit(ANCHOR_RE), F.lit(2))
     z = pages.select(F.explode(F.arrays_zip(hrefs.alias("u"),
@@ -214,31 +202,29 @@ def anchor_pairs(pages: DataFrame, *, html_col: str = "html") -> DataFrame:
             .filter(F.col("anchor") != ""))
 
 
-def anchor_terms(pages: DataFrame, *, html_col: str = "html",
-                 min_count: int = 1) -> DataFrame:
+def anchor_terms(pages: DataFrame) -> DataFrame:
     """(dst_host, term, n_links): how often each lower-cased anchor token
     describes each target host — explode + one groupBy (term-keyed shuffle
     of anchor tokens only, never page payloads)."""
     from polycheck_spark.operators.text import tokens_col
-    p = anchor_pairs(pages, html_col=html_col)
+    p = anchor_pairs(pages)
     t = p.select("dst_host",
                  F.explode(tokens_col(F.col("anchor"))).alias("term"))
     return (t.groupBy("dst_host", "term")
             .agg(F.count(F.lit(1)).alias("n_links"))
-            .filter(F.col("n_links") >= min_count))
+            .filter(F.col("n_links") >= 1))
 
 
-def anchor_terms_sql(pages_cte: str, html_col: str = "html",
-                     min_count: int = 1) -> str:
+def anchor_terms_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`anchor_terms` (positional multi-unnest zip)."""
     from polycheck_spark.operators.text import _tokens_sql
     return f"""
 SELECT dst_host, term, COUNT(*) AS n_links FROM (
   SELECT dst_host, unnest({_tokens_sql('anchor')}) AS term FROM (
     SELECT {host_sql('u')} AS dst_host, t AS anchor FROM (
-      SELECT unnest(regexp_extract_all({html_col}, '{ANCHOR_RE}', 1)) AS u,
-             unnest(regexp_extract_all({html_col}, '{ANCHOR_RE}', 2)) AS t
+      SELECT unnest(regexp_extract_all(html, '{ANCHOR_RE}', 1)) AS u,
+             unnest(regexp_extract_all(html, '{ANCHOR_RE}', 2)) AS t
       FROM ({pages_cte}))
     WHERE t <> ''))
-GROUP BY 1, 2 HAVING COUNT(*) >= {min_count}
+GROUP BY 1, 2 HAVING COUNT(*) >= 1
 """

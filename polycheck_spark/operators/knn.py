@@ -193,7 +193,6 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int, *,
                 coarse = knn_join(remaining, t0, k, res=max(2, res // 2),
                                   n_targets=nt, initial_ring=initial_ring,
                                   max_rounds=max_rounds, max_cross_pairs=max_cross_pairs,
-                                  query_id="query_id", target_id="target_id",
                                   qlon="qlon", qlat="qlat", tlon="tlon", tlat="tlat")
                 done_parts.append(coarse.select("query_id", "target_id", "dist2", "rank"))
             else:
@@ -214,14 +213,13 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int, *,
             df.unpersist()
 
 
-def knn_sql_oracle(points_cte: str, queries_filter: str, k: int,
-                   point_id: str = "doc_id") -> str:
+def knn_sql_oracle(points_cte: str, queries_filter: str, k: int) -> str:
     """Brute-force DuckDB oracle: same metric, same (dist2, id) tie-break."""
     return f"""
 WITH pts AS ({points_cte}),
 q AS (SELECT * FROM pts WHERE {queries_filter}),
 pairs AS (
-  SELECT q.{point_id} AS query_id, t.{point_id} AS target_id,
+  SELECT q.doc_id AS query_id, t.doc_id AS target_id,
          (q.lon - t.lon) * (q.lon - t.lon) + (q.lat - t.lat) * (q.lat - t.lat) AS dist2
   FROM q JOIN pts t ON TRUE
 ),

@@ -322,8 +322,7 @@ _DECODE_STATS_SCHEMA = T.StructType([
 ])
 
 
-def decode_media_basic(df: DataFrame, *, payload_col: str = "payload",
-                       id_col: str = "doc_id") -> DataFrame:
+def decode_media_basic(df: DataFrame) -> DataFrame:
     """Real (non-stub) decode of the codec-free format slice via
     ``mapInPandas``: BMP / PGM / PPM pixel stats, WAV-PCM sample stats.
     Unrecognized payloads yield ``fmt='unknown'`` with NULL stats rather
@@ -336,7 +335,7 @@ def decode_media_basic(df: DataFrame, *, payload_col: str = "payload",
     def gen(batches):
         for pdf in batches:
             out = {f.name: [] for f in _DECODE_STATS_SCHEMA.fields}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
                 rec = None
                 for dec in _BASIC_DECODERS:
@@ -362,7 +361,7 @@ def decode_media_basic(df: DataFrame, *, payload_col: str = "payload",
                 out["val_max"].append(int(vals.max()) if len(vals) else None)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, payload_col).mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         gen, schema=_DECODE_STATS_SCHEMA)
 
 
@@ -388,8 +387,7 @@ def _dhash64(gray: np.ndarray) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def image_dhash(df: DataFrame, *, payload_col: str = "payload",
-                id_col: str = "doc_id") -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """(doc_id, dhash): perceptual fingerprint of codec-free-decodable
     images (BMP / PGM / PPM).  RGB collapses to integer-mean grayscale
     ((r+g+b) // 3); images smaller than the 9 x 8 dHash grid, audio, and
@@ -406,7 +404,7 @@ def image_dhash(df: DataFrame, *, payload_col: str = "payload",
     def gen(batches):
         for pdf in batches:
             ids, hashes = [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
                 rec = _decode_bmp(b) or _decode_pnm(b)
                 h = None
@@ -421,7 +419,7 @@ def image_dhash(df: DataFrame, *, payload_col: str = "payload",
                 hashes.append(h)
             yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
 
-    return df.select(id_col, payload_col).mapInPandas(gen, schema=schema)
+    return df.select("doc_id", "payload").mapInPandas(gen, schema=schema)
 
 
 # --- codec-free audio features (over the real WAV decode) --------------------
@@ -436,9 +434,7 @@ _AUDIO_FEAT_SCHEMA = T.StructType([
 ])
 
 
-def audio_features(df: DataFrame, *, payload_col: str = "payload",
-                   id_col: str = "doc_id",
-                   frame: int = 256) -> DataFrame:
+def audio_features(df: DataFrame, *, frame: int = 256) -> DataFrame:
     """Integer audio features of WAV-PCM payloads via the real decoder:
     sample count, ``ceil(n / frame)`` frame count, total absolute
     amplitude, peak absolute amplitude, and zero crossings (adjacent
@@ -452,7 +448,7 @@ def audio_features(df: DataFrame, *, payload_col: str = "payload",
     def gen(batches):
         for pdf in batches:
             out = {f.name: [] for f in _AUDIO_FEAT_SCHEMA.fields}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
                 rec = _decode_wav(b)
                 out["doc_id"].append(did)
@@ -472,5 +468,5 @@ def audio_features(df: DataFrame, *, payload_col: str = "payload",
                     int((nonneg[1:] != nonneg[:-1]).sum()) if n > 1 else 0)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, payload_col).mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         gen, schema=_AUDIO_FEAT_SCHEMA)

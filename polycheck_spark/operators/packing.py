@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 def pack_chunks(docs: DataFrame, budget: int, *,
                 group_cols: tuple[str, ...] = ("lang",),
-                id_col: str = "doc_id",
-                tokens_col_name: str = "n_tokens") -> DataFrame:
+                id_col: str = "doc_id") -> DataFrame:
     """Concat-and-chunk bin assignment.
 
     Output per document: ``start_off`` (exclusive prefix sum — the token
@@ -37,8 +36,8 @@ def pack_chunks(docs: DataFrame, budget: int, *,
     """
     w = (Window.partitionBy(*group_cols).orderBy(id_col)
          .rowsBetween(Window.unboundedPreceding, -1))
-    n = F.col(tokens_col_name).cast("long")
-    start = F.coalesce(F.sum(tokens_col_name).over(w), F.lit(0)).cast("long")
+    n = F.col("n_tokens").cast("long")
+    start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
     out = docs.select(*group_cols, id_col, n.cast("int").alias("n_tokens"),
                       start.alias("start_off"))
     bin_id = F.expr(f"start_off div {budget}")
@@ -51,23 +50,19 @@ def pack_chunks(docs: DataFrame, budget: int, *,
         (end_bin > bin_id).alias("straddles"))
 
 
-def pack_chunks_sql(table: str, budget: int,
-                    group_cols: tuple[str, ...] = ("lang",),
-                    id_col: str = "doc_id",
-                    tokens_expr: str = "n_tokens") -> str:
+def pack_chunks_sql(table: str, budget: int) -> str:
     """DuckDB twin of :func:`pack_chunks` — same window, same integer
     division."""
-    g = ", ".join(group_cols)
     return f"""
-SELECT {g}, {id_col}, CAST(n AS INT) AS n_tokens, start_off,
+SELECT lang, doc_id, CAST(n AS INT) AS n_tokens, start_off,
        start_off // {budget} AS bin_id,
        (start_off + greatest(n - 1, 0)) // {budget} AS end_bin,
        ((start_off + greatest(n - 1, 0)) // {budget}) > (start_off // {budget})
          AS straddles
 FROM (
-  SELECT {g}, {id_col}, n,
-         CAST(coalesce(SUM(n) OVER (PARTITION BY {g} ORDER BY {id_col}
+  SELECT lang, doc_id, n,
+         CAST(coalesce(SUM(n) OVER (PARTITION BY lang ORDER BY doc_id
               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
            AS start_off
-  FROM (SELECT {g}, {id_col}, CAST({tokens_expr} AS BIGINT) AS n FROM {table}))
+  FROM (SELECT lang, doc_id, CAST(n_tokens AS BIGINT) AS n FROM {table}))
 """

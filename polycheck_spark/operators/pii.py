@@ -48,47 +48,44 @@ def _count(col, pattern: str):
     return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0))).cast("int")
 
 
-def redact_pii(docs: DataFrame, *, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """(id, clean_text, n_emails, n_ips, n_phones) — typed-placeholder
     redaction plus per-document match counts (counted on the original
     text, before any replacement)."""
-    t = F.col(text_col)
+    t = F.col("text")
     clean = t
     for pat, tok in _RULES:
         clean = F.regexp_replace(clean, pat, tok)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         clean.alias("clean_text"),
         _count(t, EMAIL_RE).alias("n_emails"),
         _count(t, IPV4_RE).alias("n_ips"),
         _count(t, PHONE_RE).alias("n_phones"))
 
 
-def redact_pii_sql(table: str, id_col: str = "doc_id",
-                   text_col: str = "text") -> str:
+def redact_pii_sql(table: str) -> str:
     """DuckDB twin of :func:`redact_pii` — same patterns, same order."""
-    clean = text_col
+    clean = "text"
     for pat, tok in _RULES:
         clean = f"regexp_replace({clean}, '{pat}', '{tok}', 'g')"
     def cnt(pat: str) -> str:
-        return f"CAST(len(regexp_extract_all({text_col}, '{pat}')) AS INT)"
-    return (f"SELECT {id_col}, {clean} AS clean_text, "
+        return f"CAST(len(regexp_extract_all(text, '{pat}')) AS INT)"
+    return (f"SELECT doc_id, {clean} AS clean_text, "
             f"{cnt(EMAIL_RE)} AS n_emails, {cnt(IPV4_RE)} AS n_ips, "
             f"{cnt(PHONE_RE)} AS n_phones FROM {table}")
 
 
-def pii_profile(docs: DataFrame, *, group_col: str = "lang",
-                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def pii_profile(docs: DataFrame) -> DataFrame:
     """Corpus-level PII exposure profile: per group (language, source, ...),
     how many documents carry each PII kind and the total span counts — the
     number a pipeline owner reads before deciding redaction policy.
     One groupBy over map-side-combined partial counts: a single shuffle of
     |groups| rows regardless of corpus size."""
-    red = redact_pii(docs, id_col=id_col, text_col=text_col)
-    joined = docs.select(id_col, group_col).join(red, id_col)
+    red = redact_pii(docs)
+    joined = docs.select("doc_id", "lang").join(red, "doc_id")
     any_pii = ((F.col("n_emails") + F.col("n_ips") + F.col("n_phones")) > 0)
-    return (joined.groupBy(group_col)
+    return (joined.groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(any_pii.cast("long")).alias("n_docs_with_pii"),
                  F.sum("n_emails").cast("long").alias("total_emails"),
@@ -96,14 +93,13 @@ def pii_profile(docs: DataFrame, *, group_col: str = "lang",
                  F.sum("n_phones").cast("long").alias("total_phones")))
 
 
-def pii_profile_sql(table: str, group_col: str = "lang",
-                    id_col: str = "doc_id", text_col: str = "text") -> str:
-    inner = redact_pii_sql(table, id_col, text_col)
-    return (f"SELECT g.{group_col}, COUNT(*) AS n_docs, "
+def pii_profile_sql(table: str) -> str:
+    inner = redact_pii_sql(table)
+    return (f"SELECT g.lang, COUNT(*) AS n_docs, "
             f"CAST(SUM(CASE WHEN r.n_emails + r.n_ips + r.n_phones > 0 "
             f"THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_with_pii, "
             f"CAST(SUM(r.n_emails) AS BIGINT) AS total_emails, "
             f"CAST(SUM(r.n_ips) AS BIGINT) AS total_ips, "
             f"CAST(SUM(r.n_phones) AS BIGINT) AS total_phones "
-            f"FROM ({inner}) r JOIN {table} g USING ({id_col}) "
-            f"GROUP BY g.{group_col}")
+            f"FROM ({inner}) r JOIN {table} g USING (doc_id) "
+            f"GROUP BY g.lang")

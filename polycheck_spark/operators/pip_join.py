@@ -45,10 +45,9 @@ MAX_COVER_CELLS = 64           # per-polygon covering-cell budget
 DEFAULT_N_SALT = 8
 
 
-def assign_tiles(pages: DataFrame, res: int = DEFAULT_TILE_RES,
-                 lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+def assign_tiles(pages: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
     """Add the Z-order ``cell_id`` tile column (JVM expression, no UDF)."""
-    return C.with_cell_id(pages, F.col(lon_col), F.col(lat_col), res)
+    return C.with_cell_id(pages, F.col("lon"), F.col("lat"), res)
 
 
 def choose_cover_res(layer: list[dict]) -> int:
@@ -105,15 +104,14 @@ def _pip_udf(spark, layer: list[dict]):
     return pip
 
 
-def _bbox_refine(df: DataFrame, lon_col: str, lat_col: str) -> DataFrame:
+def _bbox_refine(df: DataFrame) -> DataFrame:
     return df.filter(
-        (F.col(lon_col) >= F.col("xmin")) & (F.col(lon_col) <= F.col("xmax"))
-        & (F.col(lat_col) >= F.col("ymin")) & (F.col(lat_col) <= F.col("ymax"))
+        (F.col("lon") >= F.col("xmin")) & (F.col("lon") <= F.col("xmax"))
+        & (F.col("lat") >= F.col("ymin")) & (F.col("lat") <= F.col("ymax"))
     )
 
 
 def pip_join(spark, pages: DataFrame, layer: list[dict], *,
-             lon_col: str = "lon", lat_col: str = "lat",
              mode: str = "broadcast", hot_cells: list[int] | None = None,
              key_col: str = "url") -> DataFrame:
     """Join pages to every polygon containing them.
@@ -125,7 +123,7 @@ def pip_join(spark, pages: DataFrame, layer: list[dict], *,
     ways).  The cover resolution is :func:`choose_cover_res` of the layer.
     """
     res = choose_cover_res(layer)
-    probe = C.with_cell_id(pages, F.col(lon_col), F.col(lat_col), res)
+    probe = C.with_cell_id(pages, F.col("lon"), F.col("lat"), res)
     if not layer:  # empty layer -> empty join result with the full schema
         return probe.withColumn("polygon_id", F.lit(0).cast("long")).filter(F.lit(False))
 
@@ -157,14 +155,13 @@ def pip_join(spark, pages: DataFrame, layer: list[dict], *,
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
-    cand = _bbox_refine(cand, lon_col, lat_col)
+    cand = _bbox_refine(cand)
     pip = _pip_udf(spark, layer)
-    refined = cand.filter(pip(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))
+    refined = cand.filter(pip(F.col("lon"), F.col("lat"), F.col("polygon_id")))
     return refined.drop("xmin", "ymin", "xmax", "ymax")
 
 
 def pip_join_df(pages: DataFrame, polygons: DataFrame, *,
-                lon_col: str = "lon", lat_col: str = "lat",
                 cover_res: int = 6) -> DataFrame:
     """Fully-distributed spatial join against a polygon *DataFrame*.
 
@@ -193,9 +190,9 @@ def pip_join_df(pages: DataFrame, polygons: DataFrame, *,
              .withColumn("ciy", F.explode(F.sequence(iy0, iy1)))
              .withColumn("cell_id", C.encode_col(F.col("cix"), F.col("ciy"), cover_res))
              .drop("cix", "ciy"))
-    probe = C.with_cell_id(pages, F.col(lon_col), F.col(lat_col), cover_res)
+    probe = C.with_cell_id(pages, F.col("lon"), F.col("lat"), cover_res)
     cand = probe.join(cover, "cell_id")
-    cand = _bbox_refine(cand, lon_col, lat_col)
+    cand = _bbox_refine(cand)
 
     @F.pandas_udf(T.BooleanType())
     def pip(lon: pd.Series, lat: pd.Series, polygon_id: pd.Series,
@@ -213,14 +210,14 @@ def pip_join_df(pages: DataFrame, polygons: DataFrame, *,
         verts, offsets = pack_polygons_csr(ragged)
         return pd.Series(contains_csr(verts, offsets, inv, pts) > 0)
 
-    refined = cand.filter(pip(F.col(lon_col), F.col(lat_col), F.col("polygon_id"),
+    refined = cand.filter(pip(F.col("lon"), F.col("lat"), F.col("polygon_id"),
                               F.col("xs"), F.col("ys")))
     return refined.drop("xs", "ys", "xmin", "ymin", "xmax", "ymax")
 
 
-def detect_hot_cells(pages: DataFrame, res: int, *, lon_col: str = "lon",
-                     lat_col: str = "lat", sample_frac: float = 0.01,
-                     threshold_frac: float = 0.01, seed: int = 42) -> list[int]:
+def detect_hot_cells(pages: DataFrame, res: int, *,
+                     sample_frac: float = 0.01,
+                     threshold_frac: float = 0.01) -> list[int]:
     """Sampled heavy-hitter detection on the cell key (north_rule skew handling).
 
     Cells holding more than ``threshold_frac`` of the sampled pages are 'hot'.
@@ -231,8 +228,8 @@ def detect_hot_cells(pages: DataFrame, res: int, *, lon_col: str = "lon",
     run twice (r4 review finding).
     """
     from pyspark.sql import Window
-    counts = (C.with_cell_id(pages.sample(fraction=sample_frac, seed=seed),
-                             F.col(lon_col), F.col(lat_col), res)
+    counts = (C.with_cell_id(pages.sample(fraction=sample_frac, seed=42),
+                             F.col("lon"), F.col("lat"), res)
               .groupBy("cell_id").count())
     rows = (counts.withColumn("total", F.sum("count").over(Window.partitionBy()))
             .filter(F.col("count") > threshold_frac * F.col("total"))
@@ -240,9 +237,7 @@ def detect_hot_cells(pages: DataFrame, res: int, *, lon_col: str = "lon",
     return [r["cell_id"] for r in rows]
 
 
-def tile_rollup(points: DataFrame, res_fine: int, res_coarse: int,
-                lon_col: str = "lon", lat_col: str = "lat",
-                weight_col: str | None = None) -> DataFrame:
+def tile_rollup(points: DataFrame, res_fine: int, res_coarse: int) -> DataFrame:
     """Multi-resolution tile pyramid: (res, cell_id, n_docs) for every level
     in [res_coarse, res_fine] — the hypertable-rollup / map-tile
     pre-aggregation pattern.
@@ -258,17 +253,14 @@ def tile_rollup(points: DataFrame, res_fine: int, res_coarse: int,
     shuffle carries at most depth x 4^res_fine tiny (res, cell, count) rows
     — cell-count bounded, independent of input size — and map-side combine
     collapses it further wherever the fine aggregation's partitions are
-    spatially clustered.  Sums are exact (counts, or integer/decimal
-    weights); sum-of-counts associativity makes the exploded rollup equal a
-    per-level direct aggregation, which is exactly what the SQL oracle
-    computes.
+    spatially clustered.  Counts are exact; sum-of-counts associativity
+    makes the exploded rollup equal a per-level direct aggregation, which
+    is exactly what the SQL oracle computes.
     """
     if not 0 <= res_coarse <= res_fine:
         raise ValueError("need 0 <= res_coarse <= res_fine")
-    agg0 = (F.count(F.lit(1)) if weight_col is None
-            else F.sum(weight_col)).alias("n_docs")
-    fine = (assign_tiles(points, res=res_fine, lon_col=lon_col, lat_col=lat_col)
-            .groupBy("cell_id").agg(agg0))
+    fine = (assign_tiles(points, res=res_fine)
+            .groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_docs")))
     ancestors = F.explode(F.array(*[
         F.struct(F.lit(r).alias("res"),
                  C.parent_col(F.col("cell_id"), res_fine, r).alias("cell_id"))
@@ -294,8 +286,7 @@ def tile_rollup_sql(points_cte: str, res_fine: int, res_coarse: int) -> str:
     return f"WITH pts AS ({points_cte}) {body}"
 
 
-def tile_smooth(points: DataFrame, res: int,
-                lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+def tile_smooth(points: DataFrame, res: int) -> DataFrame:
     """3x3 neighborhood-smoothed tile density (the map-tile hot-spot /
     kernel-density prepass: each occupied cell's count plus all eight
     neighbors' counts).
@@ -322,7 +313,7 @@ def tile_smooth(points: DataFrame, res: int,
     if not 0 <= res <= C.MAX_RES:
         raise ValueError(f"res must be in [0, {C.MAX_RES}]")
     n = 1 << res
-    ix, iy = C.ixiy_cols(F.col(lon_col), F.col(lat_col), res)
+    ix, iy = C.ixiy_cols(F.col("lon"), F.col("lat"), res)
     occ = (points.select(ix.alias("ix"), iy.alias("iy"))
            .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs")))
     nb = F.explode(F.array(*[
@@ -364,9 +355,7 @@ FROM occ JOIN sm USING (ix, iy)
 """
 
 
-def hotspot_regions(points: DataFrame, res: int, min_count: int,
-                    lon_col: str = "lon", lat_col: str = "lat",
-                    max_iters: int = 20) -> DataFrame:
+def hotspot_regions(points: DataFrame, res: int, min_count: int) -> DataFrame:
     """Grid-DBSCAN-style spatial hotspot clustering: cells whose point
     count reaches ``min_count`` are "hot"; hot cells that touch (8-connected
     neighborhood) merge into regions.  Output: one row per region —
@@ -396,7 +385,7 @@ def hotspot_regions(points: DataFrame, res: int, min_count: int,
         raise ValueError("min_count must be >= 1")
     from polycheck_spark.operators.dedup import cluster_assignments
     n = 1 << res
-    ix, iy = C.ixiy_cols(F.col(lon_col), F.col(lat_col), res)
+    ix, iy = C.ixiy_cols(F.col("lon"), F.col("lat"), res)
     hot = (points.select(ix.alias("ix"), iy.alias("iy"))
            .groupBy("ix", "iy").agg(F.count(F.lit(1)).alias("n_docs"))
            .filter(F.col("n_docs") >= min_count)
@@ -415,8 +404,7 @@ def hotspot_regions(points: DataFrame, res: int, min_count: int,
                                     F.col("k").alias("b")), ["jx", "jy"])
              .filter(F.col("a") < F.col("b"))
              .select("a", "b"))
-    labels = cluster_assignments(hot.select(F.col("k").alias("id")), edges,
-                                 max_iters=max_iters)
+    labels = cluster_assignments(hot.select(F.col("k").alias("id")), edges)
     return (hot.join(labels, hot.k == labels.id)
             .groupBy(F.col("cluster_id").alias("region"))
             .agg(F.count(F.lit(1)).alias("n_cells"),

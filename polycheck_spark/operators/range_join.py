@@ -35,15 +35,13 @@ def res_for_radius(radius: float) -> int:
 
 
 def range_join(queries: DataFrame, targets: DataFrame, radius: float, *,
-               query_id: str = "query_id", target_id: str = "target_id",
-               qlon: str = "lon", qlat: str = "lat",
-               tlon: str = "lon", tlat: str = "lat") -> DataFrame:
+               query_id: str = "query_id", target_id: str = "target_id") -> DataFrame:
     """(query_id, target_id, dist2) for every pair within ``radius``
     (self-pairs excluded when ids collide)."""
     res = res_for_radius(radius)
     n = 1 << res
     q = queries.select(F.col(query_id).alias("query_id"),
-                       F.col(qlon).alias("qlon"), F.col(qlat).alias("qlat"))
+                       F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
     qix, qiy = C.ixiy_cols(F.col("qlon"), F.col("qlat"), res)
     q = q.withColumn("qix", qix).withColumn("qiy", qiy)
     offsets = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -55,7 +53,7 @@ def range_join(queries: DataFrame, targets: DataFrame, radius: float, *,
           .select("query_id", "qlon", "qlat", "cell_id"))
 
     t = targets.select(F.col(target_id).alias("target_id"),
-                       F.col(tlon).alias("tlon"), F.col(tlat).alias("tlat"))
+                       F.col("lon").alias("tlon"), F.col("lat").alias("tlat"))
     t = C.with_cell_id(t, F.col("tlon"), F.col("tlat"), res)
 
     # explicit multiply, not ** 2: Spark's pow routes through Math.pow
@@ -71,8 +69,7 @@ def range_join(queries: DataFrame, targets: DataFrame, radius: float, *,
             .select("query_id", "target_id", "dist2"))
 
 
-def range_join_sql(points_cte: str, queries_filter: str, radius: float,
-                   point_id: str = "doc_id") -> str:
+def range_join_sql(points_cte: str, queries_filter: str, radius: float) -> str:
     """Brute-force DuckDB oracle: same metric, same double arithmetic
     (radius^2 via the same two literals, so the boundary compare is
     bit-identical).  The literal is 17-digit scientific notation: DuckDB
@@ -82,9 +79,9 @@ def range_join_sql(points_cte: str, queries_filter: str, radius: float,
     return f"""
 WITH pts AS ({points_cte}),
 q AS (SELECT * FROM pts WHERE {queries_filter})
-SELECT q.{point_id} AS query_id, t.{point_id} AS target_id,
+SELECT q.doc_id AS query_id, t.doc_id AS target_id,
        (q.lon - t.lon) * (q.lon - t.lon) + (q.lat - t.lat) * (q.lat - t.lat) AS dist2
-FROM q JOIN pts t ON q.{point_id} <> t.{point_id}
+FROM q JOIN pts t ON q.doc_id <> t.doc_id
 WHERE (q.lon - t.lon) * (q.lon - t.lon) + (q.lat - t.lat) * (q.lat - t.lat)
       <= {r} * {r}
 """

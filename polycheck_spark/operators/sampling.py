@@ -3,7 +3,7 @@
 Training-data pipelines need samples that are (a) reproducible across runs
 and engines, (b) stable under repartitioning, and (c) stratifiable — none of
 which ``df.sample()`` gives (it is seed+partition-layout dependent).  Here
-membership is a pure function of the row key: md5(salt:key) -> 32-bit int ->
+membership is a pure function of the row key: md5(SALT:key) -> 32-bit int ->
 keep iff ``hash % den < num``.  That is a Bernoulli(num/den) sample under
 the random-oracle model, identical in Spark and DuckDB, and trivially
 distributed (a map-side filter — no shuffle at any scale; Catalyst pushes it
@@ -19,49 +19,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _bucket(key_col, salt: str, den: int):
-    """Uniform bucket in [0, den): first 8 md5 hex digits of 'salt:key' —
-    the same md5-int scheme every LSH path uses (engine-parity proven)."""
-    h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), key_col.cast("string"))), 1, 8),
+#: hash salt of every sampler here
+SALT = "s0"
+
+
+def _hash(key_col):
+    """First 8 md5 hex digits of 'SALT:key' as a long — the same md5-int
+    scheme every LSH path uses (engine-parity proven)."""
+    return F.conv(F.substring(
+        F.md5(F.concat(F.lit(f"{SALT}:"), key_col.cast("string"))), 1, 8),
         16, 10).cast("long")
-    return F.pmod(h, F.lit(den))
+
+
+def _hash_sql(key_expr: str) -> str:
+    return (f"CAST('0x' || substr(md5('{SALT}:' || CAST({key_expr} AS VARCHAR)), 1, 8) "
+            f"AS BIGINT)")
+
+
+def _bucket(key_col, den: int):
+    """Uniform bucket in [0, den) of :func:`_hash`."""
+    return F.pmod(_hash(key_col), F.lit(den))
+
+
+def _bucket_sql(key_expr: str, den: int) -> str:
+    return f"({_hash_sql(key_expr)} % {den})"
 
 
 def _sq(value: str) -> str:
-    """SQL single-quote escape for interpolated salt/stratum literals — the
+    """SQL single-quote escape for interpolated stratum literals — the
     Spark side takes any string through F.lit, so the emitters must too
-    (a salt like "it's" previously produced a broken oracle query)."""
+    (a value like "it's" previously produced a broken oracle query)."""
     return value.replace("'", "''")
 
 
-def _bucket_sql(key_expr: str, salt: str, den: int) -> str:
-    return (f"(CAST('0x' || substr(md5('{_sq(salt)}:' || CAST({key_expr} AS VARCHAR)), 1, 8) "
-            f"AS BIGINT) % {den})")
-
-
-def sample_hash(df: DataFrame, key_col: str, rate: tuple[int, int], *,
-                salt: str = "s0") -> DataFrame:
-    """Keep each row with probability num/den, deterministically by key.
-    Different ``salt`` values give independent samples (e.g. train/held-out
-    splits: same den, disjoint bucket ranges via distinct salts or
-    complementary filters)."""
+def sample_hash(df: DataFrame, key_col: str, rate: tuple[int, int]) -> DataFrame:
+    """Keep each row with probability num/den, deterministically by key
+    (train/held-out splits: same den, complementary filters)."""
     num, den = rate
     if not 0 <= num <= den:
         raise ValueError("need 0 <= num <= den")
-    return df.filter(_bucket(F.col(key_col), salt, den) < num)
+    return df.filter(_bucket(F.col(key_col), den) < num)
 
 
-def sample_hash_sql(table: str, key_expr: str, rate: tuple[int, int],
-                    salt: str = "s0") -> str:
+def sample_hash_sql(table: str, key_expr: str, rate: tuple[int, int]) -> str:
     num, den = rate
-    return f"SELECT * FROM {table} WHERE {_bucket_sql(key_expr, salt, den)} < {num}"
+    return f"SELECT * FROM {table} WHERE {_bucket_sql(key_expr, den)} < {num}"
 
 
 def stratified_sample(df: DataFrame, key_col: str, stratum_col: str,
                       rates: dict[str, tuple[int, int]], *,
-                      default_rate: tuple[int, int] = (0, 1),
-                      salt: str = "s0") -> DataFrame:
+                      default_rate: tuple[int, int] = (0, 1)) -> DataFrame:
     """Per-stratum deterministic sampling: stratum s keeps rate[s] of its
     rows (``default_rate`` for unlisted strata).  The rates ride a literal
     CASE expression (a handful of strata) — zero joins, zero shuffles; for
@@ -79,24 +86,19 @@ def stratified_sample(df: DataFrame, key_col: str, stratum_col: str,
     # threshold — hash % (den) < num requires per-stratum modulus; instead
     # use hash % LCM-free form: (hash % den) < num evaluated with the
     # stratum's own den via pmod on a Column modulus
-    h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))), 1, 8),
-        16, 10).cast("long")
-    return df.filter(F.pmod(h, den_c) < num_c)
+    return df.filter(F.pmod(_hash(F.col(key_col)), den_c) < num_c)
 
 
 def stratified_sample_sql(table: str, key_expr: str, stratum_col: str,
                           rates: dict[str, tuple[int, int]],
-                          default_rate: tuple[int, int] = (0, 1),
-                          salt: str = "s0") -> str:
+                          default_rate: tuple[int, int] = (0, 1)) -> str:
     num_c = str(default_rate[0])
     den_c = str(default_rate[1])
     for s, (num, den) in sorted(rates.items()):
         num_c = f"CASE WHEN {stratum_col} = '{_sq(s)}' THEN {num} ELSE {num_c} END"
         den_c = f"CASE WHEN {stratum_col} = '{_sq(s)}' THEN {den} ELSE {den_c} END"
-    h = (f"CAST('0x' || substr(md5('{_sq(salt)}:' || CAST({key_expr} AS VARCHAR)), 1, 8) "
-         f"AS BIGINT)")
-    return f"SELECT * FROM {table} WHERE ({h} % ({den_c})) < ({num_c})"
+    return (f"SELECT * FROM {table} "
+            f"WHERE ({_hash_sql(key_expr)} % ({den_c})) < ({num_c})")
 
 
 # --- temperature-scaled language mixing --------------------------------------
@@ -123,8 +125,7 @@ def _isqrt_sql(n_expr: str) -> str:
 
 
 def lang_temperature_sample(df: DataFrame, key_col: str, stratum_col: str,
-                            rate: tuple[int, int], *,
-                            salt: str = "s0") -> DataFrame:
+                            rate: tuple[int, int]) -> DataFrame:
     """Temperature-flattened multilingual sampling (alpha = 0.5): keep each
     row of stratum ``l`` with probability ``min(1, num / (den * isqrt(n_l)))``
     where ``n_l`` is the stratum's row count — so expected kept mass per
@@ -149,17 +150,16 @@ def lang_temperature_sample(df: DataFrame, key_col: str, stratum_col: str,
     cnt = df.groupBy(F.col(stratum_col).alias("__st")).count()
     s = cnt.select("__st", _isqrt_cols(F.col("count")).alias("__s"))
     joined = df.join(F.broadcast(s), df[stratum_col] == F.col("__st"), "left")
-    bucket = _bucket(F.col(key_col), salt, SQRT_SAMPLE_M)
+    bucket = _bucket(F.col(key_col), SQRT_SAMPLE_M)
     keep = (bucket * F.lit(den) * F.col("__s")
             < F.lit(SQRT_SAMPLE_M) * F.lit(num))
     return joined.filter(keep).drop("__st", "__s")
 
 
 def lang_temperature_sample_sql(table: str, key_expr: str, stratum_col: str,
-                                rate: tuple[int, int],
-                                salt: str = "s0") -> str:
+                                rate: tuple[int, int]) -> str:
     num, den = rate
-    b = _bucket_sql(key_expr, salt, SQRT_SAMPLE_M)
+    b = _bucket_sql(key_expr, SQRT_SAMPLE_M)
     return f"""
 SELECT t.* FROM {table} t
 JOIN (SELECT {stratum_col} AS st, {_isqrt_sql('COUNT(*)')} AS s
@@ -215,10 +215,10 @@ WHERE __rk * {den} <= __n * {num}
 """
 
 
-def sample_exact_k(df: DataFrame, key_col: str, stratum_col: str, k: int, *,
-                   salt: str = "s0", shards: int = 1) -> DataFrame:
+def sample_exact_k(df: DataFrame, key_col: str, stratum_col: str,
+                   k: int) -> DataFrame:
     """EXACTLY ``min(k, |stratum|)`` rows per stratum, deterministically:
-    rows ranked by ``(md5(salt:key), key)`` within their stratum, ranks
+    rows ranked by ``(md5(SALT:key), key)`` within their stratum, ranks
     ``<= k`` kept (rank exposed as ``sample_rank``).  Rate-based sampling
     (:func:`sample_hash`) yields a binomial count per stratum; eval-set
     construction and per-class balancing need the count pinned — same
@@ -226,45 +226,24 @@ def sample_exact_k(df: DataFrame, key_col: str, stratum_col: str, k: int, *,
     repartitioning, engine-portable).
 
     Scale: rank-by-window is one hash shuffle on the stratum plus a
-    per-stratum sort — fine until one stratum is corpus-sized.  For that,
-    ``shards > 1`` pre-cuts with a two-stage top-k: stage 1 ranks within
-    ``(stratum, hash-shard)`` and keeps k per shard (each shard's sort is
-    ``|stratum|/shards``), stage 2 re-ranks the ``<= shards*k`` survivors —
-    the global top-k by hash is contained in the union of per-shard
-    top-k's, so the output is EXACTLY the ``shards=1`` result
-    (pytest-pinned), the same replicate-and-refine trick the as-of join
-    uses for hot keys.
+    per-stratum sort — fine until one stratum is corpus-sized.
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    if shards < 1:
-        raise ValueError("shards must be >= 1")
-    h = F.conv(F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))),
-        1, 8), 16, 10).cast("long")
-    base = df.withColumn("__h", h)
-    if shards > 1:
-        w1 = (Window.partitionBy(F.col(stratum_col),
-                                 F.pmod(F.col("__h"), F.lit(shards)))
-              .orderBy(F.col("__h"), F.col(key_col)))
-        base = (base.withColumn("__rn1", F.row_number().over(w1))
-                .filter(F.col("__rn1") <= k).drop("__rn1"))
+    base = df.withColumn("__h", _hash(F.col(key_col)))
     w = (Window.partitionBy(stratum_col)
          .orderBy(F.col("__h"), F.col(key_col)))
     return (base.withColumn("sample_rank", F.row_number().over(w))
             .filter(F.col("sample_rank") <= k).drop("__h"))
 
 
-def sample_exact_k_sql(table: str, key_expr: str, stratum_col: str, k: int,
-                       salt: str = "s0") -> str:
-    """DuckDB twin of :func:`sample_exact_k` (single-stage; the sharded
-    Spark path is pinned equal to it by pytest)."""
-    h = (f"CAST('0x' || substr(md5('{_sq(salt)}:' || CAST({key_expr} AS VARCHAR)), 1, 8) "
-         f"AS BIGINT)")
+def sample_exact_k_sql(table: str, key_expr: str, stratum_col: str,
+                       k: int) -> str:
+    """DuckDB twin of :func:`sample_exact_k`."""
     return f"""
 SELECT *, CAST(ROW_NUMBER() OVER (
             PARTITION BY {stratum_col}
-            ORDER BY {h}, {key_expr}) AS BIGINT) AS sample_rank
+            ORDER BY {_hash_sql(key_expr)}, {key_expr}) AS BIGINT) AS sample_rank
 FROM {table}
 QUALIFY sample_rank <= {k}
 """

@@ -33,8 +33,7 @@ from polycheck_spark.session import local_frame, spread
 N_PLANES = 8
 
 
-def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact cosine top-k of each query against all embeddings.
 
     ``queries`` is small and collected driver-side (the same contract the
@@ -48,11 +47,11 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     the fold helpers below) and emits only per-batch top-k partials, so
     the window ranks O(k * n_batches) rows per query.  Output is
     bit-identical: same cosines, same ties, same ranks."""
-    qids, qmat = _collect_queries(queries, id_col, vec_col)
+    qids, qmat = _collect_queries(queries, "vec_id", "embedding")
     if qids is None:
         return _empty_ranked(embeddings)
     partial = _ranked_topk_partials(embeddings, qids, qmat, k,
-                                    id_col=id_col, vec_col=vec_col)
+                                    id_col="vec_id", vec_col="embedding")
     return _rank_partials(partial, k)
 
 
@@ -248,15 +247,14 @@ def _empty_ranked(df: DataFrame) -> DataFrame:
     return local_frame(df.sparkSession, [], schema)
 
 
-def cosine_topk_sql(table: str, queries_filter: str, k: int,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> str:
+def cosine_topk_sql(table: str, queries_filter: str, k: int) -> str:
     """DuckDB twin using explicit per-element sums (the left fold
     :func:`_fold_dot` reproduces)."""
     return f"""
-WITH t AS (SELECT {id_col} AS target_id,
-                  list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
-q AS (SELECT {id_col} AS query_id,
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS qvec
+WITH t AS (SELECT vec_id AS target_id,
+                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
+q AS (SELECT vec_id AS query_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
       FROM {table} WHERE {queries_filter}),
 scored AS (
   SELECT q.query_id, t.target_id, {_cos_sql("qvec", "tvec")} AS cosine
@@ -340,8 +338,7 @@ def _ivf_list_batches(cents, vec_col: str, batches):
             yield pdf.assign(list_id=_ivf_assign(cents, _vec_matrix(pdf[vec_col])))
 
 
-def ivf_lists(embeddings: DataFrame, cents, *,
-              vec_col: str = "embedding") -> DataFrame:
+def ivf_lists(embeddings: DataFrame, cents) -> DataFrame:
     """``embeddings`` with each row's IVF ``list_id`` (long) appended — the
     assignment :func:`ivf_topk` masks its targets with, in one Arrow-batch
     pass over the driver-collected centroids ``cents``."""
@@ -349,33 +346,24 @@ def ivf_lists(embeddings: DataFrame, cents, *,
     schema = T.StructType(embeddings.schema.fields
                           + [T.StructField("list_id", T.LongType())])
     return spread(embeddings).mapInPandas(
-        functools.partial(_ivf_list_batches, cents, vec_col), schema)
+        functools.partial(_ivf_list_batches, cents, "embedding"), schema)
 
 
-def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             n_probe: int = IVF_NPROBE,
-             n_centroids: int = IVF_CENTROID_BUDGET,
-             n_vectors: int | None = None) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """IVF-flat approximate cosine top-k — the inverted-list alternative to
     :func:`lsh_bucket_topk`.
 
-    Coarse quantizer: a deterministic centroid subset of ~``n_centroids``
-    vectors (ids divisible by ``max(1, N // n_centroids)``) — the centroid
-    count is a FIXED budget, never O(N), so the centroid table stays
-    broadcast-able at any data size.  Pass ``n_vectors`` (a known/estimated
-    count — table stats, snapshot manifest) to skip the ``count()`` scan;
-    on parquet that count is footer-metadata-only anyway.  When verifying
-    against :func:`ivf_topk_sql`, pass the SAME ``n_vectors`` to the
-    emitter (its default recomputes ``COUNT(*)`` — correct only if the
-    Spark side counted exactly): any estimate that changes
-    ``N // n_centroids`` would silently select a different centroid set.  At 10^12 vectors
-    set ``n_centroids ~ sqrt(N)`` (the classical IVF balance: assignment
-    N*sqrt(N) dot products, probe lists of ~sqrt(N)); the default fixed 64
-    is sized for the test corpora.
+    Coarse quantizer: a deterministic centroid subset of
+    ~``IVF_CENTROID_BUDGET`` vectors (ids divisible by
+    ``max(1, N // IVF_CENTROID_BUDGET)``, N from one ``count()``, which on
+    parquet is footer-metadata-only) — the centroid count is a FIXED
+    budget, never O(N), so the centroid table stays broadcast-able at any
+    data size.  At 10^12 vectors the budget wants ``~sqrt(N)`` (the
+    classical IVF balance: assignment N*sqrt(N) dot products, probe lists
+    of ~sqrt(N)); the fixed 64 is sized for the test corpora.
 
     Every vector joins its single nearest list, every query probes its
-    ``n_probe`` nearest lists; candidates are rescored exactly and ranked.
+    ``IVF_NPROBE`` nearest lists; candidates are rescored exactly and ranked.
     The candidate join is an equi-join on list_id — never an all-pairs
     product.  All arithmetic is double (bit-identical across engines), so
     the whole path is oracle-checkable (:func:`ivf_topk_sql`).
@@ -390,34 +378,23 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     probed lists are pairwise distinct, so each pair is considered at most
     once (invariant pinned by test_ann_outputs_have_no_duplicate_pairs);
     cosines, ties and ranks are bit-identical to the former join."""
-    n = n_vectors if n_vectors is not None else embeddings.count()
-    cents = _ivf_centroids(embeddings, n, n_centroids,
-                           id_col=id_col, vec_col=vec_col)
-    qids, qmat = _collect_queries(queries, id_col, vec_col)
+    cents = _ivf_centroids(embeddings, embeddings.count(), IVF_CENTROID_BUDGET,
+                           id_col="vec_id", vec_col="embedding")
+    qids, qmat = _collect_queries(queries, "vec_id", "embedding")
     if qids is None or cents is None:
         # empty queries or an empty centroid set both joined to nothing in
         # the former Column plan — preserve that, don't raise
         return _empty_ranked(embeddings)
-    qprobe = _ivf_probe_lists(cents, qmat, n_probe)
+    qprobe = _ivf_probe_lists(cents, qmat, IVF_NPROBE)
     partial = _ranked_topk_partials(
-        embeddings, qids, qmat, k, id_col=id_col, vec_col=vec_col,
+        embeddings, qids, qmat, k, id_col="vec_id", vec_col="embedding",
         pair_mask=functools.partial(_ivf_pair_mask, cents, qprobe))
     return _rank_partials(partial, k)
 
 
-def ivf_topk_sql(table: str, queries_filter: str, k: int,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_probe: int = IVF_NPROBE,
-                 n_centroids: int = IVF_CENTROID_BUDGET,
-                 n_vectors: int | None = None) -> str:
-    """DuckDB twin of :func:`ivf_topk` (same centroids, same assignment).
-
-    The centroid modulus comes from ``n_vectors`` when given — pass the SAME
-    value the Spark side was called with, so an estimated count still selects
-    identical centroids on both engines.  With ``n_vectors=None`` the modulus
-    is computed in SQL from ``COUNT(*)``, matching a Spark side that counted
-    exactly (the default).  Mixing an estimate on one side with an exact
-    count on the other would silently pick different centroid sets."""
+def ivf_topk_sql(table: str, queries_filter: str, k: int) -> str:
+    """DuckDB twin of :func:`ivf_topk` (same centroids, same assignment;
+    the centroid modulus comes from ``COUNT(*)``, as the Spark side's)."""
     def assign(src: str, idc: str, vc: str, keep) -> str:
         return f"""
   SELECT {idc}, {vc}, cid AS list_id FROM (
@@ -427,22 +404,18 @@ def ivf_topk_sql(table: str, queries_filter: str, k: int,
                                        c.cid ASC) AS crank
     FROM {src} s CROSS JOIN cents c
   ) WHERE crank <= {keep}"""
-    if n_vectors is not None:
-        cmod = f"SELECT {_centroid_modulus(n_vectors, n_centroids)} AS m"
-    else:
-        cmod = f"SELECT GREATEST(1, COUNT(*) // {max(1, n_centroids)}) AS m FROM {table}"
     return f"""
-WITH cmod AS ({cmod}),
-cents AS (SELECT {id_col} AS cid,
-                 list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS cvec
-          FROM {table} WHERE {id_col} % (SELECT m FROM cmod) = 0),
-t AS (SELECT {id_col} AS target_id,
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
-q AS (SELECT {id_col} AS query_id,
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS qvec
+WITH cmod AS (SELECT GREATEST(1, COUNT(*) // {IVF_CENTROID_BUDGET}) AS m FROM {table}),
+cents AS (SELECT vec_id AS cid,
+                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
+          FROM {table} WHERE vec_id % (SELECT m FROM cmod) = 0),
+t AS (SELECT vec_id AS target_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
+q AS (SELECT vec_id AS query_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
       FROM {table} WHERE {queries_filter}),
 ta AS ({assign('t', 'target_id', 'tvec', 1)}),
-qa AS ({assign('q', 'query_id', 'qvec', n_probe)}),
+qa AS ({assign('q', 'query_id', 'qvec', IVF_NPROBE)}),
 scored AS (
   SELECT query_id, target_id, {_cos_sql('qvec', 'tvec')} AS cosine
   FROM ta JOIN qa USING (list_id)
@@ -531,14 +504,13 @@ def _bucketize_batches(planes, powers, batches):
                             "v": pdf["v"]})
 
 
-def lsh_buckets(embeddings: DataFrame, dim: int, n_planes: int, *,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def lsh_buckets(embeddings: DataFrame, dim: int, n_planes: int) -> DataFrame:
     """(vid, bucket, v): every vector with its sign-bit LSH bucket over
     ``n_planes`` md5 hyperplanes — one Arrow-batch pass, bit-exact vs
     :func:`_bucket_sql`.  Vectors keep their input element type."""
-    vtype = embeddings.schema[vec_col].dataType.simpleString()
-    src = spread(embeddings.select(F.col(id_col).alias("vid"),
-                                   F.col(vec_col).alias("v")))
+    vtype = embeddings.schema["embedding"].dataType.simpleString()
+    src = spread(embeddings.select(F.col("vec_id").alias("vid"),
+                                   F.col("embedding").alias("v")))
     return src.mapInPandas(
         functools.partial(_bucketize_batches, *_lsh_planes(dim, n_planes)),
         f"vid long, bucket long, v {vtype}")
@@ -604,12 +576,11 @@ def _bucket_pairs(exact: DataFrame, probe: DataFrame,
                            "a long, b long"))
 
 
-def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    dim: int | None = None) -> DataFrame:
+def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame,
+                    k: int) -> DataFrame:
     """Approximate cosine top-k: candidates share an LSH bucket (or differ by
-    one sign bit), rescored exactly, ranked per query.  ``dim`` is inferred
-    from one row when omitted.
+    one sign bit), rescored exactly, ranked per query.  The dimension is
+    inferred from one row.
 
     r8: one mapInPandas pass replaces the interpreted-HOF bucketer + rescore
     (both ran as uncompiled lambdas) and the bucket join: each target batch
@@ -620,9 +591,8 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     to the former join (a target has ONE bucket and a query's probe keys
     are pairwise distinct, so each pair is considered at most once)."""
     import numpy as np
-    if dim is None:
-        dim = _infer_dim(embeddings, vec_col)
-    qids, qmat = _collect_queries(queries, id_col, vec_col)
+    dim = _infer_dim(embeddings, "embedding")
+    qids, qmat = _collect_queries(queries, "vec_id", "embedding")
     if qids is None:
         return _empty_ranked(embeddings)
     planes, powers = _lsh_planes(dim, N_PLANES)
@@ -635,13 +605,12 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
         return (tb[:, None, None] == probe_arr[None, :, :]).any(axis=2)
 
     partial = _ranked_topk_partials(embeddings, qids, qmat, k,
-                                    id_col=id_col, vec_col=vec_col,
+                                    id_col="vec_id", vec_col="embedding",
                                     pair_mask=pair_mask)
     return _rank_partials(partial, k)
 
 
 def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20), *,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
                    dim: int | None = None,
                    max_bucket_freq: int | None = None,
                    n_planes: int = N_PLANES) -> DataFrame:
@@ -685,11 +654,11 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
     keys, same fold cosine, same rational-threshold comparison.
     """
     if dim is None:
-        dim = _infer_dim(embeddings, vec_col)
+        dim = _infer_dim(embeddings, "embedding")
     # vectors keep their element type through the shuffle: float32 corpora
     # ship half the exchange bytes of the old array<double> join sides
     # (guide §2.3), and the fold widens to float64 in memory exactly
-    bk = lsh_buckets(embeddings, dim, n_planes, id_col=id_col, vec_col=vec_col) \
+    bk = lsh_buckets(embeddings, dim, n_planes) \
         .localCheckpoint(eager=False)   # ONE bucketing pass feeds both sides
     # the probe side re-aliases EVERY column (see _bucket_pairs): both
     # cogroup sides derive from the same checkpointed frame — the same
@@ -701,41 +670,41 @@ def near_dup_pairs(embeddings: DataFrame, threshold: tuple[int, int] = (19, 20),
 
 
 def near_dup_pairs_sql(table: str, threshold: tuple[int, int] = (19, 20),
-                       id_col: str = "vec_id", vec_col: str = "embedding",
                        mode: str = "lsh",
-                       max_bucket_freq: int | None = None,
-                       n_planes: int = N_PLANES) -> str:
+                       max_bucket_freq: int | None = None) -> str:
     """DuckDB twin of :func:`near_dup_pairs` (same buckets, same rescore).
     ``max_bucket_freq`` mirrors the Spark hot-bucket cap: buckets whose
     exact-key population exceeds it are excluded from pairing (filtering the
     exact side alone is output-equivalent to filtering both — probe rows
-    only match buckets present on the exact side).  ``n_planes`` mirrors
-    :func:`near_dup_pairs`'s plane count (the md5 plane derivation is
-    width-parameterized, so any count matches the Spark side)."""
+    only match buckets present on the exact side).  The plane count is
+    :data:`N_PLANES`, read at call time, so a test can mirror a
+    :func:`near_dup_pairs` run at another ``n_planes`` (the md5 plane
+    derivation is width-parameterized, so any count matches the Spark
+    side)."""
     num, den = threshold
     cos = _cos_sql("avec", "bvec")
     if mode == "lsh":
-        probes = ", ".join(["qbucket"] + [f"xor(qbucket, {1 << p})" for p in range(n_planes)])
+        probes = ", ".join(["qbucket"] + [f"xor(qbucket, {1 << p})" for p in range(N_PLANES)])
         tb_cap = ""
         if max_bucket_freq is not None:
             tb_cap = f"\n        QUALIFY COUNT(*) OVER (PARTITION BY bucket) <= {max_bucket_freq}"
         cand = f"""
-t AS (SELECT {id_col} AS a, list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS avec
+t AS (SELECT vec_id AS a, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS avec
       FROM {table}),
-tb AS (SELECT a, avec, {_bucket_sql('avec', n_planes)}::BIGINT AS bucket FROM t{tb_cap}),
-u AS (SELECT {id_col} AS b, list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS bvec
+tb AS (SELECT a, avec, {_bucket_sql('avec', N_PLANES)}::BIGINT AS bucket FROM t{tb_cap}),
+u AS (SELECT vec_id AS b, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS bvec
       FROM {table}),
-qb AS (SELECT b, bvec, {_bucket_sql('bvec', n_planes)}::BIGINT AS qbucket FROM u),
+qb AS (SELECT b, bvec, {_bucket_sql('bvec', N_PLANES)}::BIGINT AS qbucket FROM u),
 ub AS (SELECT b, bvec, unnest([{probes}]) AS bucket FROM qb),
 cand AS (SELECT a, b, avec, bvec
          FROM tb JOIN ub USING (bucket) WHERE a < b)"""
     else:
         cand = f"""
 cand AS (
-  SELECT x.{id_col} AS a, y.{id_col} AS b,
-         list_transform(x.{vec_col}, v -> CAST(v AS DOUBLE)) AS avec,
-         list_transform(y.{vec_col}, v -> CAST(v AS DOUBLE)) AS bvec
-  FROM {table} x JOIN {table} y ON x.{id_col} < y.{id_col})"""
+  SELECT x.vec_id AS a, y.vec_id AS b,
+         list_transform(x.embedding, v -> CAST(v AS DOUBLE)) AS avec,
+         list_transform(y.embedding, v -> CAST(v AS DOUBLE)) AS bvec
+  FROM {table} x JOIN {table} y ON x.vec_id < y.vec_id)"""
     return f"""
 WITH {cand}
 SELECT a, b FROM cand WHERE ({cos}) * {den} >= {num}
@@ -756,17 +725,16 @@ def _bucket_sql(vec: str, n_planes: int = N_PLANES) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
-def lsh_bucket_topk_sql(table: str, queries_filter: str, k: int,
-                        id_col: str = "vec_id", vec_col: str = "embedding") -> str:
+def lsh_bucket_topk_sql(table: str, queries_filter: str, k: int) -> str:
     """DuckDB twin of :func:`lsh_bucket_topk`: identical md5
     plane weights, sign-bit buckets, 1-bit probes, exact rescore + rank."""
     probes = ", ".join(["qbucket"] + [f"xor(qbucket, {1 << p})" for p in range(N_PLANES)])
     return f"""
-WITH t AS (SELECT {id_col} AS target_id,
-                  list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
+WITH t AS (SELECT vec_id AS target_id,
+                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
 tb AS (SELECT target_id, tvec, {_bucket_sql('tvec')}::BIGINT AS bucket FROM t),
-q AS (SELECT {id_col} AS query_id,
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS qvec
+q AS (SELECT vec_id AS query_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
       FROM {table} WHERE {queries_filter}),
 qb AS (SELECT query_id, qvec, {_bucket_sql('qvec')}::BIGINT AS qbucket FROM q),
 probes AS (SELECT query_id, qvec, unnest([{probes}]) AS bucket FROM qb),
@@ -867,16 +835,14 @@ def _int8_rerank(embeddings: DataFrame, qids, qmat, k: int, m: int, *,
             .select("query_id", "target_id", "cosine", "rank"))
 
 
-def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
-                   m: int = QUANT_TOPM,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Two-stage int8 re-rank ANN — the storage/shuffle-bound scale pattern.
 
     Stage 1 scores int8-quantized vectors (per-vector scale 127/max|x|,
     floor-quantized — floor, not round: identical in every engine) with an
-    INTEGER dot product and keeps the top ``m`` per query; stage 2 rescores
-    only those ``m`` survivors with the exact double cosine and ranks top
-    ``k``.  Integer arithmetic is bit-identical across engines, so the
+    INTEGER dot product and keeps the top ``QUANT_TOPM`` per query; stage 2
+    rescores only those survivors with the exact double cosine and ranks
+    top ``k``.  Integer arithmetic is bit-identical across engines, so the
     survivor SET (ties broken by id) and therefore the final ranking are
     oracle-exact (:func:`quantized_topk_sql`).
 
@@ -886,23 +852,21 @@ def quantized_topk(embeddings: DataFrame, queries: DataFrame, k: int, *,
     sf1.0); the former Arrow twin fixed stage 1 but still rejoined the
     float vectors by id for the stage-2 HOF rescore.  Now each target
     batch quantizes (:func:`_quant_np`), computes the exact batch x query
-    int64 dot matrix, keeps its per-batch top ``m`` per query (idot desc,
-    id asc), and emits those rows with BOTH the integer score and the
+    int64 dot matrix, keeps its per-batch top ``QUANT_TOPM`` per query
+    (idot desc, id asc), and emits those rows with BOTH the integer score and the
     dim-ordered-fold exact cosine — so stage 1's global window ranks
     O(m * n_batches) rows, and stage 2 is a second sort over the same
     exchange with no vector rejoin (:func:`_int8_rerank`).  Survivor set,
     cosines and ranks are bit-identical to both former paths."""
-    qids, qmat = _collect_queries(queries, id_col, vec_col)
+    qids, qmat = _collect_queries(queries, "vec_id", "embedding")
     if qids is None:
         return _empty_ranked(embeddings)
-    return (_int8_rerank(embeddings, qids, qmat, k, m,
-                         id_col=id_col, vec_col=vec_col)
+    return (_int8_rerank(embeddings, qids, qmat, k, QUANT_TOPM,
+                         id_col="vec_id", vec_col="embedding")
             .select("query_id", "target_id", "rank"))
 
 
-def quantized_topk_sql(table: str, queries_filter: str, k: int,
-                       m: int = QUANT_TOPM,
-                       id_col: str = "vec_id", vec_col: str = "embedding") -> str:
+def quantized_topk_sql(table: str, queries_filter: str, k: int) -> str:
     """DuckDB twin of :func:`quantized_topk` (same quantizer, same integer
     stage-1 scores, same tie-breaks)."""
     def quant(vec):
@@ -912,10 +876,10 @@ def quantized_topk_sql(table: str, queries_filter: str, k: int,
     idot = ("CAST(list_sum(list_transform(range(len(qq)), "
             "i -> CAST(qq[i + 1] AS BIGINT) * tq[i + 1])) AS BIGINT)")
     return f"""
-WITH t AS (SELECT {id_col} AS target_id,
-                  list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
-q AS (SELECT {id_col} AS query_id,
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS qvec
+WITH t AS (SELECT vec_id AS target_id,
+                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS tvec FROM {table}),
+q AS (SELECT vec_id AS query_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
       FROM {table} WHERE {queries_filter}),
 tq AS (SELECT target_id, {quant('tvec')} AS tq FROM t),
 qq AS (SELECT query_id, {quant('qvec')} AS qq FROM q),
@@ -925,7 +889,7 @@ s1 AS (
                             ORDER BY {idot} DESC, target_id ASC) AS mrank
   FROM tq JOIN qq ON target_id <> query_id
 ),
-surv AS (SELECT query_id, target_id FROM s1 WHERE mrank <= {m}),
+surv AS (SELECT query_id, target_id FROM s1 WHERE mrank <= {QUANT_TOPM}),
 scored AS (
   SELECT surv.query_id, surv.target_id,
          {_cos_sql('q.qvec', 't.tvec')} AS cosine

@@ -13,10 +13,7 @@ filtered back out.  Cost: ONE hash shuffle on the key plus a per-key sort —
 the same price as the window aggregations elsewhere in this engine, versus
 the range-join explosion (every left row x every earlier right row) a naive
 ``l.ts >= r.ts`` join pays.  At 10^12 events the key is the unit of
-parallelism: a single giant key serializes its sort, so ``shards > 1``
-salts left rows into timestamp-hashed subkeys and replicates right rows
-to every shard — each shard sees its key's full snapshot history, so the
-output is exactly the unsharded result while the sort parallelizes.
+parallelism: a single giant key serializes its sort.
 
 Contract: right rows must be unique per ``(key, right_ts)`` — with
 duplicates, "the most recent row" is ill-defined and engines (and this
@@ -30,82 +27,45 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, *, on: list[str],
-              left_ts: str = "ts", right_ts: str = "ts",
-              value_cols: list[str],
-              tolerance_sec: int | None = None,
-              shards: int = 1) -> DataFrame:
+              value_cols: list[str]) -> DataFrame:
     """Backward as-of join: left columns plus, per left row, the
     ``value_cols`` of the most recent right row (``right_ts <= left_ts``,
-    same ``on`` key) and its timestamp as ``asof_ts``.  No match (or a
-    match older than ``tolerance_sec``) leaves them NULL.
-
-    ``shards > 1`` is the hot-key mitigation: left rows salt into
-    ``shards`` subkeys (by a hash of their timestamp — the only
-    always-present column) and right rows REPLICATE to every shard, so
-    each shard still sees the full snapshot history of its key and the
-    result is exactly the ``shards=1`` output (pytest-pinned) while a
-    key's sort parallelizes ``shards``-way.  Cost: right side grows
-    ``shards``x — right is the small (dimension/snapshot) relation, so
-    size shards to the left skew, not the corpus.
+    same ``on`` key) and its timestamp as ``asof_ts``.  No match leaves
+    them NULL.
 
     Output: every left column, then ``asof_ts``, then ``value_cols``.
     """
-    if shards < 1:
-        raise ValueError("shards must be >= 1")
     lcols = left.columns
     clash = set(value_cols + ["asof_ts"]) & set(lcols)
     if clash:
         raise ValueError(f"left columns collide with output names: {clash}")
     l_side = left.select(
         *[F.col(c) for c in lcols],
-        F.col(left_ts).alias("__ts"), F.lit(1).alias("__tag"),
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("__rts"),
+        F.col("ts").alias("__ts"), F.lit(1).alias("__tag"),
+        F.lit(None).cast(right.schema["ts"].dataType).alias("__rts"),
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"__v_{c}")
           for c in value_cols])
     r_side = right.select(
         *[F.lit(None).cast(left.schema[c].dataType).alias(c)
           if c not in on else F.col(c) for c in lcols],
-        F.col(right_ts).alias("__ts"), F.lit(0).alias("__tag"),
-        F.col(right_ts).alias("__rts"),
+        F.col("ts").alias("__ts"), F.lit(0).alias("__tag"),
+        F.col("ts").alias("__rts"),
         *[F.col(c).alias(f"__v_{c}") for c in value_cols])
-    key = list(on)
-    if shards > 1:
-        l_side = l_side.withColumn(
-            "__shard", F.pmod(F.xxhash64(F.col("__ts")), F.lit(shards)))
-        r_side = r_side.withColumn(
-            "__shard", F.explode(F.sequence(F.lit(0), F.lit(shards - 1))
-                                 .cast("array<long>")))
-        key = key + ["__shard"]
     u = l_side.unionByName(r_side)
-    w = (Window.partitionBy(*key).orderBy("__ts", "__tag")
+    w = (Window.partitionBy(*on).orderBy("__ts", "__tag")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     carried = u.select(
         *lcols, "__ts", "__tag",
         F.last("__rts", ignorenulls=True).over(w).alias("asof_ts"),
         *[F.last(f"__v_{c}", ignorenulls=True).over(w).alias(c)
           for c in value_cols])
-    out = carried.filter(F.col("__tag") == 1).drop("__ts", "__tag")
-    if tolerance_sec is not None:
-        # cast("timestamp") tolerates TIMESTAMP_NTZ inputs (unix_millis does
-        # not); both sides shift identically under the session tz, so the
-        # difference is exact.
-        fresh = (F.unix_millis(F.col(left_ts).cast("timestamp"))
-                 - F.unix_millis(F.col("asof_ts").cast("timestamp"))
-                 <= tolerance_sec * 1000)
-        out = out.select(
-            *lcols,
-            F.when(fresh, F.col("asof_ts")).alias("asof_ts"),
-            *[F.when(fresh, F.col(c)).alias(c) for c in value_cols])
-    return out
+    return carried.filter(F.col("__tag") == 1).drop("__ts", "__tag")
 
 
 # --- interval overlap join ----------------------------------------------------
 
 def interval_join(left: DataFrame, right: DataFrame, *, bucket_ms: int,
-                  left_id: str = "l_id", right_id: str = "r_id",
-                  left_start: str = "start_ms", left_end: str = "end_ms",
-                  right_start: str = "start_ms",
-                  right_end: str = "end_ms") -> DataFrame:
+                  left_id: str = "l_id", right_id: str = "r_id") -> DataFrame:
     """All (left, right) interval pairs that OVERLAP (closed endpoints:
     touching intervals count, ``overlap_ms = 0``) — ``(l_id, r_id,
     overlap_ms)`` with ``overlap_ms = min(ends) - max(starts)``.
@@ -131,11 +91,11 @@ def interval_join(left: DataFrame, right: DataFrame, *, bucket_ms: int,
     if bucket_ms <= 0:
         raise ValueError("bucket_ms must be positive")
     l = left.select(F.col(left_id).alias("l_id"),
-                    F.col(left_start).alias("ls"),
-                    F.col(left_end).alias("le"))
+                    F.col("start_ms").alias("ls"),
+                    F.col("end_ms").alias("le"))
     r = right.select(F.col(right_id).alias("r_id"),
-                     F.col(right_start).alias("rs"),
-                     F.col(right_end).alias("re"))
+                     F.col("start_ms").alias("rs"),
+                     F.col("end_ms").alias("re"))
     lb = l.withColumn("__b", F.explode(F.sequence(
         F.floor(F.col("ls") / bucket_ms), F.floor(F.col("le") / bucket_ms))))
     rb = r.withColumn("__b", F.explode(F.sequence(
@@ -168,13 +128,11 @@ FROM ij_l l JOIN ij_r r
 
 # --- dwell-segment (stay-point) detection -------------------------------------
 
-def dwell_segments(events: DataFrame, *, key_col: str = "user_id",
-                   ts_col: str = "ts", cell_cols: tuple[str, str] = ("ix", "iy"),
-                   order_col: str = "event_id") -> DataFrame:
+def dwell_segments(events: DataFrame) -> DataFrame:
     """Trajectory stay-point detection: collapse each entity's consecutive
     run of events in the SAME grid cell into one dwell segment.
 
-    Per key, events are ordered by ``(ts, order_col)``; a new segment opens
+    Per user, events are ordered by ``(ts, event_id)``; a new segment opens
     whenever the cell differs from the previous event's cell (classic
     gaps-and-islands).  Output: one row per segment —
     (key, seg_no, ix, iy, n_events, enter_ms, leave_ms, dwell_ms) where
@@ -190,18 +148,17 @@ def dwell_segments(events: DataFrame, *, key_col: str = "user_id",
     Timestamps are compared as epoch millis (cast through TIMESTAMP so
     TIMESTAMP_NTZ inputs work; session tz is UTC in this engine).
     """
-    cx, cy = cell_cols
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     moved = F.when(
-        F.lag(cx).over(w).isNull()
-        | (F.lag(cx).over(w) != F.col(cx))
-        | (F.lag(cy).over(w) != F.col(cy)), 1).otherwise(0)
-    ms = F.unix_millis(F.col(ts_col).cast("timestamp"))
+        F.lag("ix").over(w).isNull()
+        | (F.lag("ix").over(w) != F.col("ix"))
+        | (F.lag("iy").over(w) != F.col("iy")), 1).otherwise(0)
+    ms = F.unix_millis(F.col("ts").cast("timestamp"))
     seg = (events
            .withColumn("__seg", F.sum(moved).over(w).cast("long"))
            .withColumn("__ms", ms))
-    return (seg.groupBy(F.col(key_col), F.col("__seg").alias("seg_no"))
-            .agg(F.min(cx).alias(cx), F.min(cy).alias(cy),
+    return (seg.groupBy(F.col("user_id"), F.col("__seg").alias("seg_no"))
+            .agg(F.min("ix").alias("ix"), F.min("iy").alias("iy"),
                  F.count(F.lit(1)).alias("n_events"),
                  F.min("__ms").alias("enter_ms"),
                  F.max("__ms").alias("leave_ms"))
@@ -209,29 +166,25 @@ def dwell_segments(events: DataFrame, *, key_col: str = "user_id",
                         (F.col("leave_ms") - F.col("enter_ms")).cast("long")))
 
 
-def dwell_segments_sql(events_cte: str, *, key_col: str = "user_id",
-                       ts_col: str = "ts",
-                       cell_cols: tuple[str, str] = ("ix", "iy"),
-                       order_col: str = "event_id") -> str:
+def dwell_segments_sql(events_cte: str) -> str:
     """DuckDB twin of :func:`dwell_segments` (same lag + running-sum
     gaps-and-islands; epoch_ms on the raw timestamp matches Spark's
     unix_millis under the engine's UTC session contract)."""
-    cx, cy = cell_cols
     return f"""
 WITH seq AS (
-  SELECT *, epoch_ms({ts_col}) AS __ms,
-         CASE WHEN lag({cx}) OVER w IS NULL
-                   OR lag({cx}) OVER w <> {cx}
-                   OR lag({cy}) OVER w <> {cy} THEN 1 ELSE 0 END AS __new
+  SELECT *, epoch_ms(ts) AS __ms,
+         CASE WHEN lag(ix) OVER w IS NULL
+                   OR lag(ix) OVER w <> ix
+                   OR lag(iy) OVER w <> iy THEN 1 ELSE 0 END AS __new
   FROM ({events_cte})
-  WINDOW w AS (PARTITION BY {key_col} ORDER BY {ts_col}, {order_col})),
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
 segd AS (
-  SELECT *, CAST(SUM(__new) OVER (PARTITION BY {key_col}
-             ORDER BY {ts_col}, {order_col}
+  SELECT *, CAST(SUM(__new) OVER (PARTITION BY user_id
+             ORDER BY ts, event_id
              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seg_no
   FROM seq)
-SELECT {key_col}, seg_no,
-       MIN({cx}) AS {cx}, MIN({cy}) AS {cy},
+SELECT user_id, seg_no,
+       MIN(ix) AS ix, MIN(iy) AS iy,
        COUNT(*) AS n_events,
        MIN(__ms) AS enter_ms, MAX(__ms) AS leave_ms,
        CAST(MAX(__ms) - MIN(__ms) AS BIGINT) AS dwell_ms
@@ -239,9 +192,7 @@ FROM segd GROUP BY 1, 2
 """
 
 
-def od_flows(events: DataFrame, *, key_col: str = "user_id",
-             ts_col: str = "ts", cell_cols: tuple[str, str] = ("ix", "iy"),
-             order_col: str = "event_id") -> DataFrame:
+def od_flows(events: DataFrame) -> DataFrame:
     """Origin-destination flow matrix: per entity, each consecutive pair of
     events in DIFFERENT grid cells is one movement; flows aggregate
     movements by (src cell, dst cell) — the canonical mobility-analytics
@@ -269,14 +220,13 @@ def od_flows(events: DataFrame, *, key_col: str = "user_id",
     distinct-user count rides the same aggregation (partial
     count-distinct), no second pass over the events.
     """
-    cx, cy = cell_cols
-    events = events.filter(F.col(cx).isNotNull() & F.col(cy).isNotNull())
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
-    px, py = F.lag(cx).over(w), F.lag(cy).over(w)
+    events = events.filter(F.col("ix").isNotNull() & F.col("iy").isNotNull())
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    px, py = F.lag("ix").over(w), F.lag("iy").over(w)
     moves = (events
-             .select(F.col(key_col).alias("__k"),
+             .select(F.col("user_id").alias("__k"),
                      px.alias("src_ix"), py.alias("src_iy"),
-                     F.col(cx).alias("dst_ix"), F.col(cy).alias("dst_iy"))
+                     F.col("ix").alias("dst_ix"), F.col("iy").alias("dst_iy"))
              .filter(F.col("src_ix").isNotNull()
                      & ((F.col("src_ix") != F.col("dst_ix"))
                         | (F.col("src_iy") != F.col("dst_iy")))))
@@ -285,20 +235,16 @@ def od_flows(events: DataFrame, *, key_col: str = "user_id",
                  F.countDistinct("__k").alias("n_users")))
 
 
-def od_flows_sql(events_cte: str, *, key_col: str = "user_id",
-                 ts_col: str = "ts",
-                 cell_cols: tuple[str, str] = ("ix", "iy"),
-                 order_col: str = "event_id") -> str:
+def od_flows_sql(events_cte: str) -> str:
     """DuckDB twin of :func:`od_flows` (same lag window + pair rollup)."""
-    cx, cy = cell_cols
     return f"""
 WITH seq AS (
-  SELECT {key_col} AS __k,
-         lag({cx}) OVER w AS src_ix, lag({cy}) OVER w AS src_iy,
-         {cx} AS dst_ix, {cy} AS dst_iy
+  SELECT user_id AS __k,
+         lag(ix) OVER w AS src_ix, lag(iy) OVER w AS src_iy,
+         ix AS dst_ix, iy AS dst_iy
   FROM (SELECT * FROM ({events_cte})
-        WHERE {cx} IS NOT NULL AND {cy} IS NOT NULL)
-  WINDOW w AS (PARTITION BY {key_col} ORDER BY {ts_col}, {order_col}))
+        WHERE ix IS NOT NULL AND iy IS NOT NULL)
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
 SELECT src_ix, src_iy, dst_ix, dst_iy,
        COUNT(*) AS n_moves, COUNT(DISTINCT __k) AS n_users
 FROM seq

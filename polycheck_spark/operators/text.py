@@ -48,32 +48,31 @@ def _tok_int_sql(expr: str) -> str:
 
 # --- token counting ---------------------------------------------------------
 
-def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + a BPE-ish alnum-run count per document."""
-    toks = tokens_col(F.col(text_col))
-    bpe = F.filter(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != "")
+    toks = tokens_col(F.col("text"))
+    bpe = F.filter(F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != "")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.size(bpe).alias("n_bpe_tokens"),
-        F.length(F.col(text_col)).alias("n_chars"),
+        F.length(F.col("text")).alias("n_chars"),
     )
 
 
-def token_counts_sql(table: str, id_col: str = "doc_id", text_col: str = "text") -> str:
+def token_counts_sql(table: str) -> str:
     return f"""
-SELECT {id_col},
-       CAST(len({_tokens_sql(text_col)}) AS INT) AS n_tokens,
-       CAST(len(list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'), t -> t <> '')) AS INT) AS n_bpe_tokens,
-       CAST(length({text_col}) AS INT) AS n_chars
+SELECT doc_id,
+       CAST(len({_tokens_sql("text")}) AS INT) AS n_tokens,
+       CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS INT) AS n_bpe_tokens,
+       CAST(length(text) AS INT) AS n_chars
 FROM {table}
 """
 
 
 # --- quality scoring ---------------------------------------------------------
 
-def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                   keep_cols: tuple[str, ...] = ()) -> DataFrame:
+def quality_scores(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Length / mean-token-length / stopword-ratio quality features.
 
     Ratios are returned as exact integer pairs (numerator, denominator) so the
@@ -81,12 +80,12 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     columns through the projection so downstream consumers never need a
     corpus self-join to re-attach them.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     stops = STOPWORDS["en"]
     stop_hits = F.size(F.filter(toks, lambda t: t.isin(*stops)))
     return docs.select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("n_chars"),
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("n_chars"),
         F.size(toks).alias("n_tokens"),
         F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)).alias("token_chars"),
         stop_hits.alias("stopword_hits"),
@@ -94,14 +93,13 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def quality_scores_sql(table: str, id_col: str = "doc_id", text_col: str = "text",
-                       keep_cols: tuple[str, ...] = ()) -> str:
+def quality_scores_sql(table: str, keep_cols: tuple[str, ...] = ()) -> str:
     stops = ", ".join(f"'{s}'" for s in STOPWORDS["en"])
-    t = _tokens_sql(text_col)
+    t = _tokens_sql("text")
     extra = "".join(f", {c}" for c in keep_cols)
     return f"""
-SELECT {id_col},
-       CAST(length({text_col}) AS INT) AS n_chars,
+SELECT doc_id,
+       CAST(length(text) AS INT) AS n_chars,
        CAST(len({t}) AS INT) AS n_tokens,
        CAST(coalesce(list_sum(list_transform({t}, x -> length(x))), 0) AS INT) AS token_chars,
        CAST(len(list_filter({t}, x -> x in ({stops}))) AS INT) AS stopword_hits{extra}
@@ -140,7 +138,7 @@ def _script_chars_sql(text_expr: str, rng: str) -> str:
     return f"length(regexp_replace({text_expr}, '[^{rng}]', '', 'g'))"
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Language guess: script-range character votes for zh/ru/ar — a script
     vote counts only when its characters hold >= SCRIPT_MIN_FRACTION of the
     text (proportional gate: one stray CJK char in a long English page
@@ -157,11 +155,11 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     (:func:`lang_id_sql`) evaluates the identical ranges, threshold, and
     stopword sets, so the whole operator is oracle-checkable."""
     num, den = SCRIPT_MIN_FRACTION
-    n_chars = F.length(F.col(text_col))
-    toks = tokens_col(F.col(text_col))
+    n_chars = F.length(F.col("text"))
+    toks = tokens_col(F.col("text"))
     hits = {lang: F.size(F.filter(toks, lambda t: t.isin(*words)))
             for lang, words in STOPWORDS.items()}
-    sc = {lang: _script_chars(F.col(text_col), rng)
+    sc = {lang: _script_chars(F.col("text"), rng)
           for lang, rng in SCRIPT_RANGES.items()}
     sig = {lang: (sc[lang] > 0) & (sc[lang] * den >= num * n_chars)
            for lang in SCRIPT_RANGES}
@@ -171,24 +169,24 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
               .when((hits["en"] >= hits["de"]) & (hits["en"] >= hits["fr"]), "en")
               .when(hits["de"] >= hits["fr"], "de")
               .otherwise("fr"))
-    return docs.select(F.col(id_col), guess.alias("lang_guess"),
+    return docs.select(F.col("doc_id"), guess.alias("lang_guess"),
                        hits["en"].alias("en_hits"), hits["de"].alias("de_hits"),
                        hits["fr"].alias("fr_hits"),
                        sc["zh"].alias("zh_chars"), sc["ru"].alias("ru_chars"),
                        sc["ar"].alias("ar_chars"))
 
 
-def lang_id_sql(table: str, id_col: str = "doc_id", text_col: str = "text") -> str:
+def lang_id_sql(table: str) -> str:
     num, den = SCRIPT_MIN_FRACTION
-    t = _tokens_sql(text_col)
+    t = _tokens_sql("text")
     h = {lang: f"len(list_filter({t}, x -> x in ({', '.join(repr(w) for w in words)})))"
          for lang, words in STOPWORDS.items()}
-    s = {lang: _script_chars_sql(text_col, rng)
+    s = {lang: _script_chars_sql("text", rng)
          for lang, rng in SCRIPT_RANGES.items()}
-    g = {lang: f"({s[lang]} > 0 AND {s[lang]} * {den} >= {num} * length({text_col}))"
+    g = {lang: f"({s[lang]} > 0 AND {s[lang]} * {den} >= {num} * length(text))"
          for lang in SCRIPT_RANGES}
     return f"""
-SELECT {id_col},
+SELECT doc_id,
        CASE WHEN {g['zh']} AND {s['zh']} >= {s['ru']} AND {s['zh']} >= {s['ar']} THEN 'zh'
             WHEN {g['ru']} AND {s['ru']} >= {s['ar']} THEN 'ru'
             WHEN {g['ar']} THEN 'ar'
@@ -207,9 +205,8 @@ FROM {table}
 
 # --- corpus vocabulary ---------------------------------------------------------
 
-def _doc_token_tf(docs: DataFrame, id_col: str, text_col: str,
-                  tf_name: str = "tf") -> DataFrame:
-    """(id_col, token, tf) — per-(document, token) counts computed
+def _doc_token_tf(docs: DataFrame, tf_name: str = "tf") -> DataFrame:
+    """(doc_id, token, tf) — per-(document, token) counts computed
     MAP-SIDE: a document's tokens live in its own row, so the former
     explode -> groupBy(id, token) shipped the full token stream through an
     exchange to compute counts that never cross documents.  Tokenization
@@ -220,12 +217,12 @@ def _doc_token_tf(docs: DataFrame, id_col: str, text_col: str,
 
     Shared by :func:`vocab_topk`, :func:`doc_top_terms` and
     :func:`unigram_quality`."""
-    src = docs.select(F.col(id_col).alias("id"),
-                      tokens_col(F.col(text_col)).alias("toks"))
+    src = docs.select(F.col("doc_id").alias("id"),
+                      tokens_col(F.col("text")).alias("toks"))
     src = spread(src)
     return (src.mapInPandas(functools.partial(_token_tf_batches, tf_name),
                             f"id long, token string, {tf_name} long")
-            .withColumnRenamed("id", id_col))
+            .withColumnRenamed("id", "doc_id"))
 
 
 def _token_tf_batches(tf_name: str, batches):
@@ -257,8 +254,7 @@ def _token_tf_batches(tf_name: str, batches):
 
 
 
-def vocab_topk(docs: DataFrame, k: int, *, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def vocab_topk(docs: DataFrame, k: int) -> DataFrame:
     """Corpus top-k vocabulary by document frequency: (token, doc_freq,
     occurrences, rank) — the vocabulary-build step of a training-data
     pipeline.
@@ -273,7 +269,7 @@ def vocab_topk(docs: DataFrame, k: int, *, id_col: str = "doc_id",
     globally, and the rank window runs over the k survivors only.
     Deterministic tie-break: doc_freq desc, occurrences desc, token asc.
     """
-    tok = _doc_token_tf(docs, id_col, text_col, tf_name="n")
+    tok = _doc_token_tf(docs, tf_name="n")
     vocab = (tok.groupBy("token")
              .agg(F.count(F.lit(1)).alias("doc_freq"),
                   F.sum("n").alias("occurrences")))
@@ -285,13 +281,12 @@ def vocab_topk(docs: DataFrame, k: int, *, id_col: str = "doc_id",
             .select("token", "doc_freq", "occurrences", "rank"))
 
 
-def vocab_topk_sql(table: str, k: int, id_col: str = "doc_id",
-                   text_col: str = "text") -> str:
+def vocab_topk_sql(table: str, k: int) -> str:
     return f"""
 WITH tok AS (
-  SELECT {id_col}, unnest({_tokens_sql(text_col)}) AS token FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("text")}) AS token FROM {table}
 ),
-per_doc AS (SELECT {id_col}, token, COUNT(*) AS n FROM tok GROUP BY 1, 2),
+per_doc AS (SELECT doc_id, token, COUNT(*) AS n FROM tok GROUP BY 1, 2),
 vocab AS (SELECT token, COUNT(*) AS doc_freq, CAST(SUM(n) AS BIGINT) AS occurrences
           FROM per_doc GROUP BY 1)
 SELECT token, doc_freq, occurrences,
@@ -303,8 +298,7 @@ QUALIFY rank <= {k}
 
 # --- per-document keyword extraction --------------------------------------------
 
-def doc_top_terms(docs: DataFrame, k: int, *, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def doc_top_terms(docs: DataFrame, k: int) -> DataFrame:
     """Per-document top-k DISTINCTIVE terms: rank by (doc_freq asc,
     tf desc, token asc) — corpus-rarest first, in-document frequency
     breaking ties — so ubiquitous tokens (stopwords) rank LAST, which is
@@ -322,26 +316,25 @@ def doc_top_terms(docs: DataFrame, k: int, *, id_col: str = "doc_id",
     lists, never a global sort.  Emits (doc_id, token, tf, doc_freq,
     term_rank).
     """
-    tok = _doc_token_tf(docs, id_col, text_col)
+    tok = _doc_token_tf(docs)
     dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("doc_freq"))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("doc_freq").asc(), F.col("tf").desc(), F.col("token").asc())
     return (tok.join(dfreq, "token")
             .withColumn("term_rank", F.row_number().over(w).cast("long"))
             .filter(F.col("term_rank") <= k)
-            .select(id_col, "token", "tf", "doc_freq", "term_rank"))
+            .select("doc_id", "token", "tf", "doc_freq", "term_rank"))
 
 
-def doc_top_terms_sql(table: str, k: int, id_col: str = "doc_id",
-                      text_col: str = "text") -> str:
+def doc_top_terms_sql(table: str, k: int) -> str:
     return f"""
 WITH tok AS (
-  SELECT {id_col}, unnest({_tokens_sql(text_col)}) AS token FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("text")}) AS token FROM {table}
 ),
-tf AS (SELECT {id_col}, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
+tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 dfreq AS (SELECT token, COUNT(*) AS doc_freq FROM tf GROUP BY 1)
-SELECT {id_col}, token, tf, doc_freq,
-       CAST(ROW_NUMBER() OVER (PARTITION BY {id_col}
+SELECT doc_id, token, tf, doc_freq,
+       CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
                                ORDER BY doc_freq ASC, tf DESC, token ASC) AS BIGINT) AS term_rank
 FROM tf JOIN dfreq USING (token)
 QUALIFY term_rank <= {k}
@@ -350,17 +343,15 @@ QUALIFY term_rank <= {k}
 
 # --- per-source corpus stats ----------------------------------------------------
 
-def source_stats(docs: DataFrame, *, source_col: str = "source",
-                 text_col: str = "text", lang_col: str = "lang") -> DataFrame:
+def source_stats(docs: DataFrame) -> DataFrame:
     """Per-source corpus profile: doc count, distinct languages, exact total
     tokens, and the distinct-text count (its gap to n_docs is the
     within-source exact-duplicate mass).  One shuffle; the md5 rides the
     map side."""
-    toks = tokens_col(F.col(text_col))
-    return (docs.select(F.col(source_col).alias("source"),
-                        F.col(lang_col).alias("lang"),
+    toks = tokens_col(F.col("text"))
+    return (docs.select("source", "lang",
                         F.size(toks).alias("n_toks"),
-                        F.md5(F.col(text_col)).alias("text_md5"))
+                        F.md5(F.col("text")).alias("text_md5"))
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.countDistinct("lang").alias("n_langs"),
@@ -369,15 +360,14 @@ def source_stats(docs: DataFrame, *, source_col: str = "source",
             .orderBy("source"))
 
 
-def source_stats_sql(table: str, source_col: str = "source",
-                     text_col: str = "text", lang_col: str = "lang") -> str:
-    t = _tokens_sql(text_col)
+def source_stats_sql(table: str) -> str:
+    t = _tokens_sql("text")
     return f"""
-SELECT {source_col} AS source,
+SELECT source AS source,
        COUNT(*) AS n_docs,
-       COUNT(DISTINCT {lang_col}) AS n_langs,
+       COUNT(DISTINCT lang) AS n_langs,
        CAST(SUM(len({t})) AS BIGINT) AS sum_tokens,
-       COUNT(DISTINCT md5({text_col})) AS n_distinct_texts
+       COUNT(DISTINCT md5(text)) AS n_distinct_texts
 FROM {table}
 GROUP BY 1 ORDER BY 1
 """
@@ -385,22 +375,19 @@ GROUP BY 1 ORDER BY 1
 
 # --- boilerplate-line removal ----------------------------------------------------
 
-def line_frequencies(docs: DataFrame, *, id_col: str = "doc_id",
-                     text_col: str = "text", delim: str = "\n") -> DataFrame:
+def line_frequencies(docs: DataFrame) -> DataFrame:
     """(line, line_df): per-line document frequency — repeats of a line
     WITHIN one document count once (the C4-style boilerplate statistic).
     Two map-side-combined shuffles over (doc, line) pairs; the line table
     is at most the corpus's line count, never a cross product."""
-    import re
-    parts = F.split(F.col(text_col), re.escape(delim), -1)
-    pairs = (docs.select(F.col(id_col).alias("id"), F.explode(parts).alias("line"))
+    parts = F.split(F.col("text"), "\n", -1)
+    pairs = (docs.select(F.col("doc_id").alias("id"), F.explode(parts).alias("line"))
              .distinct())
     return pairs.groupBy("line").agg(F.count(F.lit(1)).alias("line_df"))
 
 
 def strip_boilerplate(docs: DataFrame, max_line_df: int, *,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      delim: str = "\n") -> DataFrame:
+                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """C4-style boilerplate-line removal: drop every line that appears in
     MORE than ``max_line_df`` documents (cookie banners, nav bars, terms
     footers), reassemble the rest in original order.  Emits
@@ -417,11 +404,8 @@ def strip_boilerplate(docs: DataFrame, max_line_df: int, *,
     structs per document — no global sort, no UDFs anywhere.
     (Checkpointing the exploded lines would reach one scan, but lines ARE
     the corpus — re-reading columnar parquet beats materializing them.)
-    ``delim`` is treated literally in both engines (regex-escaped for
-    Spark's split).
     """
-    import re
-    parts = F.split(F.col(text_col), re.escape(delim), -1)
+    parts = F.split(F.col(text_col), "\n", -1)
     lines = docs.select(F.col(id_col).alias("id"),
                         F.posexplode(parts).alias("pos", "line"))
     dfreq = (lines.select("id", "line").distinct()
@@ -441,7 +425,7 @@ def strip_boilerplate(docs: DataFrame, max_line_df: int, *,
     return (marked.groupBy("id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_lines"),
                  F.count(F.when(keep, F.lit(1))).cast("int").alias("n_lines_kept"),
-                 F.array_join(ordered, delim).alias("clean_text"))
+                 F.array_join(ordered, "\n").alias("clean_text"))
             .select(F.col("id").alias(id_col), "n_lines", "n_lines_kept",
                     "clean_text"))
 
@@ -452,24 +436,22 @@ def _delim_sql(delim: str) -> str:
     return "'" + delim.replace("'", "''") + "'"
 
 
-def line_frequencies_sql(table: str, id_col: str = "doc_id",
-                         text_col: str = "text", delim: str = "\n") -> str:
-    d = _delim_sql(delim)
+def line_frequencies_sql(table: str) -> str:
+    d = _delim_sql("\n")
     return f"""
 SELECT line, COUNT(*) AS line_df
-FROM (SELECT DISTINCT {id_col} AS id, unnest(string_split({text_col}, {d})) AS line
+FROM (SELECT DISTINCT doc_id AS id, unnest(string_split(text, {d})) AS line
       FROM {table})
 GROUP BY 1
 """
 
 
-def strip_boilerplate_sql(table: str, max_line_df: int, id_col: str = "doc_id",
-                          text_col: str = "text", delim: str = "\n") -> str:
+def strip_boilerplate_sql(table: str, max_line_df: int) -> str:
     """DuckDB twin of :func:`strip_boilerplate` (same df statistic, same
     positional reassembly via ORDER BY pos inside string_agg)."""
-    d = _delim_sql(delim)
+    d = _delim_sql("\n")
     return f"""
-WITH bp_parts AS (SELECT {id_col} AS id, string_split({text_col}, {d}) AS pl FROM {table}),
+WITH bp_parts AS (SELECT doc_id AS id, string_split(text, {d}) AS pl FROM {table}),
 bp_lines AS (
   SELECT id, s AS pos, pl[s] AS line
   FROM (SELECT id, pl, unnest(generate_series(1, len(pl))) AS s FROM bp_parts)),
@@ -481,7 +463,7 @@ bp_agg AS (
   SELECT id, COUNT(*) AS n_lines_kept,
          string_agg(line, {d} ORDER BY pos) AS clean_text
   FROM bp_kept GROUP BY id)
-SELECT p.id AS {id_col},
+SELECT p.id AS doc_id,
        CAST(len(p.pl) AS INT) AS n_lines,
        CAST(coalesce(a.n_lines_kept, 0) AS INT) AS n_lines_kept,
        coalesce(a.clean_text, '') AS clean_text
@@ -491,8 +473,7 @@ FROM bp_parts p LEFT JOIN bp_agg a USING (id)
 
 # --- Gopher-style repetition signals ---------------------------------------
 
-def repetition_signals(docs: DataFrame, *, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Per-document repetition profile (the Gopher quality-filter family):
 
     - ``n_lines`` / ``n_dup_lines``: newline-split line count and the
@@ -519,7 +500,7 @@ def repetition_signals(docs: DataFrame, *, id_col: str = "doc_id",
     constant a 10^12-doc map stage absorbs; nothing global is built
     (contrast :func:`line_frequencies`, the corpus-wide twin).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.split(t, "\n")
     dlines = F.array_distinct(lines)
     line_chars = lambda arr: F.aggregate(
@@ -551,7 +532,7 @@ def repetition_signals(docs: DataFrame, *, id_col: str = "doc_id",
     repetitive = ((n_dup * 10 > n_lines * 3) |
                   (dup_chars * 5 > F.length(t) * 1))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_lines.cast("int").alias("n_lines"),
         n_dup.cast("int").alias("n_dup_lines"),
         dup_chars.cast("int").alias("dup_line_chars"),
@@ -561,11 +542,10 @@ def repetition_signals(docs: DataFrame, *, id_col: str = "doc_id",
         repetitive.alias("repetitive"))
 
 
-def repetition_signals_sql(table: str, id_col: str = "doc_id",
-                           text_col: str = "text") -> str:
+def repetition_signals_sql(table: str) -> str:
     """DuckDB twin of :func:`repetition_signals` — same split, same
     tokenizer, same integer gates (list lambdas mirror the Column HOFs)."""
-    t = text_col
+    t = "text"
     lines = f"string_split({t}, chr(10))"
     chars = lambda arr: (f"coalesce(list_sum(list_transform({arr}, "
                          f"x -> length(x))), 0)")
@@ -581,17 +561,17 @@ def repetition_signals_sql(table: str, id_col: str = "doc_id",
     # work instead of the quadratic per-element list_filter probe
     return f"""
 WITH rep_base AS (
-  SELECT {id_col}, len({lines}) AS n_lines, {n_dup} AS n_dup,
+  SELECT doc_id, len({lines}) AS n_lines, {n_dup} AS n_dup,
          {dup_chars} AS dup_chars, length({t}) AS n_chars,
          {bigrams} AS bg
-  FROM (SELECT {id_col}, {t}, {toks} AS tl FROM {table})),
+  FROM (SELECT doc_id, {t}, {toks} AS tl FROM {table})),
 rep_top AS (
-  SELECT {id_col}, MAX(c) AS top_bg FROM (
-    SELECT {id_col}, b, COUNT(*) AS c
-    FROM (SELECT {id_col}, unnest(bg) AS b FROM rep_base)
-    GROUP BY {id_col}, b)
-  GROUP BY {id_col})
-SELECT b.{id_col},
+  SELECT doc_id, MAX(c) AS top_bg FROM (
+    SELECT doc_id, b, COUNT(*) AS c
+    FROM (SELECT doc_id, unnest(bg) AS b FROM rep_base)
+    GROUP BY doc_id, b)
+  GROUP BY doc_id)
+SELECT b.doc_id,
        CAST(b.n_lines AS INT) AS n_lines,
        CAST(b.n_dup AS INT) AS n_dup_lines,
        CAST(b.dup_chars AS INT) AS dup_line_chars,
@@ -600,13 +580,13 @@ SELECT b.{id_col},
        CAST(coalesce(t.top_bg, 0) AS INT) AS top_bigram_count,
        (b.n_dup * 10 > b.n_lines * 3 OR b.dup_chars * 5 > b.n_chars * 1)
          AS repetitive
-FROM rep_base b LEFT JOIN rep_top t USING ({id_col})
+FROM rep_base b LEFT JOIN rep_top t USING (doc_id)
 """
 
 
 # --- document fingerprint ------------------------------------------------------
 
-def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Order-sensitive document fingerprint:
     ``sum_i((i + 1) * tok_int(t_i)) % MOD`` — position-weighted token hash.
 
@@ -619,7 +599,7 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     per document; addition order matches the former aggregation because
     the modular sum is commutative and never overflows.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     t = F.col("__toks")
     # sequence(1, 0) would DESCEND (Spark infers step -1), so the empty
     # token array is short-circuited instead of zipped
@@ -631,24 +611,24 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
                                    lambda acc, v: acc + v), F.lit(MOD))) \
          .otherwise(F.lit(0).cast("long"))
     return (docs.withColumn("__toks", toks)
-            .select(F.col(id_col), fp.alias("fingerprint")))
+            .select(F.col("doc_id"), fp.alias("fingerprint")))
 
 
-def fingerprints_sql(table: str, id_col: str = "doc_id", text_col: str = "text") -> str:
-    t = _tokens_sql(text_col)
+def fingerprints_sql(table: str) -> str:
+    t = _tokens_sql("text")
     return f"""
-WITH toks AS (SELECT {id_col}, {t} AS tl FROM {table}),
+WITH toks AS (SELECT doc_id, {t} AS tl FROM {table}),
 pos AS (
-  SELECT {id_col}, tl[posn] AS tok, posn - 1 AS pos
-  FROM (SELECT {id_col}, tl, unnest(generate_series(1, len(tl))) AS posn FROM toks)
+  SELECT doc_id, tl[posn] AS tok, posn - 1 AS pos
+  FROM (SELECT doc_id, tl, unnest(generate_series(1, len(tl))) AS posn FROM toks)
 )
-SELECT t.{id_col}, coalesce(s.fp, 0) AS fingerprint
+SELECT t.doc_id, coalesce(s.fp, 0) AS fingerprint
 FROM toks t
 LEFT JOIN (
-  SELECT {id_col},
+  SELECT doc_id,
          CAST(SUM(((pos + 1) * ({_tok_int_sql('tok')} % {MOD})) % {MOD}) % {MOD} AS BIGINT) AS fp
-  FROM pos GROUP BY {id_col}
-) s USING ({id_col})
+  FROM pos GROUP BY doc_id
+) s USING (doc_id)
 """
 
 
@@ -657,8 +637,7 @@ LEFT JOIN (
 IDF_SCALE = 10**9
 
 
-def search_topk(docs: DataFrame, terms: list[str], k: int, *,
-                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def search_topk(docs: DataFrame, terms: list[str], k: int) -> DataFrame:
     """Top-k documents for a bag-of-terms query under integer TF-IDF
     scoring — the ad-hoc corpus-exploration query every dataset owner
     runs ("show me the docs about X").
@@ -676,41 +655,39 @@ def search_topk(docs: DataFrame, terms: list[str], k: int, *,
     back; the final top-k is a TakeOrdered, never a global sort.
     """
     arr = F.array([F.lit(t) for t in terms])
-    tok = (docs.select(id_col,
-                       F.explode(F.filter(tokens_col(F.col(text_col)),
+    tok = (docs.select("doc_id",
+                       F.explode(F.filter(tokens_col(F.col("text")),
                                           lambda t: F.array_contains(arr, t)))
                        .alias("term")))
-    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     w = df_.select("term", F.expr(f"{IDF_SCALE} div df").alias("w"))
     scored = (tf.join(F.broadcast(w), "term")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg(F.sum(F.col("tf") * F.col("w")).cast("long").alias("score")))
-    return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
 
 
-def search_topk_sql(table: str, terms: list[str], k: int,
-                    id_col: str = "doc_id", text_col: str = "text") -> str:
+def search_topk_sql(table: str, terms: list[str], k: int) -> str:
     """DuckDB twin of :func:`search_topk` — same integer weights, same
     tie-break."""
     lits = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
     return f"""
 WITH st_tok AS (
-  SELECT {id_col}, unnest(list_filter({_tokens_sql(text_col)},
+  SELECT doc_id, unnest(list_filter({_tokens_sql("text")},
                                       t -> t IN ({lits}))) AS term
   FROM {table}),
-st_tf AS (SELECT {id_col}, term, COUNT(*) AS tf FROM st_tok GROUP BY 1, 2),
+st_tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM st_tok GROUP BY 1, 2),
 st_w AS (SELECT term, {IDF_SCALE} // COUNT(*) AS w FROM st_tf GROUP BY 1)
-SELECT {id_col}, CAST(SUM(tf * w) AS BIGINT) AS score
+SELECT doc_id, CAST(SUM(tf * w) AS BIGINT) AS score
 FROM st_tf JOIN st_w USING (term)
-GROUP BY 1 ORDER BY score DESC, {id_col} LIMIT {k}
+GROUP BY 1 ORDER BY score DESC, doc_id LIMIT {k}
 """
 
 
 # --- corpus-frequency quality (CCNet-style LM-quality proxy) ----------------
 
-def unigram_quality(docs: DataFrame, *, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def unigram_quality(docs: DataFrame) -> DataFrame:
     """Per-document mean corpus-frequency of its tokens, with an
     integer-exact above/below-corpus-mean verdict — the bit-exact stand-in
     for CCNet's LM-perplexity bucket filter (docs made of corpus-rare
@@ -741,13 +718,13 @@ def unigram_quality(docs: DataFrame, *, id_col: str = "doc_id",
     # localCheckpoints materialize each once; the ContextCleaner reclaims
     # them when the result frame is garbage-collected (the
     # dedup/_shingles idiom).
-    tf = (_doc_token_tf(docs, id_col, text_col)
+    tf = (_doc_token_tf(docs)
           .withColumnRenamed("token", "tok")
           .localCheckpoint(eager=False))
     tf = tf.select(*[F.col(c).alias(c) for c in tf.columns])
     vocab = tf.groupBy("tok").agg(F.sum("tf").alias("cnt"))
     per_doc = (tf.join(vocab, "tok")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.sum(F.col("tf") * F.col("cnt")).alias("freq_sum"),
                     F.sum("tf").alias("n_toks"))
                .localCheckpoint(eager=False))
@@ -759,7 +736,7 @@ def unigram_quality(docs: DataFrame, *, id_col: str = "doc_id",
         return F.col(c).cast("decimal(38,0)")
 
     return (per_doc.crossJoin(F.broadcast(totals))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("freq_sum"),
                     F.col("n_toks"),
                     (F.col("freq_sum").cast("double")
@@ -769,25 +746,24 @@ def unigram_quality(docs: DataFrame, *, id_col: str = "doc_id",
                     .cast("int").alias("above_mean")))
 
 
-def unigram_quality_sql(table: str, id_col: str = "doc_id",
-                        text_col: str = "text") -> str:
+def unigram_quality_sql(table: str) -> str:
     """DuckDB twin of :func:`unigram_quality` — same BIGINT accumulations,
     same DECIMAL(38,0) cross-product verdict, same single division."""
     return f"""
 WITH uq_tok AS (
-  SELECT {id_col}, unnest({_tokens_sql(text_col)}) AS tok FROM {table}
+  SELECT doc_id, unnest({_tokens_sql("text")}) AS tok FROM {table}
 ),
-uq_tf AS (SELECT {id_col}, tok, COUNT(*) AS tf FROM uq_tok GROUP BY 1, 2),
+uq_tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM uq_tok GROUP BY 1, 2),
 uq_vocab AS (SELECT tok, CAST(SUM(tf) AS BIGINT) AS cnt FROM uq_tf GROUP BY 1),
 uq_doc AS (
-  SELECT {id_col},
+  SELECT doc_id,
          CAST(SUM(tf * cnt) AS BIGINT) AS freq_sum,
          CAST(SUM(tf) AS BIGINT) AS n_toks
   FROM uq_tf JOIN uq_vocab USING (tok) GROUP BY 1
 ),
 uq_tot AS (SELECT CAST(SUM(freq_sum) AS BIGINT) AS total_freq,
                   CAST(SUM(n_toks) AS BIGINT) AS total_toks FROM uq_doc)
-SELECT {id_col}, freq_sum, n_toks,
+SELECT doc_id, freq_sum, n_toks,
        CAST(freq_sum AS DOUBLE) / CAST(n_toks AS DOUBLE) AS mean_freq,
        CAST(CAST(freq_sum AS DECIMAL(38,0)) * CAST(total_toks AS DECIMAL(38,0))
             >= CAST(total_freq AS DECIMAL(38,0)) * CAST(n_toks AS DECIMAL(38,0))
@@ -798,8 +774,7 @@ FROM uq_doc, uq_tot
 
 # --- OOV rate against a bounded vocabulary ------------------------------------
 
-def oov_stats(docs: DataFrame, vocab_size: int, *, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def oov_stats(docs: DataFrame, vocab_size: int) -> DataFrame:
     """Per doc: token count and out-of-vocabulary token count against the
     corpus's own top-``vocab_size`` vocabulary (by occurrences) —
     ``(id, n_tokens, n_oov)``.  ``n_oov / n_tokens`` is the OOV rate used
@@ -817,8 +792,8 @@ def oov_stats(docs: DataFrame, vocab_size: int, *, id_col: str = "doc_id",
     Deterministic tie-break at the vocabulary cut: occurrences desc, token
     asc.  Zero-token docs keep ``0/0`` via a left join from the doc ids.
     """
-    tok = docs.select(F.col(id_col).alias("id"),
-                      F.explode(tokens_col(F.col(text_col))).alias("token"))
+    tok = docs.select(F.col("doc_id").alias("id"),
+                      F.explode(tokens_col(F.col("text"))).alias("token"))
     vocab = (tok.groupBy("token").agg(F.count(F.lit(1)).alias("occ"))
              .orderBy(F.col("occ").desc(), F.col("token").asc())
              .limit(vocab_size)
@@ -828,22 +803,21 @@ def oov_stats(docs: DataFrame, vocab_size: int, *, id_col: str = "doc_id",
               .agg(F.count(F.lit(1)).alias("n_tokens"),
                    F.count(F.when(F.col("__in_vocab").isNull(), 1))
                    .alias("n_oov")))
-    ids = docs.select(F.col(id_col).alias("id"))
+    ids = docs.select(F.col("doc_id").alias("id"))
     return (ids.join(scored, "id", "left")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.coalesce("n_tokens", F.lit(0).cast("long"))
                     .alias("n_tokens"),
                     F.coalesce("n_oov", F.lit(0).cast("long"))
                     .alias("n_oov")))
 
 
-def oov_stats_sql(table: str, vocab_size: int, *, id_col: str = "doc_id",
-                  text_col: str = "text") -> str:
+def oov_stats_sql(table: str, vocab_size: int) -> str:
     """DuckDB twin of :func:`oov_stats` (same vocabulary cut and
     tie-break; conditional COUNT stays BIGINT)."""
     return f"""
 WITH ov_tok AS (
-  SELECT {id_col} AS id, unnest({_tokens_sql(text_col)}) AS token
+  SELECT doc_id AS id, unnest({_tokens_sql("text")}) AS token
   FROM {table}),
 ov_vocab AS (
   SELECT token FROM (
@@ -853,10 +827,10 @@ ov_doc AS (
   SELECT t.id, COUNT(*) AS n_tokens,
          COUNT(CASE WHEN v.token IS NULL THEN 1 END) AS n_oov
   FROM ov_tok t LEFT JOIN ov_vocab v USING (token) GROUP BY t.id)
-SELECT d.{id_col} AS {id_col},
+SELECT d.doc_id AS doc_id,
        coalesce(o.n_tokens, CAST(0 AS BIGINT)) AS n_tokens,
        coalesce(o.n_oov, CAST(0 AS BIGINT)) AS n_oov
-FROM {table} d LEFT JOIN ov_doc o ON o.id = d.{id_col}
+FROM {table} d LEFT JOIN ov_doc o ON o.id = d.doc_id
 """
 
 
@@ -865,15 +839,15 @@ FROM {table} d LEFT JOIN ov_doc o ON o.id = d.{id_col}
 # its relational core: a small per-language weight table (the trained model)
 # joined onto per-doc integer features, one dot product per doc, keep iff the
 # margin clears the bias.  All-integer arithmetic (weights are fixed-point
-# ints chosen by the caller) so the decision boundary is bit-identical across
+# ints) so the decision boundary is bit-identical across
 # engines — the floating sigmoid is monotone in the margin, so thresholding
 # the integer margin IS thresholding the probability.
 
-#: default per-language weight rows: (lang, w_chars, w_tokens, w_stop, bias).
+#: per-language weight rows: (lang, w_chars, w_tokens, w_stop, bias).
 #: A doc passes when
 #:   w_chars*n_chars + w_tokens*n_tokens + w_stop*stopword_hits + bias > 0.
 #: Unknown langs fall back to the '*' row.
-DEFAULT_QUALITY_WEIGHTS = [
+QUALITY_WEIGHTS = [
     ("en", 1, 40, 25, -2600),
     ("de", 1, 40, 5, -2200),
     ("fr", 1, 40, 5, -2200),
@@ -882,9 +856,7 @@ DEFAULT_QUALITY_WEIGHTS = [
 ]
 
 
-def quality_classify(docs: DataFrame, *, id_col: str = "doc_id",
-                     text_col: str = "text", lang_col: str = "lang",
-                     weights: list[tuple] | None = None) -> DataFrame:
+def quality_classify(docs: DataFrame) -> DataFrame:
     """Per-language linear classifier over the integer quality features.
 
     Output: (id, lang, margin BIGINT, keep BOOLEAN).  The weight table is
@@ -895,19 +867,11 @@ def quality_classify(docs: DataFrame, *, id_col: str = "doc_id",
     side is O(|langs|) — no shuffle OR join keyed on docs at any point
     (the lang column rides the feature projection itself; plan-pinned).
     """
-    rows = weights if weights is not None else DEFAULT_QUALITY_WEIGHTS
-    by_lang = {r[0]: r[1:] for r in rows}
-    if "*" not in by_lang:
-        raise ValueError("weights must include a '*' fallback row")
-    fb = by_lang["*"]
-    spark = docs.sparkSession
+    fb = next(r[1:] for r in QUALITY_WEIGHTS if r[0] == "*")
     wdf = local_frame(
-        spark, [r for r in rows if r[0] != "*"],
+        docs.sparkSession, [r for r in QUALITY_WEIGHTS if r[0] != "*"],
         "lang string, w_chars long, w_tokens long, w_stop long, bias long")
-    feats = quality_scores(docs, id_col=id_col, text_col=text_col,
-                           keep_cols=(lang_col,))
-    if lang_col != "lang":
-        feats = feats.withColumnRenamed(lang_col, "lang")
+    feats = quality_scores(docs, keep_cols=("lang",))
     j = feats.join(F.broadcast(wdf), on="lang", how="left")
     margin = (
         F.coalesce(F.col("w_chars"), F.lit(fb[0])) * F.col("n_chars")
@@ -915,23 +879,18 @@ def quality_classify(docs: DataFrame, *, id_col: str = "doc_id",
         + F.coalesce(F.col("w_stop"), F.lit(fb[2])) * F.col("stopword_hits")
         + F.coalesce(F.col("bias"), F.lit(fb[3]))).cast("long")
     return (j.withColumn("margin", margin)
-            .select(F.col(id_col), F.col("lang"), F.col("margin"),
+            .select(F.col("doc_id"), F.col("lang"), F.col("margin"),
                     (F.col("margin") > 0).alias("keep")))
 
 
-def quality_classify_sql(table: str, *, id_col: str = "doc_id",
-                         text_col: str = "text", lang_col: str = "lang",
-                         weights: list[tuple] | None = None) -> str:
-    rows = weights if weights is not None else DEFAULT_QUALITY_WEIGHTS
-    by_lang = {r[0]: r[1:] for r in rows}
-    fb = by_lang["*"]
+def quality_classify_sql(table: str) -> str:
+    fb = next(r[1:] for r in QUALITY_WEIGHTS if r[0] == "*")
     vals = ", ".join(f"('{l}', {a}, {b}, {c}, {d})"
-                     for l, a, b, c, d in rows if l != "*")
+                     for l, a, b, c, d in QUALITY_WEIGHTS if l != "*")
     return f"""
 WITH w(lang, w_chars, w_tokens, w_stop, bias) AS (VALUES {vals}),
-f AS ({quality_scores_sql(table, id_col, text_col,
-                          keep_cols=(f"{lang_col} AS lang",))})
-SELECT {id_col}, lang,
+f AS ({quality_scores_sql(table, keep_cols=("lang AS lang",))})
+SELECT doc_id, lang,
        CAST(coalesce(w.w_chars, {fb[0]}) * n_chars
           + coalesce(w.w_tokens, {fb[1]}) * n_tokens
           + coalesce(w.w_stop, {fb[2]}) * stopword_hits

@@ -340,30 +340,28 @@ def sensor_visibility_df(spark, data, sensors_df: DataFrame, combine: str = "uni
 # ---------------------------------------------------------------------------
 
 def raster_lookup(points: DataFrame, raster: DataFrame, *,
-                  origin: tuple[float, float], resolution: float,
-                  lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
+                  origin: tuple[float, float], resolution: float) -> DataFrame:
     """Join points to raster cell values: point -> floor((p-origin)/res) ->
     equi-join (row, col) (reference cell mapping polycheck.py:266-267).
     Points outside the raster keep a NULL occ. Pure Column exprs + one
     broadcast-able equi-join — no UDF."""
-    col_idx = F.floor((F.col(lon_col) - F.lit(origin[0])) / F.lit(resolution)).cast("int")
-    row_idx = F.floor((F.col(lat_col) - F.lit(origin[1])) / F.lit(resolution)).cast("int")
+    col_idx = F.floor((F.col("lon") - F.lit(origin[0])) / F.lit(resolution)).cast("int")
+    row_idx = F.floor((F.col("lat") - F.lit(origin[1])) / F.lit(resolution)).cast("int")
     pts = points.withColumn("col", col_idx).withColumn("row", row_idx)
     return pts.join(F.broadcast(raster), ["row", "col"], "left")
 
 
 def raster_lookup_sql(points_cte: str, raster_cte: str,
-                      origin: tuple[float, float], resolution: float,
-                      point_id: str = "doc_id") -> str:
+                      origin: tuple[float, float], resolution: float) -> str:
     return f"""
 WITH pts AS ({points_cte}),
 raster AS ({raster_cte}),
 keyed AS (
-  SELECT {point_id},
+  SELECT doc_id,
          CAST(FLOOR((lat - ({origin[1]!r})) / {resolution!r}) AS INT) AS row,
          CAST(FLOOR((lon - ({origin[0]!r})) / {resolution!r}) AS INT) AS col
   FROM pts
 )
-SELECT k.{point_id}, k.row, k.col, r.occ
+SELECT k.doc_id, k.row, k.col, r.occ
 FROM keyed k LEFT JOIN raster r USING (row, col)
 """

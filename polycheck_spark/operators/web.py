@@ -113,31 +113,29 @@ def html_to_text_sql(html_expr: str) -> str:
     return f"trim(regexp_replace({s}, '\\s+', ' ', 'g'))"
 
 
-def url_dedup_groups(pages: DataFrame, *, id_col: str = "doc_id",
-                     url_col: str = "url") -> DataFrame:
+def url_dedup_groups(pages: DataFrame) -> DataFrame:
     """(canonical_url, n_variants, min_id): groups of fetches that collapse
     to one canonical URL — the crawl-frontier dedup statistic.  Only groups
     with more than one variant are returned (the interesting mass)."""
-    return (pages.groupBy(canonical_url_col(F.col(url_col)).alias("canonical_url"))
+    return (pages.groupBy(canonical_url_col(F.col("url")).alias("canonical_url"))
             .agg(F.count(F.lit(1)).alias("n_variants"),
-                 F.min(id_col).alias("min_id"))
+                 F.min("doc_id").alias("min_id"))
             .filter(F.col("n_variants") > 1))
 
 
-def url_dedup_groups_sql(table: str, id_col: str = "doc_id",
-                         url_col: str = "url") -> str:
-    c = canonical_url_sql(url_col)
+def url_dedup_groups_sql(table: str) -> str:
+    c = canonical_url_sql("url")
     return f"""
-SELECT {c} AS canonical_url, COUNT(*) AS n_variants, MIN({id_col}) AS min_id
+SELECT {c} AS canonical_url, COUNT(*) AS n_variants, MIN(doc_id) AS min_id
 FROM {table} GROUP BY 1 HAVING COUNT(*) > 1
 """
 
 
-def host_stats(pages: DataFrame, *, url_col: str = "url") -> DataFrame:
+def host_stats(pages: DataFrame) -> DataFrame:
     """(host, n_fetches, n_canonical): per-host fetch counts and distinct
     canonical URLs — the per-domain crawl profile (its gap is the per-host
     duplicate-fetch mass, the crawl-politeness/skew signal)."""
-    canon = canonical_url_col(F.col(url_col))
+    canon = canonical_url_col(F.col("url"))
     host = F.substring_index(canon, "/", 1)
     return (pages.select(host.alias("host"), canon.alias("c"))
             .groupBy("host")
@@ -145,8 +143,8 @@ def host_stats(pages: DataFrame, *, url_col: str = "url") -> DataFrame:
                  F.countDistinct("c").alias("n_canonical")))
 
 
-def host_stats_sql(table: str, url_col: str = "url") -> str:
-    c = canonical_url_sql(url_col)
+def host_stats_sql(table: str) -> str:
+    c = canonical_url_sql("url")
     return f"""
 SELECT split_part(c, '/', 1) AS host,
        COUNT(*) AS n_fetches, COUNT(DISTINCT c) AS n_canonical
@@ -182,11 +180,9 @@ def host_suffixes_sql(host_expr: str) -> str:
             f"[i:len(string_split({host_expr}, '.'))], '.'))")
 
 
-def domain_block_filter(pages: DataFrame, blocklist: DataFrame, *,
-                        id_col: str = "doc_id", url_col: str = "url",
-                        keep: bool = True) -> DataFrame:
-    """Pages whose canonical host is NOT under any blocked domain
-    (``keep=False`` returns the blocked complement).  ``blocklist`` is one
+def domain_block_filter(pages: DataFrame, blocklist: DataFrame) -> DataFrame:
+    """Pages whose canonical host is NOT under any blocked domain.
+    ``blocklist`` is one
     column ``domain`` of already-canonical (lowercase, no www.) domains.
 
     The blocklist's size picks the route; all three give the same verdicts:
@@ -196,15 +192,15 @@ def domain_block_filter(pages: DataFrame, blocklist: DataFrame, *,
     * at most ``LITERAL_BLOCKLIST_CAP``: the blocklist as a literal array
       and one map-side ``arrays_overlap`` filter over the host's suffixes;
     * larger: suffix explode -> broadcast semi-join -> distinct blocked ids
-      -> one id-keyed anti(/semi)-join back onto the pages; the blocked-id
+      -> one id-keyed anti-join back onto the pages; the blocked-id
       relation is bounded by the blocked page mass and the join keys on
-      ``id_col`` alone, never on wide page payloads.
+      ``doc_id`` alone, never on wide page payloads.
 
     The two literal routes run ZERO shuffles and zero joins; the corpus is
     scanned once.  NOTE the blocklist collect is a driver action that runs
     at PLAN-BUILD time (not at execution), freezing the blocklist snapshot
     when this function is called."""
-    host = F.substring_index(canonical_url_col(F.col(url_col)), "/", 1)
+    host = F.substring_index(canonical_url_col(F.col("url")), "/", 1)
     # bind the host's label array to a NAMED column before the suffix
     # transform: an expression tree referenced inside a HOF lambda is
     # re-evaluated per array element, so inlining the canonicalization
@@ -233,17 +229,16 @@ def domain_block_filter(pages: DataFrame, blocklist: DataFrame, *,
                 hit = hit | (F.col("__h") == d) \
                     | F.col("__h").endswith("." + d)
             hosted = pages.withColumn("__h", host)
-            return hosted.filter(~hit if keep else hit).drop("__h")
+            return hosted.filter(~hit).drop("__h")
         arr = F.array([F.lit(d) for d in doms])
         hit = F.arrays_overlap(sfx, arr)
-        return parted.filter(~hit if keep else hit).drop("__hparts")
+        return parted.filter(~hit).drop("__hparts")
     # oversized for a literal: broadcast-join it
-    cand = (parted.select(id_col, F.explode(sfx).alias("__d")))
+    cand = (parted.select("doc_id", F.explode(sfx).alias("__d")))
     blocked_ids = (cand.join(
         F.broadcast(blocklist.select(F.col("domain").alias("__d")).distinct()),
-        "__d", "left_semi").select(id_col).distinct())
-    how = "left_anti" if keep else "left_semi"
-    return pages.join(blocked_ids, id_col, how)
+        "__d", "left_semi").select("doc_id").distinct())
+    return pages.join(blocked_ids, "doc_id", "left_anti")
 
 
 # --- robots-rule evaluation --------------------------------------------------
@@ -322,9 +317,7 @@ def _host_path_frame(pages: DataFrame, id_col: str, url_col: str) -> DataFrame:
                     F.coalesce(path, F.lit("/")).alias("__p"))
 
 
-def robots_verdicts(pages: DataFrame, rules: DataFrame, *,
-                    id_col: str = "doc_id",
-                    url_col: str = "url") -> DataFrame:
+def robots_verdicts(pages: DataFrame, rules: DataFrame) -> DataFrame:
     """(id, allowed): per-page robots verdict against a rules table
     (host, prefix, allow) — longest matching prefix wins, ties break
     toward allow, hosts without rules are allowed.
@@ -340,58 +333,58 @@ def robots_verdicts(pages: DataFrame, rules: DataFrame, *,
     MATCHED relation only (bounded by rules-per-host, not corpus size),
     and a left join back onto page ids for the no-rule default."""
     from pyspark.sql import Window
-    pp = _host_path_frame(pages, id_col, url_col)
+    pp = _host_path_frame(pages, "doc_id", "url")
     r = rules.select(F.col("host").alias("__h"), "prefix", "allow")
     m = (pp.join(F.broadcast(r), "__h")
          .filter(F.col("__p").startswith(F.col("prefix"))))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.length("prefix").desc(), F.col("allow").desc())
     win = (m.withColumn("__rn", F.row_number().over(w))
-           .filter(F.col("__rn") == 1).select(id_col, "allow"))
-    return (pp.select(id_col).join(win, id_col, "left")
-            .select(id_col, F.coalesce(F.col("allow"), F.lit(True))
+           .filter(F.col("__rn") == 1).select("doc_id", "allow"))
+    return (pp.select("doc_id").join(win, "doc_id", "left")
+            .select("doc_id", F.coalesce(F.col("allow"), F.lit(True))
                     .alias("allowed")))
 
 
-def robots_verdicts_sql(pages_cte: str, rules_cte: str,
-                        id_col: str = "doc_id",
-                        url_col: str = "url") -> str:
-    host = f"split_part({canonical_url_sql(url_col)}, '/', 1)"
+def robots_verdicts_sql(pages_cte: str, rules_cte: str) -> str:
+    host = f"split_part({canonical_url_sql('url')}, '/', 1)"
     return f"""
-SELECT p.{id_col}, coalesce(w.allow, TRUE) AS allowed FROM
-  (SELECT {id_col}, {host} AS h, {url_path_sql(url_col)} AS pth
+SELECT p.doc_id, coalesce(w.allow, TRUE) AS allowed FROM
+  (SELECT doc_id, {host} AS h, {url_path_sql("url")} AS pth
    FROM ({pages_cte})) p
 LEFT JOIN (
-  SELECT {id_col}, allow FROM (
-    SELECT m.*, row_number() OVER (PARTITION BY {id_col}
+  SELECT doc_id, allow FROM (
+    SELECT m.*, row_number() OVER (PARTITION BY doc_id
         ORDER BY length(prefix) DESC, allow DESC) AS rn FROM (
-      SELECT pp.{id_col}, r.allow, r.prefix
-      FROM (SELECT {id_col}, {host} AS h, {url_path_sql(url_col)} AS pth
+      SELECT pp.doc_id, r.allow, r.prefix
+      FROM (SELECT doc_id, {host} AS h, {url_path_sql("url")} AS pth
             FROM ({pages_cte})) pp
       JOIN ({rules_cte}) r ON r.host = pp.h
       WHERE starts_with(pp.pth, r.prefix)) m)
-  WHERE rn = 1) w USING ({id_col})
+  WHERE rn = 1) w USING (doc_id)
 """
 
 
 # --- crawl-frontier politeness scheduling ------------------------------------
 # The fetch scheduler's core relational step: given candidate URLs with a
 # priority score, emit WHEN each one may be fetched under a per-host
-# politeness delay (one request per host per `delay_ms`).  Reference scope:
+# politeness delay (one request per host per `CRAWL_DELAY_MS`).  Reference scope:
 # polycheck has no crawler, but its query surface over per-key ordered
 # assignment (windowed rank) is the same shape as visibility's per-sensor
 # walks; this operator is part of the webtext-pipeline extension surface.
 
-def frontier_schedule(pages: DataFrame, *, id_col: str = "doc_id",
-                      url_col: str = "url", priority_col: str = "priority",
-                      delay_ms: int = 1000) -> DataFrame:
+#: per-host politeness delay between two fetch slots
+CRAWL_DELAY_MS = 1000
+
+
+def frontier_schedule(pages: DataFrame) -> DataFrame:
     """Per-host crawl schedule: canonical-dedup, then rank by priority.
 
     Steps: (1) collapse URL variants to canonical form (a frontier never
     fetches the same canonical URL twice), keeping the best (max) priority
     and the smallest id as the group representative; (2) within each host,
     order by (priority DESC, canonical_url ASC) and assign fetch slots
-    0,1,2,...; (3) ``fetch_at_ms = slot * delay_ms``.
+    0,1,2,...; (3) ``fetch_at_ms = slot * CRAWL_DELAY_MS``.
 
     Output: (canonical_url, host, rep_id, priority, slot, fetch_at_ms).
 
@@ -404,12 +397,10 @@ def frontier_schedule(pages: DataFrame, *, id_col: str = "doc_id",
     across executors.
     """
     from pyspark.sql import Window
-    if delay_ms <= 0:
-        raise ValueError("delay_ms must be positive")
-    canon = canonical_url_col(F.col(url_col))
+    canon = canonical_url_col(F.col("url"))
     cand = (pages
-            .select(F.col(id_col).alias("__id"),
-                    F.col(priority_col).alias("__pr"),
+            .select(F.col("doc_id").alias("__id"),
+                    F.col("priority").alias("__pr"),
                     canon.alias("canonical_url"))
             .groupBy("canonical_url")
             .agg(F.min("__id").alias("rep_id"),
@@ -420,16 +411,13 @@ def frontier_schedule(pages: DataFrame, *, id_col: str = "doc_id",
     slot = (F.row_number().over(w) - F.lit(1)).cast("long")
     return (cand.withColumn("slot", slot)
             .withColumn("fetch_at_ms",
-                        (F.col("slot") * F.lit(int(delay_ms))).cast("long"))
+                        (F.col("slot") * F.lit(CRAWL_DELAY_MS)).cast("long"))
             .select("canonical_url", "host", "rep_id", "priority",
                     "slot", "fetch_at_ms"))
 
 
-def frontier_schedule_sql(table: str, id_col: str = "doc_id",
-                          url_col: str = "url",
-                          priority_col: str = "priority",
-                          delay_ms: int = 1000) -> str:
-    c = canonical_url_sql(url_col)
+def frontier_schedule_sql(table: str) -> str:
+    c = canonical_url_sql("url")
     return f"""
 SELECT canonical_url, split_part(canonical_url, '/', 1) AS host,
        rep_id, priority,
@@ -439,8 +427,8 @@ SELECT canonical_url, split_part(canonical_url, '/', 1) AS host,
        CAST((row_number() OVER (
              PARTITION BY split_part(canonical_url, '/', 1)
              ORDER BY priority DESC, canonical_url ASC) - 1)
-            * {int(delay_ms)} AS BIGINT) AS fetch_at_ms
+            * {CRAWL_DELAY_MS} AS BIGINT) AS fetch_at_ms
 FROM (SELECT {c} AS canonical_url,
-             MIN({id_col}) AS rep_id, MAX({priority_col}) AS priority
+             MIN(doc_id) AS rep_id, MAX(priority) AS priority
       FROM {table} GROUP BY 1)
 """

@@ -71,7 +71,7 @@ def test_bloom_incremental_dedup_equals_plain(spark):
         F.md5(F.col("t")).alias("digest"))
     plain = sorted(map(tuple, incremental_dedup(batch, corpus).collect()))
     bloomed = sorted(map(tuple, bloom_incremental_dedup(
-        batch, corpus, m_bits=1 << 12, k=3).collect()))
+        batch, corpus, m_bits=1 << 12).collect()))
     assert plain == bloomed
     # sanity: all three statuses occur
     statuses = {t[2] for t in plain}

@@ -37,19 +37,9 @@ def test_identical_docs_contained_both_ways(spark):
     assert dirs == {(1, 2), (2, 1)}
 
 
-def test_cap_is_conservative_subset(spark):
-    docs = _corpus(spark)
-    full = {tuple(r) for r in containment_pairs(
-        docs, threshold=(1, 2)).collect()}
-    capped = {tuple(r) for r in containment_pairs(
-        docs, threshold=(1, 2), max_doc_freq=1).collect()}
-    assert capped <= full
-    assert len(capped) < len(full)   # the shared shingles are df=2: cap bites
-
-
 def test_common_shingle_stats_counts_and_zero_docs(spark):
     out = {r.doc_id: r for r in
-           common_shingle_stats(_corpus(spark), min_df=2).collect()}
+           common_shingle_stats(_corpus(spark)).collect()}
     assert set(out) == {1, 2, 3, 4}
     # doc 2's shingles all recur in doc 1
     assert out[2].n_shingles == 10 - NGRAM + 1

@@ -1,8 +1,9 @@
 """Driver-contract sanity: entry() shape, queries()/oracle_sql() alignment,
 golden star-grid tile assignment through the full Spark join path, and the
-caller census that keeps test-only code out of the program."""
+caller and option censuses that keep test-only code out of the program."""
 
 import ast
+import collections
 import glob
 import os
 
@@ -185,3 +186,91 @@ def test_no_unused_module_imports():
                         unused.append(f"{os.path.relpath(path, _ROOT)}:"
                                       f"{node.lineno} {bound}")
     assert not unused, f"unused module-level imports: {unused}"
+
+
+# Defaulted parameters that no program call sets, each kept for a stated
+# reason.
+_OPTION_ALLOW = {
+    "polygons.synthetic_layer(num_polygons=)":
+        "test input: layer size; tests vary it and their inputs stay as they are",
+    "polygons.synthetic_layer(base_radius=)":
+        "test input: polygon radius; tests vary it and their inputs stay as they are",
+    "polygons.synthetic_layer(seed=)":
+        "test input: layer seed; tests vary it and their inputs stay as they are",
+}
+
+
+def _program_calls():
+    """Per callee name: the keywords program calls pass, the most
+    positional arguments one passes, and whether one unpacks ``*``/``**``."""
+    kws, npos, star = collections.defaultdict(set), collections.Counter(), set()
+    for path in _program_files():
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = (f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            if name is None:
+                continue
+            if (any(isinstance(a, ast.Starred) for a in node.args)
+                    or any(k.arg is None for k in node.keywords)):
+                star.add(name)
+            npos[name] = max(npos[name], len(node.args))
+            kws[name].update(k.arg for k in node.keywords)
+    return kws, npos, star
+
+
+def _defaulted_params(fn, bound):
+    """(name, position or None) of every defaulted parameter of ``fn``;
+    ``bound`` drops ``self``/``cls`` from the positions."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    if bound:
+        pos = pos[1:]
+    for i in range(len(pos) - len(a.defaults), len(pos)):
+        yield pos[i].arg, i
+    for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield arg.arg, None
+
+
+def test_every_option_is_passed_by_a_program_caller():
+    """Option census: every defaulted parameter of a top-level function or
+    method under polycheck_spark/ is set by some program call to a callee
+    of that name — by keyword, by reaching its position, or through a
+    ``*``/``**`` unpacking (a class call reaches ``__init__``).  An option
+    no program sets has one value in use: it becomes a constant, and the
+    branch it chose goes with the tests only it served.  Defs in
+    _CENSUS_ALLOW are exempt; _OPTION_ALLOW lists the rest with a reason,
+    and an entry that gains a caller leaves it."""
+    kws, npos, star = _program_calls()
+    unset = set()
+    for path in glob.glob(os.path.join(_ROOT, "polycheck_spark/**/*.py"),
+                          recursive=True):
+        mod = os.path.splitext(os.path.basename(path))[0]
+        defs = []
+        for node in ast.parse(open(path).read(), path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.append((node.name, node.name, node, False))
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        static = any(isinstance(d, ast.Name)
+                                     and d.id == "staticmethod"
+                                     for d in m.decorator_list)
+                        callee = node.name if m.name == "__init__" else m.name
+                        defs.append((f"{node.name}.{m.name}", callee, m,
+                                     not static))
+        for qual, callee, fn, bound in defs:
+            if f"{mod}.{qual}" in _CENSUS_ALLOW or callee in star:
+                continue
+            for name, i in _defaulted_params(fn, bound):
+                if name in kws[callee] or (i is not None and i < npos[callee]):
+                    continue
+                unset.add(f"{mod}.{qual}({name}=)")
+    assert unset <= set(_OPTION_ALLOW), (
+        f"no program call sets these options (make each a constant and "
+        f"delete what only it reached): {sorted(unset - set(_OPTION_ALLOW))}")
+    assert unset == set(_OPTION_ALLOW), (
+        f"allowlisted but set or gone: {sorted(set(_OPTION_ALLOW) - unset)}")

@@ -105,13 +105,3 @@ def test_anchor_terms_counts_tokens_lowercased(spark):
            for r in G.anchor_terms(df).collect()}
     assert got == {("t.com", "great"): 2, ("t.com", "site"): 1,
                    ("t.com", "content"): 1}
-
-
-def test_pagerank_rejects_all_internal_column_names(spark):
-    import pytest as _pytest
-    from polycheck_spark.operators import graph as G
-    edges = spark.createDataFrame([("a", "b", 1)],
-                                  "src_host string, dst_host string, n_links long")
-    for bad in ("src", "dst", "w", "out_w", "pr"):
-        with _pytest.raises(ValueError):
-            G.pagerank(edges, node_col=bad)

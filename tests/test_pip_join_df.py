@@ -155,27 +155,6 @@ def test_detect_hot_cells_scans_sample_once(spark):
     assert acc.value == n, f"sample rows read {acc.value} times, expected {n}"
 
 
-def test_tile_rollup_weighted(spark, sf_dir):
-    """weight_col path: every level's weighted sum equals the total weight,
-    and the fine level matches a direct weighted aggregation."""
-    import __spark_entry__ as E
-    from polycheck_spark.operators import pip_join as PJ
-    from pyspark.sql import functions as F
-    pts = (E._docs_points(spark, sf_dir)
-           .withColumn("w", (F.pmod(F.col("doc_id"), F.lit(7)) + 1))).localCheckpoint()
-    total = pts.agg(F.sum("w")).collect()[0][0]
-    out = PJ.tile_rollup(pts, res_fine=7, res_coarse=4, weight_col="w").localCheckpoint()
-    for r in (4, 7):
-        lvl = out.filter(F.col("res") == r)
-        assert lvl.agg(F.sum("n_docs")).collect()[0][0] == total
-    direct = (PJ.assign_tiles(pts, res=7).groupBy("cell_id")
-              .agg(F.sum("w").alias("n_docs")))
-    got = sorted((x["cell_id"], x["n_docs"])
-                 for x in out.filter(F.col("res") == 7).collect())
-    exp = sorted((x["cell_id"], x["n_docs"]) for x in direct.collect())
-    assert got == exp
-
-
 def test_tile_smooth_matches_bruteforce(spark):
     import numpy as np
     from polycheck_spark.geo import cells as C

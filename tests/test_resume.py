@@ -26,6 +26,14 @@ def test_resume_after_kill_is_exactly_once(spark, tmp_path):
         run_job(spark, n_pages, n_buckets, resumed_dir, fail_on=lambda k: k == 3)
     partial = CheckpointedWriter(resumed_dir).completed_buckets()
     assert partial == {0, 1, 2}
+    # bucket 3 was written but never committed: the output read skips it
+    import os
+    assert os.path.isdir(os.path.join(resumed_dir, "bucket=3"))
+    committed = sorted(
+        tuple(r) for r in spark.read.parquet(
+            *[os.path.join(clean_dir, f"bucket={k}") for k in sorted(partial)])
+        .select("url", "polygon_id", "text_sha").collect())
+    assert _rows(spark, resumed_dir) == committed
 
     # resume: only the unfinished buckets run
     out = run_job(spark, n_pages, n_buckets, resumed_dir)
@@ -226,7 +234,23 @@ def test_near_dup_job_resumable(spark, tmp_path):
     surv = {r["id"] for r in spark.read.parquet(ref["survivors_path"]).collect()}
     found_copies = {b for a, b in pairs if b == a + DUP_OFFSET}
     assert found_copies and found_copies.isdisjoint(surv)
-    assert len(surv) < n_vecs + n_vecs // 20 + 1     # strictly fewer than vertices
+    # survivors are the corpus ids minus every non-minimum member of each
+    # connected component of the job's own pair set (a union-find whose
+    # roots are component minima)
+    ids = {r["vec_id"] for r in
+           ND.corpus(spark, n_vecs, 16).select("vec_id").collect()}
+    root = {}
+
+    def find(v):
+        while root.setdefault(v, v) != v:
+            root[v] = root[root[v]]
+            v = root[v]
+        return v
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        root[max(ra, rb)] = min(ra, rb)
+    assert surv == {v for v in ids if find(v) == v}
 
     # kill before bucket 4 commits, resume, compare everything
     resumed = str(tmp_path / "nd_resumed")
@@ -279,43 +303,45 @@ def test_dedup_job_exact_and_resumable(spark, tmp_path):
     assert 3 in res2["run"]["processed"] and len(res2["run"]["skipped"]) == 3
 
 
-def test_ann_topk_job_exact_and_resumable(spark, tmp_path):
+def test_ann_topk_job_exact_and_resumable(spark, tmp_path, monkeypatch):
     """Resumable two-stage ANN job: with the integer prefilter disabled
-    (top_m >= any bucket candidate count) the job's merged top-k must equal
-    ivf_topk BIT-FOR-BIT (same modulus centroids, same probe assignment,
-    same Column cosine, same tie-breaks) — the strongest pin available,
-    since ivf_topk itself is driver-oracle-checked.  A kill before a bucket
+    (``PREFILTER_PER_K * k`` >= any bucket candidate count) the job's
+    merged top-k must equal ivf_topk BIT-FOR-BIT (same modulus centroids,
+    same probe assignment, same Column cosine, same tie-breaks) — the
+    strongest pin available, since ivf_topk itself is driver-oracle-checked.  A kill before a bucket
     commits, then a resume, must reproduce the identical output; the
     default prefilter width must be deterministic with high recall of the
     unpruned result."""
     from pyspark.sql import functions as F
     from polycheck_spark.data import synth
     from polycheck_spark.operators import similarity as SIM
+    from polycheck_spark.jobs import ann_topk_job
     from polycheck_spark.jobs.ann_topk_job import run_job as ann_run
 
-    n_vecs, n_buckets, dim, k, n_probe, q_mod = 3000, 6, 16, 5, 4, 101
-    common = dict(dim=dim, k=k, n_probe=n_probe, q_mod=q_mod)
+    n_vecs, n_buckets, dim, k = 3000, 6, 16, 5
+    common = dict(dim=dim, k=k)
+    # a prefilter wider than any bucket's candidate count is a no-op
+    monkeypatch.setattr(ann_topk_job, "PREFILTER_PER_K", 10**9)
 
     clean = str(tmp_path / "ann_clean")
-    ref = ann_run(spark, n_vecs, n_buckets, clean, top_m=10**9, **common)
+    ref = ann_run(spark, n_vecs, n_buckets, clean, **common)
     assert len(ref["run"]["processed"]) == n_buckets
     got = sorted((r["query_id"], r["target_id"], r["rank"]) for r in
                  spark.read.parquet(ref["topk_path"]).collect())
 
     emb = synth.generate_embeddings(spark, n_vecs, dim)
-    q = emb.filter(F.col("vec_id") % q_mod == 0)
+    q = emb.filter(F.col("vec_id") % 101 == 0)
     exp = sorted((r["query_id"], r["target_id"], r["rank"]) for r in
-                 SIM.ivf_topk(emb, q, k, n_probe=n_probe,
-                              n_vectors=n_vecs).collect())
+                 SIM.ivf_topk(emb, q, k).collect())
     assert got == exp and got
 
     # kill before bucket 4 commits, resume with identical params
     resumed = str(tmp_path / "ann_resumed")
     with pytest.raises(RuntimeError, match="injected failure"):
-        ann_run(spark, n_vecs, n_buckets, resumed, top_m=10**9,
+        ann_run(spark, n_vecs, n_buckets, resumed,
                 fail_on=lambda b: b == 4, **common)
     assert CheckpointedWriter(resumed).completed_buckets() == {0, 1, 2, 3}
-    out = ann_run(spark, n_vecs, n_buckets, resumed, top_m=10**9, **common)
+    out = ann_run(spark, n_vecs, n_buckets, resumed, **common)
     assert sorted(out["run"]["skipped"]) == [0, 1, 2, 3]
     assert sorted(out["run"]["processed"]) == [4, 5]
     got2 = sorted((r["query_id"], r["target_id"], r["rank"]) for r in
@@ -323,6 +349,7 @@ def test_ann_topk_job_exact_and_resumable(spark, tmp_path):
     assert got2 == got
 
     # default prefilter (m = 4k): deterministic re-rank with high recall
+    monkeypatch.undo()
     pruned_dir = str(tmp_path / "ann_m")
     pruned = ann_run(spark, n_vecs, n_buckets, pruned_dir, **common)
     got_m = {(r["query_id"], r["target_id"]) for r in
@@ -341,13 +368,14 @@ def test_ann_topk_job_fills_every_bucket(spark, tmp_path):
     assert all(n > 0 for n in out["snapshot"]["row_counts"].values()), out
 
 
-def test_corpus_clean_job_end_to_end_and_resumable(spark, tmp_path):
+def test_corpus_clean_job_end_to_end_and_resumable(spark, tmp_path, monkeypatch):
     """The five-stage cleaning job: every stage provably bites (frontier
     variants collapse, boilerplate line gone from every text, the language
     gate holds, exact copies collapse, near copies caught by the verified
     fuzzy stage), and a job killed in EITHER phase resumes to the
     byte-identical final corpus."""
     from pyspark.sql import functions as F
+    from polycheck_spark.jobs import corpus_clean_job
     from polycheck_spark.jobs.corpus_clean_job import (
         BOILERPLATE, run_job as clean_run)
 
@@ -388,8 +416,9 @@ def test_corpus_clean_job_end_to_end_and_resumable(spark, tmp_path):
 
     # kill in phase 2, resume: identical final corpus
     out3 = str(tmp_path / "cc3")
-    with pytest.raises(RuntimeError):
-        clean_run(spark, 3000, 4, out3, fail_on_pairs=lambda k: k == 1)
+    with pytest.raises(RuntimeError), monkeypatch.context() as m:
+        m.setattr(corpus_clean_job, "FAIL_ON_PAIRS", lambda k: k == 1)
+        clean_run(spark, 3000, 4, out3)
     res3 = clean_run(spark, 3000, 4, out3)
     assert final_rows(out3) == final_rows(out_dir)
     # phase 1 fully committed before the phase-2 kill: all skipped on resume
@@ -432,7 +461,7 @@ def test_pagerank_job_iteration_resume_and_refinement(spark, tmp_path):
     # kill before round 3 (bucket 2) commits, resume, bit-equal output
     resumed = str(tmp_path / "pr_resumed")
     with pytest.raises(RuntimeError, match="injected failure"):
-        pr_run(spark, resumed, pages, hosts, iters, fail_at=2)
+        pr_run(spark, resumed, pages, hosts, iters, fail_on=lambda k: k == 2)
     assert CheckpointedWriter(resumed).completed_buckets() == {0, 1}
     out = pr_run(spark, resumed, pages, hosts, iters)
     assert sorted((r["host"], r["pr"]) for r in spark.read.parquet(
@@ -452,13 +481,14 @@ def test_pagerank_job_iteration_resume_and_refinement(spark, tmp_path):
     assert out2["n_hosts"] == hosts + 2
 
 
-def test_train_export_job_end_to_end_and_resumable(spark, tmp_path):
+def test_train_export_job_end_to_end_and_resumable(spark, tmp_path, monkeypatch):
     """The dataloader handoff: cleaned corpus packed into fixed-budget bins
     and exported as sharded parquet.  Layout invariants hold (per-group
     start_offs are the exclusive prefix sums of token counts in doc_key
     order; every cleaned doc exported exactly once; bins shard-complete),
     and a job killed between shards OR inside the inner cleaning job
     resumes to the byte-identical export."""
+    from polycheck_spark.jobs import train_export_job
     from polycheck_spark.jobs.train_export_job import run_job as export_run
 
     def export_rows(out_dir):
@@ -507,9 +537,9 @@ def test_train_export_job_end_to_end_and_resumable(spark, tmp_path):
 
     # kill inside the INNER cleaning job -> nested resume -> identical
     out3 = str(tmp_path / "tx3")
-    with pytest.raises(RuntimeError):
-        export_run(spark, 3000, 4, out3, budget=64, n_shards=4,
-                   clean_fail_on=lambda k: k == 1)
+    with pytest.raises(RuntimeError), monkeypatch.context() as m:
+        m.setattr(train_export_job, "CLEAN_FAIL_ON", lambda k: k == 1)
+        export_run(spark, 3000, 4, out3, budget=64, n_shards=4)
     res3 = export_run(spark, 3000, 4, out3, budget=64, n_shards=4)
     assert export_rows(out3) == export_rows(out)
     assert 1 in res3["clean"]["phase1"]["run"]["processed"]

@@ -1,4 +1,4 @@
-"""as-of join semantics: backward match, exact-ts tie, NULL miss, tolerance.
+"""as-of join semantics: backward match, exact-ts tie, NULL miss.
 
 Small hand-built frames where the expected assignment is obvious by eye;
 the driver query (`events_asof`) differentials the same operator against
@@ -38,8 +38,7 @@ def _collect(df):
 
 def test_backward_match_tie_and_miss(frames):
     left, right = frames
-    out = _collect(asof_join(left, right, on=["k"], left_ts="ts",
-                             right_ts="ts", value_cols=["snap"]))
+    out = _collect(asof_join(left, right, on=["k"], value_cols=["snap"]))
     assert out[1] == (_ts(4), 40)
     assert out[2] == (_ts(4), 40)      # equal timestamps match
     assert out[3] == (None, None)      # no earlier snapshot
@@ -49,23 +48,11 @@ def test_backward_match_tie_and_miss(frames):
     assert len(out) == 5
 
 
-def test_tolerance_nulls_stale_matches(frames):
-    left, right = frames
-    out = _collect(asof_join(left, right, on=["k"], left_ts="ts",
-                             right_ts="ts", value_cols=["snap"],
-                             tolerance_sec=2))
-    assert out[1] == (_ts(4), 40)      # age 1s <= 2s: kept
-    assert out[2] == (_ts(4), 40)      # age 0s: kept
-    assert out[4] == (None, None)      # age 8s > 2s: nulled
-    assert out[3] == (None, None) and out[5] == (None, None)
-
-
 def test_output_name_collision_raises(frames):
     left, right = frames
     with pytest.raises(ValueError, match="collide"):
         asof_join(left.withColumn("snap", left.event_id), right,
-                  on=["k"], left_ts="ts", right_ts="ts",
-                  value_cols=["snap"])
+                  on=["k"], value_cols=["snap"])
 
 
 def test_matches_duckdb_asof_on_random_data(spark, tmp_path):
@@ -87,8 +74,7 @@ def test_matches_duckdb_asof_on_random_data(spark, tmp_path):
     sn.write.parquet(sp)
     got = sorted(
         tuple(r) for r in
-        asof_join(ev, sn, on=["k"], left_ts="ts", right_ts="ts",
-                  value_cols=["snap"])
+        asof_join(ev, sn, on=["k"], value_cols=["snap"])
         .select("event_id", "asof_ts", "snap").collect())
     con = duckdb.connect()
     want = sorted(map(tuple, con.execute(
@@ -98,32 +84,6 @@ def test_matches_duckdb_asof_on_random_data(spark, tmp_path):
         f"ON l.k = r.k AND l.ts >= r.ts").fetchall()))
     con.close()
     assert got == want
-
-
-def test_shards_preserve_output_exactly(spark):
-    """shards>1 (salted left + replicated right) must equal shards=1
-    bit-for-bit on random data, including unmatched rows."""
-    ev = spark.range(3000).selectExpr(
-        "id AS event_id", "CAST(id % 5 AS long) AS k",   # 5 hot keys
-        "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,"
-        "CAST((id * 2654435761) % 86400 AS int)) AS ts")
-    sn = spark.range(120).selectExpr(
-        "CAST(id % 5 AS long) AS k",
-        "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,"
-        "CAST((id * 40503) % 86400 AS int)) AS ts",
-        "id AS snap").groupBy("k", "ts").agg({"snap": "min"}) \
-        .withColumnRenamed("min(snap)", "snap")
-    base = sorted(tuple(r) for r in asof_join(
-        ev, sn, on=["k"], left_ts="ts", right_ts="ts",
-        value_cols=["snap"]).collect())
-    sharded = sorted(tuple(r) for r in asof_join(
-        ev, sn, on=["k"], left_ts="ts", right_ts="ts",
-        value_cols=["snap"], shards=7).collect())
-    assert base == sharded
-    import pytest as _pt
-    with _pt.raises(ValueError, match="shards"):
-        asof_join(ev, sn, on=["k"], left_ts="ts", right_ts="ts",
-                  value_cols=["snap"], shards=0)
 
 
 def test_interval_join_equals_bruteforce(spark):

@@ -275,7 +275,7 @@ def test_simhash_near_pairs_equals_bruteforce(spark, sf_dir, docs):
     band, so the banded join + bit_count rescore equals the brute-force
     all-pairs Hamming filter (recall 1 by construction — pinned here at
     BOTH signature widths: the 16-bit oracle default and the 60-bit
-    scale configuration), and the capped variant is a strict subset."""
+    scale configuration)."""
     for bits, h in ((16, 2), (60, 3)):
         got = {(r["a"], r["b"])
                for r in D.simhash_near_pairs(docs, h, bits=bits).collect()}
@@ -285,10 +285,6 @@ def test_simhash_near_pairs_equals_bruteforce(spark, sf_dir, docs):
                  if bin(x["simhash"] ^ y["simhash"]).count("1") <= h}
         assert got == brute, (bits, h)
         assert got or bits == 60        # 16-bit corpus must collide; 60-bit may not
-    capped = {(r["a"], r["b"])
-              for r in D.simhash_near_pairs(docs, 2, max_band_freq=3).collect()}
-    assert capped <= {(r["a"], r["b"])
-                      for r in D.simhash_near_pairs(docs, 2).collect()}
 
 
 def test_simhash_near_pairs_computes_signatures_once(spark, sf_dir):
@@ -334,14 +330,15 @@ SELECT a, b FROM ({S.near_dup_pairs_sql("both_", (3, 5), mode="exact")})"""))
     assert len(lsh & injected) >= 0.6 * n_injected  # usable recall
 
 
-def test_near_dup_nondefault_planes_match_oracle(spark, sf_dir):
+def test_near_dup_nondefault_planes_match_oracle(spark, sf_dir, monkeypatch):
     """near_dup_pairs grew an n_planes knob; the SQL twin must mirror it
     (ADVICE r4: an 8-plane oracle silently compared against an N-plane
     Spark run before) — pinned at a non-default count cross-engine."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     got = _sorted_rows(S.near_dup_pairs(emb, (3, 5), n_planes=5))
+    monkeypatch.setattr(S, "N_PLANES", 5)
     exp = sorted(_duck(sf_dir, S.near_dup_pairs_sql(
-        "embeddings", (3, 5), mode="lsh", n_planes=5)))
+        "embeddings", (3, 5), mode="lsh")))
     assert got == exp
 
 
@@ -434,7 +431,7 @@ def test_ivf_centroid_budget_bounded(spark):
                         lambda d: (F.pmod(F.col("id") * 7 + d * 3, F.lit(19)) - 9.0) / 9.0
                         ).alias("embedding"))
         q = emb.filter(F.col("vec_id") % 97 == 0)
-        out = S.ivf_topk(emb, q, 3, n_vectors=n)
+        out = S.ivf_topk(emb, q, 3)
         plan = out._jdf.queryExecution().executedPlan().toString()
         # r8 shape: the budget-bounded centroid table is driver-collected
         # and assignment+rescore run in ONE fold-exact map pass — no join
@@ -602,35 +599,37 @@ def test_cluster_assignments_equals_full_vertex_cc(spark):
     assert only_singles == [(v, v) for v in verts]
 
 
-def test_connected_components_long_chain_converges_logarithmically(spark):
+def test_connected_components_long_chain_converges_logarithmically(spark, monkeypatch):
     """A 64-vertex path has diameter 63: pure hash-to-min would need 63
-    rounds, so finishing under max_iters=10 proves the pointer-jumping
+    rounds, so finishing under CC_MAX_ITERS=10 proves the pointer-jumping
     acceleration actually doubles label reach per round."""
     n = 64
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a long, b long")
+    monkeypatch.setattr(D, "CC_MAX_ITERS", 10)
     got = {(r["id"], r["cluster_id"]) for r in
-           D.connected_components(verts, edges, max_iters=10).collect()}
+           D.connected_components(verts, edges).collect()}
     assert got == {(i, 0) for i in range(n)}
 
 
-def test_connected_components_warns_when_not_converged(spark):
-    """Exhausting max_iters with labels still moving must WARN, not return
+def test_connected_components_warns_when_not_converged(spark, monkeypatch):
+    """Exhausting CC_MAX_ITERS with labels still moving must WARN, not return
     partially-propagated labels silently (ADVICE r3): one round on a long
     path cannot reach the fixpoint."""
     import warnings
     n = 40
     verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a long, b long")
+    monkeypatch.setattr(D, "CC_MAX_ITERS", 1)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        D.connected_components(verts, edges, max_iters=1).collect()
+        D.connected_components(verts, edges).collect()
     assert any("convergence unverified" in str(w.message) for w in caught), \
         [str(w.message) for w in caught]
 
 
-def test_connected_components_no_spurious_warning_at_exact_iters(spark):
-    """Exactly-sufficient max_iters (the final round reaches the fixpoint)
+def test_connected_components_no_spurious_warning_at_exact_iters(spark, monkeypatch):
+    """Exactly-sufficient CC_MAX_ITERS (the final round reaches the fixpoint)
     must NOT warn: the post-loop change probe distinguishes 'last round
     still converging' from 'genuinely unconverged' (ADVICE r4)."""
     import warnings
@@ -639,10 +638,11 @@ def test_connected_components_no_spurious_warning_at_exact_iters(spark):
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a long, b long")
     exp = {(i, 0) for i in range(n)}
     for k in range(1, 12):
+        monkeypatch.setattr(D, "CC_MAX_ITERS", k)
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
             got = {(r["id"], r["cluster_id"]) for r in
-                   D.connected_components(verts, edges, max_iters=k).collect()}
+                   D.connected_components(verts, edges).collect()}
         if got == exp:
             # the smallest sufficient k: its last round changed labels, so
             # the loop exhausted — only the probe can clear the warning
@@ -902,7 +902,7 @@ def test_duplicate_span_dedup_semantics(spark):
          (3, "a b c d e f g h a b c d e f g h a b c d e f g h")],
         "doc_id long, text string")
     out = {r.doc_id: (r.n_tokens, r.n_dup_spans, r.n_dup_tokens, r.clean_text)
-           for r in duplicate_span_dedup(docs, n=8).collect()}
+           for r in duplicate_span_dedup(docs).collect()}
     assert out[0] == (10, 0, 0,
                       "alpha beta gamma delta epsilon zeta eta theta iota tail")
     # doc 1: the 9 shared tokens (three overlapping dup windows -> 1 span)
@@ -956,8 +956,7 @@ def test_oov_stats_cut_and_zero_docs(spark):
 
 def test_quality_classify_margins_and_fallback(spark):
     from polycheck_spark.operators.text import (
-        quality_classify, DEFAULT_QUALITY_WEIGHTS)
-    import pytest as _pytest
+        quality_classify, QUALITY_WEIGHTS)
     docs = spark.createDataFrame(
         [(1, "the cat sat on the mat", "en"),
          (2, "the cat sat on the mat", "xx"),   # unseen lang -> '*' row
@@ -969,14 +968,12 @@ def test_quality_classify_margins_and_fallback(spark):
     from polycheck_spark.operators.text import STOPWORDS
     hits = sum(1 for t in "the cat sat on the mat".split()
                if t in STOPWORDS["en"])
-    w = {r[0]: r[1:] for r in DEFAULT_QUALITY_WEIGHTS}
+    w = {r[0]: r[1:] for r in QUALITY_WEIGHTS}
     en = w["en"]; fb = w["*"]
     assert got[1]["margin"] == en[0]*22 + en[1]*6 + en[2]*hits + en[3]
     assert got[2]["margin"] == fb[0]*22 + fb[1]*6 + fb[2]*hits + fb[3]
     assert got[3]["margin"] == w["en"][3] and got[3]["keep"] is False
     assert got[1]["keep"] == (got[1]["margin"] > 0)
-    with _pytest.raises(ValueError):
-        quality_classify(docs, weights=[("en", 1, 1, 1, 0)]).collect()
 
 
 def test_quality_classify_plan_broadcast_no_doc_shuffle(spark):

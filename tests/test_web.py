@@ -150,16 +150,13 @@ def test_domain_block_filter_suffix_semantics(spark):
     kept = sorted(r["doc_id"] for r in
                   W.domain_block_filter(pages, bl).collect())
     assert kept == [4, 5, 6]
-    dropped = sorted(r["doc_id"] for r in
-                     W.domain_block_filter(pages, bl, keep=False).collect())
-    assert dropped == [1, 2, 3]
 
 
 def test_domain_block_filter_strategies_agree(spark, monkeypatch):
     """The blocklist size picks the route: OR chain, literal-array overlap
     or broadcast join.  One blocklist of LITERAL_OR_CAP + 1 domains takes
     the overlap route as is and the other two with a cap moved past it;
-    all three keep and drop the same suffix-semantics rows."""
+    all three keep the same suffix-semantics rows."""
     pages = spark.createDataFrame(_SUFFIX_ROWS, "doc_id long, url string")
     n = W.LITERAL_OR_CAP + 1
     bl = spark.createDataFrame(
@@ -171,9 +168,7 @@ def test_domain_block_filter_strategies_agree(spark, monkeypatch):
                 ._jdf.queryExecution().executedPlan().toString())
         kept = sorted(r["doc_id"] for r in
                       W.domain_block_filter(pages, bl).collect())
-        dropped = sorted(r["doc_id"] for r in
-                         W.domain_block_filter(pages, bl, keep=False).collect())
-        return plan, (kept, dropped)
+        return plan, kept
 
     overlap_plan, overlap = verdicts()
     assert "arrays_overlap" in overlap_plan, overlap_plan
@@ -183,7 +178,7 @@ def test_domain_block_filter_strategies_agree(spark, monkeypatch):
     monkeypatch.setattr(W, "LITERAL_BLOCKLIST_CAP", n - 1)
     join_plan, join = verdicts()
     assert "BroadcastHashJoin" in join_plan, join_plan
-    assert or_chain == overlap == join == ([4, 5, 6], [1, 2, 3])
+    assert or_chain == overlap == join == [4, 5, 6]
 
 
 def test_domain_block_filter_literal_is_map_side_join_broadcasts(spark,
@@ -292,21 +287,19 @@ def test_frontier_schedule_semantics(spark):
         ],
         "doc_id long, url string, priority long")
     rows = {r["canonical_url"]: r
-            for r in frontier_schedule(pages, delay_ms=250).collect()}
+            for r in frontier_schedule(pages).collect()}
     assert len(rows) == 4
     merged = rows["a.example.com/p/1"]
     assert merged["priority"] == 90 and merged["rep_id"] == 1
     # host a: p/1 (pr 90) before p/2 (pr 50)
     assert merged["slot"] == 0 and rows["a.example.com/p/2"]["slot"] == 1
-    assert rows["a.example.com/p/2"]["fetch_at_ms"] == 250
+    assert rows["a.example.com/p/2"]["fetch_at_ms"] == W.CRAWL_DELAY_MS
     # host b: equal priority -> lexicographic canonical order
     assert rows["b.example.com/x"]["slot"] == 0
     assert rows["b.example.com/y"]["slot"] == 1
     # slots restart per host and delay multiplies the slot
-    assert all(r["fetch_at_ms"] == r["slot"] * 250 for r in rows.values())
-    import pytest as _pt
-    with _pt.raises(ValueError, match="delay_ms"):
-        frontier_schedule(pages, delay_ms=0)
+    assert all(r["fetch_at_ms"] == r["slot"] * W.CRAWL_DELAY_MS
+               for r in rows.values())
 
 
 def test_frontier_schedule_plan_two_shuffles(spark):

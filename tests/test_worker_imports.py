@@ -121,11 +121,11 @@ def test_query_path_worker_functions_import_the_program(spark, tmp_path, monkeyp
         [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string")
     pts = spark.createDataFrame([(0.0, 0.0, "u")], "lon double, lat double, url string")
     plans = {
-        "_shingles": lambda: D._shingles(docs, "doc_id", "text"),
+        "_shingles": lambda: D._shingles(docs),
         "minhash_signatures": lambda: D.minhash_signatures(docs),
         "simhash(bits=60)": lambda: D.simhash(docs, bits=60),
         "containment_pairs": lambda: D.containment_pairs(docs),
-        "_doc_token_tf": lambda: TX._doc_token_tf(docs, "doc_id", "text"),
+        "_doc_token_tf": lambda: TX._doc_token_tf(docs),
         # a module-level UDF pickles its function once per process (maybe in
         # an earlier test), so pickle that function here as the UDF would
         "media_dims": lambda: commands.append(

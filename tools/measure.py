@@ -276,7 +276,7 @@ def media_body(spark, n, parts):
             .select(F.col("id").alias("doc_id"), E._image_corpus_payload_col().alias("payload")))
     t0 = time.time()
     decoded = MM.decode_media_basic(docs).filter(F.col("fmt") != "unknown").count()
-    pairs = D.hamming_near_pairs(MM.image_dhash(imgs), max_hamming=3, id_col="doc_id",
+    pairs = D.hamming_near_pairs(MM.image_dhash(imgs), id_col="doc_id",
                                  hash_col="dhash", bits=64, max_band_freq=64).count()
     return {"sec": time.time() - t0, "decoded": decoded, "near_dup_pairs": pairs}
 
@@ -301,8 +301,7 @@ def temporal_body(spark, n, parts):
     t0 = time.time()
     snaps = (ev.filter(F.col("event_id") % 7 == 0).groupBy("user_id", "ts")
              .agg(F.min("event_id").alias("snap_id")))
-    a = (TP.asof_join(ev, snaps, on=["user_id"], left_ts="ts", right_ts="ts",
-                      value_cols=["snap_id"])
+    a = (TP.asof_join(ev, snaps, on=["user_id"], value_cols=["snap_id"])
          .agg(F.count("snap_id").alias("matched"),
               F.sum(F.unix_millis(F.col("ts").cast("timestamp"))
                     - F.unix_millis(F.col("asof_ts").cast("timestamp"))).alias("age_mass"))
@@ -641,8 +640,7 @@ def skew(spark, s, cpus):
     layer = POLY.default_query_layer()
     pages = synth.geocoded_pages(spark, n, partitions=32).cache()
     pages.count()
-    hot = PJ.detect_hot_cells(pages, PJ.choose_cover_res(layer),
-                              sample_frac=0.01, threshold_frac=0.01)
+    hot = PJ.detect_hot_cells(pages, PJ.choose_cover_res(layer))
 
     def run(cells):
         return _timed(lambda: PJ.pip_join(spark, pages, layer, mode="partitioned",
